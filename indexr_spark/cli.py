@@ -136,8 +136,9 @@ def main(argv: list[str] | None = None, spark=None) -> int:
                 100, truncate=False
             )
         elif args.cmd == "index":
-            cols = cat.build_indexes(spark, args.table)
-            print(f"indexed columns: {', '.join(cols) or '(none flagged)'}")
+            counts = cat.build_indexes(spark, args.table)
+            listed = ", ".join(f"{c} ({n} postings)" for c, n in counts.items())
+            print(f"indexed columns: {listed or '(none flagged)'}")
         elif args.cmd == "compact":
             from indexr_spark.streaming.ingest import compact
 

@@ -268,21 +268,21 @@ class Catalog:
             PruneResult,
             prune as rc_prune,
         )
-        from indexr_spark.sources.segments import SIDECAR_NAME, load_sidecar
+        from indexr_spark.sources.segments import SIDECAR_NAME, index_stamp, load_sidecar
         from indexr_spark.sources.snapshots import files_of, latest_version
 
         path = self.table_dir(name)
-        sidecar_path = os.path.join(path, SIDECAR_NAME)
-        if not os.path.exists(sidecar_path):
+        if not os.path.exists(os.path.join(path, SIDECAR_NAME)):
             return None
-        # Cache keyed on (mtime_ns, size): repeated queries against an
-        # unchanged table skip re-parsing the sidecar/cmap/term files
-        # (the reference holds its indexes in IndexMemCache for the
-        # same reason). Invalidation = any commit rewrites the
-        # sidecar; nanosecond mtime + byte size guards the
-        # same-coarse-second rewrite a bare mtime would miss.
-        st = os.stat(sidecar_path)
-        key = (st.st_mtime_ns, st.st_size)
+        # Cache keyed on the (mtime_ns, size) of every file
+        # load_sidecar merges: repeated queries against an unchanged
+        # table skip re-parsing the sidecar/cmap/term files (the
+        # reference holds its indexes in IndexMemCache for the same
+        # reason). Invalidation = any commit rewrites the sidecar, any
+        # index build rewrites the cmap and postings; nanosecond mtime
+        # + byte size guards the same-coarse-second rewrite a bare
+        # mtime would miss.
+        key = index_stamp(path)
         cached = self._stats_cache.get(name)
         if cached is not None and cached[0] == key:
             stats = cached[1]
@@ -319,25 +319,21 @@ class Catalog:
             )
         return result
 
-    def build_indexes(self, spark: SparkSession, name: str) -> list[str]:
+    def build_indexes(self, spark: SparkSession, name: str) -> dict[str, int]:
         """Build the optional string-column indexes for every
         index-flagged string column (ColumnSchema's `index` flag): the
         term→file inverted index (=/IN pruning) and the cmap character
-        summary (%needle% pruning). Returns the indexed columns."""
-        from indexr_spark.sources.segments import build_cmap_index, build_term_index
+        summary (%needle% pruning), in one pass. Returns the posting
+        count per indexed column."""
+        from indexr_spark.sources.segments import build_string_indexes
 
         spec = self.load(name)
-        path = self.table_dir(name)
         cols = [
             c.name
             for c in spec.columns
             if c.index and c.sql_type.lower() in ("varchar", "string")
         ]
-        for c in cols:
-            build_term_index(spark, path, c)
-        if cols:
-            build_cmap_index(spark, path, cols)
-        return cols
+        return build_string_indexes(spark, self.table_dir(name), cols) if cols else {}
 
     def register_sql_views(self, spark: SparkSession, hybrid: bool = True) -> list[str]:
         """Expose every catalog table to plain `spark.sql(...)` — the

@@ -27,9 +27,11 @@ from __future__ import annotations
 import datetime as dt
 import json
 import os
+import shutil
 import threading
 from typing import Any
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession
@@ -178,64 +180,68 @@ def write_segments(
 
 
 TERM_INDEX_DIR = "_indexr_term_index"
-
-
-def build_term_index(spark: SparkSession, path: str, column: str) -> int:
-    """Inverted term→file index for a string column — the reference's
-    OuterIndex_Inverted made Spark-native (vlt OuterIndex_Inverted.java:
-    33-36: merged dictionary + per-entry pack bitmaps; here the posting
-    unit is the segment file). One distributed pass builds
-    `(term, file)` postings; Equal/In predicates then prune the file
-    list through postings instead of min/max ranges, which string
-    min/max rarely narrows. Returns the number of postings.
-
-    Scale: the index is |distinct terms × files touched| — for
-    dictionary-ish columns, metadata-sized next to the data; rebuild is
-    per new segment batch, and lookup is a filter over one small
-    parquet table."""
-    df = spark.read.parquet(path).select(
-        F.col(column).alias("term"), F.input_file_name().alias("file")
-    )
-    postings = df.distinct().withColumn(
-        "file", F.regexp_replace("file", "^file:", "")
-    )
-    out = os.path.join(path, TERM_INDEX_DIR, column)
-    postings.coalesce(1).write.mode("overwrite").parquet(out)
-    return spark.read.parquet(out).count()
-
-
 CMAP_NAME = "_indexr_cmap.json"
 
 
-def build_cmap_index(spark: SparkSession, path: str, columns: list[str]) -> dict:
-    """Character-presence summary per (file, column) — the reference's
-    RSIndex_CMap (index/RSIndex_CMap.java:20-25: per-position byte
-    bitmaps for =/LIKE rough checks) reduced to its position-less
-    core, which is exactly what `%needle%` contains-predicates need:
-    a file missing any needle character provably has no match.
+def build_string_indexes(
+    spark: SparkSession, path: str, columns: list[str]
+) -> dict[str, int]:
+    """Both string indexes of `columns` from one distributed pass:
+    the term→file inverted index (the reference's OuterIndex_Inverted,
+    vlt OuterIndex_Inverted.java:33-36, posting unit = segment file)
+    for =/IN pruning, and the per-(file, column) character-presence
+    cmap (RSIndex_CMap, index/RSIndex_CMap.java:20-25, reduced to its
+    position-less core) for `%needle%` pruning: a file missing any
+    needle character provably has no match.
 
-    One distributed pass per build: explode values to distinct
-    (file, char) rows — bounded by |alphabet| × files, metadata-sized
-    — then fold per file. Rebuild after rewrites (new files without a
-    summary degrade to scan, never to wrong answers)."""
-    df = spark.read.parquet(path)
-    out: dict[str, dict[str, str]] = {}
-    for column in columns:
-        rows = (
-            df.select(
-                F.input_file_name().alias("file"),
-                F.explode(F.array_distinct(F.split(F.col(column), ""))).alias("ch"),
-            )
-            .distinct()
-            .groupBy("file")
-            .agg(F.collect_set("ch").alias("chars"))
-            .collect()
+    The pass explodes the columns into distinct (col, term, file)
+    triples and collects them — |distinct terms × files touched|,
+    metadata-sized by design — then writes each column's postings
+    (NULL terms kept) with pyarrow and folds the cmap from the same
+    triples. Rebuild after rewrites: new files without postings or a
+    summary degrade to scan, never to wrong answers. Returns the
+    posting count per column."""
+    cells = F.array(
+        *[F.struct(F.lit(c).alias("col"), F.col(c).alias("term")) for c in columns]
+    )
+    triples = (
+        spark.read.parquet(path)
+        .select(
+            F.inline(cells),
+            F.regexp_replace(F.input_file_name(), "^file:", "").alias("file"),
         )
-        for r in rows:
-            rel = os.path.relpath(r["file"].removeprefix("file:"), path)
-            out.setdefault(rel, {})[column] = "".join(sorted(r["chars"]))
-    _atomic_json_write(os.path.join(path, CMAP_NAME), {"version": 1, "files": out})
-    return out
+        .distinct()
+        .collect()
+    )
+    postings: dict[str, tuple[list, list]] = {c: ([], []) for c in columns}
+    cmap: dict[str, dict[str, set]] = {}
+    for col, term, fname in triples:
+        postings[col][0].append(term)
+        postings[col][1].append(fname)
+        if term is not None:
+            rel = os.path.relpath(fname, path)
+            cmap.setdefault(rel, {}).setdefault(col, set()).update(term)
+    for col, (terms, files) in postings.items():
+        out = os.path.join(path, TERM_INDEX_DIR, col)
+        shutil.rmtree(out, ignore_errors=True)
+        os.makedirs(out)
+        table = pa.table(
+            {"term": pa.array(terms, pa.string()), "file": pa.array(files, pa.string())}
+        )
+        # zstd, as the session writes parquet; no Arrow schema blob,
+        # which would only add bytes to two plain string columns
+        pq.write_table(
+            table,
+            os.path.join(out, "postings.parquet"),
+            compression="zstd",
+            store_schema=False,
+        )
+    files_out = {
+        rel: {c: "".join(sorted(chars)) for c, chars in cols.items()}
+        for rel, cols in cmap.items()
+    }
+    _atomic_json_write(os.path.join(path, CMAP_NAME), {"version": 1, "files": files_out})
+    return {c: len(terms) for c, (terms, _files) in postings.items()}
 
 
 def prune_by_term(
@@ -493,30 +499,50 @@ def load_sidecar(path: str) -> dict[str, FileStats]:
     return out
 
 
+def _postings_files(path: str) -> list[tuple[str, str]]:
+    """(column, path) of every term-index postings file."""
+    idx_root = os.path.join(path, TERM_INDEX_DIR)
+    if not os.path.isdir(idx_root):
+        return []
+    return [
+        (col, os.path.join(idx_root, col, name))
+        for col in sorted(os.listdir(idx_root))
+        if os.path.isdir(os.path.join(idx_root, col))
+        for name in sorted(os.listdir(os.path.join(idx_root, col)))
+        if name.endswith(".parquet")
+    ]
+
+
+def index_stamp(path: str) -> tuple:
+    """(path, mtime_ns, size) of every file load_sidecar reads — the
+    sidecar, the cmap and each postings file — so a cache of its
+    output can tell when any of them was rewritten."""
+    names = [os.path.join(path, SIDECAR_NAME), os.path.join(path, CMAP_NAME)]
+    stamp = []
+    for name in names + [f for _col, f in _postings_files(path)]:
+        try:
+            st = os.stat(name)
+        except FileNotFoundError:
+            continue
+        stamp.append((name, st.st_mtime_ns, st.st_size))
+    return tuple(stamp)
+
+
 def _load_term_sets(path: str) -> dict[str, dict[str, frozenset]]:
     """Term index postings → {abs file: {col: distinct values}}.
     Footer-less metadata read via pyarrow (no Spark job): postings are
     |distinct terms × files|, dictionary-column-sized by design."""
-    idx_root = os.path.join(path, TERM_INDEX_DIR)
-    if not os.path.isdir(idx_root):
-        return {}
     out: dict[str, dict[str, set]] = {}
-    for col in os.listdir(idx_root):
-        col_dir = os.path.join(idx_root, col)
-        if not os.path.isdir(col_dir):
-            continue
-        for name in os.listdir(col_dir):
-            if not name.endswith(".parquet"):
-                continue
-            tbl = pq.read_table(os.path.join(col_dir, name))
-            for term, fname in zip(
-                tbl.column("term").to_pylist(), tbl.column("file").to_pylist()
-            ):
-                # postings carry uri-ish paths (file: scheme stripped,
-                # possibly with extra leading slashes) — normalize to
-                # match the sidecar's os.path joins
-                fname = os.path.normpath(fname.removeprefix("file:"))
-                out.setdefault(fname, {}).setdefault(col, set()).add(term)
+    for col, fpath in _postings_files(path):
+        tbl = pq.read_table(fpath)
+        for term, fname in zip(
+            tbl.column("term").to_pylist(), tbl.column("file").to_pylist()
+        ):
+            # postings carry uri-ish paths (file: scheme stripped,
+            # possibly with extra leading slashes) — normalize to
+            # match the sidecar's os.path joins
+            fname = os.path.normpath(fname.removeprefix("file:"))
+            out.setdefault(fname, {}).setdefault(col, set()).add(term)
     return {
         f: {c: frozenset(v) for c, v in cols.items()} for f, cols in out.items()
     }

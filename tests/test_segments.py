@@ -240,13 +240,13 @@ def test_term_index_prunes_files(spark, tmp_path):
     import glob
     import os
 
-    from indexr_spark.sources.segments import build_term_index, read_term_pruned
+    from indexr_spark.sources.segments import build_string_indexes, read_term_pruned
 
     df = spark.read.parquet(f"{SMOKE_SF}/part.parquet")
     out = str(tmp_path / "parts")
     # sort by brand so each segment holds few brands → pruning possible
     write_segments(df, out, sort_by=["p_brand"], num_segments=8)
-    n_postings = build_term_index(spark, out, "p_brand")
+    n_postings = build_string_indexes(spark, out, ["p_brand"])["p_brand"]
     assert n_postings > 0
 
     all_files = glob.glob(os.path.join(out, "*.parquet"))
@@ -266,7 +266,7 @@ def test_cmap_contains_pruning(spark, tmp_path):
     files whose character summary lacks a needle character, with the
     pruned scan equal to the full scan (rc/Like.java:93 semantics)."""
     from indexr_spark.plans.rough_check import LikeContains, NotOp
-    from indexr_spark.sources.segments import build_cmap_index
+    from indexr_spark.sources.segments import build_string_indexes
 
     out = str(tmp_path / "t")
     df = spark.createDataFrame(
@@ -275,7 +275,7 @@ def test_cmap_contains_pruning(spark, tmp_path):
     )
     # sort by s: files [alpha..beta], [gamma..zebra/zulu]
     write_segments(df, out, sort_by=["s"], num_segments=2)
-    build_cmap_index(spark, out, ["s"])
+    build_string_indexes(spark, out, ["s"])
 
     stats = load_sidecar(out)
     assert all(fs["s"].chars for fs in stats.values())
@@ -294,7 +294,7 @@ def test_cmap_pruning_through_catalog_sql(spark, tmp_path):
     """catalog.sql prunes contains-LIKE through the cmap summary —
     the general-LIKE rough answer on the default query path."""
     from indexr_spark.sources.catalog import Catalog, ColumnSpec, TableSpec
-    from indexr_spark.sources.segments import build_cmap_index
+    from indexr_spark.sources.segments import build_string_indexes
 
     cat = Catalog(str(tmp_path))
     cat.save(
@@ -309,7 +309,7 @@ def test_cmap_pruning_through_catalog_sql(spark, tmp_path):
         "k int, s string",
     )
     write_segments(df, cat.table_dir("t"), sort_by=["s"], num_segments=2)
-    build_cmap_index(spark, cat.table_dir("t"), ["s"])
+    build_string_indexes(spark, cat.table_dir("t"), ["s"])
 
     q = "SELECT k, s FROM t WHERE s LIKE '%z%' ORDER BY k"
     got = cat.sql(spark, q)
@@ -324,7 +324,6 @@ def test_term_index_prunes_through_default_path(spark, tmp_path):
     outer-index exactCheck inside the rough cascade."""
     from indexr_spark.plans.rough_check import Equal
     from indexr_spark.sources.catalog import Catalog, ColumnSpec, TableSpec
-    from indexr_spark.sources.segments import build_term_index
 
     cat = Catalog(str(tmp_path))
     cat.save(
