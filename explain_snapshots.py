@@ -108,7 +108,7 @@ def main() -> None:
             # the registry row returns a driver-built merge table (a
             # LocalTableScan — nothing to learn from); the plans that
             # matter are the PER-ROUND internals: the pair-count
-            # aggregation and the sliced fold+union word rewrite.
+            # aggregation and the conditional fold word rewrite.
             from indexr_spark.operators.text import bpe_train
             from indexr_spark.tables import load_table
 
@@ -121,15 +121,7 @@ def main() -> None:
                     (pairs, nxt)
                 ),
             )
-            bpe_train(
-                docs_df,
-                n_merges=1,
-                incremental_counts=True,
-                round_plan_hook=lambda pairs, nxt: captured.append(
-                    (pairs, nxt)
-                ),
-            )
-            (pairs, nxt), (delta, _) = captured
+            ((pairs, nxt),) = captured
             out += [
                 f"## {name} — per-round internals",
                 "",
@@ -139,20 +131,10 @@ def main() -> None:
                 "(conditional If — the interpreted HOF cost decays with",
                 "pair rarity).",
                 "",
-                "### (a) pair-count aggregation (default: recount)",
+                "### (a) pair-count aggregation",
                 "",
                 "```",
                 _explained(pairs),
-                "```",
-                "",
-                "### (a') opt-in incremental_counts=True: pair-table",
-                "delta merge (retract the changed slice's old pairs,",
-                "assert its folded pairs, one (l, r) aggregation over",
-                "pair-table-sized data — the cluster-scale posture; see",
-                "the bpe_train docstring for the measured regime split)",
-                "",
-                "```",
-                _explained(delta),
                 "```",
                 "",
                 "### (c) conditional fold (pre-checkpoint)",

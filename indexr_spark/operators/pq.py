@@ -37,7 +37,7 @@ L2 argmin over a codebook literal reuses the cosine machinery's
 identity: argmin_c |s-c|^2 = argmax_c (2 s·c - |c|^2), so the shared
 `_dots_2d` dot-product lambda plus a per-codebook |c|^2 literal is
 the whole assignment expression; ties break toward the LOWER code
-(same contract as _argmax_best, and what the numpy reference in
+(same contract as similarity._argmax_cell, and what the numpy reference in
 tests/test_pq.py pins).
 """
 
@@ -508,10 +508,7 @@ ORACLE = {"s13_pq_encode": S13_ORACLE_DRAFT}
 # coarse assign → residual PQ encode → broadcast ADC shortlist at R →
 # exact-cosine rerank at k. The operator lives in sources/
 # vector_store.py (it IS the vector store's query path); the registry
-# entry rides this module the way s13's does. engine="arrow" is the
-# default since r14 (the corpus side as one BLAS mapInPandas pass —
-# 1.59x at sf0.1); the literal Catalyst chain remains in-tree and the
-# two engines are pinned frame-equal in tests/test_ivfpq.py.
+# entry rides this module the way s13's does.
 from indexr_spark.sources.vector_store import (  # noqa: E402
     S14_ORACLE_DRAFT,
     s14_ivfpq_probe,

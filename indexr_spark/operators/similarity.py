@@ -78,33 +78,20 @@ def _unit_scaled(vectors: list[list[float]]) -> list[list[float]]:
     ]
 
 
-def _argmax_best(
-    centroids: list[list[float]], labels: list[int] | None = None
-) -> Column:
-    """The shared nearest-centroid argmax struct: a 2-D literal of
-    norm-scaled centroids + ONE transform lambda for the dot products
-    (_dots_2d) + an array_max over (dot, -label) structs. Ties break
-    toward the smaller label. Expects column e (array<double>);
-    returns a struct with `c` (the dot against the unit-scaled
-    winner — divide by the row norm for the true cosine) and `nc`
-    (negated winning label). The ONE definition of assignment that
-    _argmax_cell (s06/IVF) and kmeans_assign (s12/kmeans_fit) both
-    consume — tie-break or expression-shape changes cannot diverge
-    between the paths."""
+def _argmax_cell(centroids: list[list[float]], labels: list[int] | None = None) -> Column:
+    """Nearest-centroid id by cosine: a 2-D literal of norm-scaled
+    centroids + ONE transform lambda for the dot products (_dots_2d)
+    + an array_max over (dot, -label) structs, so ties break toward
+    the smaller label. Cosine argmax is scale-invariant in |e|, so
+    dividing by the row norm is skipped; scaling each centroid by
+    1/|c| happens driver-side. Expects column e (array<double>).
+    Returns a long column `cell`."""
     labels = labels if labels is not None else list(range(len(centroids)))
     dots = _dots_2d(F.col("e"), _unit_scaled(centroids))
     neg = F.lit([-int(l) for l in labels])
-    return F.array_max(
+    best = F.array_max(
         F.zip_with(dots, neg, lambda d, nl: F.struct(d.alias("c"), nl.alias("nc")))
     )
-
-
-def _argmax_cell(centroids: list[list[float]], labels: list[int] | None = None) -> Column:
-    """Nearest-centroid id by cosine (see _argmax_best). Cosine argmax
-    is scale-invariant in |e|, so dividing by the row norm is skipped;
-    scaling each centroid by 1/|c| happens driver-side. Expects column
-    e (array<double>). Returns a long column `cell`."""
-    best = _argmax_best(centroids, labels)
     return (-best["nc"]).cast("long").alias("cell")
 
 
@@ -1145,40 +1132,13 @@ KMEANS_K = 8  # s12 seeds: the first k vectors by vec_id
 
 def kmeans_assign(emb_norm: DataFrame, centroids: list[list[float]]) -> DataFrame:
     """Nearest-centroid assignment + the cosine achieved, for a
-    driver-side centroid list: (vec_id, e, nrm, cell, ccos).
-
-    The model rides to executors as ONE 2-D literal inside a single
-    in-row argmax expression (_dots_2d — constant expression size in
-    k, the r3 s06 lesson), so assignment costs zero joins and zero
-    shuffles at any corpus size. Ties break toward the smaller cell
-    (the shared _argmax_best definition — same as s06/IVF)."""
-    best = _argmax_best(centroids)
-    return emb_norm.select(
-        "vec_id",
-        "e",
-        "nrm",
-        (-best["nc"]).cast("long").alias("cell"),
-        (best["c"] / F.col("nrm")).alias("ccos"),
-    )
-
-
-def kmeans_assign_arrow(
-    emb_norm: DataFrame, centroids: list[list[float]]
-) -> DataFrame:
-    """kmeans_assign with the argmax math in Arrow/BLAS — the same
-    (vec_id, e, nrm, cell, ccos) frame from one mapInPandas E·Cᵀ per
-    batch. Semantics replicate kmeans_assign exactly: centroids are
-    unit-scaled by the SAME driver-side python-float arithmetic,
-    np.argmax's first-max matches _argmax_best's smaller-label
-    tie-break, ccos = dot(e, c_unit)/|e|. Why it exists: the literal
-    argmax is n·k·d INTERPRETED lambda evaluations per Lloyd round —
-    the cost the semdedup engine ladder measured two orders off BLAS
-    (COVERAGE.md "s15_arrow_ab") — and training pays it every
-    iteration. Zero-norm rows emit NULL ccos (matching the JVM's
-    non-ANSI division) so downstream aggregates skip them on both
-    engines. Pinned assignment-equal in tests/test_kmeans_arrow.py;
-    the literal form stays the certified plan (s12's oracle replays
-    it)."""
+    driver-side centroid list: (vec_id, e, nrm, cell, ccos), from one
+    mapInPandas E·Cᵀ per Arrow batch — zero joins and zero shuffles at
+    any corpus size. Centroids are unit-scaled driver-side
+    (_unit_scaled), np.argmax's first-max breaks ties toward the
+    smaller cell, and ccos = dot(e, c_unit)/|e|. Zero-norm rows emit
+    NULL ccos (the JVM's non-ANSI x/0), so downstream aggregates skip
+    them."""
     cu = _unit_scaled(centroids)
 
     def assign_batches(batches):
@@ -1203,7 +1163,7 @@ def kmeans_assign_arrow(
             )
             if (nrm == 0).any():
                 # JVM: x/0 is NULL under non-ANSI SQL — mirror it so
-                # downstream aggregates skip the row on both engines
+                # downstream aggregates skip the row
                 out["ccos"] = out["ccos"].astype(object).where(nrm != 0, None)
             yield out
 
@@ -1218,7 +1178,6 @@ def kmeans_fit(
     k: int = KMEANS_K,
     max_iters: int = 10,
     tol: float = 1e-4,
-    assign: str = "literal",
 ) -> tuple[list[list[float]], list[dict]]:
     """Full Lloyd loop (spherical k-means): iterate assignment +
     mean-centroid update until the largest centroid moves less than
@@ -1226,11 +1185,11 @@ def kmeans_fit(
     a per-iteration history of {iter, inertia, max_shift} — the
     trained coarse quantizer for an IVF index (sources/vector_store).
 
-    Scale: each iteration is ONE distributed pass — an in-row argmax
-    (no shuffle) followed by a map-combined k×dim aggregation whose
-    output is k rows; only those k rows ever reach the driver. That
-    per-round collect is k·d doubles of driver state — inherent to
-    Lloyd's with driver-held centroids and fine through IVF-scale
+    Scale: each iteration is ONE distributed pass — kmeans_assign's
+    per-batch argmax (no shuffle) followed by a map-combined k×dim
+    aggregation whose output is k rows; only those k rows ever reach
+    the driver. That per-round collect is k·d doubles of driver state
+    — inherent to Lloyd's with driver-held centroids and fine through IVF-scale
     models (k~10⁴ × d~10³ ≈ 10 MB, a LAION-scale coarse quantizer);
     beyond that the centroid update itself must stay distributed
     (keep the aggregate as a frame and broadcast-join it into the
@@ -1244,15 +1203,7 @@ def kmeans_fit(
     Accepts any (vec_id, embedding, ...) frame — no label column
     required (unlike _with_norm), so IVF-store builds can train on
     arbitrary vector corpora.
-
-    `assign="arrow"` routes each round's assignment through
-    kmeans_assign_arrow (BLAS E·Cᵀ) — the training posture for large
-    n·k·d; default "literal" keeps the certified in-row argmax. Both
-    engines feed the identical k-row aggregation.
     """
-    if assign not in ("literal", "arrow"):
-        raise ValueError(f"assign={assign!r} must be 'literal' or 'arrow'")
-    assign_fn = kmeans_assign if assign == "literal" else kmeans_assign_arrow
     e = _as_double(F.col("embedding"))
     base = (
         emb.repartition(emb.sparkSession.sparkContext.defaultParallelism, "vec_id")
@@ -1274,7 +1225,7 @@ def kmeans_fit(
         dim = len(cents[0])
         history: list[dict] = []
         for it in range(max_iters):
-            a = assign_fn(base, cents)
+            a = kmeans_assign(base, cents)
             rows = {
                 r["cell"]: r
                 for r in a.groupBy("cell")
@@ -1315,20 +1266,19 @@ def s12_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     (inertia), and how far the centroid moved (the convergence
     signal a driver loop would threshold on).
 
-    Scale shape, identical to s06's argument: the model is k·dim
-    doubles — it rides to executors as ONE 2-D literal inside a
-    single in-row argmax expression (_argmax_cell's _dots_2d form,
-    constant-size in k), so assignment costs zero joins and zero
-    shuffles; the update is one map-combined aggregation producing
-    k×dim partial sums. A full k-means run is this step iterated
+    Scale shape: the model is k·dim doubles — it rides to executors
+    in the closure of kmeans_assign's per-batch argmax, so assignment
+    costs zero joins and zero shuffles; the update is one map-combined
+    aggregation producing k×dim partial sums. A full k-means run is this step iterated
     driver-side, each round broadcasting the k-row model — the
     corpus is never shuffled on anything but the final k-row rollup.
     Seeds collect() is k rows by contract (driver-sized, like s06's
     10-row centroid pull).
 
-    Determinism: seeds are rounded to 6dp BEFORE unit-scaling so both
-    engines rank identical inputs; assignment ties break toward the
-    smaller cell; outputs rounded to 6dp (sum-order noise ~1e-13).
+    Determinism: seeds are rounded to 6dp BEFORE unit-scaling so
+    Spark and the DuckDB oracle rank identical inputs; assignment ties
+    break toward the smaller cell; outputs rounded to 6dp (sum-order
+    noise ~1e-13).
     """
     # Seeds come from the RAW table so the vec_id filter pushes down
     # to the parquet scan — collecting through _with_norm would pay
@@ -1350,8 +1300,6 @@ def s12_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeds = [v for _, v in seed_rows]
     dim = len(seeds[0])
     # cell + the cosine to the chosen seed from one argmax pass
-    # (kmeans_assign: _dots_2d against unit-scaled seeds gives
-    # dot(e, s/|s|); dividing by the row norm gives the true cosine).
     assigned = kmeans_assign(emb, seeds)
     new_cent = F.array(*[F.round(F.avg(F.col("e")[i]), 6) for i in range(dim)])
     shift = F.sqrt(
@@ -1438,16 +1386,14 @@ QUERIES["s12_kmeans_step"] = s12_kmeans_step
 # similarity runs inside cells of corpus/K items, never across the
 # full n^2 space — the IVF idea applied to dedup instead of search.
 #
-# Scale shape: cell assignment and centroid similarity are in-row
-# over a literal centroid matrix (zero shuffles); the per-cell rank
-# is one window whose partition count is NLIST (production K is
-# thousands — LAION SemDeDup used 11k clusters — so cells stay
-# bounded and no partition is hot); the within-cell pair join rides
-# chunked_self_join, the same skew valve every banded join here
-# uses. A production run swaps the formula centroids for
-# kmeans_fit(s12) output broadcast as literals — the plan shape is
-# identical (the s13/s14 fixed-model protocol makes the draft
-# oracle-certifiable).
+# Scale shape: cell assignment and centroid similarity are one Arrow
+# pass per batch (zero shuffles); the per-cell rank is one window
+# whose partition count is NLIST (production K is thousands — LAION
+# SemDeDup used 11k clusters — so cells stay bounded and no partition
+# is hot); the within-cell pairs are one blockwise A·Aᵀ per cell, no
+# pair join. A production run swaps the formula centroids for
+# kmeans_fit(s12) output — the plan shape is identical (the s13/s14
+# fixed-model protocol makes the draft oracle-certifiable).
 
 S15_NLIST = 4
 S15_TAU = PAIR_THRESHOLD  # one corpus-wide near-dup threshold (s02's)
@@ -1466,114 +1412,15 @@ def s15_centroids() -> list[list[float]]:
 
 
 def _semdedup_ranked(vectors: DataFrame, cents: list[list[float]]) -> DataFrame:
-    """The assignment pass both semdedup engines share: (vec_id, e,
-    nrm, cell, csim, rk) with the keep-outliers rank (csim ASC,
-    vec_id ASC) per cell. Expressions are byte-identical to the
-    pre-refactor semdedup body — the oracle-certified plan."""
-    spark = vectors.sparkSession
-    e = _as_double(F.col("embedding"))
-    # CPU-bound math on tiny input bytes: spread rows across cores
-    # explicitly (the _with_norm idiom; at real scale the scan
-    # supplies the parallelism and AQE coalesces).
-    prep = (
-        vectors.repartition(spark.sparkContext.defaultParallelism, "vec_id")
-        .select("vec_id", e.alias("e"))
-        .withColumn("nrm", F.sqrt(_dot(F.col("e"), F.col("e"))))
-        .withColumn("cell", _argmax_cell(cents).cast("int"))
-    )
-    cmat = F.lit([[float(x) for x in c] for c in cents])
-    cnorms = F.lit([sum(x * x for x in c) ** 0.5 for c in cents])
-    csim = _dot(F.col("e"), F.get(cmat, F.col("cell"))) / (
-        F.col("nrm") * F.get(cnorms, F.col("cell"))
-    )
-    return prep.withColumn("csim", F.round(csim, 6)).withColumn(
-        "rk", F.row_number().over(W.partitionBy("cell").orderBy("csim", "vec_id"))
-    )
-
-
-def semdedup(
-    vectors: DataFrame,
-    centroids: list[list[float]] | None = None,
-    tau: float = S15_TAU,
-    checkpoint: bool = False,
-) -> DataFrame:
-    """SemDeDup keep/prune decisions: (vec_id, cell, csim, keep).
-
-    Within each cell, items rank by (round(csim, 6) ASC, vec_id ASC) —
-    centroid-similarity ascending, so the survivor of a duplicate set
-    is the item FARTHEST from the centroid, the paper's keep-outliers
-    policy — and an item is pruned iff some earlier-ranked cellmate
-    has round(cos, 6) >= tau with it. Both ranking key and threshold
-    compare 6dp-rounded values so the decision boundary carries no
-    cross-engine float risk beyond the rounding the s01/s02 rows
-    already certify. Survivor invariant: no two kept items in one
-    cell are tau-close (earlier survivors are a subset of earlier
-    items).
-
-    `checkpoint=True` materializes the assignment pass (`ranked`)
-    before the pair join: its lineage — scan + K-centroid argmax +
-    rank window — is otherwise evaluated THREE times (both sides of
-    the self-join plus the final output), and the argmax is K*dim
-    multiplies per row — a real but not dominant share (measured
-    1.34x end-to-end at 100k vectors / K=128; the within-cell pair
-    join holds the larger half — COVERAGE.md). Default
-    False so the oracle-certified registry plan stays lazy; a
-    production run materializes assignment as its own pass anyway
-    (the paper runs clustering as a separate job), which is this
-    valve's posture without the eager call.
-    """
-    ranked = _semdedup_ranked(vectors, centroids or s15_centroids())
-    if checkpoint:
-        ranked = ranked.localCheckpoint()
-    # Probe side arrives off the rank window's shuffle on cell —
-    # already distributed on the join key, so AUTO's planning probe
-    # would be pure tax here (the d10 lesson): decide explicitly.
-    j = chunked_self_join(
-        ranked.select("cell", "vec_id", "rk", "e", "nrm"),
-        key_cols=["cell"],
-        order_col="vec_id",
-        repartition_probe=False,
-    )
-    cos = F.round(
-        _dot(F.col("a.e"), F.col("b.e")) / (F.col("a.nrm") * F.col("b.nrm")), 6
-    )
-    pruned = (
-        j.withColumn("cos", cos)
-        .filter(F.col("cos") >= F.lit(tau))
-        .select(
-            F.when(F.col("a.rk") > F.col("b.rk"), F.col("a.vec_id"))
-            .otherwise(F.col("b.vec_id"))
-            .alias("vec_id")
-        )
-        .distinct()
-        .withColumn("__pruned", F.lit(1))
-    )
-    return ranked.join(pruned, "vec_id", "left").select(
-        "vec_id", "cell", "csim", F.col("__pruned").isNull().alias("keep")
-    )
-
-
-def _semdedup_ranked_arrow(
-    vectors: DataFrame, cents: list[list[float]]
-) -> DataFrame:
-    """_semdedup_ranked with the assignment math in one Arrow
-    mapInPandas pass (E·Cᵀ in BLAS) instead of the interpreted
-    per-row literal-matrix argmax — measured 38.5 s of the arrow
-    engine's 114 s at 500k vectors / K=512 (COVERAGE.md
-    "s15_arrow_ab"). Semantics replicate _argmax_best exactly:
-    centroids are unit-scaled driver-side by the SAME python-float
-    arithmetic (_unit_scaled), np.argmax's first-max matches the
-    (dot, -label) tie-break toward the smaller label, and csim =
-    dot(e, c_unit)/|e| rounded 6dp by the Spark-equivalent HALF_UP
-    (_make_round6_half_up — np.round's half-to-even genuinely differs
-    from F.round at 6dp half-boundaries, the r10 ADVICE finding). The
-    one honest caveat (shared with the pair phase): BLAS sums in a
-    different order than the JVM fold, so a dot sitting within an
-    ulp of a 6dp rounding boundary could rank differently — pinned
-    equal on every committed corpus. Zero-norm rows emit NULL csim
-    (what the JVM's non-ANSI division produces), so the rank window
-    orders them identically between engines. The rank window stays
-    JVM-side and identical."""
+    """The SemDeDup assignment pass: (vec_id, e, nrm, cell, csim, rk)
+    with the keep-outliers rank (csim ASC, vec_id ASC) per cell. The
+    assignment math is one Arrow mapInPandas pass (E·Cᵀ): centroids
+    are unit-scaled driver-side (_unit_scaled), np.argmax's first-max
+    breaks ties toward the smaller cell, and csim = dot(e, c_unit)/|e|
+    rounded 6dp by the Spark-equivalent HALF_UP
+    (_make_round6_half_up — np.round's half-to-even differs from
+    F.round at 6dp half-boundaries). Zero-norm rows emit NULL csim
+    (the JVM's non-ANSI x/0), which the rank window sorts first."""
     cu = _unit_scaled(cents)
     r6 = _make_round6_half_up()
 
@@ -1618,56 +1465,40 @@ def _semdedup_ranked_arrow(
     )
 
 
-def semdedup_arrow(
+def semdedup(
     vectors: DataFrame,
     centroids: list[list[float]] | None = None,
     tau: float = S15_TAU,
     block: int = 4096,
-    assign: str = "literal",
 ) -> DataFrame:
-    """semdedup with the within-cell pair phase in cell-local BLAS —
-    the deploy engine for the regime where the pair term dominates.
+    """SemDeDup keep/prune decisions: (vec_id, cell, csim, keep).
 
-    Identical semantics and output schema (vec_id, cell, csim, keep):
-    the assignment/rank pass is the SAME plan (_semdedup_ranked), and
-    prune[i] = ∃ earlier-ranked cellmate j with round(cos(i,j),6) ≥ τ
-    — but computed per cell as blockwise A·Aᵀ inside one
-    applyInPandas pass instead of an exploded candidate join. Why:
-    the join form ships and evaluates an interpreted zip_with cosine
-    PER CANDIDATE PAIR — measured 347 s at 500k vectors / K=512
-    (~244M pairs; COVERAGE.md "s15_500k") — while this form ships
-    each cell's n_c·d matrix ONCE over Arrow and lets BLAS do the
-    n_c²·d multiply-adds (the prune recurrence is join-free: prune[i]
-    depends on ALL earlier-ranked rows, not on their prune bits, so
-    it vectorizes as a triangular any()). Shuffle count drops too:
-    groupBy(cell) replaces join + distinct + re-join.
+    Within each cell, items rank by (round(csim, 6) ASC, vec_id ASC) —
+    centroid-similarity ascending, so the survivor of a duplicate set
+    is the item FARTHEST from the centroid, the paper's keep-outliers
+    policy — and an item is pruned iff some earlier-ranked cellmate
+    has round(cos, 6) >= tau with it. Both ranking key and threshold
+    compare 6dp-rounded values, so the decision boundary carries no
+    float risk beyond the rounding the s01/s02 rows already certify.
+    Survivor invariant: no two kept items in one cell are tau-close
+    (earlier survivors are a subset of earlier items).
 
-    Worker memory is O(n_c·d + block·n_c) per cell — bounded by the
-    K sizing that already governs the pair budget (hold n_c ≈ 10³ at
-    any corpus size and both engines' costs stay flat per cell); the
-    block cap adapts down for an accidentally hot cell. Equality with
-    the join engine is pinned on three corpora in
-    tests/test_semdedup_arrow.py; the 6dp round itself uses the
-    Spark-equivalent HALF_UP (_make_round6_half_up — np.round's
-    half-to-even differs from F.round at half-boundaries, the r10
-    ADVICE finding), so the τ comparison sees the same rounded values
-    both sides. The residual caveat is one ulp narrower: BLAS sums
-    doubles in a different order than the JVM fold, so only a dot
-    whose VALUE lands within an ulp of a 6dp boundary could still
-    split the engines — none exists on the committed corpora.
+    The pair phase runs per cell as blockwise A·Aᵀ inside one
+    applyInPandas pass: each cell's n_c·d matrix ships ONCE over Arrow
+    and BLAS does the n_c²·d multiply-adds. The prune recurrence is
+    join-free — prune[i] depends on ALL earlier-ranked rows, not on
+    their prune bits — so it vectorizes as a triangular any(), and
+    groupBy(cell) is the only shuffle after the rank window.
 
-    `assign="arrow"` moves the assignment math to BLAS as well
-    (_semdedup_ranked_arrow) — the full-Arrow posture for when the
-    assign term dominates (large K); default "literal" keeps the
-    oracle-certified assignment plan."""
-    if assign not in ("literal", "arrow"):
-        raise ValueError(f"assign={assign!r} must be 'literal' or 'arrow'")
-    cents = centroids or s15_centroids()
-    ranked = (
-        _semdedup_ranked_arrow(vectors, cents)
-        if assign == "arrow"
-        else _semdedup_ranked(vectors, cents)
-    )
+    Worker memory is O(n_c·d + block·n_c) per cell — bounded by the K
+    sizing that already governs the pair budget (hold n_c ≈ 10³ at any
+    corpus size); `block` caps the rows per slab, and adapts down for
+    an accidentally hot cell. The cosines round 6dp by the
+    Spark-equivalent HALF_UP, so the τ comparison sees the values
+    F.round would give; BLAS sums in a different order than a
+    left-to-right fold, so only a dot within an ulp of a 6dp boundary
+    could differ from the DuckDB oracle's."""
+    ranked = _semdedup_ranked(vectors, centroids or s15_centroids())
     out_schema = "vec_id long, cell int, csim double, keep boolean"
     _tau, _block = float(tau), int(block)
     r6 = _make_round6_half_up()
@@ -1680,9 +1511,8 @@ def semdedup_arrow(
 
         pdf = pdf.sort_values("rk").reset_index(drop=True)
         # a NULL csim (zero-norm row) arrives as NaN through Arrow's
-        # float64 conversion; restore None on the way out so the
-        # output matches the join engine's NULL (NaN is the only
-        # in-band value a NULL can alias to — cosines are finite)
+        # float64 conversion; restore None on the way out (NaN is the
+        # only in-band value a NULL can alias to — cosines are finite)
         if pdf["csim"].isna().any():
             pdf["csim"] = (
                 pdf["csim"].astype(object).where(pdf["csim"].notna(), None)
@@ -1703,10 +1533,8 @@ def semdedup_arrow(
             hi = min(s + b, n)
             S = E[s:hi] @ E[:hi].T
             # Spark-equivalent HALF_UP so the τ comparison sees the
-            # same rounded cosines the certified join engine computes;
-            # zero-norm rows yield NaN here and NaN >= τ is False —
-            # matching the join form, where a NULL cosine fails the
-            # >= τ predicate and never emits a prune row.
+            # cosines F.round would give; zero-norm rows yield NaN
+            # here and NaN >= τ is False — a NULL cosine never prunes.
             with np.errstate(divide="ignore", invalid="ignore"):
                 C = r6(S / (nrm[s:hi, None] * nrm[None, :hi]))
             lower = np.arange(hi)[None, :] < np.arange(s, hi)[:, None]

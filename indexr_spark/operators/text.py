@@ -2868,22 +2868,6 @@ def simhash_pairs(
 # lambda-variable position.
 
 
-def _wide_hash_frame(d: DataFrame, bits: int) -> DataFrame:
-    """(doc_id, text) → (doc_id, hs): the per-doc distinct-token
-    md5-prefix hashes at `bits` width — the JVM-side (whole-stage
-    codegen) half both wide-simhash engines share, extracted so the
-    interpreted and Arrow vote stages cannot drift on tokenization
-    or hashing."""
-    nhex = bits // 4
-    return d.select(
-        "doc_id",
-        F.transform(
-            distinct_tokens("text"),
-            lambda t: F.conv(F.substring(F.md5(t), 1, nhex), 16, 10).cast("long"),
-        ).alias("hs"),
-    )
-
-
 def simhash_frame_wide(d: DataFrame, bits: int = 60) -> DataFrame:
     """(doc_id, text) → (doc_id, simhash): token SimHash at `bits`
     width. Semantics match simhash_frame — per-bit majority over
@@ -2894,7 +2878,14 @@ def simhash_frame_wide(d: DataFrame, bits: int = 60) -> DataFrame:
     (hash60's exactly-representable-long bound)."""
     if not (4 <= bits <= 60 and bits % 4 == 0):
         raise ValueError(f"bits={bits} must be a multiple of 4 in [4, 60]")
-    d = _wide_hash_frame(d, bits)
+    nhex = bits // 4
+    d = d.select(
+        "doc_id",
+        F.transform(
+            distinct_tokens("text"),
+            lambda t: F.conv(F.substring(F.md5(t), 1, nhex), 16, 10).cast("long"),
+        ).alias("hs"),
+    )
     hashes = F.col("hs")
     n = F.size(hashes)
 
@@ -2914,90 +2905,6 @@ def simhash_frame_wide(d: DataFrame, bits: int = 60) -> DataFrame:
         F.aggregate(bitvals, F.lit(0).cast("long"), lambda acc, x: acc + x).alias(
             "simhash"
         ),
-    )
-
-
-def simhash_frame_wide_arrow(d: DataFrame, bits: int = 60) -> DataFrame:
-    """simhash_frame_wide with the bit-vote in one Arrow/numpy pass —
-    built as the candidate deploy engine for the ≥10⁵-doc regime
-    (r10 VERDICT "What's wrong" #2 hypothesized the HOF vote — bits ×
-    tokens nested transform/filter lambdas per doc — was the 169.7 s
-    frame's cost at 5M docs) and then MEASURED SLOWER there: at the
-    5M-doc rung with cal-bracketed alternating runs the JVM vote
-    reads 55.0 s vs 75.9-83.9 s arrow at matched near-calm brackets
-    (two of three sessions agree; the third's 355 s hof reading was
-    a core-theft phase its own bracket flags — equality exceptAll-0
-    in every session; COVERAGE.md "simhash_arrow_ab"). The
-    hypothesis inverted because the vote is
-    Catalyst-evaluated integer work the JVM already does acceptably,
-    while this engine must ship every doc's token-hash array through
-    Arrow (~tokens × 8 bytes × 5M docs) before numpy sees it — the
-    boundary cost the cosine engines never paid (they ship fixed-dim
-    vectors and replace O(n·K·d) float math, not O(n·T·bits) integer
-    counting). simhash_frame_wide therefore STAYS the deploy default
-    at every width; this engine remains as the pinned-equal
-    falsification record and for regimes where the vote genuinely
-    dominates the ship (bits and tokens/doc both far past this
-    corpus's shape — re-measure before choosing it).
-
-    Engine split: tokenization AND md5-prefix hashing stay JVM-side
-    in whole-stage codegen (_wide_hash_frame — byte-shared with the
-    interpreted engine, so the hash values are identical by
-    construction); only the majority vote moves to numpy, where it is
-    one (T × bits) bit-unpack plus a per-doc segment sum
-    (np.add.reduceat over batch-flattened hashes — empty-token docs
-    bypass reduceat, whose empty-segment semantics would misread
-    them, and resolve by the same 2·ones ≥ n tie rule: all bits set;
-    NULL token arrays vote 0, the JVM engine's when-NULL
-    fallthrough).
-    Output is pinned IDENTICAL to simhash_frame_wide at bits=32 and
-    60 on the committed corpora (tests/test_simhash_wide.py) — the
-    vote is integer-only, so unlike the cosine engines there is no
-    float-summation caveat: the engines cannot diverge on any input."""
-    if not (4 <= bits <= 60 and bits % 4 == 0):
-        raise ValueError(f"bits={bits} must be a multiple of 4 in [4, 60]")
-    _bits = int(bits)
-
-    def vote_batches(batches):
-        # self-contained: executors don't import this package
-        import numpy as np
-        import pandas as pd
-
-        js = np.arange(_bits, dtype=np.int64)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            null_mask = pdf["hs"].isna().to_numpy()
-            counts = np.fromiter(
-                (0 if ts is None else len(ts) for ts in pdf["hs"]),
-                dtype=np.int64,
-                count=len(pdf),
-            )
-            votes = np.zeros((len(pdf), _bits), dtype=np.int64)
-            nz = counts > 0
-            if nz.any():
-                flat = np.concatenate(
-                    [np.asarray(ts, dtype=np.int64) for ts in pdf["hs"][nz]]
-                )
-                B = (flat[:, None] >> js) & 1
-                starts = np.zeros(len(pdf), dtype=np.int64)
-                np.cumsum(counts[:-1], out=starts[1:])
-                # reduceat over the NONZERO starts only: empty docs
-                # contribute no rows, so consecutive nonzero starts
-                # still delimit exact per-doc segments
-                votes[nz] = np.add.reduceat(B, starts[nz], axis=0)
-            bitset = (2 * votes) >= counts[:, None]
-            sims = (bitset.astype(np.int64) << js).sum(axis=1)
-            # empty token arrays vote all-ones by the tie rule (2·0 ≥ 0)
-            # — bitset already yields that. NULL arrays vote 0 in the
-            # JVM engine (each per-bit when(NULL) falls through to
-            # otherwise(0), so the aggregate sums zeros) — mirror it.
-            if null_mask.any():
-                sims = np.where(null_mask, 0, sims)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "simhash": sims})
-
-    return _wide_hash_frame(d, _bits).mapInPandas(
-        vote_batches, "doc_id long, simhash long"
     )
 
 
@@ -3447,18 +3354,16 @@ ORDER BY doc_id, store_id
 """
 
 
-def _adjacent_pair_counts(wdf: DataFrame, freq_col=None) -> DataFrame:
+def _adjacent_pair_counts(wdf: DataFrame) -> DataFrame:
     """(l, r, pf): corpus-wide adjacent-symbol pair counts over a word
     table, positional (overlaps count: 'aaa' has two (a,a) pairs) and
     weighted by word frequency. Words of one symbol have no pairs
     (sequence(0,-1) would DESCEND — guard with the size filter, not
-    with when()). `freq_col` lets the incremental path feed NEGATED
-    frequencies for retraction rows."""
-    fq = freq_col if freq_col is not None else F.col("freq")
+    with when())."""
     return (
         wdf.filter(F.size("syms") >= 2)
         .select(
-            fq.alias("freq"),
+            "freq",
             F.explode(
                 F.transform(
                     F.sequence(F.lit(0), F.size("syms") - 2),
@@ -3480,10 +3385,6 @@ def bpe_train(
     min_freq: int = 2,
     text_col: str = "text",
     round_plan_hook=None,
-    slice_fold: bool = True,
-    round_times: list | None = None,
-    incremental_counts: bool = False,
-    eager_round_ckpt: bool = False,
 ) -> DataFrame:
     """Distributed BPE tokenizer TRAINING (Sennrich et al. 2016, the
     standard subword algorithm): start from characters (+ an
@@ -3522,14 +3423,9 @@ def bpe_train(
     fold runs ONLY on words that can contain the pair. Merges get
     rarer as ranks grow, so fold work decays toward zero rows per
     round while the cheap containment guard stays vectorized; output
-    is bit-identical to folding everything (test_bpe.py's corpus pin
-    is the oracle). Measured at 10x (COVERAGE.md r8): a
-    filter-both-slices-then-union variant was tried first and ran
-    SLOWER than folding everything on this corpus (two scans + a
-    union + a coalesce of fixed overhead per round vs a fold that is
-    cheap when the vocabulary is small) — the per-row conditional
-    keeps one scan, one checkpoint, no union, and still skips the
-    fold on every untouched word.
+    is bit-identical to folding everything (the plain-Python reference
+    in test_bpe.py is the oracle; measurements in COVERAGE.md
+    "Round-8 measurement").
 
     Production posture for real vocab sizes: n_merges ~30k means 30k
     sequential argmax rounds — inherent to BPE, not to this
@@ -3539,46 +3435,11 @@ def bpe_train(
     the learned table to the full corpus. Train on the sample, encode
     at scale.
 
-    `incremental_counts=True` maintains the pair counts by DELTA (the
-    Sennrich paper's own optimization, distributed): a merge of
-    (l, r) changes the adjacent-pair inventory of ONLY the words it
-    rewrites, so instead of re-exploding every word every round the
-    engine keeps a (l, r, pf) pair-count table and per round
-    retracts the changed slice's old pairs (negated freq), asserts
-    its folded pairs, and re-aggregates — shuffling O(changed words)
-    instead of O(corpus vocabulary), with the argmax reading the
-    pair table directly. Exactness: the delta arithmetic is integer,
-    the changed slice is the same sound overapproximation the fold
-    uses (an untouched word contributes identical pairs to both delta
-    sides and cancels), and zero-count pairs are filtered so argmax
-    parity with a full recount is bit-exact — test_bpe.py pins the
-    incremental-vs-recount merge tables equal rank-for-rank (equality
-    of every round's argmax IS the pair-table invariant) plus the
-    plain-Python reference. It is OPT-IN, not the default, on
-    measurement (COVERAGE.md r8, three-way at 200k distinct words /
-    500 merges, calm): the delta needs two extra per-round jobs (the
-    retraction/assertion explode and a pair-table checkpoint), and at
-    single-node corpus sizes — where every recount is already
-    sub-second — that fixed overhead exceeds the shuffle it saves
-    (429 s vs 310 s total; run-to-run phase swing for identical code
-    is ~23%, so treat totals as indicative). Its regime is the
-    cluster-scale corpus whose word table genuinely shuffles per
-    round (10^8-row word tables where a full recount is a wide job):
-    there the changed fraction decays with pair rarity and the delta
-    is the only form whose per-round cost follows it. Combined with
-    the sample-then-train posture above, the honest default for THIS
-    engine is the recount (exact same path the bench gate baselines).
-
     `round_plan_hook(pairs_df, next_words_df)` is a debug-only probe
     (explain_snapshots.py): called once, on the first round, with the
     round's two internal frames BEFORE they are executed/checkpointed
     — the returned merge table is a LocalTableScan, so the per-round
     plans are the ones worth snapshotting. No effect on results.
-    `slice_fold=False` keeps the pre-r8 fold-everything rewrite (a
-    measurement baseline — scripts/run_scale_spot.py bpe500 compares
-    all forms; output is identical every way) and `round_times` (a
-    list) collects per-round wall seconds. None of them affects
-    results.
     """
     spark = docs.sparkSession
     words = (
@@ -3594,16 +3455,8 @@ def bpe_train(
         .localCheckpoint()
     )
     merges: list[tuple] = []
-    pc = (
-        _adjacent_pair_counts(words).localCheckpoint()
-        if incremental_counts
-        else None
-    )
-    import time as _time
-
     for rank in range(n_merges):
-        _t0 = _time.time()
-        pairs = pc if pc is not None else _adjacent_pair_counts(words)
+        pairs = _adjacent_pair_counts(words)
         top = pairs.orderBy(F.desc("pf"), "l", "r").limit(1).collect()
         if not top or top[0]["pf"] < min_freq:
             break
@@ -3638,41 +3491,14 @@ def bpe_train(
         can = F.array_contains("syms", left) & F.array_contains(
             "syms", right
         )
-        if slice_fold:
-            # fold only words that can contain the pair (sound
-            # overapproximation; the fold is the identity elsewhere —
-            # If evaluates lazily per row, so untouched words never
-            # run the interpreted HOF)
-            nxt = words.select(
-                "freq", F.when(can, fold).otherwise(F.col("syms")).alias("syms")
-            )
-        else:
-            nxt = words.select("freq", fold.alias("syms"))
-        if pc is not None:
-            # delta-maintain the pair table BEFORE advancing words:
-            # retract the changed slice's current pairs (negated
-            # freq), assert its folded pairs, merge, drop zeros. The
-            # fold runs twice on the changed slice (here and in the
-            # words rewrite) — it decays with pair rarity, while the
-            # full recount this replaces never would.
-            changed = words.filter(can)
-            new_pc = (
-                pc.unionByName(
-                    _adjacent_pair_counts(changed, freq_col=-F.col("freq"))
-                )
-                .unionByName(
-                    _adjacent_pair_counts(
-                        changed.select("freq", fold.alias("syms"))
-                    )
-                )
-                .groupBy("l", "r")
-                .agg(F.sum("pf").alias("pf"))
-                .filter(F.col("pf") > 0)
-            )
-            if rank == 0 and round_plan_hook is not None:
-                round_plan_hook(new_pc, nxt)
-            pc = new_pc.localCheckpoint()
-        elif rank == 0 and round_plan_hook is not None:
+        # fold only words that can contain the pair (sound
+        # overapproximation; the fold is the identity elsewhere — If
+        # evaluates lazily per row, so untouched words never run the
+        # interpreted HOF)
+        nxt = words.select(
+            "freq", F.when(can, fold).otherwise(F.col("syms")).alias("syms")
+        )
+        if rank == 0 and round_plan_hook is not None:
             round_plan_hook(pairs, nxt)
         # r13 opt: LAZY checkpoint — each round previously ran two
         # jobs (the argmax TakeOrdered, then an eager materialization
@@ -3684,9 +3510,7 @@ def bpe_train(
         # exists) still lands before any second-round fold stacks on
         # top. The final round's pin simply never materializes (its
         # merges are already collected).
-        words = nxt.localCheckpoint(eager=eager_round_ckpt)
-        if round_times is not None:
-            round_times.append(_time.time() - _t0)
+        words = nxt.localCheckpoint(eager=False)
     return spark.createDataFrame(
         merges, "rank int, left string, right string, merged string, freq bigint"
     )

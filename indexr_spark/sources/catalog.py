@@ -258,18 +258,12 @@ class Catalog:
         O(files) sidecar rewrite to the periodic full-manifest
         materialization, so the sidecar may legitimately LAG the
         manifest. The prune result is therefore reconciled against the
-        live file set: live files the sidecar doesn't cover are added
-        to the scan list unpruned (safe SOME — the rough-check
-        contract for missing stats), and entries for files no longer
-        live are dropped. Freshness is a pruning-quality knob, never a
-        correctness input."""
-        from indexr_spark.plans.rough_check import (
-            ColStats,
-            PruneResult,
-            prune as rc_prune,
-        )
+        live file set (snapshots.reconcile_prune, shared with
+        segments.read_pruned). Freshness is a pruning-quality knob,
+        never a correctness input."""
+        from indexr_spark.plans.rough_check import ColStats, prune as rc_prune
         from indexr_spark.sources.segments import SIDECAR_NAME, index_stamp, load_sidecar
-        from indexr_spark.sources.snapshots import files_of, latest_version
+        from indexr_spark.sources.snapshots import reconcile_prune
 
         path = self.table_dir(name)
         if not os.path.exists(os.path.join(path, SIDECAR_NAME)):
@@ -307,17 +301,7 @@ class Catalog:
                         )
                     except TypeError:
                         fstats.pop(c.name)  # incomparable default → no stats
-        result = rc_prune(stats, predicate)
-        v = latest_version(path)
-        if v:
-            live = {os.path.join(path, f) for f in files_of(path, v)}
-            covered = set(result.scan) | set(result.skipped)
-            result = PruneResult(
-                scan=sorted((set(result.scan) & live) | (live - covered)),
-                skipped=sorted(set(result.skipped) & live),
-                all_match=sorted(set(result.all_match) & live),
-            )
-        return result
+        return reconcile_prune(path, rc_prune(stats, predicate))
 
     def build_indexes(self, spark: SparkSession, name: str) -> dict[str, int]:
         """Build the optional string-column indexes for every

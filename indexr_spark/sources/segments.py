@@ -559,10 +559,15 @@ def read_pruned(
     Mirrors the reference's cascade (IndexRRecordReader.java:119-154):
     segment-level rough check drops files that can't match (NONE);
     surviving files are scanned with the exact predicate re-applied —
-    row-group/page skipping inside the scan is Parquet's job. Returns
-    the DataFrame plus the prune decision for observability.
+    row-group/page skipping inside the scan is Parquet's job. On a
+    snapshot-managed table the decision is reconciled against the
+    live manifest (snapshots.reconcile_prune), so rows appended since
+    the last sidecar refresh are still scanned. Returns the DataFrame
+    plus the prune decision for observability.
     """
-    result = prune(load_sidecar(path), predicate.optimize())
+    from indexr_spark.sources.snapshots import reconcile_prune
+
+    result = reconcile_prune(path, prune(load_sidecar(path), predicate.optimize()))
     reader = getattr(spark.read, file_format)
     if not result.scan:
         return spark.createDataFrame([], reader(path).schema), result

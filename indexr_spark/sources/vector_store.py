@@ -636,8 +636,9 @@ def suggest_rerank_from(
 # literals, so a candidate's ADC distance is m=4 table lookups summed
 # left-to-right in both engines — bit-identical by construction. The
 # only engine-side floating point is the three dot products s13/s01
-# already certify (assignment dot, residual-subspace dot, rerank dot),
-# each a left-to-right fold in both engines.
+# already certify (assignment dot, residual-subspace dot, rerank dot);
+# the first two are BLAS sums on the Spark side, the rerank dot is a
+# left-to-right fold in both engines.
 
 S14_NLIST, S14_NPROBE, S14_R, S14_K, S14_NQ = 4, 2, 40, 5, 3
 
@@ -694,19 +695,15 @@ def _s14_probe_rows() -> list[tuple]:
 
 def _s14_coded_arrow(emb: DataFrame, cents: list[list[float]]) -> DataFrame:
     """The s14 corpus side — norm, coarse cosine assign, residual
-    subtraction, PQ encode — in ONE Arrow mapInPandas pass (BLAS
-    E·Cᵀ for the assign, per-subspace matmul argmax for the codes),
-    the engine the semdedup/kmeans Arrow ladder measured ~2 orders
-    faster than interpreted in-row lambdas at n·k·d scale. Semantics
-    replicate the literal chain exactly: centroids unit-scaled by the
-    SAME driver-side python-float arithmetic (_unit_scaled),
-    np.argmax's first-max = the smaller-label tie-break, residuals
-    against the RAW quarter-valued centroids (exact float subtract),
-    codes by the same argmax(2·dot − |c|²) with ties → lower code.
-    The one caveat every Arrow engine here carries: BLAS sums dots in
-    a different order than the JVM fold, so only a value within an
-    ulp of a rank boundary could diverge — exceptAll-pinned equal on
-    the committed corpora (tests/test_ivfpq.py)."""
+    subtraction, PQ encode — in ONE Arrow mapInPandas pass (E·Cᵀ for
+    the assign, per-subspace matmul argmax for the codes). Centroids
+    are unit-scaled driver-side (_unit_scaled), np.argmax's first-max
+    breaks ties toward the smaller cell, residuals are taken against
+    the RAW quarter-valued centroids (exact float subtract), and codes
+    are argmax(2·dot − |c|²) with ties → lower code (pq_encode's
+    contract). BLAS sums dots in a different order than a
+    left-to-right fold, so only a value within an ulp of a rank
+    boundary could differ from the DuckDB oracle's."""
     from indexr_spark.operators.pq import s13_codebooks
     from indexr_spark.operators.similarity import _unit_scaled
 
@@ -752,55 +749,28 @@ def _s14_coded_arrow(emb: DataFrame, cents: list[list[float]]) -> DataFrame:
     )
 
 
-def s14_ivfpq_probe(
-    spark: SparkSession, sf_dir: str, engine: str = "arrow"
-) -> DataFrame:
+def s14_ivfpq_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The s14 registry form: fixed-model IVF-PQ probe over the
     embeddings table — (q_id, rank, vec_id, cell, adc, cosine).
 
     Plan shape is the production posture for a query BATCH: the probe
     model is a broadcast table (q_id, cell, adc table, query vector),
-    so the candidate stream stays fully data-driven — in-row cell
-    assign + residual PQ encode on the corpus side, one broadcast join
-    on cell, m in-row table lookups per candidate, and the only wide
-    operations are the two per-query ranking windows (ADC shortlist at
-    R, exact rerank at k). No when-chains: a thousand queries would
-    run the identical plan.
-
-    `engine="arrow"` (the default since r14) routes the corpus side
-    (norm + assign + residual + PQ encode — the dominant cost of the
-    1M probe, COVERAGE.md ivfpq1m) through one BLAS mapInPandas pass
-    (_s14_coded_arrow); "literal" keeps the Catalyst expression chain
-    — the two-engine protocol semdedup_arrow/kmeans_assign_arrow
-    established. Join, ADC lookups, and both ranking windows are the
-    identical JVM plan under either engine; equality is
-    exceptAll-pinned in tests/test_ivfpq.py (both directions, smoke +
-    oracle corpora, and checked once at sf0.1 before the r14 flip).
-    The flip's evidence (r14 A/B at sf0.1, interleaved ×5): arrow won
-    5/5, min 1.81 s vs 2.87 s (1.59×), and cold-run 2.6 s vs 24.9 s —
-    the literal chain's whole-stage codegen compile alone dwarfs the
-    Arrow boundary's cost at every scale measured."""
-    from indexr_spark.operators.pq import pq_encode, s13_codebooks
+    so the candidate stream stays fully data-driven — cell assign +
+    residual PQ encode on the corpus side in one Arrow pass
+    (_s14_coded_arrow), one broadcast join on cell, m in-row table
+    lookups per candidate, and the only wide operations are the two
+    per-query ranking windows (ADC shortlist at R, exact rerank at k).
+    No when-chains: a thousand queries would run the identical plan."""
+    from indexr_spark.operators.pq import s13_codebooks
     from indexr_spark.tables import load_table
 
-    if engine not in ("literal", "arrow"):
-        raise ValueError(f"engine={engine!r} must be 'literal' or 'arrow'")
     cents = s14_centroids()
     m = len(s13_codebooks())
     ksub = len(s13_codebooks()[0])
     from pyspark.sql import Window as W
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    if engine == "arrow":
-        coded = _s14_coded_arrow(emb, cents)
-    else:
-        prep = _prepared(emb).withColumn("cell", _assign_cell(cents))
-        cmat = F.lit([[float(x) for x in c] for c in cents])
-        prep = prep.withColumn(
-            "_res",
-            F.zip_with(F.col("e"), F.get(cmat, F.col("cell")), lambda x, c: x - c),
-        )
-        coded = pq_encode(prep, s13_codebooks(), embedding_col="_res")
+    coded = _s14_coded_arrow(emb, cents)
 
     probe = F.broadcast(
         spark.createDataFrame(

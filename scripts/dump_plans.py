@@ -1,11 +1,12 @@
 #!/usr/bin/env python
-"""Dump .explain("formatted") for headline queries into plans/r13/.
+"""Dump .explain("formatted") for headline queries into plans/<round>/.
 
 Usage:
-    python scripts/dump_plans_r13.py before [q1,q2,...]
-    python scripts/dump_plans_r13.py after  [q1,q2,...]
+    python scripts/dump_plans.py <round> before [q1,q2,...]
+    python scripts/dump_plans.py <round> after  [q1,q2,...]
 
-Writes plans/r13/<query>_<tag>.txt for every requested query (defaults
+e.g. `python scripts/dump_plans.py r14 before`. Writes
+plans/<round>/<query>_<tag>.txt for every requested query (defaults
 to the full bench HEADLINE list). Plans are captured at sf0.001 (plan
 shape is SF-invariant; the same convention as explain_snapshots.py)
 with volatile path/plan-id details left in place — these files are a
@@ -28,20 +29,23 @@ from indexr_spark import operators  # noqa: E402
 from indexr_spark.session import get_spark  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.001"
-OUT = _REPO / "plans" / "r13"
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
+    if len(sys.argv) < 2:
+        sys.exit(__doc__)
+    rnd = sys.argv[1]
+    tag = sys.argv[2] if len(sys.argv) > 2 else "before"
     names = (
-        sys.argv[2].split(",") if len(sys.argv) > 2 else list(bench.HEADLINE)
+        sys.argv[3].split(",") if len(sys.argv) > 3 else list(bench.HEADLINE)
     )
     unknown = [n for n in names if n not in operators.QUERIES]
     if unknown:
         sys.exit(f"unknown queries: {unknown}")
-    OUT.mkdir(parents=True, exist_ok=True)
+    out = _REPO / "plans" / rnd
+    out.mkdir(parents=True, exist_ok=True)
     spark = get_spark(
-        app_name="dump-plans-r13",
+        app_name=f"dump-plans-{rnd}",
         extra_confs={"spark.ui.showConsoleProgress": "false"},
     )
     for name in names:
@@ -49,7 +53,7 @@ def main() -> None:
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain("formatted")
-        (OUT / f"{name}_{tag}.txt").write_text(buf.getvalue())
+        (out / f"{name}_{tag}.txt").write_text(buf.getvalue())
         print(name, "ok")
     spark.stop()
 

@@ -10,10 +10,8 @@
 Families (corpus in _CORPUS): docs10x vecs50x rel10x pipeline10x
 bpe500 funnel100x ivfpq1m drafts10x spans100x lsh100x simhash100x
 simhash1000x mm06_100x lm100x row_ops100x s14_50x s15_50x s15_500k
-s15_arrow_ab s14_arrow_ab simhash_arrow_ab kmeans1m — each docstring
-states its
-sub-oracles and the
-COVERAGE.md section that interprets its numbers.
+kmeans1m — each docstring states its sub-oracles and the COVERAGE.md
+section that interprets its numbers.
 
 Prints one line per measurement with a single-thread spin calibration
 after each (this box throttles in phases — a row is only comparable
@@ -484,59 +482,32 @@ def ivfpq1m(spark) -> None:
 
 
 def bpe500(spark) -> None:
-    """The r8 bpe_train measurement (VERDICT task 2): a >=500-merge
-    training run on the 10x corpus, conditional (per-row guarded)
-    fold vs the fold-everything baseline it replaced, with the
-    per-round time curve summarized in windows. The claim: per-round
-    fold cost decays with merge-pair rarity (late merges touch few
-    words), while the baseline re-folds every word every round.
-    min_freq=1 so the synthetic corpus's limited pair inventory does
-    not stop the run early (at the default min_freq=2 it exhausts at
-    127 merges)."""
+    """bpe_train at >=500 merges: the 10x corpus, then a ~200k-word
+    vocabulary. min_freq=1 on the 10x corpus so its limited pair
+    inventory does not stop the run early (at the default min_freq=2
+    it exhausts at 127 merges)."""
     from indexr_spark.operators.text import bpe_train
 
     sf = "/tmp/sf1x10"
     docs = spark.read.parquet(f"{sf}/documents.parquet")
     n = int(os.environ.get("INDEXR_BPE_BENCH_MERGES", "500"))
 
-    def windows(ts: list[float]) -> str:
-        out = []
-        for lo in (0, len(ts) // 2, max(0, len(ts) - 10)):
-            w = ts[lo:lo + 10]
-            if w:
-                out.append(f"r{lo + 1}-{lo + len(w)}: "
-                           f"{sum(w) / len(w):.2f}s/round")
-        return ", ".join(out)
-
-    CONFIGS = (
-        ("shipped:recount+conditional", False, True),
-        ("opt-in:incremental+conditional", True, True),
-        ("pre-r8:recount+fold-everything", False, False),
-    )
-
-    def run(tag, corpus, inc, slice_fold, min_freq=2):
-        times: list[float] = []
+    def run(tag, corpus, min_freq=2):
         t0 = time.time()
-        merges = bpe_train(corpus, n_merges=n, min_freq=min_freq,
-                           slice_fold=slice_fold, round_times=times,
-                           incremental_counts=inc)
+        merges = bpe_train(corpus, n_merges=n, min_freq=min_freq)
         rows = merges.count()
         print(f"bpe_train[{tag}] {n} merges: {time.time() - t0:.1f}s "
-              f"total, {rows} merges learned, curve [{windows(times)}]  "
-              f"spin={_spin()}", flush=True)
+              f"total, {rows} merges learned  spin={_spin()}", flush=True)
 
-    run("10x,shipped", docs, False, True, min_freq=1)
+    run("10x", docs, min_freq=1)
 
     # The docs10x corpus has only 40 distinct words (replica jitter of
     # a template corpus), so its word table is 40 rows and every round
-    # is fixed overhead — a DEGENERATE regime for the fold comparison
-    # (measured: conditional ~= fold-everything there, both ~0.17
-    # s/round). The conditional fold's claim lives where BPE actually
-    # runs: a big vocabulary. Build one deterministically (no RNG —
-    # resume rules): ~200k distinct words over a 16-letter alphabet
-    # from md5(i), Zipf-ish head via freq = max(1, 2000 // (i + 4)),
-    # one row per word with the word repeated freq times (tokens()
-    # splits on single spaces).
+    # is fixed overhead. BPE's real regime is a big vocabulary. Build
+    # one deterministically (no RNG): ~200k distinct words over a
+    # 16-letter alphabet from md5(i), Zipf-ish head via
+    # freq = max(1, 2000 // (i + 4)), one row per word with the word
+    # repeated freq times (tokens() splits on single spaces).
     from pyspark.sql import functions as F
 
     wide = "/tmp/bpe_widevocab"
@@ -555,8 +526,7 @@ def bpe500(spark) -> None:
     n_words = wdocs.selectExpr("explode(split(text, ' ')) w").select(
         "w").distinct().count()
     print(f"wide-vocab corpus: {n_words} distinct words", flush=True)
-    for tag, inc, slice_fold in CONFIGS:
-        run(f"wide,{tag}", wdocs, inc, slice_fold)
+    run("wide", wdocs)
 
 
 def drafts10x(spark) -> None:
@@ -1182,7 +1152,7 @@ def s15_50x(spark) -> None:
     model would be 1.25B pairs here, K=128 is ~39M. Centroids come
     from the md5 formula (the _plane_weights idiom) passed through
     semdedup's centroids parameter — the oracle-certified plan shape
-    is unchanged, only the literal matrix is bigger. Family check:
+    is unchanged, only the centroid matrix is bigger. Family check:
     every replica family is mutually tau-close, so survivors should
     collapse to ~1 per (family, cell-split)."""
     import hashlib
@@ -1199,19 +1169,12 @@ def s15_50x(spark) -> None:
         for c in range(128)
     ]
     vecs = spark.read.parquet("/tmp/sfvec50/embeddings.parquet")
-    kept_by_variant = {}
-    for ck in (False, True):
-        t0 = time.time()
-        out = semdedup(vecs, centroids=cents, checkpoint=ck).localCheckpoint()
-        kept = out.filter("keep").count()
-        total = out.count()
-        kept_by_variant[ck] = kept
-        print(f"s15_semdedup[K=128,checkpoint={ck}]  {time.time() - t0:.1f}s  "
-              f"rows={total}  kept={kept}  spin={_spin()}", flush=True)
-    assert kept_by_variant[False] == kept_by_variant[True], kept_by_variant
-    # no-cartesian guard: the within-cell join must be keyed
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan, "cartesian product in s15 plan"
+    t0 = time.time()
+    out = semdedup(vecs, centroids=cents).localCheckpoint()
+    kept = out.filter("keep").count()
+    total = out.count()
+    print(f"s15_semdedup[K=128]  {time.time() - t0:.1f}s  "
+          f"rows={total}  kept={kept}  spin={_spin()}", flush=True)
     # family collapse: survivors per base family (vec_id % 100000
     # recovers the base id) should be far under the 50 replicas
     fam = (out.filter("keep")
@@ -1227,13 +1190,10 @@ def s15_500k(spark) -> None:
     NOT n², because K grows with the corpus to hold the within-cell
     pair budget Σ C(n_c, 2) ≈ n²/2K at a constant per-cell size —
     the paper's own posture (11k clusters on LAION). Two arms, K=512
-    (cells ~977) and K=1024 (cells ~488), both through the
-    checkpoint=True valve (the production posture: assignment
-    materializes as its own pass, as the s15 A/B measured). The
-    centroid model stays the oracle-certified ONE-2-D-literal argmax
-    (a K×64 float literal is 512 KB at K=1024 — still a driver-sized
-    model by the codebook-means contract; at paper scale — 11k×768 —
-    the literal is ~68 MB and the model graduates from expression to
+    (cells ~977) and K=1024 (cells ~488). The centroid model ships in
+    the assignment closure (a K×64 float matrix is 512 KB at K=1024 —
+    still a driver-sized model by the codebook-means contract; at
+    paper scale — 11k×768 — it is ~68 MB and the model graduates to a
     broadcast-joined table, which is the IVF store path's job).
     Family sanity: 250 jittered replicas per base vector are mutually
     tau-close, so survivors per (base % 100000) family must collapse
@@ -1258,19 +1218,17 @@ def s15_500k(spark) -> None:
             for c in range(K)
         ]
         t0 = time.time()
-        out = semdedup(vecs, centroids=cents, checkpoint=True).localCheckpoint()
+        out = semdedup(vecs, centroids=cents).localCheckpoint()
         kept = out.filter("keep").count()
         total = out.count()
         w = time.time() - t0
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "CartesianProduct" not in plan, "cartesian in s15_500k plan"
         cells = out.select("cell").distinct().count()
         fam = (out.filter("keep")
                   .groupBy((F.col("vec_id") % 100000).alias("base"))
                   .count())
         mx = fam.agg(F.max("count").alias("m"),
                      F.avg("count").alias("a")).collect()[0]
-        print(f"s15_semdedup[K={K},checkpoint=True]  {w:.1f}s  rows={total}  "
+        print(f"s15_semdedup[K={K}]  {w:.1f}s  rows={total}  "
               f"kept={kept}  cells_used={cells}  survivors/family max={mx['m']} "
               f"avg={mx['a']:.2f}  spin={_spin()}", flush=True)
 
@@ -1394,181 +1352,23 @@ def row_ops100x(spark) -> None:
           f"sources={len(out37)}  spin={_spin()}", flush=True)
 
 
-def s15_arrow_ab(spark) -> None:
-    """The semdedup engine A/B at 500k vectors, K=512: the exploded
-    pair join with its interpreted zip_with cosine (the
-    oracle-certified form) vs the cell-local BLAS engine
-    (semdedup_arrow). Output equality asserted distributively
-    (exceptAll both directions over the full 500k-row frame), walls
-    printed per engine. The join arm's reference wall on this corpus
-    is 347.4 s (COVERAGE.md "s15_500k")."""
-    import hashlib
-
-    from pyspark.sql import functions as F
-
-    from indexr_spark.operators.similarity import semdedup, semdedup_arrow
-
-    def h32(s: str) -> int:
-        return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
-
-    K = 512
-    cents = [
-        [(h32(f"s15_{c}_{d}") % 2001 - 1000) / 1000.0 for d in range(64)]
-        for c in range(K)
-    ]
-    vecs = (spark.read.parquet("/tmp/sfvec500/embeddings.parquet")
-                 .filter(F.col("vec_id") < 250 * 100000)
-                 .localCheckpoint())
-    print(f"corpus prefix: {vecs.count()} vectors", flush=True)
-
-    outs = {}
-    for tag, fn in (("arrow-full", lambda: semdedup_arrow(
-                        vecs, centroids=cents, assign="arrow")),
-                    ("arrow", lambda: semdedup_arrow(vecs, centroids=cents)),
-                    ("join", lambda: semdedup(vecs, centroids=cents,
-                                              checkpoint=True))):
-        t0 = time.time()
-        out = fn().localCheckpoint()
-        kept = out.filter("keep").count()
-        print(f"s15[K={K},engine={tag}]  {time.time() - t0:.1f}s  "
-              f"kept={kept}  spin={_spin()}", flush=True)
-        outs[tag] = out.select("vec_id", "cell", F.round("csim", 6).alias("c"),
-                               "keep")
-    for a, bt in (("arrow", "join"), ("arrow-full", "arrow")):
-        d1 = outs[a].exceptAll(outs[bt]).count()
-        d2 = outs[bt].exceptAll(outs[a]).count()
-        assert d1 == 0 and d2 == 0, f"{a} vs {bt} diverge: {d1}/{d2} rows"
-        print(f"engine equality {a} == {bt}: exceptAll 0 both directions",
-              flush=True)
-
-
-def simhash_arrow_ab(spark) -> None:
-    """The r10 verdict's "What's wrong #2" executed: the 60-bit
-    wide-simhash frame at 5M docs (sfsalt1000) with the bit-vote as
-    one numpy bit-unpack + reduceat segment sum
-    (simhash_frame_wide_arrow) vs the interpreted HOF vote
-    (simhash_frame_wide, 169.7 s at this rung in late r10). The hash
-    projection is byte-shared (_wide_hash_frame), so the integer vote
-    cannot diverge — equality is still asserted exceptAll both
-    directions at the full 5M (cheap next to the frame itself).
-    Engines alternate hof/arrow/hof/arrow and every run is BRACKETED
-    by the multicore cal (single-thread spin cannot see core theft —
-    the r11 finding: two sessions read the hof wall at 68.5 s and
-    355.2 s at matched spins 0.59/0.56), so each wall can be
-    normalized by its own bracket like bench.py does."""
-    from pyspark.sql import functions as F
-
-    from indexr_spark.operators.text import (
-        simhash_frame_wide,
-        simhash_frame_wide_arrow,
-    )
-
-    _cal = _make_cal(spark)
-
-    docs = spark.read.parquet(
-        "/tmp/sfsalt1000/documents.parquet").select("doc_id", "text")
-    ndocs = docs.count()
-    print(f"corpus: {ndocs} docs  cal={_cal()}", flush=True)
-    outs = {}
-    for tag, fn, i in (("hof", simhash_frame_wide, 0),
-                       ("arrow", simhash_frame_wide_arrow, 0),
-                       ("hof", simhash_frame_wide, 1),
-                       ("arrow", simhash_frame_wide_arrow, 1)):
-        t0 = time.time()
-        out = fn(docs, bits=60).localCheckpoint()
-        n = out.count()
-        print(f"60bit frame[5M,{tag},{i}]  {time.time() - t0:.1f}s  "
-              f"rows={n}  cal={_cal()}  spin={_spin()}", flush=True)
-        # round-0 (warm) checkpoints would otherwise sit orphaned in
-        # executor storage while the steady runs are being wall-timed
-        # (r11 ADVICE) — release before overwriting
-        if tag in outs:
-            outs[tag].unpersist()
-        outs[tag] = out
-    d1 = outs["arrow"].exceptAll(outs["hof"]).count()
-    d2 = outs["hof"].exceptAll(outs["arrow"]).count()
-    assert d1 == 0 and d2 == 0, f"engines diverge: {d1}/{d2} rows"
-    print("engine equality arrow == hof at 5M: exceptAll 0 both "
-          "directions", flush=True)
-
-
-def s14_arrow_ab(spark) -> None:
-    """The r10 verdict's named lever executed: s14's fixed-model
-    probe at 1M vectors (vecs500x) with the corpus side — norm,
-    coarse assign, residual, PQ encode — as ONE BLAS mapInPandas
-    pass (engine='arrow') vs the certified literal chain. The 13.2 s
-    steady literal wall from late-r10 was stage-attributed to exactly
-    this corpus-side work, so the A/B isolates the lever. Engines
-    ALTERNATE literal/arrow/literal/arrow with a multicore-cal
-    bracket around every run (the simhash_arrow_ab lesson: the r11
-    sessions read the literal wall at 80-251 s under phase noise that
-    single-thread spin cannot see, vs r10's calm 13.2 s); exceptAll
-    equality asserted BOTH directions on the steady outputs — the
-    registered row keeps engine='literal' as its certified plan."""
-    from pyspark.sql import functions as F
-
-    from indexr_spark.sources.vector_store import s14_ivfpq_probe
-
-    _cal = _make_cal(spark)
-
-    sf = "/tmp/sfvec500"
-    print(f"start cal={_cal()}", flush=True)
-    outs = {}
-    for engine, i in (("literal", 0), ("arrow", 0),
-                      ("literal", 1), ("arrow", 1)):
-        t0 = time.time()
-        out = s14_ivfpq_probe(spark, sf, engine=engine).localCheckpoint()
-        n = out.count()
-        print(f"s14_ivfpq_probe[1M,{engine},{i}]  "
-              f"{time.time() - t0:.1f}s  rows={n}  cal={_cal()}  "
-              f"spin={_spin()}", flush=True)
-        # release the round-0 warm checkpoint before overwriting (r11
-        # ADVICE — eviction is otherwise GC-timing dependent noise)
-        if engine in outs:
-            outs[engine].unpersist()
-        outs[engine] = out
-    d1 = outs["arrow"].exceptAll(outs["literal"]).count()
-    d2 = outs["literal"].exceptAll(outs["arrow"]).count()
-    assert d1 == 0 and d2 == 0, f"engines diverge: {d1}/{d2} rows"
-    print("engine equality arrow == literal at 1M: exceptAll 0 both "
-          "directions", flush=True)
-
-
 def kmeans1m(spark) -> None:
-    """Quantizer training at 1M vectors, k=64, 3 Lloyd rounds: the
-    literal in-row argmax (certified form) vs kmeans_assign_arrow
-    (BLAS E·Cᵀ per batch). Training pays the assignment every round,
-    so this is where the measured two-orders HOF-vs-BLAS gap
-    (s15_arrow_ab) compounds. Model equivalence asserted with the
-    test suite's tolerances (same round count, final inertia
-    rel-close, centroids element-close); the per-round history is
-    printed so the per-iteration wall is visible, not just the
-    total."""
-    import math
-
+    """Quantizer training at 1M vectors, k=64, 3 Lloyd rounds through
+    kmeans_fit. Training pays the assignment every round; the
+    per-round history is printed so the per-iteration wall is
+    visible, not just the total."""
     from indexr_spark.operators.similarity import kmeans_fit
 
     vecs = spark.read.parquet(
         "/tmp/sfvec500/embeddings.parquet").localCheckpoint()
     print(f"corpus: {vecs.count()} vectors", flush=True)
-    results = {}
-    for engine in ("arrow", "literal"):
-        t0 = time.time()
-        cents, hist = kmeans_fit(vecs, k=64, max_iters=3, tol=0.0,
-                                 assign=engine)
-        w = time.time() - t0
-        results[engine] = (cents, hist)
-        print(f"kmeans_fit[1M,k=64,iters=3,{engine}]  {w:.1f}s  "
-              f"({w / len(hist):.1f}s/round)  "
-              f"inertia={[round(h['inertia'], 1) for h in hist]}  "
-              f"spin={_spin()}", flush=True)
-    (cl, hl), (ca, ha) = results["literal"], results["arrow"]
-    assert len(hl) == len(ha)
-    assert math.isclose(hl[-1]["inertia"], ha[-1]["inertia"], rel_tol=1e-6)
-    assert max(abs(x - y) for a, b in zip(cl, ca)
-               for x, y in zip(a, b)) < 1e-6
-    print("model equivalence: rounds equal, final inertia rel-close 1e-6, "
-          "centroids element-close 1e-6", flush=True)
+    t0 = time.time()
+    _cents, hist = kmeans_fit(vecs, k=64, max_iters=3, tol=0.0)
+    w = time.time() - t0
+    print(f"kmeans_fit[1M,k=64,iters=3]  {w:.1f}s  "
+          f"({w / len(hist):.1f}s/round)  "
+          f"inertia={[round(h['inertia'], 1) for h in hist]}  "
+          f"spin={_spin()}", flush=True)
 
 
 _CORPUS = {"docs10x": "/tmp/sf1x10/documents.parquet",
@@ -1588,9 +1388,6 @@ _CORPUS = {"docs10x": "/tmp/sf1x10/documents.parquet",
            "s15_500k": "/tmp/sfvec500/embeddings.parquet",
            "lm100x": "/tmp/sfsalt100/documents.parquet",
            "row_ops100x": "/tmp/sfsalt100/documents.parquet",
-           "s15_arrow_ab": "/tmp/sfvec500/embeddings.parquet",
-           "s14_arrow_ab": "/tmp/sfvec500/embeddings.parquet",
-           "simhash_arrow_ab": "/tmp/sfsalt1000/documents.parquet",
            "kmeans1m": "/tmp/sfvec500/embeddings.parquet",
            "simhash1000x": "/tmp/sfsalt1000/documents.parquet"}
 
@@ -1637,9 +1434,6 @@ if __name__ == "__main__":
                 "s15_500k": "s06_ivf_topk",
                 "lm100x": "d30_pipeline_funnel",
                 "row_ops100x": "d30_pipeline_funnel",
-                "s15_arrow_ab": "s06_ivf_topk",
-                "s14_arrow_ab": "s06_ivf_topk",
-                "simhash_arrow_ab": "d32_simhash_pairs",
                 "kmeans1m": "s06_ivf_topk",
                 "simhash1000x": "d32_simhash_pairs"}[which]
         cap = os.environ.pop("INDEXR_LSH_MAX_BUCKET", None)
@@ -1660,8 +1454,6 @@ if __name__ == "__main__":
      "simhash100x": simhash100x, "mm06_100x": mm06_100x,
      "s14_50x": s14_50x, "s15_50x": s15_50x, "s15_500k": s15_500k,
      "lm100x": lm100x, "row_ops100x": row_ops100x,
-     "s15_arrow_ab": s15_arrow_ab, "s14_arrow_ab": s14_arrow_ab,
-     "simhash_arrow_ab": simhash_arrow_ab,
      "kmeans1m": kmeans1m,
      "simhash1000x": simhash1000x}[which](spark)
     spark.stop()

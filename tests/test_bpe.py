@@ -156,20 +156,6 @@ def test_d34_registry_row_shape(spark):
     assert "d34_bpe_merges" not in operators.ORACLE
 
 
-def test_bpe_train_slice_fold_matches_fold_everything(spark):
-    """The r8 sliced fold (only words containing both merge symbols
-    are re-folded) must be bit-identical to the fold-everything
-    baseline it replaced — same merges, same frequencies, same
-    ranks — since the fold is the identity on every excluded word."""
-    texts = ["low low low lower lower lowest", "new newer newest low"]
-    docs = spark.createDataFrame([(t,) for t in texts], "text string")
-    sliced = bpe_train(docs, n_merges=8).orderBy("rank").collect()
-    full = bpe_train(docs, n_merges=8, slice_fold=False).orderBy(
-        "rank"
-    ).collect()
-    assert sliced == full
-
-
 def test_d35_draft_fixed_table_encode_matches_duckdb_replay(spark):
     """The r9 registry row, proven before registration (REGISTRY.md's
     d35 sketch): bpe_apply with the FIXED D35_MERGES table must equal
@@ -253,21 +239,6 @@ def test_d35_draft_fixed_table_encode_matches_duckdb_replay(spark):
             s for w in r["text"].split(" ") if w for s in ref_encode(w)
         ]
         assert got[r["doc_id"]] == expect, r["doc_id"]
-
-
-def test_bpe_train_incremental_counts_match_recount(spark):
-    """The delta-maintained pair table must drive the identical argmax
-    as a full recount EVERY round — rank-for-rank, freq-for-freq
-    equality of the two variants' merge tables over many rounds is
-    exactly that invariant (one divergent count anywhere flips some
-    round's argmax or its tie-break)."""
-    docs = load_table(spark, SMOKE_SF, "documents")
-    inc = bpe_train(docs, n_merges=12, incremental_counts=True).orderBy(
-        "rank"
-    ).collect()
-    rec = bpe_train(docs, n_merges=12).orderBy("rank").collect()
-    assert inc == rec
-    assert len(inc) == 12
 
 
 def test_d37_fertility_matches_duckdb_and_bounds(spark):

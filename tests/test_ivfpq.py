@@ -399,24 +399,12 @@ def test_s14_duckdb_parity_and_structure(spark, duck_smoke):
         assert coss == sorted(coss, reverse=True)
 
 
-def test_s14_arrow_engine_equals_literal_both_corpora(spark):
-    """The r10 verdict's named lever: the s14 corpus side (norm +
-    coarse assign + residual + PQ encode) as one BLAS mapInPandas
-    pass must reproduce the certified literal chain row-for-row —
-    exceptAll in BOTH directions on the smoke and oracle corpora
-    (the semdedup_arrow equality protocol). Since r14 the registered
-    row defaults to engine='arrow' (A/B: 1.59x at sf0.1), so this
-    equality IS the certification bridge from the literal chain's
-    oracle history to the deployed default."""
-    import pytest
+def test_s14_duckdb_parity_oracle_sf(spark):
+    """s14 against its generated DuckDB oracle on the oracle corpus
+    (sf0.01), frame-exact — the smoke corpus is pinned above."""
+    from indexr_spark.sources.vector_store import S14_ORACLE_DRAFT, s14_ivfpq_probe
+    from tests.conftest import ORACLE_SF, make_duck
 
-    from indexr_spark.sources.vector_store import s14_ivfpq_probe
-    from tests.conftest import ORACLE_SF
-
-    for sf in (SMOKE_SF, ORACLE_SF):
-        lit = s14_ivfpq_probe(spark, sf, engine="literal")
-        arr = s14_ivfpq_probe(spark, sf, engine="arrow")
-        assert lit.schema == arr.schema
-        assert lit.exceptAll(arr).isEmpty() and arr.exceptAll(lit).isEmpty(), sf
-    with pytest.raises(ValueError):
-        s14_ivfpq_probe(spark, SMOKE_SF, engine="blas")
+    got = [tuple(r) for r in s14_ivfpq_probe(spark, ORACLE_SF).collect()]
+    want = [tuple(r) for r in make_duck(ORACLE_SF).execute(S14_ORACLE_DRAFT).fetchall()]
+    assert got and got == want

@@ -1196,6 +1196,7 @@ def test_semdedup_policy_reference_and_duckdb_parity(spark, duck_smoke):
         s15_semdedup,
         semdedup,
     )
+    from tests.semdedup_ref import semdedup_reference
 
     cents = s15_centroids()
     c0, c1 = cents[0], cents[1]
@@ -1220,27 +1221,15 @@ def test_semdedup_policy_reference_and_duckdb_parity(spark, duck_smoke):
     emb = load_table(spark, SMOKE_SF, "embeddings").orderBy("vec_id").collect()
     ids = np.array([r["vec_id"] for r in emb])
     V = np.array([r["embedding"] for r in emb], dtype=np.float64)
-    nrm = np.linalg.norm(V, axis=1)
-    C = np.array(cents)
-    csim_all = (V @ C.T) / np.outer(nrm, np.linalg.norm(C, axis=1))
-    cell = csim_all.argmax(1)  # np argmax ties -> first = lower cell id
-    csr = np.round(csim_all[np.arange(len(ids)), cell], 6)
-    S = np.round((V / nrm[:, None]) @ (V / nrm[:, None]).T, 6)
-    ref = {}
-    for c in set(cell):
-        idx = sorted(np.where(cell == c)[0], key=lambda i: (csr[i], ids[i]))
-        for j, i in enumerate(idx):
-            ref[int(ids[i])] = (
-                int(c),
-                float(csr[i]),
-                not any(S[idx[p], i] >= S15_TAU for p in range(j)),
-            )
+    ref = semdedup_reference(ids, V, cents, S15_TAU)
     assert {r["vec_id"]: (r["cell"], r["csim"], r["keep"]) for r in eng} == ref
     kept = [r["vec_id"] for r in eng if r["keep"]]
     pruned = [r["vec_id"] for r in eng if not r["keep"]]
     assert kept and pruned, "decision is vacuous on this corpus"
 
     # survivor invariant: no two kept items in one cell are tau-close
+    U = V / np.linalg.norm(V, axis=1)[:, None]
+    S = np.round(U @ U.T, 6)
     pos = {int(v): i for i, v in enumerate(ids)}
     by_cell = {}
     for r in eng:

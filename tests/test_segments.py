@@ -355,3 +355,29 @@ def test_term_index_prunes_through_default_path(spark, tmp_path):
     out2 = cat.sql(spark, "SELECT k FROM t WHERE s = 'durian'")
     assert not cat.last_prune["t"].scan
     assert out2.count() == 0
+
+
+def test_read_pruned_scans_rows_appended_after_sidecar(spark, tmp_path):
+    """A delta append leaves the table-root sidecar behind; read_pruned
+    must still scan the appended file (the sidecar does not cover it,
+    so it is a safe SOME) and must agree with the snapshot read."""
+    from indexr_spark.sources.snapshots import (
+        append_snapshot,
+        ensure_snapshot,
+        read_snapshot,
+    )
+
+    path = str(tmp_path / "t")
+    base = spark.createDataFrame([(i, float(i)) for i in range(10)], "k int, v double")
+    write_segments(base, path, sort_by=["k"], num_segments=2)
+    ensure_snapshot(path)
+    append_snapshot(spark.createDataFrame([(100, 1.0)], "k int, v double"), path)
+    sidecar = load_sidecar(path)
+    assert len(sidecar) == 2  # the append did not refresh it
+
+    want = read_snapshot(spark, path).filter(F.col("k") == 100)
+    df, res = read_pruned(spark, path, Equal("k", 100))
+    assert [tuple(r) for r in df.collect()] == [tuple(r) for r in want.collect()] == [(100, 1.0)]
+    # both sidecar files are still skipped; only the appended files are read
+    assert sorted(res.skipped) == sorted(sidecar)
+    assert res.scan and not set(res.scan) & set(sidecar)

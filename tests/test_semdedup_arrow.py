@@ -1,11 +1,11 @@
-"""semdedup_arrow — the cell-local BLAS engine for SemDeDup.
+"""semdedup — SemDeDup with Arrow assignment and a cell-local BLAS
+pair phase.
 
-The pin that matters: ENGINE EQUALITY. Both engines share the ranked
-frame (_semdedup_ranked), so any divergence is in the pair phase —
-the exploded-join zip_with cosine vs the blockwise A·Aᵀ. Equality is
-asserted row-for-row (vec_id, cell, csim, keep) on the smoke and
-oracle corpora, plus a tiny-block run that forces the blockwise path
-to cross block boundaries (the triangular mask's off-by-one habitat).
+The pin that matters: REFERENCE EQUALITY. The decision frame
+(vec_id, cell, csim, keep) must equal the plain numpy replay
+(tests/semdedup_ref.py) row for row on the smoke and oracle corpora,
+including a tiny-block run that forces the blockwise path to cross
+block boundaries (the triangular mask's off-by-one habitat).
 """
 
 from __future__ import annotations
@@ -13,8 +13,9 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from indexr_spark.operators.similarity import semdedup, semdedup_arrow
+from indexr_spark.operators.similarity import S15_TAU, s15_centroids, semdedup
 from tests.conftest import ORACLE_SF, SMOKE_SF
+from tests.semdedup_ref import semdedup_reference
 
 
 def _vecs(spark, sf):
@@ -28,56 +29,59 @@ def _frame(df):
     }
 
 
+def _reference(v, cents=None):
+    rows = v.orderBy("vec_id").collect()
+    return semdedup_reference(
+        [r["vec_id"] for r in rows],
+        [r["embedding"] for r in rows],
+        cents or s15_centroids(),
+        S15_TAU,
+    )
+
+
 def test_engines_agree_smoke(spark):
+    """semdedup equals the numpy replay on the smoke corpus."""
     v = _vecs(spark, SMOKE_SF)
-    assert _frame(semdedup_arrow(v)) == _frame(semdedup(v))
+    assert _frame(semdedup(v)) == _reference(v)
 
 
 def test_engines_agree_oracle_sf(spark):
+    """semdedup equals the numpy replay on the oracle corpus, and the
+    decision is not vacuous there."""
     v = _vecs(spark, ORACLE_SF)
-    a, j = _frame(semdedup_arrow(v)), _frame(semdedup(v))
-    assert a == j
-    kept = sum(1 for _, _, k in a.values() if k)
-    assert 0 < kept < len(a), "dedup should prune some but not all"
+    got = _frame(semdedup(v))
+    assert got == _reference(v)
+    kept = sum(1 for _, _, k in got.values() if k)
+    assert 0 < kept < len(got), "dedup should prune some but not all"
 
 
 def test_blockwise_crosses_boundaries(spark):
     """block=2 forces many slabs per cell; output must not change."""
     v = _vecs(spark, SMOKE_SF)
-    assert _frame(semdedup_arrow(v, block=2)) == _frame(semdedup(v))
+    assert _frame(semdedup(v, block=2)) == _reference(v)
 
 
 def test_single_vector_cells_all_keep(spark):
     rows = [(i, [float(i + 1)] * 8) for i in range(3)]
     v = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    # 3 orthogonal-ish cells via 3 distinct centroids; with identical
-    # DIRECTION vectors all land in one cell and only the first-ranked
-    # survives; the per-cell n<=1 early path is hit by the leftovers
+    # 3 distinct centroids; all three vectors share one DIRECTION, so
+    # they land in one cell and only the first-ranked survives, while
+    # the two empty cells never reach the pair phase
     cents = [[1.0] * 8, [-1.0] * 8, [0.5] * 8]
-    out = semdedup_arrow(v, centroids=cents)
-    got = {r["vec_id"]: r["keep"] for r in out.collect()}
-    jn = {r["vec_id"]: r["keep"]
-          for r in semdedup(v, centroids=cents).collect()}
-    assert got == jn
-
-
-def test_arrow_assign_agrees_both_corpora(spark):
-    """assign='arrow' (BLAS E·Cᵀ + np.argmax) must reproduce the
-    literal-matrix assignment — cells, csim (6dp), rank order, and
-    the downstream keep set — on both committed corpora."""
-    import pytest
-
-    for sf in (SMOKE_SF, ORACLE_SF):
-        v = _vecs(spark, sf)
-        assert _frame(semdedup_arrow(v, assign="arrow")) == _frame(semdedup(v))
-    with pytest.raises(ValueError):
-        semdedup_arrow(_vecs(spark, SMOKE_SF), assign="blas")
+    got = {r["vec_id"]: r["keep"] for r in semdedup(v, centroids=cents).collect()}
+    assert got == {k: keep for k, (_, _, keep) in _reference(v, cents).items()}
+    assert sorted(got.values()) == [False, False, True]
+    # a lone vector in its cell takes the per-cell n <= 1 early path
+    one = spark.createDataFrame([(7, [1.0] * 8)], "vec_id long, embedding array<float>")
+    assert [tuple(r) for r in semdedup(one, centroids=cents).collect()] == [
+        (7, 0, 1.0, True)
+    ]
 
 
 def test_no_join_in_arrow_plan(spark):
     """The engine's point: groupBy(cell)+applyInPandas, no pair join."""
     v = _vecs(spark, SMOKE_SF)
-    plan = semdedup_arrow(v)._jdf.queryExecution().executedPlan().toString()
+    plan = semdedup(v)._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInPandas" in plan
     assert "CartesianProduct" not in plan
     # exactly the rank window's exchange feeds the group — no
@@ -208,22 +212,19 @@ def test_round6_half_up_large_magnitude_boundaries(spark):
 
 
 def test_zero_norm_vector_engines_agree(spark):
-    """A zero-norm embedding must not split the engines (r10 ADVICE):
-    the JVM's non-ANSI division yields NULL csim (sorts first in the
-    rank window, never satisfies >= tau); the Arrow paths now emit
-    None for those rows instead of numpy inf/NaN."""
+    """A zero-norm embedding gets NULL csim (the JVM's non-ANSI x/0 —
+    not numpy's inf/NaN), sorts first in its cell's rank, and never
+    prunes or is pruned (a NULL cosine fails >= tau); the non-zero
+    rows decide exactly as the numpy replay."""
     rows = [(0, [0.0] * 8), (1, [1.0] * 8), (2, [1.0] * 8),
             (3, [-1.0] * 8)]
     v = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     cents = [[1.0] * 8, [-1.0] * 8]
-    for kwargs in ({"assign": "literal"}, {"assign": "arrow"}):
-        a = {
-            r["vec_id"]: (r["cell"], r["csim"], r["keep"])
-            for r in semdedup_arrow(v, centroids=cents, **kwargs).collect()
-        }
-        jj = {
-            r["vec_id"]: (r["cell"], r["csim"], r["keep"])
-            for r in semdedup(v, centroids=cents).collect()
-        }
-        assert a == jj, kwargs
-        assert a[0][1] is None, "zero-norm csim must be NULL, not NaN/inf"
+    got = {
+        r["vec_id"]: (r["cell"], r["csim"], r["keep"])
+        for r in semdedup(v, centroids=cents).collect()
+    }
+    assert got[0] == (0, None, True), "zero-norm csim must be NULL, not NaN/inf"
+    assert {k: x for k, x in got.items() if k} == _reference(
+        v.filter(F.col("vec_id") > 0), cents
+    )
