@@ -1,5 +1,8 @@
 """Join-shape helpers shared by the bucketed pair-generation operators.
 
+`cap_buckets` is the other half of the bucket story: where the chunk
+valve spreads an oversized bucket, the cap EXCLUDES it (see below).
+
 `chunked_self_join` is the quadratic-bucket SKEW valve used by both the
 MinHash-LSH candidate join (operators/text._lsh_group_pairs) and the
 embedding near-dup bucket join (operators/similarity.d10): a self-join
@@ -38,6 +41,7 @@ sizing cannot promise away.
 
 from __future__ import annotations
 
+import logging
 import warnings
 from functools import reduce
 
@@ -141,3 +145,37 @@ def chunked_self_join(
         )
     )
     return a.join(b, cond)
+
+
+def cap_buckets(df: DataFrame, key_cols: list[str], max_bucket: int) -> DataFrame:
+    """`df` minus every row whose `key_cols` bucket holds more than
+    `max_bucket` rows — the scale valve for pathological corpora, where
+    one boilerplate signature bucket of k rows emits k²/2 pairs.
+
+    The drop is never silent: the oversized-bucket count and the
+    within-bucket pair estimate are logged as a warning. The census is
+    pinned (localCheckpoint) so the anti-join reads it instead of
+    re-running the `df`-wide aggregation, and it is broadcast: it is
+    small by construction (buckets BIGGER than the cap), while `df`
+    is the large side that must not shuffle for this. Two eager actions:
+    the census and its one-row summary."""
+    over = (
+        df.groupBy(*key_cols)
+        .agg(F.count("*").alias("n"))
+        .filter(F.col("n") > max_bucket)
+        .localCheckpoint()
+    )
+    dropped = over.agg(
+        F.count("*").alias("buckets"),
+        F.sum(F.col("n") * (F.col("n") - 1) / 2).alias("pairs"),
+    ).collect()[0]
+    if not dropped["buckets"]:
+        return df
+    logging.getLogger(__name__).warning(
+        "LSH bucket cap %d: dropping %d oversized buckets "
+        "(~%d within-bucket candidate pairs affected)",
+        max_bucket,
+        dropped["buckets"],
+        int(dropped["pairs"]),
+    )
+    return df.join(F.broadcast(over.select(*key_cols)), key_cols, "left_anti")

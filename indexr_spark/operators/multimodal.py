@@ -349,10 +349,9 @@ def payload_phash(df: DataFrame, bits: int = 32) -> DataFrame:
 
     `bits` (default 32, the MM06 oracle's width) widens the hash for
     the ≥10^5-payload regime, where 32-bit band values saturate the
-    downstream banded join (text.py's wide-simhash block comment;
-    measured in COVERAGE.md "simhash100x") — pair the wide hash with
-    simhash_pairs_wide(bits=...). Multiple of 4, ≤ 60 (the md5-prefix
-    long bound)."""
+    downstream banded join (measured in COVERAGE.md "simhash100x") —
+    pass the same `bits` to text.simhash_pairs. Multiple of 4, ≤ 60
+    (the md5-prefix long bound)."""
     if not (4 <= bits <= 60 and bits % 4 == 0):
         raise ValueError(f"bits={bits} must be a multiple of 4 in [4, 60]")
     out_schema = "doc_id long, simhash long"

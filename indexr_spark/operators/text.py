@@ -16,7 +16,6 @@ and the ORDER BY tails here exist only for oracle determinism.
 
 from __future__ import annotations
 
-import logging
 import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -29,7 +28,7 @@ from indexr_spark.functions.text import (
     shingles,
     tokens,
 )
-from indexr_spark.functions.joins import chunked_self_join
+from indexr_spark.functions.joins import cap_buckets, chunked_self_join
 from indexr_spark.tables import load_table, spread_scan
 
 ORACLE: dict[str, str] = {}
@@ -58,9 +57,12 @@ JACCARD_NGRAM = 2
 JACCARD_THRESHOLD = 0.1
 # d09 bitset-verify valve: the packed-bitmap Jaccard verify needs a
 # driver-collected dictionary of DISTINCT shingle hashes; beyond this
-# cap (64 bitmap longs/doc, a ~1,862-literal map) the vocabulary is
+# cap (16 bitmap longs/doc, a 2,048-literal map) the vocabulary is
 # treated as web-scale and the verify keeps the array_intersect form.
-D09_BITSET_VOCAB_CAP = 4096
+# The map is analyzed once per bitmap word, so analysis grows
+# quadratically with the vocabulary: 1024 is the largest size measured
+# to stay at sf0.1's cost (CHANGES.md, the cap measurement).
+D09_BITSET_VOCAB_CAP = 1024
 SIMHASH_BITS = 32
 
 
@@ -378,17 +380,68 @@ def _doc_gid_map(
     return base.select("doc_id", "gid")
 
 
+def _minhash_band_sigs(
+    df: DataFrame, keys: list[str], text_col: str, bands: int
+) -> DataFrame:
+    """The one MinHash band-signature builder: one row per (key, band),
+    (*keys, mhs, sigs, band, sig), where `mhs` is the K=MINHASH_SEEDS
+    minhash array, `sigs` the `bands` comma-joined band strings (the
+    oracles' string_agg form) and `sig` = sigs[band], band 0-based.
+
+    All K min-hashes are computed as array expressions over the token
+    set *within the row* — signature building costs ZERO shuffles.
+    Each token is md5-hashed ONCE; the K family members are cheap
+    modular arithmetic over that base hash."""
+    rows_per_band = MINHASH_SEEDS // bands
+    # Base token hashes materialized ONCE per row as a column: the 16
+    # family members each reference the base array, and Catalyst does
+    # no CSE inside lambda bodies — passing the raw transform(md5(...))
+    # expression would re-digest every token 16 times (see d22).
+    hs = df.select(
+        *keys,
+        F.transform(distinct_tokens(text_col), lambda t: hash32(t)).alias("hs"),
+    )
+
+    def family_member(j: int):
+        # closure factory: a 2-arg lambda would be treated by PySpark
+        # as the (element, index) form, so bind A/B outside the lambda
+        a, b = MINHASH_A[j], MINHASH_B[j]
+        return F.array_min(
+            F.transform(F.col("hs"), lambda h: (h * a + b) % MINHASH_P)
+        )
+
+    # one column per family member, so `mhs` and `sigs` both read each
+    # minhash by reference (the group grain prunes `mhs` away entirely)
+    mh = [F.col(f"mh{j}") for j in range(MINHASH_SEEDS)]
+    sig_cols = [
+        F.concat_ws(
+            ",",
+            *[c.cast("string") for c in mh[b * rows_per_band : (b + 1) * rows_per_band]],
+        )
+        for b in range(bands)
+    ]
+    per_key = hs.select(
+        *keys, *[family_member(j).alias(f"mh{j}") for j in range(MINHASH_SEEDS)]
+    ).select(*keys, F.array(*mh).alias("mhs"), F.array(*sig_cols).alias("sigs"))
+    # posexplode_OUTER: semantically identical here (`sigs` is a
+    # literal array constructor of `bands` non-null strings — never
+    # empty, never null), but the non-outer form lets Catalyst infer
+    # `size(sigs) > 0` and SUBSTITUTE the whole 16-minhash signature
+    # expression through the projections into a pre-join filter on the
+    # raw documents side — re-tokenizing every doc 16 times with no hs
+    # materialization (the exact per-family-member CSE disaster the hs
+    # column exists to avoid; it was most of a 2x d07 regression). The
+    # outer form carries no inferable constraint.
+    return per_key.select(
+        *keys, "mhs", "sigs", F.posexplode_outer("sigs").alias("band", "sig")
+    )
+
+
 def _group_band_sigs(groups: DataFrame, bands: int) -> DataFrame:
     """Per (group, band) signature rows: (gid, rep, band, sig, sigs).
-
-    All K=16 min-hashes are computed as array expressions over the
-    token set *within the row* — signature building costs ZERO
-    shuffles. Each token is md5-hashed ONCE; the K family members are
-    cheap modular arithmetic over that base hash. `sigs` carries the
-    full per-group signature array so the bucket join can apply
-    first-match-band semantics (see _lsh_group_pairs).
+    `sigs` carries the full per-group signature array so the bucket
+    join can apply first-match-band semantics (see _lsh_group_pairs).
     """
-    rows_per_band = MINHASH_SEEDS // bands
     # The groups frame arrives from a groupBy whose tiny output AQE
     # coalesces to ~1 partition; every downstream broadcast join (the
     # bucket join, then the doc expansion) STREAMS through that side,
@@ -408,47 +461,8 @@ def _group_band_sigs(groups: DataFrame, bands: int) -> DataFrame:
     groups = groups.repartition(
         groups.sparkSession.sparkContext.defaultParallelism
     )
-    # Base token hashes materialized ONCE per group as a column: the 16
-    # family members each reference the base array, and Catalyst does
-    # no CSE inside lambda bodies — passing the raw transform(md5(...))
-    # expression would re-digest every token 16 times (see d22).
-    groups = groups.select(
-        "gid",
-        "rep",
-        F.transform(distinct_tokens("any_text"), lambda t: hash32(t)).alias("hs"),
-    )
-    base = F.col("hs")
-
-    def family_member(j: int):
-        # closure factory: a 2-arg lambda would be treated by PySpark
-        # as the (element, index) form, so bind A/B outside the lambda
-        a, b = MINHASH_A[j], MINHASH_B[j]
-        return F.array_min(F.transform(base, lambda h: (h * a + b) % MINHASH_P))
-
-    mh_cols = [
-        family_member(j).cast("string").alias(f"mh{j}") for j in range(MINHASH_SEEDS)
-    ]
-    sig_cols = [
-        F.concat_ws(
-            ",",
-            *[F.col(f"mh{s}") for s in range(b * rows_per_band, (b + 1) * rows_per_band)],
-        )
-        for b in range(bands)
-    ]
-    per_g = groups.select("gid", "rep", *mh_cols).select(
-        "gid", "rep", F.array(*sig_cols).alias("sigs")
-    )
-    # posexplode_OUTER: semantically identical here (`sigs` is a
-    # literal array constructor of `bands` non-null strings — never
-    # empty, never null), but the non-outer form lets Catalyst infer
-    # `size(sigs) > 0` and SUBSTITUTE the whole 16-minhash signature
-    # expression through the projections into a pre-join filter on the
-    # raw documents side — re-tokenizing every doc 16 times with no hs
-    # materialization (the exact per-family-member CSE disaster this
-    # function exists to avoid; it was most of a 2x d07 regression).
-    # The outer form carries no inferable constraint.
-    return per_g.select(
-        "gid", "rep", "sigs", F.posexplode_outer("sigs").alias("band", "sig")
+    return _minhash_band_sigs(groups, ["gid", "rep"], "any_text", bands).select(
+        "gid", "rep", "sigs", "band", "sig"
     )
 
 
@@ -489,26 +503,7 @@ def _lsh_group_pairs(
     # lets the bucket census and the join read one run.
     sigs = _group_band_sigs(groups, bands).localCheckpoint()
     if max_bucket is not None:
-        sizes = sigs.groupBy("band", "sig").agg(F.count("*").alias("n"))
-        over = sizes.filter(F.col("n") > max_bucket)
-        # metadata-sized driver pull (one row per oversized bucket)
-        dropped = over.agg(
-            F.count("*").alias("buckets"),
-            F.sum(F.col("n") * (F.col("n") - 1) / 2).alias("pairs"),
-        ).collect()[0]
-        if dropped["buckets"]:
-            logging.getLogger(__name__).warning(
-                "LSH bucket cap %d: dropping %d oversized buckets "
-                "(~%d within-bucket candidate pairs affected)",
-                max_bucket,
-                dropped["buckets"],
-                int(dropped["pairs"]),
-            )
-            sigs = sigs.join(
-                F.broadcast(over.select("band", "sig")),
-                ["band", "sig"],
-                "left_anti",
-            )
+        sigs = cap_buckets(sigs, ["band", "sig"], max_bucket)
     # Chunked self-join — the quadratic-bucket SKEW fix. A (band, sig)
     # bucket of k sets emits k(k-1)/2 pairs inside ONE join task; on
     # this corpus the top 4 buckets (k≈1300-1800) produce 90% of 5.4M
@@ -653,44 +648,50 @@ def d08_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash_frame(load_table(spark, sf_dir, "documents")).orderBy("doc_id")
 
 
-def simhash_frame(d: DataFrame) -> DataFrame:
+def simhash_frame(d: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
     """d08's per-frame body, UNSORTED — (doc_id, text) in, (doc_id,
-    simhash) out. d32 feeds this straight into the banded pair join;
-    the trailing orderBy exists only for d08's oracle determinism and
-    would cost a pointless range exchange under the join."""
+    simhash) out: per-bit majority over the distinct tokens' md5-prefix
+    hashes at `bits` width, ties set the bit. d32 feeds this straight
+    into the banded pair join; the trailing orderBy exists only for
+    d08's oracle determinism and would cost a pointless range exchange
+    under the join. `bits` must be a multiple of 4 (whole md5 hex
+    chars) and ≤ 60 (hash60's exactly-representable-long bound); size
+    it with functions.sizing.suggest_simhash_bits — the default 32
+    saturates its band values from ~10^5 docs (COVERAGE.md
+    "simhash100x")."""
+    if not (4 <= bits <= 60 and bits % 4 == 0):
+        raise ValueError(f"bits={bits} must be a multiple of 4 in [4, 60]")
+    nhex = bits // 4
     # Shuffle economics: the whole simhash is computed within the row
     # (hash array → per-bit majority → bit recombination), so the
-    # operator is embarrassingly parallel — zero shuffles; the
-    # trailing orderBy exists only for oracle determinism. Bit test
-    # (h >> j) & 1 is floor(h / 2^j) % 2 — exact in doubles for
-    # h < 2^32, and expressible with a captured lambda variable.
-    # hash array materialized once per row: each of the 32 bit tests
-    # references it, and lambdas get no CSE (see d22)
+    # operator is embarrassingly parallel — zero shuffles. The hash
+    # array is materialized once per row: each of the `bits` bit tests
+    # references it, and lambdas get no CSE (see d22).
     d = d.select(
         "doc_id",
-        F.transform(distinct_tokens("text"), lambda t: hash32(t)).alias("hs"),
+        F.transform(
+            distinct_tokens("text"),
+            lambda t: F.conv(F.substring(F.md5(t), 1, nhex), 16, 10).cast("long"),
+        ).alias("hs"),
     )
     hashes = F.col("hs")
     n = F.size(hashes)
 
     def bit_set(j):
-        ones = F.size(
-            F.filter(
-                hashes,
-                lambda h: (h / F.pow(F.lit(2.0), j)).cast("long") % 2 == 1,
-            )
-        )
+        # bit_get, unlike shiftright, accepts a lambda-variable position
+        ones = F.size(F.filter(hashes, lambda h: F.bit_get(h, j) == 1))
         return 2 * ones >= n  # ⇔ sum of +1/-1 contributions >= 0
 
-    bits = F.transform(
-        F.sequence(F.lit(0), F.lit(SIMHASH_BITS - 1)),
+    # 2^j is a power of two, exact in a double for j ≤ 59
+    bitvals = F.transform(
+        F.sequence(F.lit(0), F.lit(bits - 1)),
         lambda j: F.when(bit_set(j), F.pow(F.lit(2.0), j).cast("long")).otherwise(
             F.lit(0).cast("long")
         ),
     )
     return d.select(
         "doc_id",
-        F.aggregate(bits, F.lit(0).cast("long"), lambda acc, x: acc + x).alias(
+        F.aggregate(bitvals, F.lit(0).cast("long"), lambda acc, x: acc + x).alias(
             "simhash"
         ),
     )
@@ -933,11 +934,11 @@ def doc_band_sigs(docs: DataFrame, bands: int = JACCARD_BANDS) -> DataFrame:
     fingerprint store schema: (doc_id, band, sig, mhs, n_bands), where
     `mhs` is the full K=MINHASH_SEEDS minhash array the estimated-
     Jaccard verify folds over and `n_bands` stamps the banding for
-    the structural mismatch guard. The in-row construction is _group_band_sigs'
-    (one md5 per token, K modular family members over that base, zero
-    shuffles); the grain is doc- not canon-group because an
-    incremental store must answer "is THIS incoming doc a near-dup",
-    not re-derive corpus-wide groups. `docs` needs (doc_id, text).
+    the structural mismatch guard. Same builder as the d07/d09
+    candidates (_minhash_band_sigs); the grain is doc- not canon-group
+    because an incremental store must answer "is THIS incoming doc a
+    near-dup", not re-derive corpus-wide groups. `docs` needs
+    (doc_id, text).
 
     Default banding is JACCARD_BANDS (4x4, the d09 recall tuning) —
     the same default neardup_store_sink uses. CAUTION: a store and a
@@ -946,41 +947,12 @@ def doc_band_sigs(docs: DataFrame, bands: int = JACCARD_BANDS) -> DataFrame:
     novel. neardup_store_sink records its banding in the store's
     manifest meta and refuses a mismatched reopen; callers composing
     these pieces directly must carry the banding themselves."""
-    rows_per_band = MINHASH_SEEDS // bands
-    base_df = docs.select(
-        "doc_id",
-        F.transform(distinct_tokens("text"), lambda t: hash32(t)).alias("hs"),
-    )
-
-    def family_member(j: int):
-        a, b = MINHASH_A[j], MINHASH_B[j]
-        return F.array_min(
-            F.transform(F.col("hs"), lambda h: (h * a + b) % MINHASH_P)
-        )
-
-    mh = F.array(*[family_member(j) for j in range(MINHASH_SEEDS)])
-    sig_cols = [
-        F.concat_ws(
-            ",",
-            *[
-                F.col("mhs")[s].cast("string")
-                for s in range(b * rows_per_band, (b + 1) * rows_per_band)
-            ],
-        )
-        for b in range(bands)
-    ]
-    per_doc = base_df.select("doc_id", mh.alias("mhs")).select(
-        "doc_id", "mhs", F.array(*sig_cols).alias("sigs")
-    )
-    # posexplode_OUTER for the same constraint-inference reason as
-    # _group_band_sigs (the non-outer form lets Catalyst substitute
-    # the whole signature expression into a pre-join filter).
     # n_bands rides every row so neardup_against_store can refuse a
     # banding-mismatched pair of frames structurally (mismatched
     # bandings never collide — they would silently find nothing).
-    return per_doc.select(
-        "doc_id", "mhs", F.posexplode_outer("sigs").alias("band", "sig")
-    ).select("doc_id", "band", "sig", "mhs", F.lit(bands).alias("n_bands"))
+    return _minhash_band_sigs(docs, ["doc_id"], "text", bands).select(
+        "doc_id", "band", "sig", "mhs", F.lit(bands).alias("n_bands")
+    )
 
 
 def neardup_against_store(
@@ -1029,28 +1001,7 @@ def neardup_against_store(
         )
     store = store_sigs
     if max_bucket is not None:
-        # Census once, pin the result (localCheckpoint severs the
-        # lineage so the anti-join below can't re-run the store-wide
-        # aggregation — the _lsh_group_pairs capped-path pattern), and
-        # broadcast the oversized set: it is small by construction
-        # (buckets BIGGER than the cap), while the store side is the
-        # 100 TB frame that must not shuffle for this.
-        over = (
-            store.groupBy("band", "sig")
-            .agg(F.count("*").alias("bn"))
-            .filter(F.col("bn") > max_bucket)
-            .select("band", "sig")
-            .localCheckpoint()
-        )
-        n_over = over.count()
-        if n_over:
-            logging.getLogger(__name__).warning(
-                "neardup_against_store: excluding %d store buckets larger "
-                "than max_bucket=%d from candidate generation",
-                n_over,
-                max_bucket,
-            )
-            store = store.join(F.broadcast(over), ["band", "sig"], "left_anti")
+        store = cap_buckets(store, ["band", "sig"], max_bucket)
     # THIN-pair candidate dedup: the band join emits one row per
     # colliding band, so pairs must dedup — but deduping rows that
     # carry both 16-long minhash arrays shuffles candidate_count x
@@ -2744,181 +2695,28 @@ FROM flagged GROUP BY source ORDER BY source
 
 
 def simhash_pairs(
-    sim_df: DataFrame, max_hamming: int = 3, bands: int | None = None
-) -> DataFrame:
-    """COMPLETE Hamming-≤k near-dup pairs over a (doc_id, simhash)
-    frame (d08's output): split the SIMHASH_BITS bits into `bands`
-    equal slices with bands > max_hamming — two hashes within Hamming
-    distance k then agree EXACTLY on at least one band (pigeonhole),
-    so candidate recall is 1.0 BY CONSTRUCTION, unlike MinHash
-    banding's probabilistic S-curve. The classic web-scale simhash
-    dedup layout (Manku et al.'s near-duplicate detection): candidates
-    equi-join on (band, band_value), the popcount verify is in-row.
-
-    Returns (a_id, b_id, hamming), a_id < b_id. Scale shape: the only
-    shuffle keys on (band, value) — bucket-join, never all-pairs; the
-    exploded frame is `bands` rows per doc of three integers. Skewed
-    buckets (a boilerplate band value shared corpus-wide) are the
-    same quadratic hazard as LSH buckets — at 100 TB drive this
-    through chunked_self_join or a bucket cap exactly like d07."""
-    bands = bands if bands is not None else max_hamming + 1
-    if bands <= max_hamming:
-        raise ValueError(
-            f"bands={bands} must exceed max_hamming={max_hamming} for the "
-            "pigeonhole completeness guarantee"
-        )
-    if SIMHASH_BITS % bands:
-        raise ValueError(f"bands={bands} must divide SIMHASH_BITS={SIMHASH_BITS}")
-    width = SIMHASH_BITS // bands
-    # Materialize the narrow (doc_id, simhash) frame BEFORE the join:
-    # when sim_df arrives as an unevaluated expression chain (d08's
-    # per-token md5 + 32-bit majority HOFs), Catalyst substitutes that
-    # whole chain into every downstream reference — the join condition
-    # and the verify filter then re-derive the simhash FROM THE TOKENS
-    # per candidate row (measured: 8.7M candidates at sf0.1 took
-    # 8.65 s un-checkpointed vs 0.44 s checkpointed — a 20x tax). Two
-    # longs per doc, so the pin is corpus-row-sized, not corpus-sized
-    # — the production shape persists the simhash column anyway.
-    sim_df = sim_df.select("doc_id", "simhash").localCheckpoint()
-    mask = (1 << width) - 1
-    slices = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.shiftright("simhash", b * width).bitwiseAND(F.lit(mask)).alias("v"),
-            )
-            for b in range(bands)
-        ]
-    )
-    ex = sim_df.select("doc_id", "simhash", F.explode(slices).alias("s")).select(
-        "doc_id", "simhash", F.col("s.band").alias("band"), F.col("s.v").alias("v")
-    )
-    # chunked_self_join, NOT a plain (band, v) self-join: band values
-    # are only `width` bits, so buckets are corpus_size/2^width on
-    # AVERAGE and far worse on dup-heavy corpora (identical hashes
-    # share every band) — a plain join serializes each bucket's
-    # quadratic pair generation into one task (measured: >400 s at
-    # 50k docs; the valve brings the same output to ~80 s). Same
-    # remedy as d07/d10.
-    # repartition_probe: the exploded frame descends from the narrow
-    # checkpoint (often 1 partition at small scale) and the join
-    # broadcasts, so without it the whole candidate probe serializes
-    # into one task (joins.py documents the measured 4x)
-    j = chunked_self_join(
-        ex, ["band", "v"], order_col="doc_id", repartition_probe=True
-    )
-    # orientation: chunked emission order is not normalized; hamming
-    # is symmetric, so normalize ids with least/greatest
-    pairs = j.select(
-        F.least(F.col("a.doc_id"), F.col("b.doc_id")).alias("a_id"),
-        F.greatest(F.col("a.doc_id"), F.col("b.doc_id")).alias("b_id"),
-        F.col("a.band").alias("band"),  # == b.band (the join key)
-        F.col("a.simhash").alias("a_sh"),
-        F.col("b.simhash").alias("b_sh"),
-    )
-    # FIRST-MATCH-BAND dedup (d07's trick, but fully in-row because
-    # both hashes ride the joined row): a pair emits only from the
-    # LOWEST band where the two hashes agree — every lower band must
-    # differ — so each pair appears exactly once and the 100M-row
-    # dropDuplicates shuffle disappears (measured 77.9 s → 55.6 s at
-    # 10x for the same 115,487,305 pairs — the dup-heavy corpus's
-    # output is itself quadratic in family sizes, so emission
-    # dominates what remains). Band slices via the d08
-    # floor-div trick: shiftright needs a literal, the lambda's j is
-    # a column, and (h / 2^(j·width)) is exact in doubles for h < 2^32.
-    def _slice(col, j):
-        return (
-            (col / F.pow(F.lit(2.0), j * width)).cast("long") % F.lit(mask + 1)
-        )
-
-    lower_all_differ = F.when(F.col("band") == 0, F.lit(True)).otherwise(
-        F.forall(
-            F.sequence(F.lit(0), F.col("band") - 1),
-            lambda jj: _slice(F.col("a_sh"), jj) != _slice(F.col("b_sh"), jj),
-        )
-    )
-    ham = F.bit_count(F.col("a_sh").bitwiseXOR(F.col("b_sh")))
-    return (
-        pairs.withColumn("hamming", ham.cast("int"))
-        .filter((F.col("hamming") <= max_hamming) & lower_all_differ)
-        .select("a_id", "b_id", "hamming")
-    )
-
-
-# ---- wide-simhash production path (the ≥10^5-doc regime) -----------
-#
-# simhash_pairs above is certified at SIMHASH_BITS=32 against the
-# brute-force DuckDB oracle (d32, mm06's draft). 32 bits with bands=4
-# means 8-bit band values: buckets average corpus_size/256 docs, so
-# the candidate stream grows Θ(n²·bands/2^width) from pure hash
-# saturation no matter how duplicate-free the corpus is — at 500k
-# docs that is ~2×10⁹ candidate pairs (measured, with the bucket
-# census matching the law: COVERAGE.md "simhash100x"). The production
-# posture at that scale is a WIDER hash, not a bigger valve: 60 bits
-# over 4 bands = 15-bit band values = 32768 buckets per band, which
-# shrinks the saturation floor by 2^7 — size the width with
-# functions.sizing.suggest_simhash_bits, the chance-pair and
-# candidate-floor laws as code pinned to the measured 500k/5M
-# points. These live as separate
-# functions rather than a `bits` kwarg on the certified bodies so the
-# oracle-scored 32-bit expressions stay byte-identical; the one
-# expression-level change the width forces is the bit test — the
-# floor-div trick above is exact only below 2^53, so the wide path
-# tests bits with `bit_get`, which (unlike shiftright) accepts a
-# lambda-variable position.
-
-
-def simhash_frame_wide(d: DataFrame, bits: int = 60) -> DataFrame:
-    """(doc_id, text) → (doc_id, simhash): token SimHash at `bits`
-    width. Semantics match simhash_frame — per-bit majority over
-    distinct-token md5-prefix hashes, ties set the bit — and at
-    bits=32 the output is IDENTICAL to simhash_frame's (pinned in
-    tests/test_simhash_wide.py), making this a strict generalization.
-    bits must be a multiple of 4 (whole md5 hex chars) and ≤ 60
-    (hash60's exactly-representable-long bound)."""
-    if not (4 <= bits <= 60 and bits % 4 == 0):
-        raise ValueError(f"bits={bits} must be a multiple of 4 in [4, 60]")
-    nhex = bits // 4
-    d = d.select(
-        "doc_id",
-        F.transform(
-            distinct_tokens("text"),
-            lambda t: F.conv(F.substring(F.md5(t), 1, nhex), 16, 10).cast("long"),
-        ).alias("hs"),
-    )
-    hashes = F.col("hs")
-    n = F.size(hashes)
-
-    def bit_set(j):
-        ones = F.size(F.filter(hashes, lambda h: F.bit_get(h, j) == 1))
-        return 2 * ones >= n  # ⇔ sum of +1/-1 contributions >= 0
-
-    # 2^j is a power of two, exact in a double for j ≤ 59
-    bitvals = F.transform(
-        F.sequence(F.lit(0), F.lit(bits - 1)),
-        lambda j: F.when(bit_set(j), F.pow(F.lit(2.0), j).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        ),
-    )
-    return d.select(
-        "doc_id",
-        F.aggregate(bitvals, F.lit(0).cast("long"), lambda acc, x: acc + x).alias(
-            "simhash"
-        ),
-    )
-
-
-def simhash_pairs_wide(
     sim_df: DataFrame,
-    bits: int = 60,
     max_hamming: int = 3,
     bands: int | None = None,
+    bits: int = SIMHASH_BITS,
 ) -> DataFrame:
-    """simhash_pairs at `bits` width: same pigeonhole banding (bands >
-    max_hamming ⇒ recall 1.0 by construction), same chunked bucket
-    join, same in-row first-match-band dedup — see the block comment
-    above for why this is a separate function and when to prefer it.
-    Returns (a_id, b_id, hamming), a_id < b_id, each pair once."""
+    """COMPLETE Hamming-≤k near-dup pairs over a (doc_id, simhash)
+    frame (simhash_frame's output at the same `bits`): split the bits
+    into `bands` equal slices with bands > max_hamming — two hashes
+    within Hamming distance k then agree EXACTLY on at least one band
+    (pigeonhole), so candidate recall is 1.0 BY CONSTRUCTION, unlike
+    MinHash banding's probabilistic S-curve. The classic web-scale
+    simhash dedup layout (Manku et al.'s near-duplicate detection):
+    candidates equi-join on (band, band_value), the popcount verify is
+    in-row.
+
+    Returns (a_id, b_id, hamming), a_id < b_id, each pair once. Scale
+    shape: the only shuffle keys on (band, value) — bucket-join, never
+    all-pairs; the exploded frame is `bands` rows per doc of three
+    integers, and skewed buckets go through chunked_self_join's valve.
+    Band values are bits/bands wide, so buckets average
+    corpus_size/2^(bits/bands) docs: widen `bits` (not the valve) when
+    that saturates."""
     bands = bands if bands is not None else max_hamming + 1
     if bands <= max_hamming:
         raise ValueError(
@@ -2928,17 +2726,24 @@ def simhash_pairs_wide(
     if bits % bands:
         raise ValueError(f"bands={bands} must divide bits={bits}")
     width = bits // bands
-    # narrow pin before the join — same 20x-tax rationale as
-    # simhash_pairs (the hash chain must not re-derive per candidate)
-    sim_df = sim_df.select("doc_id", "simhash").localCheckpoint()
+    # Materialize the narrow (doc_id, simhash) frame BEFORE the join:
+    # when sim_df arrives as an unevaluated expression chain (the
+    # per-token md5 + per-bit majority HOFs), Catalyst substitutes that
+    # whole chain into every downstream reference — the join condition
+    # and the verify filter then re-derive the simhash FROM THE TOKENS
+    # per candidate row (measured: 8.7M candidates at sf0.1 took
+    # 8.65 s un-checkpointed vs 0.44 s checkpointed — a 20x tax). Two
+    # longs per doc, so the pin is corpus-row-sized, not corpus-sized
+    # — the production shape persists the simhash column anyway.
+    # Lazy: the guard's max() below is the job that materializes it.
+    sim_df = sim_df.select("doc_id", "simhash").localCheckpoint(eager=False)
     # Width-compatibility guard (r10 ADVICE): feeding a narrower
     # frame than `bits` (e.g. a 32-bit simhash_frame at bits=60)
     # makes every band above the frame's real width all-zero, so all
     # docs collide in those bands and the candidate stream silently
-    # goes QUADRATIC — the exact saturation failure this path exists
-    # to avoid. One cheap max() over the already-checkpointed 2-col
-    # frame catches both directions: values at/above 2^bits mean the
-    # declared width truncates real bits (breaking the pigeonhole
+    # goes QUADRATIC. One max() over the pinned 2-col frame catches
+    # both directions: values at/above 2^bits mean
+    # the declared width truncates real bits (breaking the pigeonhole
     # completeness guarantee), and a max below 2^(bits-width) means
     # the TOP band is zero for every doc (the frame was generated at
     # a narrower width — a genuinely spanning corpus hits the top
@@ -2959,27 +2764,39 @@ def simhash_pairs_wide(
                 f"narrower than declared, which makes the all-zero "
                 "upper bands collide every doc pair (silent quadratic "
                 "candidates). Generate the frame with "
-                f"simhash_frame_wide(bits={bits}) or pass the true "
-                "width."
+                f"simhash_frame(bits={bits}) or pass the true width."
             )
     mask = (1 << width) - 1
-    # explode side: band index b is a Python int here, so the literal
-    # shiftright is available (and exact — longs, not doubles)
+
+    def _band_slice(col, j: int):
+        # band index j is a Python int, so the literal shiftright is
+        # available (and exact — longs, not doubles)
+        return F.shiftright(col, j * width).bitwiseAND(F.lit(mask))
+
     slices = F.array(
         *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.shiftright("simhash", b * width).bitwiseAND(F.lit(mask)).alias("v"),
-            )
+            F.struct(F.lit(b).alias("band"), _band_slice(F.col("simhash"), b).alias("v"))
             for b in range(bands)
         ]
     )
     ex = sim_df.select("doc_id", "simhash", F.explode(slices).alias("s")).select(
         "doc_id", "simhash", F.col("s.band").alias("band"), F.col("s.v").alias("v")
     )
+    # chunked_self_join, NOT a plain (band, v) self-join: band values
+    # are only `width` bits, so buckets are corpus_size/2^width on
+    # AVERAGE and far worse on dup-heavy corpora (identical hashes
+    # share every band) — a plain join serializes each bucket's
+    # quadratic pair generation into one task (measured: >400 s at
+    # 50k docs; the valve brings the same output to ~80 s).
+    # repartition_probe: the exploded frame descends from the narrow
+    # checkpoint (often 1 partition at small scale) and the join
+    # broadcasts, so without it the whole candidate probe serializes
+    # into one task (joins.py documents the measured 4x)
     j = chunked_self_join(
         ex, ["band", "v"], order_col="doc_id", repartition_probe=True
     )
+    # orientation: chunked emission order is not normalized; hamming
+    # is symmetric, so normalize ids with least/greatest
     pairs = j.select(
         F.least(F.col("a.doc_id"), F.col("b.doc_id")).alias("a_id"),
         F.greatest(F.col("a.doc_id"), F.col("b.doc_id")).alias("b_id"),
@@ -2987,26 +2804,21 @@ def simhash_pairs_wide(
         F.col("a.simhash").alias("a_sh"),
         F.col("b.simhash").alias("b_sh"),
     )
-
-    # First-match-band dedup as a literal CASE over the band domain —
-    # `bands` is a small Python int, so every lower-band comparison
-    # can be spelled with LITERAL shifts and stay inside whole-stage
-    # codegen. The first version recombined slices with an
-    # aggregate-of-bit_get higher-order function (lambda positions
-    # can't feed shiftright) and HOF lambdas are INTERPRETED per row:
-    # on the 500k-doc corpus it cost 37.6 s for 306M candidates while
-    # the 32-bit arm's codegen'd floor-div slices did 2.96e9
-    # candidates in 19.3 s (COVERAGE.md "simhash100x") — ~20x per
-    # candidate for the same logic.
-    def _band_slice(col, j: int):
-        return F.shiftright(col, j * width).bitwiseAND(F.lit(mask))
-
+    # FIRST-MATCH-BAND dedup (d07's trick, but fully in-row because
+    # both hashes ride the joined row): a pair emits only from the
+    # LOWEST band where the two hashes agree — every lower band must
+    # differ — so each pair appears exactly once and no dropDuplicates
+    # shuffle exists. Spelled as a literal CASE over the band domain
+    # (`bands` is a small Python int), so every lower-band comparison
+    # uses literal shifts and stays inside whole-stage codegen; a HOF
+    # lambda over the band index would be interpreted per candidate
+    # row (COVERAGE.md "simhash100x": ~20x per candidate).
     cases = F.when(F.col("band") == 0, F.lit(True))
     for b in range(1, bands):
         differs = F.lit(True)
-        for j in range(b):
+        for jj in range(b):
             differs = differs & (
-                _band_slice(F.col("a_sh"), j) != _band_slice(F.col("b_sh"), j)
+                _band_slice(F.col("a_sh"), jj) != _band_slice(F.col("b_sh"), jj)
             )
         cases = cases.when(F.col("band") == b, differs)
     lower_all_differ = cases.otherwise(F.lit(False))  # band ∈ [0, bands)

@@ -775,7 +775,7 @@ def simhash100x(spark) -> None:
     """100x scale point for the simhash banding family — d32's
     pigeonhole join, the machinery mm06's draft shares — on the
     token-salted 500k-doc corpus, paired with the wide-hash posture
-    measurement (simhash_pairs_wide, 60 bits).
+    measurement (simhash_frame/simhash_pairs at bits=60).
 
     The oracle design is WEAKER than lsh100x's, and the difference is
     the finding: minhash's verify is a function of gram SETS (token
@@ -811,9 +811,7 @@ def simhash100x(spark) -> None:
     from indexr_spark.operators.text import (
         SIMHASH_BITS,
         simhash_frame,
-        simhash_frame_wide,
         simhash_pairs,
-        simhash_pairs_wide,
     )
 
     def _explain(df) -> str:
@@ -882,8 +880,8 @@ def simhash100x(spark) -> None:
     for tag, frame, pairer in (
         ("32bit", simhash_frame(docs1x),
          lambda s: simhash_pairs(s)),
-        ("60bit", simhash_frame_wide(docs1x, bits=60),
-         lambda s: simhash_pairs_wide(s, bits=60)),
+        ("60bit", simhash_frame(docs1x, bits=60),
+         lambda s: simhash_pairs(s, bits=60)),
     ):
         t0 = time.time()
         r = pairer(frame).agg(
@@ -935,7 +933,7 @@ def simhash100x(spark) -> None:
             f"hash correlation (>50x uniform E={e_cross:.0f})")
 
         # 60-bit arm: the posture that removes the saturation
-        sim60 = simhash_frame_wide(docs, bits=60).localCheckpoint()
+        sim60 = simhash_frame(docs, bits=60).localCheckpoint()
         t0 = time.time()
         cand60, hottest60, buckets60 = census(sim60, 60, 4)
         floor60 = ndocs * ndocs * 4 / (2 * 2 ** 15)
@@ -944,7 +942,7 @@ def simhash100x(spark) -> None:
               f"{cand60 / floor60:.2f}x)  hottest_bucket={hottest60}  "
               f"buckets={buckets60}  cal={_cal()}", flush=True)
         n60, cross60, rep060, _ = pair_stats(
-            simhash_pairs_wide(sim60, bits=60), f"60bit {tag} pairs", mult)
+            simhash_pairs(sim60, bits=60), f"60bit {tag} pairs", mult)
         assert rep060 == refs["60bit"], (
             f"60bit {tag}: replica-0 (count,hsum) {rep060} != 1x "
             f"{refs['60bit']}")
@@ -979,7 +977,7 @@ def mm06_100x(spark) -> None:
         payload_phash,
         with_binary_payload,
     )
-    from indexr_spark.operators.text import simhash_pairs, simhash_pairs_wide
+    from indexr_spark.operators.text import simhash_pairs
     from indexr_spark.tables import load_table
 
     def _explain(df) -> str:
@@ -1043,7 +1041,7 @@ def mm06_100x(spark) -> None:
             ("32bit", lambda ph: simhash_pairs(
                 ph, max_hamming=MM06_MAX_HAMMING,
                 bands=MM06_MAX_HAMMING + 1)),
-            ("60bit", lambda ph: simhash_pairs_wide(
+            ("60bit", lambda ph: simhash_pairs(
                 ph, bits=60, max_hamming=MM06_MAX_HAMMING)),
         ):
             ph = payload_phash(d, bits=32 if width == "32bit" else 60)
@@ -1072,16 +1070,13 @@ def simhash1000x(spark) -> None:
     == 0."""
     from pyspark.sql import functions as F
 
-    from indexr_spark.operators.text import (
-        simhash_frame_wide,
-        simhash_pairs_wide,
-    )
+    from indexr_spark.operators.text import simhash_frame, simhash_pairs
 
     _cal = _make_cal(spark)
 
     docs1x = spark.read.parquet(
         "/root/testdata/sf0.1/documents.parquet").select("doc_id", "text")
-    r = (simhash_pairs_wide(simhash_frame_wide(docs1x, bits=60), bits=60)
+    r = (simhash_pairs(simhash_frame(docs1x, bits=60), bits=60)
          .agg(F.count("*").alias("n"), F.sum("hamming").alias("hsum"))
          .collect()[0])
     ref = (int(r["n"]), int(r["hsum"] or 0))
@@ -1092,7 +1087,7 @@ def simhash1000x(spark) -> None:
         "/tmp/sfsalt1000/documents.parquet").select("doc_id", "text")
     ndocs = docs.count()
     t0 = time.time()
-    sim = simhash_frame_wide(docs, bits=60).localCheckpoint()
+    sim = simhash_frame(docs, bits=60).localCheckpoint()
     print(f"60bit 1000x frame ({ndocs} docs)  {time.time() - t0:.1f}s  "
           f"cal={_cal()}", flush=True)
     width, mask = 15, (1 << 15) - 1
@@ -1114,7 +1109,7 @@ def simhash1000x(spark) -> None:
           f"cal={_cal()}", flush=True)
 
     t0 = time.time()
-    by_rep = (simhash_pairs_wide(sim, bits=60)
+    by_rep = (simhash_pairs(sim, bits=60)
               .groupBy(F.floor(F.col("a_id") / 10000).alias("ra"),
                        F.floor(F.col("b_id") / 10000).alias("rb"))
               .agg(F.count("*").alias("n"), F.sum("hamming").alias("hsum"))

@@ -407,6 +407,53 @@ def test_neardup_against_store_finds_exact_and_near_dups(spark):
     assert (101, 1) in capped
 
 
+def test_neardup_against_store_cap_drops_oversized_bucket(spark, caplog):
+    """max_bucket really excludes a bucket: three store docs sharing one
+    token set fill every (band, sig) bucket of that set with 3 rows, so
+    at max_bucket=2 a batch copy of that text finds none of them, while
+    a batch copy of a singleton store doc still pairs — and the drop is
+    logged with its pair estimate (3 rows → 3 pairs per band)."""
+    import logging as _logging
+
+    from indexr_spark.operators.text import doc_band_sigs, neardup_against_store
+
+    shared = "alpha beta gamma delta epsilon zeta eta theta"
+    lone = "totally different words about sparks and rows here"
+    store = doc_band_sigs(
+        spark.createDataFrame(
+            [(1, shared), (2, shared), (3, shared), (4, lone)],
+            "doc_id LONG, text STRING",
+        ),
+        bands=4,
+    )
+    batch = doc_band_sigs(
+        spark.createDataFrame(
+            [(101, shared), (102, lone)], "doc_id LONG, text STRING"
+        ),
+        bands=4,
+    )
+
+    def pairs(max_bucket):
+        return {
+            (r.doc_id, r.store_id)
+            for r in neardup_against_store(
+                batch, store, est_threshold=0.5, max_bucket=max_bucket
+            ).collect()
+        }
+
+    assert pairs(None) == {(101, 1), (101, 2), (101, 3), (102, 4)}
+    assert pairs(3) == pairs(None)  # a cap no bucket exceeds drops nothing
+    caplog.clear()
+    with caplog.at_level(_logging.WARNING, logger="indexr_spark.functions.joins"):
+        assert pairs(2) == {(102, 4)}
+    msgs = [r.getMessage() for r in caplog.records]
+    assert any(
+        "LSH bucket cap 2: dropping 4 oversized buckets "
+        "(~12 within-bucket candidate pairs affected)" in m
+        for m in msgs
+    ), msgs
+
+
 def test_neardup_store_matches_batch_jaccard_on_corpus_split(spark):
     """On the real corpus split (store = src0-9, batch = src10-19),
     every estimated pair at a high threshold must correspond to a pair
@@ -493,30 +540,69 @@ def test_weighted_sample_uniform_weights_match_hash_order(spark):
     assert got == want
 
 
+def _py_minhash(text: str | None) -> list[int | None]:
+    """Plain-Python MinHash reference: md5-prefix base hash per
+    distinct whitespace token, then min((h*A_j + B_j) mod P) per seed
+    (None for a token-less doc, as array_min of an empty array)."""
+    import hashlib
+
+    from indexr_spark.operators.text import (
+        MINHASH_A,
+        MINHASH_B,
+        MINHASH_P,
+        MINHASH_SEEDS,
+    )
+
+    hs = [
+        int(hashlib.md5(t.encode()).hexdigest()[:8], 16)
+        for t in {t for t in (text or "").split(" ") if t}
+    ]
+    return [
+        min(((h * MINHASH_A[j] + MINHASH_B[j]) % MINHASH_P for h in hs), default=None)
+        for j in range(MINHASH_SEEDS)
+    ]
+
+
+def _py_band_sigs(mh: list[int | None], bands: int) -> list[str]:
+    r = len(mh) // bands
+    return [
+        ",".join(str(m) for m in mh[b * r:(b + 1) * r] if m is not None)
+        for b in range(bands)
+    ]
+
+
 def test_doc_and_group_band_sigs_agree(spark):
-    """The doc-grain signature builder (doc_band_sigs — the store
-    schema) and the group-grain one (_group_band_sigs — the d07/d09
-    candidate path) are two constructions of the SAME hash family;
-    for any document, its band signatures must be identical under
-    both. Pins the two code paths together: a family/banding change
-    applied to one and not the other would silently break signature-
-    store compatibility (review finding)."""
+    """Both grains of the one signature builder — doc_band_sigs (the
+    store schema) and _group_band_sigs (the d07/d09 candidate path) —
+    produce the plain-Python MinHash reference's minhashes and
+    comma-joined band strings for every document, at 2 and 4 bands.
+    A family or banding change that broke either grain would break
+    signature-store compatibility or oracle parity."""
     from indexr_spark.operators.text import _group_band_sigs, doc_band_sigs
     from indexr_spark.tables import load_table
 
-    d = load_table(spark, SMOKE_SF, "documents").limit(50)
-    doc_sigs = {
-        (r.doc_id, r.band): r.sig
-        for r in doc_band_sigs(d.select("doc_id", "text"), bands=4).collect()
-    }
+    d = load_table(spark, SMOKE_SF, "documents").limit(50).localCheckpoint()
+    texts = {r.doc_id: r.text for r in d.select("doc_id", "text").collect()}
+    mh = {i: _py_minhash(t) for i, t in texts.items()}
     groups = d.select(
         F.col("doc_id").alias("gid"), F.lit(1).alias("rep"), F.col("text").alias("any_text")
     )
-    group_sigs = {
-        (r.gid, r.band): r.sig for r in _group_band_sigs(groups, bands=4).collect()
-    }
-    assert doc_sigs, "no signatures produced"
-    assert doc_sigs == group_sigs
+    for bands in (2, 4):
+        want = {
+            (i, b): sig
+            for i, m in mh.items()
+            for b, sig in enumerate(_py_band_sigs(m, bands))
+        }
+        doc_rows = doc_band_sigs(d.select("doc_id", "text"), bands=bands).collect()
+        assert {(r.doc_id, r.band): r.sig for r in doc_rows} == want, bands
+        assert all(list(r.mhs) == mh[r.doc_id] for r in doc_rows), bands
+        assert {r.n_bands for r in doc_rows} == {bands}
+        group_sigs = {
+            (r.gid, r.band): r.sig
+            for r in _group_band_sigs(groups, bands=bands).collect()
+        }
+        assert group_sigs == want, bands
+    assert len(texts) == 50
 
 
 def test_simhash_pairs_complete_vs_brute_force(spark):

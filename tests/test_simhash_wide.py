@@ -1,17 +1,16 @@
-"""simhash_frame_wide / simhash_pairs_wide — the ≥10^5-doc posture.
+"""simhash_frame / simhash_pairs at the certified 32 bits and the
+≥10^5-doc 60-bit posture.
 
-The wide path exists because 32-bit band values saturate
-(candidates Θ(n²·bands/2^width) — COVERAGE.md "simhash100x"); these
-pins prove it is a strict generalization of the certified 32-bit
-bodies, not a fork with drifted semantics:
+Wider hashes exist because 32-bit band values saturate (candidates
+Θ(n²·bands/2^width) — COVERAGE.md "simhash100x"); these pins check
+every width against references, not against another engine:
 
-1. at bits=32 the wide frame reproduces simhash_frame EXACTLY and
-   the wide pair join reproduces simhash_pairs EXACTLY;
-2. at bits=60 the banded join reproduces the brute-force all-pairs
-   answer (the same exhaustive-equality pin d32 carries at 32);
-3. the md5-prefix + majority construction matches an independent
-   plain-Python reference (so a regression in conv/bit_get/pow
-   expression plumbing cannot hide inside a Spark-vs-Spark compare).
+1. the banded join reproduces the brute-force all-pairs answer at
+   32 and 60 bits (the exhaustive-equality pin d32 carries);
+2. the md5-prefix + majority construction matches an independent
+   plain-Python reference at 32 and 60 bits (so a regression in
+   conv/bit_get/pow expression plumbing cannot hide inside a
+   Spark-vs-Spark compare).
 """
 
 from __future__ import annotations
@@ -21,12 +20,7 @@ import hashlib
 import pytest
 from pyspark.sql import functions as F
 
-from indexr_spark.operators.text import (
-    simhash_frame,
-    simhash_frame_wide,
-    simhash_pairs,
-    simhash_pairs_wide,
-)
+from indexr_spark.operators.text import simhash_frame, simhash_pairs
 from tests.conftest import SMOKE_SF
 
 
@@ -36,25 +30,10 @@ def _docs(spark):
     )
 
 
-def test_bits32_reproduces_certified_frame(spark):
-    wide = {r["doc_id"]: r["simhash"]
-            for r in simhash_frame_wide(_docs(spark), bits=32).collect()}
-    cert = {r["doc_id"]: r["simhash"]
-            for r in simhash_frame(_docs(spark)).collect()}
-    assert wide == cert
-
-
-def test_bits32_pairs_reproduce_certified_pairs(spark):
-    sim = simhash_frame(_docs(spark))
-    wide = {tuple(r) for r in simhash_pairs_wide(sim, bits=32).collect()}
-    cert = {tuple(r) for r in simhash_pairs(sim).collect()}
-    assert wide == cert
-    assert wide, "corpus should contain at least one hamming<=3 pair"
-
-
-def test_wide60_pairs_match_bruteforce(spark):
-    sim = simhash_frame_wide(_docs(spark), bits=60).localCheckpoint()
-    got = {tuple(r) for r in simhash_pairs_wide(sim, bits=60).collect()}
+@pytest.mark.parametrize("bits", [32, 60])
+def test_pairs_match_bruteforce(spark, bits):
+    sim = simhash_frame(_docs(spark), bits=bits).localCheckpoint()
+    got = {tuple(r) for r in simhash_pairs(sim, bits=bits).collect()}
     a, b = sim.alias("a"), sim.alias("b")
     brute = {
         tuple(r)
@@ -70,18 +49,20 @@ def test_wide60_pairs_match_bruteforce(spark):
         .collect()
     }
     assert got == brute
+    assert got, "corpus should contain at least one hamming<=3 pair"
 
 
-def test_wide_frame_matches_python_reference(spark):
+@pytest.mark.parametrize("bits", [32, 60])
+def test_wide_frame_matches_python_reference(spark, bits):
     rows = [(0, "alpha beta gamma alpha"), (1, "delta eps"), (2, "zzz")]
     d = spark.createDataFrame(rows, "doc_id long, text string")
     got = {r["doc_id"]: r["simhash"]
-           for r in simhash_frame_wide(d, bits=60).collect()}
+           for r in simhash_frame(d, bits=bits).collect()}
 
     def pyhash(tok: str, nhex: int) -> int:
         return int(hashlib.md5(tok.encode()).hexdigest()[:nhex], 16)
 
-    def pysim(text: str, bits: int = 60) -> int:
+    def pysim(text: str) -> int:
         hs = [pyhash(t, bits // 4) for t in set(text.split())]
         v = 0
         for j in range(bits):
@@ -126,9 +107,9 @@ def test_payload_phash_wide_matches_python_reference(spark):
 def test_wide_pairs_plan_never_cartesian(spark):
     """The banded join must stay keyed on (band, v) at any width —
     the same no-cartesian guarantee the 32-bit path's plan carries."""
-    sim = simhash_frame_wide(_docs(spark), bits=60)
+    sim = simhash_frame(_docs(spark), bits=60)
     plan = (
-        simhash_pairs_wide(sim, bits=60)
+        simhash_pairs(sim, bits=60)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "CartesianProduct" not in plan
@@ -137,35 +118,35 @@ def test_wide_pairs_plan_never_cartesian(spark):
 def test_width_validation(spark):
     d = spark.createDataFrame([(0, "a b")], "doc_id long, text string")
     with pytest.raises(ValueError):
-        simhash_frame_wide(d, bits=61)
+        simhash_frame(d, bits=61)
     with pytest.raises(ValueError):
-        simhash_frame_wide(d, bits=0)
-    sim = simhash_frame_wide(d, bits=60)
+        simhash_frame(d, bits=0)
+    sim = simhash_frame(d, bits=60)
     with pytest.raises(ValueError):
-        simhash_pairs_wide(sim, bits=60, max_hamming=3, bands=3)
+        simhash_pairs(sim, bits=60, max_hamming=3, bands=3)
     with pytest.raises(ValueError):
-        simhash_pairs_wide(sim, bits=60, bands=7)
+        simhash_pairs(sim, bits=60, bands=7)
 
 
 def test_pairs_width_mismatch_raises(spark):
     """r10 ADVICE: feeding a narrower frame than `bits` makes the
     upper bands all-zero — every doc collides there and the candidate
-    stream silently goes quadratic. simhash_pairs_wide now refuses
+    stream silently goes quadratic. simhash_pairs refuses
     both mismatch directions before any join runs."""
     # a 32-bit frame declared as 60-bit: top bands all-zero
-    narrow = simhash_frame_wide(_docs(spark), bits=32)
+    narrow = simhash_frame(_docs(spark), bits=32)
     with pytest.raises(ValueError, match="top band"):
-        simhash_pairs_wide(narrow, bits=60)
+        simhash_pairs(narrow, bits=60)
     # values exceeding the declared width: banding would drop bits
     wide = spark.createDataFrame(
         [(0, 1 << 40), (1, 5)], "doc_id long, simhash long"
     )
     with pytest.raises(ValueError, match="WIDER"):
-        simhash_pairs_wide(wide, bits=32)
+        simhash_pairs(wide, bits=32)
     # matched widths still run (the guard must not false-positive on
     # a genuinely spanning frame)
-    ok = simhash_frame_wide(_docs(spark), bits=60)
-    assert simhash_pairs_wide(ok, bits=60).columns == [
+    ok = simhash_frame(_docs(spark), bits=60)
+    assert simhash_pairs(ok, bits=60).columns == [
         "a_id", "b_id", "hamming"
     ]
 
@@ -180,7 +161,7 @@ def test_wide_frame_edge_texts(spark):
         "doc_id long, text string",
     )
     for bits in (32, 60):
-        by_id = dict(tuple(r) for r in simhash_frame_wide(edge, bits=bits).collect())
+        by_id = dict(tuple(r) for r in simhash_frame(edge, bits=bits).collect())
         assert by_id[2] == (1 << bits) - 1
         assert by_id[3] == 0
         assert 0 <= by_id[1] < 1 << bits
