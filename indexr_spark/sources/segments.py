@@ -38,36 +38,44 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from indexr_spark.plans.rough_check import ColStats, FileStats, PruneResult, RCOperator, prune
-from indexr_spark.sources.catalog import AggSchema
+from indexr_spark.sources.catalog import AggSchema, Metric
 
 SIDECAR_NAME = "_indexr_stats.json"
 
 
-def apply_rollup(df: DataFrame, agg: AggSchema, order_col: str | None = None) -> DataFrame:
-    """Rollup rows with equal dims (AggType.java:43-85 semantics).
+def rollup_aggs(
+    metrics: list[Metric], first_by: str | None, last_by: str | None = None
+) -> list:
+    """The AggType rollup (AggType.java:43-85) as one aggregation per
+    metric: sum/min/max, and first/last as the value at the smallest
+    `first_by` / largest `last_by` (default: `first_by`). min_by/max_by
+    are associative, so any merge tree of rolled-up groups agrees —
+    compaction re-merges by the carried order bounds."""
+    last_by = last_by or first_by
+    if first_by is None and any(m.agg in ("first", "last") for m in metrics):
+        raise ValueError("first/last rollup requires order_col")
+    out = []
+    for m in metrics:
+        if m.agg == "sum":
+            out.append(F.sum(m.name).alias(m.name))
+        elif m.agg == "min":
+            out.append(F.min(m.name).alias(m.name))
+        elif m.agg == "max":
+            out.append(F.max(m.name).alias(m.name))
+        elif m.agg == "first":
+            out.append(F.min_by(m.name, F.col(first_by)).alias(m.name))
+        elif m.agg == "last":
+            out.append(F.max_by(m.name, F.col(last_by)).alias(m.name))
+    return out
 
-    first/last need a total order; `order_col` pins it (the reference
-    uses arrival order, which a distributed batch doesn't have).
-    """
+
+def apply_rollup(df: DataFrame, agg: AggSchema, order_col: str | None = None) -> DataFrame:
+    """Rollup rows with equal dims. first/last need a total order;
+    `order_col` pins it (the reference uses arrival order, which a
+    distributed batch doesn't have)."""
     if not agg.grouping:
         return df
-    exprs = []
-    for m in agg.metrics:
-        if m.agg == "sum":
-            exprs.append(F.sum(m.name).alias(m.name))
-        elif m.agg == "min":
-            exprs.append(F.min(m.name).alias(m.name))
-        elif m.agg == "max":
-            exprs.append(F.max(m.name).alias(m.name))
-        elif m.agg == "first":
-            if order_col is None:
-                raise ValueError("first/last rollup requires order_col")
-            exprs.append(F.min_by(m.name, order_col).alias(m.name))
-        elif m.agg == "last":
-            if order_col is None:
-                raise ValueError("first/last rollup requires order_col")
-            exprs.append(F.max_by(m.name, order_col).alias(m.name))
-    return df.groupBy(*agg.dims).agg(*exprs)
+    return df.groupBy(*agg.dims).agg(*rollup_aggs(agg.metrics, order_col))
 
 
 ZORDER_BITS = 16
@@ -242,30 +250,6 @@ def build_string_indexes(
     }
     _atomic_json_write(os.path.join(path, CMAP_NAME), {"version": 1, "files": files_out})
     return {c: len(terms) for c, (terms, _files) in postings.items()}
-
-
-def prune_by_term(
-    spark: SparkSession, path: str, column: str, values: list
-) -> list[str]:
-    """Candidate files containing ANY of `values` in `column`,
-    according to the term index (exact for =/IN: a file not listed
-    cannot contain the term)."""
-    idx = spark.read.parquet(os.path.join(path, TERM_INDEX_DIR, column))
-    rows = idx.filter(F.col("term").isin(values)).select("file").distinct().collect()
-    return sorted(r["file"] for r in rows)
-
-
-def read_term_pruned(
-    spark: SparkSession, path: str, column: str, values: list
-) -> tuple[DataFrame, list[str]]:
-    """Scan only the files the term index admits, with the exact
-    predicate re-applied (same cascade shape as read_pruned)."""
-    files = prune_by_term(spark, path, column, values)
-    if not files:
-        schema = spark.read.parquet(path).schema
-        return spark.createDataFrame([], schema), files
-    df = spark.read.parquet(*files).filter(F.col(column).isin(values))
-    return df, files
 
 
 def write_bucketed(

@@ -93,9 +93,11 @@ from __future__ import annotations
 import bisect
 import contextlib
 import json
+import logging
 import os
 import time
 import uuid
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -445,12 +447,13 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
 
 # In-flight write protocol: _write_data_files drops a dot-named
 # marker NEXT TO the batch dir (inside it, Spark's overwrite would
-# wipe it) before any data lands; the commit paths clear it after the
-# manifest commits. vacuum treats any un-manifested file whose batch
-# still carries a marker as a commit in progress — regardless of file
-# age, closing the "write outlives the min_age_s grace" hole — until
-# the MARKER itself goes stale (a dead writer), at which point the
-# batch is orphan-swept and the marker removed.
+# wipe it) before any data lands; _write_and_commit clears it once
+# the manifest commit returns or raises. vacuum treats any
+# un-manifested file whose batch still carries a marker as a commit
+# in progress — regardless of file age, closing the "write outlives
+# the min_age_s grace" hole — until the MARKER itself goes stale (a
+# dead writer), at which point the batch is orphan-swept and the
+# marker removed.
 INFLIGHT_PREFIX = ".inflight."
 INFLIGHT_STALE_S = 3600.0
 
@@ -461,9 +464,9 @@ def _inflight_marker(path: str, batch_rel: str) -> str:
 
 def _clear_inflight(path: str, new_files: list[str]) -> None:
     """Remove the in-flight markers for the batch dirs of just-
-    committed files. Called AFTER the manifest commit; a commit that
-    raises leaves its marker, and vacuum honors it until
-    INFLIGHT_STALE_S, then sweeps the dead writer's batch."""
+    committed files, once the manifest commit returns or raises. A
+    writer that dies before then leaves its marker, and vacuum honors
+    it until INFLIGHT_STALE_S, then sweeps the dead writer's batch."""
     batches = set()
     for f in new_files:
         d = os.path.dirname(f)
@@ -504,6 +507,28 @@ def _write_data_files(
     ]
 
 
+def _write_and_commit(
+    df: DataFrame,
+    path: str,
+    sort_by: list[str] | None,
+    carried: Sequence[str] = (),
+    num_segments: int | None = None,
+    **commit_kw,
+) -> int:
+    """The one write path: write `df` as a new batch, commit it with
+    the `carried` live files under `_commit`'s `commit_kw`, and clear
+    the batch's in-flight marker whether or not the commit lands. A
+    failed commit (e.g. ConcurrentSnapshotConflict — the caller
+    rewrites against the new parent, never re-commits these files)
+    leaves a provably dead write, so its orphan ages out under the
+    normal grace instead of being shielded for the full stale window."""
+    new = _write_data_files(df, path, sort_by, num_segments)
+    try:
+        return _commit(path, [*carried, *new], **commit_kw)
+    finally:
+        _clear_inflight(path, new)
+
+
 def write_snapshot(
     df: DataFrame,
     path: str,
@@ -518,19 +543,9 @@ def write_snapshot(
     commit then refuses with ConcurrentSnapshotConflict if the table
     advanced past that base, instead of replacing away an interleaved
     writer's commit."""
-    files = _write_data_files(df, path, sort_by, num_segments)
-    try:
-        v = _commit(path, files, expect_parent=expect_parent)
-    except BaseException:
-        # commit failed for THIS batch (e.g. ConcurrentSnapshotConflict
-        # — the caller rewrites against the new parent, never re-commits
-        # these files): the write is provably dead, so clear the marker
-        # and let the orphan age out under the normal grace instead of
-        # shielding it for the full stale window
-        _clear_inflight(path, files)
-        raise
-    _clear_inflight(path, files)
-    return v
+    return _write_and_commit(
+        df, path, sort_by, num_segments=num_segments, expect_parent=expect_parent
+    )
 
 
 def append_snapshot(
@@ -555,14 +570,7 @@ def append_snapshot(
     optimistic-concurrency loop Delta/Iceberg appends use; the
     reference serialized the same transition through ZooKeeper
     (HybridTable.java:64-82)."""
-    new = _write_data_files(df, path, sort_by)
-    try:
-        v = _commit(path, new, meta, delta=True)
-    except BaseException:
-        _clear_inflight(path, new)  # dead write: see write_snapshot
-        raise
-    _clear_inflight(path, new)
-    return v
+    return _write_and_commit(df, path, sort_by, meta=meta, delta=True)
 
 
 _WATERMARK_NAME = "META_WATERMARKS"
@@ -629,6 +637,35 @@ def max_committed_meta(path: str, key: str):
             if val is not None and (best is None or val > best):
                 best = val
     return best
+
+
+def epoch_meta(path: str, epoch_id: int, app_id: str | None = None) -> dict | None:
+    """The exactly-once guard every streaming sink shares: the
+    manifest meta that records `epoch_id` on `path`, or None (logged)
+    when that epoch already committed — a replay the sink must skip.
+
+    Epochs are monotone per STREAM INCARNATION, so "committed" means
+    at or below the max epoch `max_committed_meta` finds for the key.
+    `app_id` scopes the key, exactly like Delta's txnAppId/txnVersion
+    idempotent-write contract: Structured Streaming's epoch ids
+    RESTART AT ZERO with a fresh checkpoint, so re-pointing a stream
+    at an existing table without a new app_id would suppress every
+    epoch up to the old maximum — silent data loss. Give each (stream
+    checkpoint -> table) pairing its own app_id; the warning makes a
+    mis-paired restart visible rather than silent."""
+    key = f"epoch_{app_id}" if app_id else "epoch"
+    committed = max_committed_meta(path, key)
+    if committed is not None and epoch_id <= committed:
+        logging.getLogger(__name__).warning(
+            "%s: skipping epoch %d (<= committed max %d for %r) — replay, "
+            "or a stream restarted on a fresh checkpoint without a new app_id",
+            path,
+            epoch_id,
+            committed,
+            key,
+        )
+        return None
+    return {key: epoch_id}
 
 
 def _update_key_ranges(updates: DataFrame, key_cols: list[str]) -> dict:
@@ -884,14 +921,35 @@ def upsert_snapshot(
     if base == 0:
         raise FileNotFoundError(f"no committed snapshot under {path}")
     target, merged, untouched = scoped_merge_plan(spark, path, updates, key_cols, base)
-    new_files = _write_data_files(merged, path, sort_by)
-    try:
-        v = _commit(path, untouched + new_files, expect_parent=base)
-    except BaseException:
-        _clear_inflight(path, new_files)  # dead write: see write_snapshot
-        raise
-    _clear_inflight(path, new_files)
-    return v
+    return _write_and_commit(merged, path, sort_by, untouched, expect_parent=base)
+
+
+def upsert_segments(
+    spark: SparkSession,
+    table_path: str,
+    updates: DataFrame,
+    key_cols: list[str],
+    sort_by: list[str] | None = None,
+) -> tuple[int, int]:
+    """MERGE-style upsert, exported as `tools.upsert_segments` (beyond
+    reference — its online update can only recompute whole columns):
+    rows in `updates` replace target rows with the same key, new keys
+    append. upsert_snapshot's scoped copy-on-write commit, on a table
+    that may not be snapshot-managed yet (ensure_snapshot adopts it as
+    v1). Returns (updated, inserted); the counts read the same touched
+    files as the merge, so both cost files touched, not table size."""
+    base = ensure_snapshot(table_path)
+    target, merged, untouched = scoped_merge_plan(
+        spark, table_path, updates, key_cols, base
+    )
+    if target is not None:
+        cond = [target[k] == updates[k] for k in key_cols]
+        n_updated = target.join(updates, cond, "left_semi").count()
+    else:
+        n_updated = 0  # no file overlaps the update keys: pure insert
+    n_inserted = updates.count() - n_updated
+    _write_and_commit(merged, table_path, sort_by, untouched, expect_parent=base)
+    return n_updated, n_inserted
 
 
 def delete_matching(
@@ -947,14 +1005,7 @@ def delete_matching(
     # disjoint-range file may still hold null-keyed rows)
     cond = [target[k] == keys[k] for k in key_cols]
     survivors = target.join(keys, cond, "left_anti")
-    new_files = _write_data_files(survivors, path, sort_by)
-    try:
-        v = _commit(path, untouched + new_files, expect_parent=base)
-    except BaseException:
-        _clear_inflight(path, new_files)  # dead write: see write_snapshot
-        raise
-    _clear_inflight(path, new_files)
-    return v
+    return _write_and_commit(survivors, path, sort_by, untouched, expect_parent=base)
 
 
 def scoped_merge_plan(
@@ -967,7 +1018,7 @@ def scoped_merge_plan(
     """The sidecar-scoped MERGE plan against version `base`:
     (touched-files DataFrame or None, merged rewrite DataFrame,
     untouched live files to carry into the new manifest). Shared by
-    upsert_snapshot and tools.upsert_segments (which also needs the
+    upsert_snapshot and upsert_segments (which also needs the
     touched subset for its updated/inserted counts).
 
     Scoped by per-file key-set membership, not just the updates'

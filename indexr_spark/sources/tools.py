@@ -31,6 +31,12 @@ from pyspark.sql import functions as F
 from indexr_spark.sources.catalog import TableSpec, apply_defaults
 from indexr_spark.sources.segments import write_segments
 
+from indexr_spark.sources.snapshots import ensure_snapshot, read_table, write_snapshot
+
+# the MERGE tool lives next to upsert_snapshot, whose write path and
+# sidecar-scoped plan it shares; re-exported with the other tools
+from indexr_spark.sources.snapshots import upsert_segments  # noqa: F401
+
 
 def csv_load(
     spark: SparkSession,
@@ -85,62 +91,6 @@ def describe_segments(spark: SparkSession, table_path: str) -> DataFrame:
     )
 
 
-def upsert_segments(
-    spark: SparkSession,
-    table_path: str,
-    updates: DataFrame,
-    key_cols: list[str],
-    sort_by: list[str] | None = None,
-) -> tuple[int, int]:
-    """MERGE-style upsert (beyond reference — its online update can
-    only recompute whole columns): rows in `updates` replace target
-    rows with the same key, new keys append. One left-anti join keeps
-    the survivors, a union brings in the updates, and the rewrite
-    commits as a new snapshot version. Returns (updated, inserted).
-
-    Scale: sidecar-scoped copy-on-write — only files whose key-column
-    ranges may overlap the updates are read and rewritten, so both the
-    merge read and the counts below touch the overlap set, not the
-    table (rewrite cost proportional to files touched at 100 TB); the
-    anti join shuffles on the key unless the updates are
-    broadcast-sized (they usually are)."""
-    from indexr_spark.sources.snapshots import (
-        _clear_inflight,
-        _commit,
-        _write_data_files,
-        ensure_snapshot,
-        scoped_merge_plan,
-    )
-
-    # ensure_snapshot returns the CURRENT version (existing or the
-    # freshly bootstrapped v1) — no second manifest scan needed
-    base = ensure_snapshot(table_path)
-    target, merged, untouched = scoped_merge_plan(
-        spark, table_path, updates, key_cols, base
-    )
-    if target is not None:
-        cond = [target[k] == updates[k] for k in key_cols]
-        n_updated = target.join(updates, cond, "left_semi").count()
-    else:
-        n_updated = 0  # no file overlaps the update keys: pure insert
-    n_inserted = updates.count() - n_updated
-    # snapshot commit: new files + manifest carrying the untouched
-    # live files forward — a reader pinned to the prior version keeps
-    # its files (no rename/delete underneath an in-flight scan);
-    # vacuum() retires replaced files later. expect_parent: this
-    # rewrite's contents derive from `base`, so a concurrent commit in
-    # between makes it stale — refuse (ConcurrentSnapshotConflict)
-    # rather than silently replace it away.
-    new_files = _write_data_files(merged, table_path, sort_by)
-    try:
-        _commit(table_path, untouched + new_files, expect_parent=base)
-    finally:
-        # success: marker done its job; conflict: this batch is dead
-        # (the retry rewrites fresh files) — either way it comes off
-        _clear_inflight(table_path, new_files)
-    return n_updated, n_inserted
-
-
 def optimize_segments(
     spark: SparkSession,
     table_path: str,
@@ -155,8 +105,6 @@ def optimize_segments(
     directory for hive-partitioned tables — run on the table root it
     would flatten the partition columns into the data files. Returns
     (files_before, files_after)."""
-    from indexr_spark.sources.snapshots import ensure_snapshot, read_table, write_snapshot
-
     # ensure_snapshot returns the CURRENT version (existing or the
     # freshly bootstrapped v1) — no second manifest scan needed
     base = ensure_snapshot(table_path)
@@ -187,8 +135,6 @@ def update_column(
     implementation got from task commits, plus pinned-reader safety
     and time travel the directory swap could not give.
     """
-    from indexr_spark.sources.snapshots import ensure_snapshot, read_table, write_snapshot
-
     mode = mode.upper()
     # ensure_snapshot returns the CURRENT version (existing or the
     # freshly bootstrapped v1) — no second manifest scan needed

@@ -15,11 +15,11 @@ within itself, (2) anti-joins against the CURRENT store snapshot
 (re-read per batch through the manifest layer, so each batch sees
 every previously committed batch and any external append), and
 (3) appends only the novel rows back to the store — which IS the
-output table. Exactly-once rides snapshot_sink's epoch-meta guard:
-a replayed epoch is detected BEFORE the anti-join, so a crash
-between append-commit and checkpoint-commit cannot double-append
-(the replay is skipped) and cannot drop rows (the append already
-committed).
+output table. Exactly-once rides the shared epoch guard
+(sources/snapshots.epoch_meta): a replayed epoch is detected BEFORE
+the anti-join, so a crash between append-commit and checkpoint-commit
+cannot double-append (the replay is skipped) and cannot drop rows
+(the append already committed).
 
 Scale: the per-batch anti-join keys on the dedup hash; the store
 side at 100 TB is a hash-bucketed snapshot table (shuffle-free on
@@ -38,8 +38,6 @@ streaming dedup (dedup there is an offline tool concern).
 """
 
 from __future__ import annotations
-
-import logging
 
 from pyspark.sql import DataFrame
 
@@ -76,37 +74,26 @@ def dedup_store_sink(
     """foreachBatch sink for a self-maintaining dedup store: novel
     rows (by `key_cols`) append to the snapshot table at
     `snapshot_dir`; duplicate rows — vs the store OR earlier in the
-    same batch — are dropped. The epoch guard follows snapshot_sink's
-    contract exactly (epochs monotone per stream incarnation; `app_id`
+    same batch — are dropped. Exactly-once via the shared epoch guard
+    (sources/snapshots.epoch_meta, which also documents how `app_id`
     scopes the counter so a fresh checkpoint cannot silently suppress
-    epochs — see streaming/ingest.snapshot_sink)."""
+    epochs)."""
     from indexr_spark.sources.snapshots import (
         append_snapshot,
+        epoch_meta,
         latest_version,
-        max_committed_meta,
         read_snapshot,
     )
 
-    epoch_key = f"epoch_{app_id}" if app_id else "epoch"
-
     def sink(batch: DataFrame, epoch_id: int) -> None:
-        committed = max_committed_meta(snapshot_dir, epoch_key)
-        if committed is not None and epoch_id <= committed:
-            logging.getLogger(__name__).warning(
-                "dedup_store_sink %s: skipping epoch %d (<= committed "
-                "max %d for %r) — replay, or a restart on a fresh "
-                "checkpoint without a new app_id",
-                snapshot_dir,
-                epoch_id,
-                committed,
-                epoch_key,
-            )
+        meta = epoch_meta(snapshot_dir, epoch_id, app_id)
+        if meta is None:
             return
         novel = batch.dropDuplicates(key_cols)
         if latest_version(snapshot_dir) > 0:
             store = read_snapshot(batch.sparkSession, snapshot_dir)
             novel = novel.join(store.select(*key_cols), key_cols, "left_anti")
-        append_snapshot(novel, snapshot_dir, meta={epoch_key: epoch_id})
+        append_snapshot(novel, snapshot_dir, meta=meta)
 
     return sink
 
@@ -130,8 +117,8 @@ def neardup_store_sink(
     vs the store at its arrival instant; callers needing intra-batch
     near-dup run the d07 self-join upstream).
 
-    Batches need (doc_id, text). Exactly-once: the same epoch-meta
-    guard as dedup_store_sink, checked before any join. At 100 TB the
+    Batches need (doc_id, text). Exactly-once: the shared epoch guard
+    (sources/snapshots.epoch_meta), checked before any join. At 100 TB the
     signature store is ~K longs + band strings per doc — orders of
     magnitude under the corpus — and a snapshot table bucketed on
     (band, sig) keeps the candidate join store-side shuffle-free."""
@@ -144,6 +131,7 @@ def neardup_store_sink(
     )
     from indexr_spark.sources.snapshots import (
         append_snapshot,
+        epoch_meta,
         latest_version,
         max_committed_meta,
         read_snapshot,
@@ -153,19 +141,10 @@ def neardup_store_sink(
     # so a future retune cannot diverge the sink from the builder
     if bands is None:
         bands = JACCARD_BANDS
-    epoch_key = f"epoch_{app_id}" if app_id else "epoch"
 
     def sink(batch: DataFrame, epoch_id: int) -> None:
-        committed = max_committed_meta(sig_store_dir, epoch_key)
-        if committed is not None and epoch_id <= committed:
-            logging.getLogger(__name__).warning(
-                "neardup_store_sink %s: skipping epoch %d (<= committed "
-                "max %d for %r)",
-                sig_store_dir,
-                epoch_id,
-                committed,
-                epoch_key,
-            )
+        meta = epoch_meta(sig_store_dir, epoch_id, app_id)
+        if meta is None:
             return
         # banding mismatch guard: a store and batch built at different
         # bandings produce (band, sig) keys that essentially never
@@ -200,8 +179,6 @@ def neardup_store_sink(
                 .distinct()
             )
             sigs = sigs.join(dups, "doc_id", "left_anti")
-        append_snapshot(
-            sigs, sig_store_dir, meta={epoch_key: epoch_id, "sig_bands": bands}
-        )
+        append_snapshot(sigs, sig_store_dir, meta={**meta, "sig_bands": bands})
 
     return sink

@@ -41,7 +41,6 @@ queries re-aggregate across segments.
 
 from __future__ import annotations
 
-import logging
 import os
 import shutil
 
@@ -50,7 +49,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from indexr_spark.sources.catalog import Catalog, TableSpec, apply_defaults
-from indexr_spark.sources.segments import write_segments
+from indexr_spark.sources.segments import rollup_aggs, write_segments
 
 MIN_ORD, MAX_ORD = "_min_ord", "_max_ord"
 
@@ -105,22 +104,19 @@ def _rollup_batch(batch: DataFrame, spec: TableSpec, order_col: str | None) -> D
     agg = spec.realtime.agg if spec.realtime else None
     if agg is None or not agg.grouping:
         return batch
-    exprs = []
-    for m in agg.metrics:
-        if m.agg == "sum":
-            exprs.append(F.sum(m.name).alias(m.name))
-        elif m.agg == "min":
-            exprs.append(F.min(m.name).alias(m.name))
-        elif m.agg == "max":
-            exprs.append(F.max(m.name).alias(m.name))
-        elif m.agg == "first":
-            exprs.append(F.min_by(m.name, order_col).alias(m.name))
-        elif m.agg == "last":
-            exprs.append(F.max_by(m.name, order_col).alias(m.name))
+    exprs = rollup_aggs(agg.metrics, order_col)
     if order_col is not None:
         exprs.append(F.min(order_col).alias(MIN_ORD))
         exprs.append(F.max(order_col).alias(MAX_ORD))
     return batch.groupBy(*agg.dims).agg(*exprs)
+
+
+def _check_rollup(spec: TableSpec, order_col: str | None) -> None:
+    """Raise the rollup's named cause (first/last without order_col)
+    when the stream is set up, not inside its first micro-batch."""
+    agg = spec.realtime.agg if spec.realtime else None
+    if agg is not None and agg.grouping:
+        rollup_aggs(agg.metrics, order_col)
 
 
 def snapshot_sink(
@@ -131,48 +127,23 @@ def snapshot_sink(
 ):
     """foreachBatch sink that commits each micro-batch as a manifest
     APPEND on a snapshot table — the time-travelable alternative to
-    the epoch-keyed directory sink. Exactly-once: the epoch id is
-    recorded in the manifest, and a retried epoch (id at or below the
-    MAX epoch committed for this `app_id` — epochs are monotone per
-    STREAM INCARNATION) is a no-op instead of a double-append. The
-    max-scan rather than a latest-manifest check matters since
-    concurrent appends became supported: a racing non-streaming append
-    can land right after the epoch's commit and bury the epoch key one
-    manifest down (vacuum likewise folds retired epochs into a
-    watermark so the guard survives it).
+    the epoch-keyed directory sink. Exactly-once: the epoch id rides
+    the manifest, and a retried epoch is a no-op instead of a
+    double-append (`snapshots.epoch_meta`, the guard every snapshot
+    sink shares, owns the contract and `app_id`'s scoping). Readers
+    see each batch atomically (manifest pointer bump) and can pin or
+    time-travel the rt table like any snapshot table."""
+    from indexr_spark.sources.snapshots import append_snapshot, epoch_meta
 
-    `app_id` scopes the epoch counter, exactly like Delta's
-    txnAppId/txnVersion idempotent-write contract: Structured
-    Streaming's epoch ids RESTART AT ZERO with a fresh checkpoint, so
-    re-pointing a stream at an existing table without a new app_id
-    would suppress every epoch up to the old maximum — silent data
-    loss. Give each (stream checkpoint -> table) pairing its own
-    app_id; the skip is also logged so a mis-paired restart is visible
-    rather than silent. Readers see each batch atomically (manifest
-    pointer bump) and can pin or time-travel the rt table like any
-    snapshot table."""
-    from indexr_spark.sources.snapshots import append_snapshot, max_committed_meta
-
+    _check_rollup(spec, order_col)
     sort_cols = spec.realtime.agg.dims if (spec.realtime and spec.realtime.agg) else spec.sort_by
-    epoch_key = f"epoch_{app_id}" if app_id else "epoch"
 
     def sink(batch: DataFrame, epoch_id: int) -> None:
-        committed = max_committed_meta(snapshot_dir, epoch_key)
-        if committed is not None and epoch_id <= committed:
-            logging.getLogger(__name__).warning(
-                "snapshot_sink %s: skipping epoch %d (<= committed max %d "
-                "for %r) — replay, or a stream restarted on a fresh "
-                "checkpoint without a new app_id",
-                snapshot_dir,
-                epoch_id,
-                committed,
-                epoch_key,
-            )
+        meta = epoch_meta(snapshot_dir, epoch_id, app_id)
+        if meta is None:
             return  # retried epoch — already committed
         rolled = _rollup_batch(batch, spec, order_col)
-        append_snapshot(
-            rolled, snapshot_dir, sort_by=sort_cols or None, meta={epoch_key: epoch_id}
-        )
+        append_snapshot(rolled, snapshot_dir, sort_by=sort_cols or None, meta=meta)
 
     return sink
 
@@ -194,9 +165,12 @@ def start_ingest(
     source, rate…). Each micro-batch is rolled up, sorted on the dims
     and written to `rt/<table>/batch=<epoch>` — overwrite per epoch ⇒
     idempotent under retries (exactly-once on top of checkpointing).
+    A first/last metric without `order_col` raises before the stream
+    starts.
     """
     spec = catalog.load(table)
     rt_dir = catalog.rt_dir(table)
+    _check_rollup(spec, order_col)
     prepared = prepare_events(events, spec)
     sort_cols = spec.realtime.agg.dims if (spec.realtime and spec.realtime.agg) else spec.sort_by
 
@@ -258,24 +232,11 @@ def compact(spark: SparkSession, catalog: Catalog, table: str) -> int:
     rt = spark.read.option("basePath", rt_dir).parquet(*readable)
     agg = spec.realtime.agg if spec.realtime else None
     if agg is not None and agg.grouping:
-        has_ord = MIN_ORD in rt.columns
-        exprs = []
-        for m in agg.metrics:
-            if m.agg == "sum":
-                exprs.append(F.sum(m.name).alias(m.name))
-            elif m.agg == "min":
-                exprs.append(F.min(m.name).alias(m.name))
-            elif m.agg == "max":
-                exprs.append(F.max(m.name).alias(m.name))
-            elif m.agg == "first":
-                exprs.append(
-                    F.min_by(m.name, F.col(MIN_ORD) if has_ord else F.col(m.name)).alias(m.name)
-                )
-            elif m.agg == "last":
-                exprs.append(
-                    F.max_by(m.name, F.col(MAX_ORD) if has_ord else F.col(m.name)).alias(m.name)
-                )
-        merged = rt.groupBy(*agg.dims).agg(*exprs)
+        # first/last re-merge by the order bounds each rt group carries;
+        # batches rolled up without an order_col carry none, and a
+        # first/last metric then fails with rollup_aggs' named cause
+        ords = (MIN_ORD, MAX_ORD) if MIN_ORD in rt.columns else (None, None)
+        merged = rt.groupBy(*agg.dims).agg(*rollup_aggs(agg.metrics, *ords))
     else:
         merged = rt
 

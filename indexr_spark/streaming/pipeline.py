@@ -40,8 +40,6 @@ per-file key ranges to scope its rewrite by.
 
 from __future__ import annotations
 
-import logging
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -79,33 +77,24 @@ def cleaning_pipeline_sink(
     accumulates every (hash, source) pair — including quality-failed
     and dup docs, matching batch d30, where a low-quality copy under
     another source still contaminates the hash. Exactly-once via the
-    epoch-meta guard on EACH table (see streaming/ingest.snapshot_sink
-    for the app_id contract): a crash between the census commit and
-    the output commit replays the epoch, the census guard skips, the
-    output commit proceeds — and the census read including the
+    shared epoch guard on EACH table (sources/snapshots.epoch_meta,
+    which owns the app_id contract): a crash between the census commit
+    and the output commit replays the epoch, the census guard skips,
+    the output commit proceeds — and the census read including the
     replayed batch's own pairs changes nothing, because the census is
     consumed as a per-hash source SET."""
     from indexr_spark.sources.snapshots import (
         append_snapshot,
+        epoch_meta,
         latest_version,
-        max_committed_meta,
         read_snapshot,
     )
 
-    epoch_key = f"epoch_{app_id}" if app_id else "epoch"
     cdir = census_dir if census_dir is not None else census_dir_for(table_dir)
 
     def sink(batch: DataFrame, epoch_id: int) -> None:
-        committed = max_committed_meta(table_dir, epoch_key)
-        if committed is not None and epoch_id <= committed:
-            logging.getLogger(__name__).warning(
-                "cleaning_pipeline_sink %s: skipping epoch %d (<= "
-                "committed max %d for %r)",
-                table_dir,
-                epoch_id,
-                committed,
-                epoch_key,
-            )
+        meta = epoch_meta(table_dir, epoch_id, app_id)
+        if meta is None:
             return
         if "source" not in batch.columns:
             raise ValueError(
@@ -194,13 +183,13 @@ def cleaning_pipeline_sink(
         base = base.localCheckpoint()
         # census first: if the output commit below never happens, the
         # epoch replays and the census guard makes this idempotent
-        census_committed = max_committed_meta(cdir, epoch_key)
-        if census_committed is None or epoch_id > census_committed:
+        census_meta = epoch_meta(cdir, epoch_id, app_id)
+        if census_meta is not None:
             append_snapshot(
                 base.select(CANON_COL, "source").distinct(),
                 cdir,
                 sort_by=[CANON_COL],
-                meta={epoch_key: epoch_id},
+                meta=census_meta,
             )
         c = base.agg(
             F.count("*").alias("n_total"),
@@ -224,7 +213,7 @@ def cleaning_pipeline_sink(
             table_dir,
             sort_by=[CANON_COL],
             meta={
-                epoch_key: epoch_id,
+                **meta,
                 "funnel_total": int(c["n_total"]),
                 "funnel_quality": int(c["n_quality"] or 0),
                 "funnel_dedup": int(c["n_dedup"] or 0),

@@ -53,12 +53,13 @@ def test_vacuum_preserves_index_postings(spark, tmp_path):
     deleted = vacuum(path, keep_versions=1, min_age_s=0)
     assert deleted  # old versions retired
     assert not any("_indexr_term_index" in d for d in deleted)
-    from indexr_spark.sources.segments import TERM_INDEX_DIR, prune_by_term
+    from indexr_spark.plans.rough_check import Equal
+    from indexr_spark.sources.segments import TERM_INDEX_DIR, read_pruned
 
     # postings still loadable (stale content is a rebuild concern, not
     # a vacuum one)
     assert os.path.isdir(os.path.join(path, TERM_INDEX_DIR, "s"))
-    assert prune_by_term(spark, path, "s", ["zulu"])
+    assert read_pruned(spark, path, Equal("s", "zulu"))[1].scan
 
 
 def test_compact_appends_through_manifest_on_adopted_table(spark, tmp_path):

@@ -240,7 +240,7 @@ def test_term_index_prunes_files(spark, tmp_path):
     import glob
     import os
 
-    from indexr_spark.sources.segments import build_string_indexes, read_term_pruned
+    from indexr_spark.sources.segments import build_string_indexes
 
     df = spark.read.parquet(f"{SMOKE_SF}/part.parquet")
     out = str(tmp_path / "parts")
@@ -250,15 +250,22 @@ def test_term_index_prunes_files(spark, tmp_path):
     assert n_postings > 0
 
     all_files = glob.glob(os.path.join(out, "*.parquet"))
-    got, files = read_term_pruned(spark, out, "p_brand", ["Brand#21"])
-    assert 0 < len(files) < len(all_files), (len(files), len(all_files))
+    for pred, full in (
+        (Equal("p_brand", "Brand#21"), df.filter(F.col("p_brand") == "Brand#21")),
+        (
+            In("p_brand", ("Brand#21", "Brand#10x")),
+            df.filter(F.col("p_brand").isin("Brand#21", "Brand#10x")),
+        ),
+    ):
+        got, decision = read_pruned(spark, out, pred)
+        assert 0 < len(decision.scan) < len(all_files), (len(decision.scan), len(all_files))
+        assert {tuple(r) for r in got.collect()} == {tuple(r) for r in full.collect()}
 
-    full = df.filter(F.col("p_brand") == "Brand#21")
-    assert {tuple(r) for r in got.collect()} == {tuple(r) for r in full.collect()}
-
-    # a term that doesn't exist prunes everything
-    empty, files0 = read_term_pruned(spark, out, "p_brand", ["Brand#nope"])
-    assert files0 == [] and empty.count() == 0
+    # a term that doesn't exist prunes everything ("Brand#10x" sits
+    # inside a file's min/max range, so only the term set drops it)
+    for pred in (Equal("p_brand", "Brand#10x"), In("p_brand", ("Brand#10x", "Brand#nope"))):
+        empty, decision = read_pruned(spark, out, pred)
+        assert decision.scan == [] and empty.count() == 0
 
 
 def test_cmap_contains_pruning(spark, tmp_path):

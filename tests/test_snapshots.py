@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from indexr_spark.sources.snapshots import (
     append_snapshot,
     latest_version,
@@ -411,30 +413,77 @@ def test_epoch_guard_survives_vacuum(spark, tmp_path):
     assert S.read_snapshot(spark, sdir).count() == n  # no double-append
 
 
-def test_epoch_guard_scoped_by_app_id(spark, tmp_path):
+# every sink that commits through the shared epoch guard, with one
+# batch maker per batch schema: (row i) -> DataFrame
+_GUARD_TEXTS = (
+    "alpha beta gamma delta epsilon zeta eta theta iota kappa lam mu nu xi omicron",
+    "one two three four five six seven eight nine ten eleven twelve thirteen fourteen fifteen",
+    "red orange yellow green blue indigo violet black white grey pink brown cyan teal navy",
+)
+
+
+def _guard_sink(name: str, out: str, app_id: str):
+    from indexr_spark.sources.catalog import ColumnSpec, TableSpec
+    from indexr_spark.streaming.dedup import dedup_store_sink, neardup_store_sink
+    from indexr_spark.streaming.ingest import snapshot_sink
+    from indexr_spark.streaming.pipeline import cleaning_pipeline_sink
+
+    if name == "snapshot_sink":
+        spec = TableSpec(
+            name="t",
+            columns=[ColumnSpec("k", "int"), ColumnSpec("v", "double")],
+            sort_by=["k"],
+        )
+        return snapshot_sink(spec, out, app_id=app_id)
+    if name == "dedup_store_sink":
+        return dedup_store_sink(out, ["k"], app_id=app_id)
+    if name == "neardup_store_sink":
+        return neardup_store_sink(out, app_id=app_id)
+    return cleaning_pipeline_sink(out, app_id=app_id)
+
+
+def _guard_batch(spark, name: str, i: int):
+    if name in ("snapshot_sink", "dedup_store_sink"):
+        return spark.createDataFrame([(i, float(i))], "k int, v double")
+    if name == "neardup_store_sink":
+        return spark.createDataFrame([(i, _GUARD_TEXTS[i])], "doc_id long, text string")
+    return spark.createDataFrame(
+        [(i, _GUARD_TEXTS[i], "s0")], "doc_id long, text string, source string"
+    )
+
+
+@pytest.mark.parametrize(
+    "sink_name",
+    ["snapshot_sink", "dedup_store_sink", "neardup_store_sink", "cleaning_pipeline_sink"],
+)
+def test_epoch_guard_scoped_by_app_id(spark, tmp_path, caplog, sink_name):
     """A stream incarnation with a FRESH checkpoint restarts epoch ids
     at zero; scoping the epoch counter by app_id (the Delta
     txnAppId contract) lets the new incarnation write while the old
-    incarnation's replays stay suppressed."""
-    from indexr_spark.sources import snapshots as S
-    from indexr_spark.sources.catalog import ColumnSpec, TableSpec
-    from indexr_spark.streaming.ingest import snapshot_sink
+    incarnation's replays stay suppressed — on every sink."""
+    import logging
 
-    spec = TableSpec(
-        name="t",
-        columns=[ColumnSpec("k", "int"), ColumnSpec("v", "double")],
-        sort_by=["k"],
-    )
-    sdir = str(tmp_path / "rt")
-    run1 = snapshot_sink(spec, sdir, app_id="run1")
-    run1(spark.createDataFrame([(1, 1.0)], "k int, v double"), 500)
+    from indexr_spark.sources import snapshots as S
+
+    out = str(tmp_path / "out")
+    key = "k" if sink_name in ("snapshot_sink", "dedup_store_sink") else "doc_id"
+
+    def landed():
+        df = S.read_snapshot(spark, out)
+        return {r[0] for r in df.select(key).distinct().collect()}
+
+    run1 = _guard_sink(sink_name, out, "run1")
+    run1(_guard_batch(spark, sink_name, 0), 500)
     # new incarnation, fresh checkpoint -> epochs restart at 0
-    run2 = snapshot_sink(spec, sdir, app_id="run2")
-    run2(spark.createDataFrame([(2, 2.0)], "k int, v double"), 0)
-    got = {tuple(r) for r in S.read_snapshot(spark, sdir).collect()}
-    assert got == {(1, 1.0), (2, 2.0)}  # run2's epoch 0 NOT suppressed
-    run1(spark.createDataFrame([(9, 9.0)], "k int, v double"), 500)  # replay
-    assert S.read_snapshot(spark, sdir).count() == 2
+    _guard_sink(sink_name, out, "run2")(_guard_batch(spark, sink_name, 1), 0)
+    assert landed() == {0, 1}  # run2's epoch 0 NOT suppressed
+    with caplog.at_level(logging.WARNING, logger="indexr_spark.sources.snapshots"):
+        run1(_guard_batch(spark, sink_name, 2), 500)  # replay
+    assert landed() == {0, 1}
+    msgs = [r.getMessage() for r in caplog.records]
+    assert any(
+        out in m and "skipping epoch 500" in m and "'epoch_run1'" in m for m in msgs
+    ), msgs
 
 
 def test_append_commits_delta_manifest(spark, tmp_path):

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import json
 import os
+import random
 
 import pytest
 
@@ -24,7 +25,8 @@ from indexr_spark.sources.catalog import (
     RealtimeSpec,
     TableSpec,
 )
-from indexr_spark.streaming.ingest import compact, prepare_events, start_ingest
+from indexr_spark.sources.segments import write_segments
+from indexr_spark.streaming.ingest import compact, prepare_events, snapshot_sink, start_ingest
 
 SPEC = TableSpec(
     name="metrics",
@@ -242,3 +244,141 @@ def test_crash_recovery_snapshot_sink(spark, tmp_path):
         range(1, len(hist) + 1)
     ), "gap in snapshot history after crash recovery"
     assert S.max_committed_meta(sdir, "epoch_chaos") == 2
+
+
+# ------------------------------------------------------------------
+# The AggType rollup (sum/min/max/first/last) against one plain-Python
+# reference, through every path that rolls up: write_segments at load
+# time, and start_ingest's per-batch rollup re-merged by compact().
+
+ROLLUP_AGG = AggSchema(
+    grouping=True,
+    dims=["g"],
+    metrics=[
+        Metric("s", "sum"),
+        Metric("mn", "min"),
+        Metric("mx", "max"),
+        Metric("f", "first"),
+        Metric("l", "last"),
+    ],
+)
+ROLLUP_SPEC = TableSpec(
+    name="t",
+    columns=[
+        ColumnSpec("g", "varchar"),
+        ColumnSpec("s", "bigint"),
+        ColumnSpec("mn", "bigint"),
+        ColumnSpec("mx", "bigint"),
+        ColumnSpec("f", "double"),
+        ColumnSpec("l", "double"),
+    ],
+    realtime=RealtimeSpec(agg=ROLLUP_AGG),
+)
+ROLLUP_EVENTS = T.StructType(
+    [
+        T.StructField("seq", T.LongType()),
+        T.StructField("g", T.StringType()),
+        T.StructField("s", T.LongType()),
+        T.StructField("mn", T.LongType()),
+        T.StructField("mx", T.LongType()),
+        T.StructField("f", T.DoubleType()),
+        T.StructField("l", T.DoubleType()),
+    ]
+)
+
+
+def _rollup_events(seqs: list[int], rng: random.Random) -> list[dict]:
+    out = []
+    for q in seqs:
+        v = rng.randint(-50, 50)
+        out.append(
+            {"seq": q, "g": rng.choice("abcd"), "s": v, "mn": v, "mx": v,
+             "f": float(rng.randint(0, 999)), "l": float(rng.randint(0, 999))}
+        )
+    return out
+
+
+def _rollup_reference(events: list[dict]) -> dict:
+    """{g: (sum, min, max, f at the smallest seq, l at the largest)}."""
+    groups: dict[str, list[dict]] = {}
+    for e in events:
+        groups.setdefault(e["g"], []).append(e)
+    out = {}
+    for g, es in groups.items():
+        first = min(es, key=lambda e: e["seq"])
+        last = max(es, key=lambda e: e["seq"])
+        out[g] = (
+            sum(e["s"] for e in es),
+            min(e["mn"] for e in es),
+            max(e["mx"] for e in es),
+            first["f"],
+            last["l"],
+        )
+    return out
+
+
+def _rolled(df) -> dict:
+    return {r.g: (r.s, r.mn, r.mx, r.f, r.l) for r in df.collect()}
+
+
+def test_write_segments_rollup_matches_reference(spark, tmp_path):
+    rng = random.Random(7)
+    seqs = list(range(40))
+    rng.shuffle(seqs)
+    events = _rollup_events(seqs, rng)
+    out = str(tmp_path / "seg")
+    df = spark.createDataFrame(events, ROLLUP_EVENTS)
+    write_segments(df, out, sort_by=["g"], agg=ROLLUP_AGG, order_col="seq")
+    assert _rolled(spark.read.parquet(out)) == _rollup_reference(events)
+
+
+def test_ingest_then_compact_matches_reference(spark, tmp_path):
+    """Two event files whose seq ranges interleave: the second file
+    holds both the earliest and the latest events of some groups, so
+    compaction's re-rollup (not either batch alone) decides first and
+    last."""
+    rng = random.Random(11)
+    seqs = list(range(60))
+    rng.shuffle(seqs)
+    b1, b2 = _rollup_events(seqs[:30], rng), _rollup_events(seqs[30:], rng)
+    cat = Catalog(str(tmp_path / "cat"))
+    cat.save(ROLLUP_SPEC)
+    src = str(tmp_path / "incoming")
+
+    def run_stream():
+        events = spark.readStream.schema(ROLLUP_EVENTS).json(src)
+        q = start_ingest(spark, events, cat, "t", order_col="seq", available_now=True)
+        q.awaitTermination(120)
+
+    _write_events(src, "b1.jsonl", b1)
+    run_stream()
+    _write_events(src, "b2.jsonl", b2)
+    run_stream()
+    ref = _rollup_reference(b1 + b2)
+    # the merge decides first/last: batch 1 alone gets some group wrong
+    assert any(v[3:] != ref[g][3:] for g, v in _rollup_reference(b1).items())
+    assert compact(spark, cat, "t") == len(ref)
+    assert _rolled(spark.read.parquet(cat.table_dir("t"))) == ref
+
+
+def test_first_last_without_order_col_fails_up_front(spark, tmp_path):
+    """A first/last metric with no order_col is refused with its named
+    cause when the stream is set up, not inside its first micro-batch;
+    compaction refuses rt batches that carry no order bounds."""
+    cat = Catalog(str(tmp_path / "cat"))
+    cat.save(ROLLUP_SPEC)
+    src = str(tmp_path / "incoming")
+    _write_events(src, "b1.jsonl", _rollup_events([0, 1], random.Random(1)))
+    events = spark.readStream.schema(ROLLUP_EVENTS).json(src)
+    active = len(spark.streams.active)
+    with pytest.raises(ValueError, match="first/last rollup requires order_col"):
+        start_ingest(spark, events, cat, "t", checkpoint_dir=str(tmp_path / "ckpt"))
+    assert len(spark.streams.active) == active  # nothing started
+    with pytest.raises(ValueError, match="first/last rollup requires order_col"):
+        snapshot_sink(ROLLUP_SPEC, str(tmp_path / "snap"))
+
+    rows = [("a", 1, 1, 1, 1.0, 1.0)]
+    spark.createDataFrame(rows, "g string, s long, mn long, mx long, f double, l double") \
+        .write.parquet(os.path.join(cat.rt_dir("t"), "batch=0"))
+    with pytest.raises(ValueError, match="first/last rollup requires order_col"):
+        compact(spark, cat, "t")
