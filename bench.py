@@ -1,21 +1,19 @@
 #!/usr/bin/env python
 """Benchmark harness — headline queries at $SPARK_GRAFT_SF_DIR.
 
-Prints the full result as one JSON line, then a COMPACT final JSON
-line (same shape, query keys shortened to their family id — q01, d07,
-s06, mm01 — values identical):
+Output contract. Prints the full result as one JSON line, then a
+COMPACT final JSON line (same shape, query keys shortened to their
+family id — q01, d07, s06, mm01 — values identical):
 
   {"metric": "...", "value": <total sec>, "unit": "sec",
    "queries": {"q01": sec, ...}, "sf": 0.1}
 
-Why two lines: the round driver captures only the TAIL of stdout
-(~2000 chars) and parses the last JSON line it finds there. With 70+
-queries the full-name line is ~2500 chars, so rounds 2-3 recorded a
-truncated, unparseable tail ("parsed": null). The compact line fits
-with room to spare; the full-name line and bench_out.json carry the
-long form for humans and the regression gate. Spark's console
-progress bar is disabled for the same reason (it shared stdout with
-the payload).
+Round records keep only the TAIL of stdout (~2000 chars) and parse
+the last JSON line found there. With 90+ queries the full-name line
+outgrows that window, so the compact line comes last; the full line
+and bench_out.json carry the long form plus the counters and the gate
+verdict. Spark's console progress bar is disabled because it shares
+stdout with the payload.
 
 Headline set: one representative per operator family (reference-parity
 scan/agg/sort, joins, windows, sessionization, dedup/MinHash-LSH,
@@ -32,48 +30,38 @@ oracle-gated at sf0.01. d09r_jaccard_recall embeds d09b, so it is
 excluded with it.
 
 Timing = full query wall time (plan + execute + count), after a small
-session warm-up so JVM/session startup isn't attributed to the first
-query.
+session warm-up, best of 2 runs; a third run is added when the first
+two disagree by more than DISPERSION. The first run pays JIT/codegen
+compilation that a long-lived cluster amortizes away. Wall time is
+reported beside the `_spark_calibration` bracket taken at the start
+and end of the run, and is not gated on: shared hosts throttle in
+2-6x phases, so a wall-time gate either refuses to judge or judges
+the host.
 
-Round-2 inflation postmortem: BENCH_r02 recorded 2-19x blowups on
-trivial unchanged queries (q20 0.24->4.48s, q26 0.25->3.23s). Root
-cause investigation (round 3): NOT reproducible — replaying the exact
-bench prefix that preceded those queries in a fresh session yields
-0.14-0.32s for every query in the inflation cluster, both cold and
-warm. The plans were already the right ones (single map-combined
-aggregates); the recorded numbers reflect machine-level contention
-during that bench capture, not engine behavior. Round 4 confirmed the
-mechanism directly: identical-code back-to-back captures measured
-34.7s and 85.3s totals with ZERO guest-visible steal (/proc/stat) and
-an idle process table — host-level throttling phases. Hence the
-cpu_spin_sec_{before,after} calibration fields: a fixed single-thread
-spin recorded into the payload, so readers can normalize a capture by
-the machine speed that prevailed during it. Round-4 defenses on
-top of the r3 ones (periodic GC, per-query cache clear, file copy of
-the payload): loadavg is recorded into the payload (a contended
-capture is visible in the artifact), and best-of-2 escalates to a
-third run when the two samples disagree by >1.5x — a steady query
-measured during a contention spike gets one more chance at its true
-time.
+Counter gate. Every run of a row executes under the job group
+`bench:<row>#<run>`, and after the run `SparkContext.statusTracker()`
+gives its jobs (`getJobIdsForGroup`) and stages (the union of each
+job's `stageIds`, skipped stages included). The gate reads run index
+1: it always exists, and run 0 pays one-off jobs (q06: 6 jobs on run
+0, 4 on run 1). A row is flagged when its jobs or its stages exceed
+its entry in bench_baseline.json, `{sf, queries: {row: {jobs,
+stages}}}`; a row without an entry, or a baseline taken at another
+scale factor, is not judged. The verdict is `pass`, `regressed` or
+`no_baseline`. There is no ratio and no calibration.
 
-Regression gate: bench_baseline.json (committed) holds the last
-accepted per-query times plus the spark_cal_sec measured during THAT
-capture. After the run, each timing is first normalized by
-machine_factor = this capture's spark_cal / the baseline's (clamped to
-[1/3, 3]); any query whose NORMALIZED time is >1.75x its baseline (and
->0.5s absolute) is listed in the payload's "regressions" field and
-printed to stderr. The normalization exists because this box throttles
-in phases that the single-thread spin does not always see (a capture
-measured every small query uniformly ~2-4x slower with fast spins —
-multi-core scheduling was the throttled part); a fixed Spark job
-experiences the phase the same way the benchmark queries do. Both
-thresholds are calibrated against measured noise on this box: back-to-
-back identical-code runs swing mid-weight queries ~1.5x (d07 1.9->3.0s,
-d21 0.7->1.1s under residual load) and sub-0.5s queries ~2x+, while the
-failure class the gate exists for is much larger (the r3 s06 regression
-was 3.4x with an UNCHANGED plan shape — invisible to EXPLAIN.md).
-Update the baseline intentionally (cp bench_out.json alongside manual
-review), never automatically.
+Tasks are printed but not gated, and bytes are not collected: at
+sf0.01 over ten rows (two runs each, three processes at 4, 4 and 2
+cores) jobs and stages were identical for every row and run index,
+while tasks followed the core count (d07: 68 at 4 cores, 38 at 2) and
+differed between two processes at the same count (d07: 66 vs 67).
+Adding `.repartition(3)` to q12 took its run-0 counts from 4 jobs /
+7 stages to 5 / 11, so one injected shuffle moves both gated numbers.
+
+Refresh the baseline deliberately, after reviewing bench_out.json:
+
+  python -c "import json; o = json.load(open('bench_out.json')); \\
+    q = {n: {k: c[k] for k in ('jobs', 'stages')} for n, c in o['counters'].items()}; \\
+    json.dump({'sf': o['sf'], 'queries': q}, open('bench_baseline.json', 'w'))"
 """
 
 from __future__ import annotations
@@ -189,65 +177,16 @@ HEADLINE = [
 
 # escalate best-of-2 to best-of-3 when the two samples disagree this much
 DISPERSION = 1.5
-# regression gate thresholds vs bench_baseline.json
-REGRESSION_RATIO = 1.75
-REGRESSION_FLOOR_SEC = 0.5
-# Certification ceiling on the machine factor (r14, the r13 verdict's
-# item 4): at mf 4.16 the old 3.0 normalization clamp let a 124.9 s
-# contended capture pass with a single flagged row — a capture that
-# contended cannot distinguish engine regressions from host throttle
-# phases no matter how it is normalized, so the gate now REFUSES to
-# certify it (payload "gate": "not_certified_contended", regressions
-# {}) instead of normalizing. calm_capture.py's cal-gated watcher is
-# the sanctioned way to obtain a certifiable capture.
-GATE_MF_CEILING = 1.5
-
-
-def _loadavg() -> list[float]:
-    try:
-        return [round(x, 2) for x in os.getloadavg()]
-    except (OSError, AttributeError):  # non-POSIX: absent or failing
-        return []
-
-
-def _cpu_calibration(increments: int = 20_000_000) -> float:
-    """Wall seconds for a fixed single-thread spin.
-
-    This box's effective CPU speed swings 2-3x between captures
-    (host-level throttling invisible to guest loadavg/steal — measured
-    identical-code runs at 34.7 s and 85.3 s totals in one day, and
-    single queries swinging 2.4 s ↔ 100 s bracketed by spins). The
-    spin pins the machine's speed *at capture time* into the artifact,
-    so a cross-round bench comparison can separate engine regressions
-    from machine phases: if calibration moved 2x, so did every query.
-    ~0.7 s on this box in a fast phase (throttle phases hit multi-core
-    JVM work HARDER than this single-thread proxy — treat a slow spin
-    as a floor on the slowdown, not an exact factor).
-    """
-    t0 = time.time()
-    x = 0
-    while x < increments:
-        x += 1
-    return round(time.time() - t0, 3)
+# the counters the gate compares; tasks are reported only
+GATED = ("jobs", "stages")
 
 
 def _spark_calibration(spark) -> float:
     """Min wall seconds over 3 runs of a fixed small Spark job
-    (50M-row shuffled sum).
-
-    The single-thread spin misses the phase that matters most here:
-    captures where the spin stays fast but EVERY Spark query runs
-    ~2-4x slower (host throttling that hits multi-core scheduling and
-    JVM threads, not a pinned single core). A fixed job through the
-    whole stack — codegen, 64-task shuffle, scheduling — measures the
-    platform exactly the way the benchmark queries experience it.
-    Measured ~2.1-3.2 s warm in a fast phase with ~2x single-run
-    jitter, hence min-of-3 (single samples would add their own noise
-    to the very normalization meant to remove it). The regression
-    gate normalizes by the ratio of this number between capture and
-    baseline, so a slow PHASE doesn't read as an engine regression
-    (and a fast phase doesn't hide one).
-    """
+    (50M-row shuffled sum): the machine speed during the capture,
+    taken through the whole stack (codegen, a 64-task shuffle,
+    scheduling) the way the queries experience it. Min of 3 because
+    single samples jitter ~2x."""
     from pyspark.sql import functions as F
 
     runs = []
@@ -262,62 +201,77 @@ def _short(name: str) -> str:
     return name.split("_", 1)[0]
 
 
-def find_regressions(
-    timings: dict[str, float],
-    baseline: dict[str, float],
-    ratio: float = REGRESSION_RATIO,
-    floor_sec: float = REGRESSION_FLOOR_SEC,
-    machine_factor: float = 1.0,
-) -> dict[str, dict[str, float]]:
-    """Queries slower than `ratio` x their baseline AND above the
-    absolute floor (sub-floor queries are jitter-dominated). Queries
-    missing from the baseline are never flagged — new entries earn a
-    baseline on the next intentional refresh.
+def job_counters(st, jobs: list[int]) -> dict[str, int]:
+    """Jobs, stages (skipped ones included) and completed tasks of
+    `jobs`, read from the status tracker `st`."""
+    stages: set[int] = set()
+    for j in jobs:
+        info = st.getJobInfo(j)
+        if info is not None:
+            stages.update(info.stageIds)
+    tasks = 0
+    for s in stages:
+        info = st.getStageInfo(s)
+        if info is not None:
+            tasks += info.numCompletedTasks
+    return {"jobs": len(jobs), "stages": len(stages), "tasks": tasks}
 
-    `machine_factor` is capture_spark_cal / baseline_spark_cal — how
-    much slower the machine itself ran than when the baseline was
-    captured (see _spark_calibration). Each measurement is normalized
-    by it before the ratio test, clamped to [1/3, 3] so a broken
-    calibration can't hide a real regression entirely. The flagged
-    entry records both the raw and normalized numbers.
-    """
-    # The upper clamp only matters to DIRECT callers now: certify()
-    # refuses any capture whose factor exceeds GATE_MF_CEILING before
-    # this normalization can run, so in the bench path the factor here
-    # is always ≤ 1.5. The lower clamp still guards against a broken
-    # fast calibration hiding a real regression.
-    factor = min(3.0, max(1 / 3.0, machine_factor or 1.0))
-    out: dict[str, dict[str, float]] = {}
-    for name, now in timings.items():
+
+def run_row(spark, name: str, run: int, sf_dir: str) -> tuple[float, dict[str, int]]:
+    """One timed run of headline row `name` under job group
+    `bench:<name>#<run>`: (wall seconds, its counters)."""
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    group = f"bench:{name}#{run}"
+    seen = set(st.getJobIdsForGroup(group))  # a row measured again reuses its group
+    sc.setJobGroup(group, name)
+    try:
+        t0 = time.time()
+        operators.QUERIES[name](spark, sf_dir).count()
+        sec = time.time() - t0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = [j for j in st.getJobIdsForGroup(group) if j not in seen]
+    return sec, job_counters(st, jobs)
+
+
+def measure(spark, name: str, sf_dir: str) -> tuple[float, dict[str, int]]:
+    """Best-of-2 wall seconds (best-of-3 past DISPERSION) and the
+    counters of run index 1 (run 0 pays one-off jobs)."""
+    runs, counts = [], []
+    for run in range(2):
+        sec, c = run_row(spark, name, run, sf_dir)
+        runs.append(sec)
+        counts.append(c)
+    if max(runs) / max(min(runs), 1e-9) > DISPERSION:
+        runs.append(run_row(spark, name, 2, sf_dir)[0])
+    return round(min(runs), 3), counts[1]
+
+
+def counter_regressions(
+    counters: dict[str, dict[str, int]],
+    baseline: dict[str, dict[str, int]],
+) -> dict[str, dict[str, dict[str, int]]]:
+    """Rows whose jobs or stages exceed their baseline entry. Rows
+    missing from the baseline are not flagged."""
+    out = {}
+    for name, now in counters.items():
         then = baseline.get(name)
-        norm = round(now / factor, 3)
-        # `then > 0` is deliberate, not falsy-accident: a baseline that
-        # rounded to 0.0 can't support a ratio — treat the floor crossing
-        # itself as the regression signal for those.
-        if then is not None and norm > floor_sec:
-            if (then > 0 and norm / then > ratio) or then == 0:
-                out[name] = {"baseline": then, "now": now, "now_normalized": norm}
+        if then is not None and any(now[k] > then[k] for k in GATED):
+            out[name] = {"baseline": then, "now": {k: now[k] for k in GATED}}
     return out
 
 
-def certify(
-    timings: dict[str, float],
-    baseline: dict[str, float],
-    machine_factor: float,
-) -> tuple[str, dict[str, dict[str, float]]]:
-    """Gate verdict for one capture: ("certified", regressions) when
-    the machine factor is within GATE_MF_CEILING, else
-    ("not_certified_contended", {}) — a capture taken on a box running
-    >1.5x slower than the baseline's cannot support a per-query
-    verdict either way (normalizing it hides real regressions exactly
-    as often as it invents them), so the gate refuses rather than
-    normalizes. Baselines must come from calm captures
-    (scripts/calm_capture.py)."""
-    if (machine_factor or 1.0) > GATE_MF_CEILING:
-        return "not_certified_contended", {}
-    return "certified", find_regressions(
-        timings, baseline, machine_factor=machine_factor
-    )
+def _load_baseline(sf: float) -> dict[str, dict[str, int]]:
+    """bench_baseline.json's rows, or {} when it is missing or was
+    taken at another scale factor (plans, and so counts, depend on
+    table sizes)."""
+    path = _REPO / "bench_baseline.json"
+    if not path.exists():
+        return {}
+    doc = json.loads(path.read_text())
+    return doc["queries"] if doc.get("sf") == sf else {}
 
 
 def main() -> None:
@@ -326,8 +280,7 @@ def main() -> None:
         sf = float(Path(sf_dir).name.replace("sf", ""))
     except ValueError:
         sf = -1.0
-    load_before = _loadavg()
-    spin_before = _cpu_calibration()
+    baseline = _load_baseline(sf)
     spark = get_spark(
         app_name="indexr-bench",
         # Long multi-query sessions accumulate broadcast + checkpoint
@@ -347,123 +300,35 @@ def main() -> None:
     spark.range(1000).count()
     spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).count()
     spark.range(64).mapInPandas(lambda it: it, "id long").count()
-    spark_cal = _spark_calibration(spark)  # first of 3 runs doubles as warm-up
+    spark_cal_start = _spark_calibration(spark)  # first of 3 runs doubles as warm-up
 
-    # best-of-2: the first run pays JIT/codegen compilation that a
-    # long-lived cluster amortizes away; min is the steady-state cost.
-    # A third run triggers only when the first two disagree by more
-    # than DISPERSION — the contention-spike case.
-    # phase_trace: a short spin sampled every 10 queries — localizes a
-    # mid-capture throttle phase to the queries it inflated (~0.2 s per
-    # sample in a fast phase, ~2 s total overhead).
     timings: dict[str, float] = {}
-    phase_trace: list[dict[str, float]] = []
-    for i, name in enumerate(HEADLINE):
-        if i % 10 == 0:
-            phase_trace.append(
-                {"query_index": i, "spin_sec": _cpu_calibration(5_000_000)}
-            )
-        runs = []
-        for _ in range(2):
-            t0 = time.time()
-            operators.QUERIES[name](spark, sf_dir).count()
-            runs.append(time.time() - t0)
-        if max(runs) / max(min(runs), 1e-9) > DISPERSION:
-            t0 = time.time()
-            operators.QUERIES[name](spark, sf_dir).count()
-            runs.append(time.time() - t0)
-        timings[name] = round(min(runs), 3)
+    counters: dict[str, dict[str, int]] = {}
+    for name in HEADLINE:
+        timings[name], counters[name] = measure(spark, name, sf_dir)
         spark.catalog.clearCache()
-
-    # Re-measure the cal job now that the run is over and normalize by
-    # the MIN of the start/end readings. The start reading is taken
-    # seconds after JVM launch and — when a prior Spark JVM is still
-    # tearing down, as in calm_capture.py's gate-then-exec chain — can
-    # read 3x+ its steady state while the capture itself is calm
-    # (observed: start-cal 7.666 in a run whose interleaved spin probes
-    # matched the baseline's own trace and whose standalone cal
-    # re-measured 2.397 minutes later). Contention only ever ADDS time,
-    # so the lower of two readings bracketing the run is the less
-    # contaminated estimate of the phase — the same min-not-mean
-    # argument the baseline's calibration note makes.
     spark_cal_end = _spark_calibration(spark)
-    spark_cal_start, spark_cal = spark_cal, min(spark_cal, spark_cal_end)
 
-    # regression gate vs the committed baseline, normalized by how fast
-    # the machine ran THIS capture vs the baseline's capture
-    regressions: dict[str, dict[str, float]] = {}
-    machine_factor = 1.0
-    gate = "certified"
-    baseline_path = _REPO / "bench_baseline.json"
-    if baseline_path.exists():
-        try:
-            base_doc = json.loads(baseline_path.read_text())
-            base = base_doc.get("queries", {})
-            base_cal = base_doc.get("spark_cal_sec")
-        except (json.JSONDecodeError, OSError):
-            base, base_cal = {}, None
-        if base_cal:
-            machine_factor = spark_cal / base_cal
-        gate, regressions = certify(timings, base, machine_factor)
-        if gate != "certified":
-            print(
-                f"BENCH GATE: machine_factor {machine_factor:.3f} > "
-                f"{GATE_MF_CEILING} — capture is contended, refusing to "
-                "certify (no regression verdict either way)",
-                file=sys.stderr,
-            )
-        # Second-chance pass: a host-throttle micro-phase (~20 s) can
-        # inflate one query's entire best-of-2/3 window while the
-        # 10-query phase trace never samples it (observed: s06 at
-        # 6.2 s inside a capture whose isolated steady state is
-        # 1.7 s). Re-run each flagged query once — head-of-suite
-        # queries get minutes of separation for free; the sleep buys
-        # tail-of-suite queries distance from a micro-phase that may
-        # still be draining. A real regression stays slow either way.
-        if regressions:
-            time.sleep(15)
-        for name in sorted(regressions):
-            t0 = time.time()
-            operators.QUERIES[name](spark, sf_dir).count()
-            timings[name] = round(min(timings[name], time.time() - t0), 3)
-            spark.catalog.clearCache()
-        if gate == "certified":
-            regressions = find_regressions(
-                timings, base, machine_factor=machine_factor
-            )
-        for name, r in sorted(regressions.items()):
-            # a 0.0 baseline is flagged via the floor-crossing branch
-            # and supports no ratio — don't let the REPORT divide by it
-            # and lose the whole capture
-            ratio_txt = (
-                f"{r['now_normalized'] / r['baseline']:.1f}x"
-                if r["baseline"] > 0
-                else "baseline 0"
-            )
-            print(
-                f"BENCH REGRESSION {name}: {r['baseline']}s -> {r['now']}s "
-                f"(normalized {r['now_normalized']}s, {ratio_txt})",
-                file=sys.stderr,
-            )
+    regressions = counter_regressions(counters, baseline)
+    for name, r in sorted(regressions.items()):
+        was, now = r["baseline"], r["now"]
+        print(
+            f"BENCH REGRESSION {name}: jobs {was['jobs']} -> {now['jobs']}, "
+            f"stages {was['stages']} -> {now['stages']}",
+            file=sys.stderr,
+        )
 
     total = round(sum(timings.values()), 3)
-
     full = {
         "metric": "headline_query_wall_time",
         "value": total,
         "unit": "sec",
         "queries": timings,
         "sf": sf,
-        "loadavg_before": load_before,
-        "loadavg_after": _loadavg(),
-        "cpu_spin_sec_before": spin_before,
-        "cpu_spin_sec_after": _cpu_calibration(),
-        "spark_cal_sec": spark_cal,
         "spark_cal_start_sec": spark_cal_start,
         "spark_cal_end_sec": spark_cal_end,
-        "machine_factor_vs_baseline": round(machine_factor, 3),
-        "phase_trace": phase_trace,
-        "gate": gate,
+        "counters": counters,
+        "gate": "no_baseline" if not baseline else "regressed" if regressions else "pass",
         "regressions": regressions,
     }
     compact = {

@@ -340,7 +340,8 @@ class Catalog:
         optimized plan for the filter conjuncts Catalyst pushed onto
         each parquet relation (plans.catalyst_filter — the SparkFilter
         adapter, one driver-side traversal); (2) re-register each
-        filtered table as a pruned view and re-plan. Files are skipped
+        filtered table as a pruned view, re-plan, and put the phase-1
+        view back. Files are skipped
         only on a provable NONE; the query's own filters still apply,
         so results are identical to the unpruned plan. Per-table
         decisions land in `self.last_prune` for observability."""
@@ -355,7 +356,7 @@ class Catalog:
         except Exception:
             return df  # plan walk failed (e.g. connect mode): unpruned
         by_real = {os.path.realpath(p): ops for p, ops in by_path.items()}
-        replaced: list[str] = []
+        restore: dict[str, DataFrame] = {}  # phase-1 view of each swapped table
         for name in names:
             occs = by_real.get(os.path.realpath(self.table_dir(name)))
             if not occs:
@@ -370,21 +371,16 @@ class Catalog:
                 continue
             self.last_prune[name] = result
             if result.skipped:
-                replaced.append(name)
+                restore[name] = spark.table(name)
                 view = (
                     self.read_hybrid(spark, name, files=result.scan)
                     if hybrid
                     else self.read(spark, name, files=result.scan)
                 )
                 view.createOrReplaceTempView(name)
-        if replaced:
+        if restore:
             df = spark.sql(query)  # resolved now — safe to restore views
-            for name in replaced:  # restore only what was swapped
-                view = (
-                    self.read_hybrid(spark, name)
-                    if hybrid
-                    else self.read(spark, name)
-                )
+            for name, view in restore.items():  # restore only what was swapped
                 view.createOrReplaceTempView(name)
         return df
 

@@ -14,8 +14,8 @@ kmeans1m — each docstring states its sub-oracles and the COVERAGE.md
 section that interprets its numbers.
 
 Prints one line per measurement with a single-thread spin calibration
-after each (this box throttles in phases — a row is only comparable
-to another captured at a similar spin; see bench.py). d09 runs CAPPED
+after each (the host throttles in phases — a row is only comparable
+to another captured at a similar spin). d09 runs CAPPED
 (INDEXR_LSH_MAX_BUCKET=500) because the uncapped verify exceeds 590 s
 on the 10x corpus by specification (pairwise output); the capped run
 is the documented scale posture and logs its forgone pairs.
@@ -51,23 +51,13 @@ def _spin() -> float:
 
 
 def _make_cal(spark):
-    """min-of-3 multicore cal (bench.py's instrument) — this box's
-    throttle phases steal CORES, which single-thread spin cannot see
-    (r9 calm-hunt finding); every bracketed row attributes its wall
-    to machine state post-hoc. Hoisted to module level in r12 (the
-    r11 ADVICE): one instrument, not seven verbatim copies."""
+    """bench.py's min-of-3 multicore calibration job, bound to `spark`.
+    Throttle phases steal CORES, which a single-thread spin cannot
+    see; every bracketed row attributes its wall to machine state
+    post-hoc."""
+    from bench import _spark_calibration
 
-    def _cal() -> float:
-        from pyspark.sql import functions as F
-
-        runs = []
-        for _ in range(3):
-            t0 = time.time()
-            spark.range(50_000_000).repartition(64).agg(F.sum("id")).collect()
-            runs.append(time.time() - t0)
-        return round(min(runs), 3)
-
-    return _cal
+    return lambda: _spark_calibration(spark)
 
 
 def _run(spark, name, fn) -> None:

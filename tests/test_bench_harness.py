@@ -3,15 +3,18 @@
 The driver captures only the TAIL of bench stdout (~2000 chars) and
 parses the last JSON line it finds there; rounds 2-3 recorded an
 unparseable artifact because the payload line outgrew the window.
-These tests pin the compact-line contract and the regression gate
-without running Spark.
+These tests pin the compact-line contract and the counter gate.
 """
 
 from __future__ import annotations
 
 import json
+import os
 
 import bench
+from indexr_spark import operators
+
+SMOKE_SF = os.environ.get("INDEXR_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 def test_headline_names_resolve_and_short_keys_unique():
@@ -49,177 +52,37 @@ def test_compact_line_fits_driver_tail_window():
     assert len(compact) < 1800, len(compact)
 
 
-def test_find_regressions_flags_ratio_above_floor():
-    base = {"q01_x": 1.0, "q02_y": 0.1, "d07_z": 2.0}
-    now = {"q01_x": 1.9, "q02_y": 0.45, "d07_z": 2.1, "new_op": 9.9}
-    r = bench.find_regressions(now, base)
-    # q01: 1.9x over 1.0s baseline and above the 0.5s floor -> flagged
-    assert r == {"q01_x": {"baseline": 1.0, "now": 1.9, "now_normalized": 1.9}}
-    # q02: 4.5x ratio but below the absolute floor -> jitter, not flagged
-    # d07: above floor but only 1.05x -> not flagged
-    # new_op: no baseline -> never flagged
-
-
-def test_find_regressions_machine_factor_normalizes_slow_phase():
-    """A capture on a 2x-throttled machine (every query uniformly 2x)
-    must NOT read as an engine regression once the Spark-job
-    calibration says the machine itself ran 2x slower — and a REAL 4x
-    regression must still be flagged through the normalization."""
-    base = {"q01_x": 1.0, "q02_y": 1.0}
-    now = {"q01_x": 2.0, "q02_y": 8.0}
-    r = bench.find_regressions(now, base, machine_factor=2.0)
-    assert "q01_x" not in r  # phase, not regression
-    assert r["q02_y"]["now_normalized"] == 4.0  # real, still caught
-
-
-def test_find_regressions_machine_factor_clamped():
-    """An absurd calibration (e.g. the job raced a throttle spike)
-    cannot hide a real regression: the factor clamps at 3x."""
-    r = bench.find_regressions({"q01_x": 10.0}, {"q01_x": 1.0}, machine_factor=50.0)
-    assert "q01_x" in r  # 10 / 3 (clamped) = 3.33 > 1.75
-
-
-def test_find_regressions_zero_baseline_flags_floor_crossing():
-    """A baseline that rounded to 0.0 can't support a ratio; crossing
-    the absolute floor IS the regression signal there (the falsy-zero
-    skip would have silently exempted such queries forever)."""
-    r = bench.find_regressions({"q01_x": 0.9}, {"q01_x": 0.0})
-    assert "q01_x" in r
-
-
-def test_find_regressions_would_have_caught_r3_s06():
-    """The gate exists because of a specific historical failure:
-    s06_ivf_topk went 2.23s -> 7.49s in round 3 with an unchanged plan
-    shape, so the EXPLAIN snapshots could not catch it."""
-    r = bench.find_regressions({"s06_ivf_topk": 7.49}, {"s06_ivf_topk": 2.23})
-    assert "s06_ivf_topk" in r
-
-
-def test_certify_refuses_contended_capture():
-    """r14 (the r13 verdict's item 4): at machine factor 4.16 the old
-    3.0 normalization clamp certified a 124.9 s contended capture with
-    one flagged row. A capture above GATE_MF_CEILING must now refuse
-    certification outright — no regression verdict either way."""
-    base = {"q01_x": 1.0}
-    now = {"q01_x": 4.0}  # 4x raw — real regression OR throttle phase
-    gate, r = bench.certify(now, base, machine_factor=4.163)
-    assert gate == "not_certified_contended"
-    assert r == {}
-
-
-def test_certify_passes_calm_capture_through_to_gate():
-    """Within the ceiling, certify() is the same gate as before:
-    normalized by the actual machine factor, flagged when the
-    normalized ratio exceeds REGRESSION_RATIO."""
-    base = {"q01_x": 1.0, "q02_y": 1.0}
-    now = {"q01_x": 1.3, "q02_y": 4.0}
-    gate, r = bench.certify(now, base, machine_factor=1.2)
-    assert gate == "certified"
-    assert "q01_x" not in r  # 1.08 normalized — calm noise
-    assert r["q02_y"]["now_normalized"] == 3.333  # real, still caught
-
-
-def test_certify_ceiling_is_strict_boundary():
-    gate, _ = bench.certify({}, {}, machine_factor=bench.GATE_MF_CEILING)
-    assert gate == "certified"
-    gate, _ = bench.certify({}, {}, machine_factor=bench.GATE_MF_CEILING + 0.01)
-    assert gate == "not_certified_contended"
-
-
-def _raise_fixture():
-    """A minimal baseline + valid evidence pair for the raise guardrail
-    (scripts/merge_new_baseline_entries.py — the r12 codification of
-    the d07/d10/d21 evidence bar)."""
+def test_counter_regressions_flags_growth_only():
+    """Equal counts pass, one more job or one more stage is flagged,
+    fewer is not, tasks are not gated, and a row without a baseline
+    entry is not judged."""
     base = {
-        "spark_cal_sec": 2.0,
-        "value": 1.5,
-        "queries": {"q99_toy": 0.5, "q98_other": 1.0},
+        "q01_x": {"jobs": 3, "stages": 6},
+        "q02_y": {"jobs": 4, "stages": 7},
+        "d07_z": {"jobs": 13, "stages": 21},
+        "s06_w": {"jobs": 5, "stages": 9},
     }
-    evidence = {
-        "new_value_sec": 0.8,
-        "note": "q99_toy's 0.5 s was a flicker minimum; bench-context "
-                "reading is 0.8 s (interleaved A/B, code unchanged)",
-        "ab_runs": [
-            {"value_sec": 0.8, "cal_start_sec": 2.1, "cal_end_sec": 2.2},
-            {"value_sec": 0.79, "cal_start_sec": 2.0, "cal_end_sec": 2.1},
-        ],
+    now = {
+        "q01_x": {"jobs": 3, "stages": 6, "tasks": 999},
+        "q02_y": {"jobs": 5, "stages": 7, "tasks": 4},
+        "d07_z": {"jobs": 13, "stages": 22, "tasks": 22},
+        "s06_w": {"jobs": 4, "stages": 8, "tasks": 9},
+        "q99_new": {"jobs": 50, "stages": 90, "tasks": 1},
     }
-    return base, evidence
-
-
-def test_baseline_raise_accepts_full_evidence():
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "scripts"))
-    import merge_new_baseline_entries as m
-
-    base, ev = _raise_fixture()
-    out = m.apply_raise(base, "q99_toy", 0.8, ev)
-    assert out["queries"]["q99_toy"] == 0.8
-    assert out["value"] == 1.8  # total re-derived
-    ledger = out["notes"]["raise_q99_toy"]
-    assert ledger["old_sec"] == 0.5 and ledger["new_sec"] == 0.8
-    assert ledger["ab_runs"] == ev["ab_runs"]
-
-
-def test_baseline_raise_refused_without_evidence():
-    import sys
-    from pathlib import Path
-
-    import pytest
-
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "scripts"))
-    import merge_new_baseline_entries as m
-
-    base, ev = _raise_fixture()
-    # no note
-    bad = {**ev, "note": ""}
-    with pytest.raises(m.RaiseEvidenceError, match="note"):
-        m.apply_raise(dict(base, queries=dict(base["queries"])), "q99_toy", 0.8, bad)
-    # single un-interleaved run
-    bad = {**ev, "ab_runs": ev["ab_runs"][:1]}
-    with pytest.raises(m.RaiseEvidenceError, match="ab_runs"):
-        m.apply_raise(dict(base, queries=dict(base["queries"])), "q99_toy", 0.8, bad)
-    # run missing its cal bracket
-    bad = {**ev, "ab_runs": [{"value_sec": 0.8}, {"value_sec": 0.79}]}
-    with pytest.raises(m.RaiseEvidenceError, match="cal_start_sec"):
-        m.apply_raise(dict(base, queries=dict(base["queries"])), "q99_toy", 0.8, bad)
-    # contended bracket (>1.45x baseline cal 2.0 -> lim 2.9)
-    bad = {
-        **ev,
-        "ab_runs": [
-            {"value_sec": 0.8, "cal_start_sec": 5.0, "cal_end_sec": 2.1},
-            {"value_sec": 0.79, "cal_start_sec": 2.0, "cal_end_sec": 2.1},
-        ],
+    assert bench.counter_regressions(now, base) == {
+        "q02_y": {"baseline": base["q02_y"], "now": {"jobs": 5, "stages": 7}},
+        "d07_z": {"baseline": base["d07_z"], "now": {"jobs": 13, "stages": 22}},
     }
-    with pytest.raises(m.RaiseEvidenceError, match="contended"):
-        m.apply_raise(dict(base, queries=dict(base["queries"])), "q99_toy", 0.8, bad)
-    # raise above its own evidence
-    with pytest.raises(m.RaiseEvidenceError, match="not one of the recorded"):
-        m.apply_raise(dict(base, queries=dict(base["queries"])), "q99_toy", 0.9,
-                      dict(ev, new_value_sec=0.9))
-    # lowering is not a raise
-    with pytest.raises(m.RaiseEvidenceError, match="increase"):
-        m.apply_raise(dict(base, queries=dict(base["queries"])), "q99_toy", 0.4, ev)
-    # adding through the raise path
-    with pytest.raises(m.RaiseEvidenceError, match="add-only"):
-        m.apply_raise(dict(base, queries=dict(base["queries"])), "q97_new", 0.8, ev)
 
 
-def test_merge_cal_ratio_tightens_never_loosens():
-    """MERGE_CAL_RATIO is a one-way knob (the r13 d42/s14 lesson: a
-    legal-under-1.45x add captured contention maxima 2-3.3x the calm
-    readings). Tightening passes through; loosening and nonsense
-    clamp to the committed bar; below 1.0 the symmetric window would
-    be empty, so it clamps up."""
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "scripts"))
-    import merge_new_baseline_entries as m
-
-    assert m.merge_cal_ratio({}) == 1.45
-    assert m.merge_cal_ratio({"MERGE_CAL_RATIO": "1.15"}) == 1.15
-    assert m.merge_cal_ratio({"MERGE_CAL_RATIO": "2.0"}) == 1.45
-    assert m.merge_cal_ratio({"MERGE_CAL_RATIO": "0.5"}) == 1.0
+def test_injected_shuffle_is_flagged(spark, monkeypatch):
+    """Two real rows through bench's counting path: after one gains an
+    extra shuffle, the gate flags that row and only that row."""
+    rows = ["q01_pricing_summary", "q12_rollup"]
+    base = {n: bench.measure(spark, n, SMOKE_SF)[1] for n in rows}
+    query = operators.QUERIES["q12_rollup"]
+    monkeypatch.setitem(
+        operators.QUERIES, "q12_rollup", lambda s, d: query(s, d).repartition(3)
+    )
+    now = {n: bench.measure(spark, n, SMOKE_SF)[1] for n in rows}
+    assert set(bench.counter_regressions(now, base)) == {"q12_rollup"}

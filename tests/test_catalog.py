@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import datetime
+
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -211,6 +214,26 @@ def test_catalog_sql_hybrid_rt_rows_survive_pruning(spark, tmp_path):
     )
     assert [r.flag for r in out.collect()] == ["Z"]
     assert cat.last_prune["li"].skipped  # historical files were pruned
+
+
+@pytest.mark.parametrize("hybrid", [True, False])
+def test_catalog_sql_restores_unpruned_view(spark, tmp_path, hybrid):
+    """The pruned view only lives for the re-plan: after a query that
+    skips files, the table's view reads every row again."""
+    cat = _sorted_table(spark, tmp_path)
+    spark.createDataFrame(
+        [(999999, datetime.datetime(2002, 6, 1), "Z", 1.0)],
+        cat.load("li").schema(),
+    ).write.parquet(cat.rt_dir("li"), mode="overwrite")
+    full = (cat.read_hybrid if hybrid else cat.read)(spark, "li").count()
+    out = cat.sql(
+        spark,
+        "SELECT count(*) AS n FROM li WHERE ship >= timestamp'1997-09-01'",
+        hybrid=hybrid,
+    )
+    assert cat.last_prune["li"].skipped
+    assert out.collect()[0].n < full
+    assert spark.table("li").count() == full
 
 
 def test_hive_ddl_roundtrip(spark, tmp_path):
