@@ -31,8 +31,10 @@ predicate over sorted dims costs one sidecar read, no cluster work.
 from __future__ import annotations
 
 import datetime as _dt
+from bisect import bisect_left, bisect_right
 from dataclasses import dataclass, field
 from enum import Enum
+from functools import cached_property
 from typing import Any
 
 
@@ -273,16 +275,25 @@ class In(RCOperator):
     col: str
     values: tuple[Any, ...]
 
+    @cached_property
+    def _sorted(self) -> list:
+        """The values in order, for a binary search per file instead of
+        a scan. NaN is dropped: it never lies within a file's
+        [min, max]. Values without a total order raise TypeError here
+        or in the search, which prune() reads as SOME."""
+        return sorted(v for v in self.values if v == v)
+
     def rough(self, stats: FileStats) -> RS:
         s = _stats(stats, self.col)
         if s is None:
             return RS.SOME
-        inside = [v for v in self.values if s.min <= v <= s.max]
+        vals = self._sorted
+        inside = vals[bisect_left(vals, s.min) : bisect_right(vals, s.max)]
         if not inside:
             return RS.NONE
-        if s.terms is not None and not any(v in s.terms for v in inside):
+        if s.terms is not None and s.terms.isdisjoint(inside):
             return RS.NONE
-        if s.min == s.max and s.min in self.values and s.null_count == 0:
+        if s.min == s.max and s.min in inside and s.null_count == 0:
             return RS.ALL
         return RS.SOME
 
@@ -299,8 +310,12 @@ class NotIn(RCOperator):
     col: str
     values: tuple[Any, ...]
 
+    @cached_property
+    def _in(self) -> In:
+        return In(self.col, self.values)
+
     def rough(self, stats: FileStats) -> RS:
-        return In(self.col, self.values).rough(stats).negate()
+        return self._in.rough(stats).negate()
 
     def apply_not(self) -> RCOperator:
         return In(self.col, self.values)
@@ -410,7 +425,13 @@ class And(RCOperator):
     def rough(self, stats: FileStats) -> RS:
         out = RS.ALL
         for c in self.children:
-            out = out & c.rough(stats)
+            try:
+                rs = c.rough(stats)
+            except TypeError:
+                # stats and literal types don't compare: this conjunct
+                # can't prune, a sibling still may
+                rs = RS.SOME
+            out = out & rs
             if out is RS.NONE:
                 return RS.NONE  # short-circuit (And.java early-out)
         return out

@@ -155,7 +155,8 @@ class Catalog:
     def __init__(self, root: str) -> None:
         self.root = root
         self.last_prune: dict[str, object] = {}  # table → PruneResult of last sql()
-        self._stats_cache: dict[str, tuple[tuple, dict]] = {}  # name → (key, stats)
+        # name → (index_stamp, table sidecar, snapshot version, live stats)
+        self._stats_cache: dict[str, tuple] = {}
         os.makedirs(os.path.join(root, "_schemas"), exist_ok=True)
 
     def _spec_path(self, name: str) -> str:
@@ -198,9 +199,9 @@ class Catalog:
         if files is not None and not files:
             return spark.createDataFrame([], spec.schema())
         if files is None and predicate is not None:
-            # prune() reconciles the sidecar against the live manifest
-            # set (delta appends may leave it lagging), so the result
-            # is version-consistent for snapshot-managed tables too
+            # prune() checks exactly the live manifest set (delta
+            # appends may leave the sidecar lagging), so the result is
+            # version-consistent for snapshot-managed tables too
             result = self.prune(name, predicate)
             if result is not None:
                 if not result.scan:
@@ -254,40 +255,45 @@ class Catalog:
         without this, `WHERE c = <default>` could skip files whose
         null rows would have matched.
 
-        Snapshot reconciliation (round 5): delta appends defer the
-        O(files) sidecar rewrite to the periodic full-manifest
-        materialization, so the sidecar may legitimately LAG the
-        manifest. The prune result is therefore reconciled against the
-        live file set (snapshots.reconcile_prune, shared with
-        segments.read_pruned). Freshness is a pruning-quality knob,
-        never a correctness input."""
+        Snapshot-managed tables: delta appends defer the O(files)
+        sidecar rewrite to the periodic full-manifest materialization,
+        so the sidecar may LAG the manifest. The stats come from
+        snapshots.live_stats (shared with segments.read_pruned and the
+        copy-on-write rewrites): exactly the live files, each newer
+        file from its batch sidecar, and one no sidecar covers is
+        scanned. Freshness is a pruning-quality knob, never a
+        correctness input."""
         from indexr_spark.plans.rough_check import ColStats, prune as rc_prune
         from indexr_spark.sources.segments import SIDECAR_NAME, index_stamp, load_sidecar
-        from indexr_spark.sources.snapshots import reconcile_prune
+        from indexr_spark.sources.snapshots import latest_version, live_stats
 
         path = self.table_dir(name)
         if not os.path.exists(os.path.join(path, SIDECAR_NAME)):
             return None
-        # Cache keyed on the (mtime_ns, size) of every file
-        # load_sidecar merges: repeated queries against an unchanged
-        # table skip re-parsing the sidecar/cmap/term files (the
-        # reference holds its indexes in IndexMemCache for the same
-        # reason). Invalidation = any commit rewrites the sidecar, any
-        # index build rewrites the cmap and postings; nanosecond mtime
-        # + byte size guards the same-coarse-second rewrite a bare
-        # mtime would miss.
-        key = index_stamp(path)
+        # Two-level cache. The parsed table sidecar is keyed on the
+        # (mtime_ns, size) of every file load_sidecar merges: repeated
+        # queries against an unchanged table skip re-parsing the
+        # sidecar/cmap/term files (the reference holds its indexes in
+        # IndexMemCache for the same reason). Invalidation = any full
+        # commit rewrites the sidecar, any index build rewrites the
+        # cmap and postings; nanosecond mtime + byte size guards the
+        # same-coarse-second rewrite a bare mtime would miss. The live
+        # stats on top of it are keyed on the snapshot version too, so
+        # a delta commit re-reads only the manifest and the new
+        # batches' sidecars.
+        stamp, version = index_stamp(path), latest_version(path)
         cached = self._stats_cache.get(name)
-        if cached is not None and cached[0] == key:
-            stats = cached[1]
-        else:
-            try:
-                stats = load_sidecar(path)
-            except Exception:
-                # corrupt/truncated sidecar (e.g. a torn write): never
-                # let pruning break a query — degrade to full scan
-                return None
-            self._stats_cache[name] = (key, stats)
+        try:
+            if cached is None or cached[0] != stamp:
+                cached = (stamp, load_sidecar(path), None, None)
+            if cached[2] != version:
+                cached = (*cached[:2], version, live_stats(path, table=cached[1]))
+        except Exception:
+            # corrupt/truncated sidecar (e.g. a torn write): never
+            # let pruning break a query — degrade to full scan
+            return None
+        self._stats_cache[name] = cached
+        stats = cached[3]
         stats = {f: dict(cols) for f, cols in stats.items()}  # defaults edit a copy
         spec = self.load(name)
         defaulted = [c for c in spec.columns if c.default is not None]
@@ -301,7 +307,7 @@ class Catalog:
                         )
                     except TypeError:
                         fstats.pop(c.name)  # incomparable default → no stats
-        return reconcile_prune(path, rc_prune(stats, predicate))
+        return rc_prune(stats, predicate)
 
     def build_indexes(self, spark: SparkSession, name: str) -> dict[str, int]:
         """Build the optional string-column indexes for every

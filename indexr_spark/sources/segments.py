@@ -449,11 +449,12 @@ _PARSERS = {
 }
 
 
-def load_sidecar(path: str) -> dict[str, FileStats]:
-    """Sidecar → {absolute file path: {col: ColStats}}; the optional
-    cmap char-presence summary and term-index distinct-value sets are
-    merged in when present (files or columns they don't cover keep
-    chars/terms=None → must-scan, never wrong)."""
+def load_sidecar(path: str) -> tuple[dict[str, FileStats], frozenset[str]]:
+    """Sidecar → ({absolute file path: {col: ColStats}}, the zero-row
+    files among them); the optional cmap char-presence summary and
+    term-index distinct-value sets are merged in when present (files
+    or columns they don't cover keep chars/terms=None → must-scan,
+    never wrong)."""
     with open(os.path.join(path, SIDECAR_NAME)) as f:
         raw = json.load(f)
     cmap: dict[str, dict[str, str]] = {}
@@ -480,7 +481,10 @@ def load_sidecar(path: str) -> dict[str, FileStats]:
                 terms=fterms.get(col),
             )
         out[fpath] = stats
-    return out
+    empty = frozenset(
+        os.path.join(path, e["path"]) for e in raw["files"] if e.get("num_rows") == 0
+    )
+    return out, empty
 
 
 def _postings_files(path: str) -> list[tuple[str, str]]:
@@ -543,15 +547,16 @@ def read_pruned(
     Mirrors the reference's cascade (IndexRRecordReader.java:119-154):
     segment-level rough check drops files that can't match (NONE);
     surviving files are scanned with the exact predicate re-applied —
-    row-group/page skipping inside the scan is Parquet's job. On a
-    snapshot-managed table the decision is reconciled against the
-    live manifest (snapshots.reconcile_prune), so rows appended since
-    the last sidecar refresh are still scanned. Returns the DataFrame
-    plus the prune decision for observability.
+    row-group/page skipping inside the scan is Parquet's job. The
+    stats are snapshots.live_stats: on a snapshot-managed table,
+    exactly the live manifest's files, with a file appended since the
+    last table-sidecar refresh checked against its batch sidecar (or
+    scanned when none covers it). Returns the DataFrame plus the prune
+    decision for observability.
     """
-    from indexr_spark.sources.snapshots import reconcile_prune
+    from indexr_spark.sources.snapshots import live_stats
 
-    result = reconcile_prune(path, prune(load_sidecar(path), predicate.optimize()))
+    result = prune(live_stats(path), predicate.optimize())
     reader = getattr(spark.read, file_format)
     if not result.scan:
         return spark.createDataFrame([], reader(path).schema), result

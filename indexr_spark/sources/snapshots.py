@@ -80,17 +80,18 @@ horizon; time travel below the horizon still fails loudly.
 The pruning sidecar (the OTHER O(files)-per-commit term — measured
 3.3 s/commit at 100k files vs 0.09 s for the manifest) refreshes only
 on FULL-manifest commits, i.e. 1/FULL_REWRITE_EVERY of appends.
-Correctness never depends on its freshness: Catalog.prune reconciles
-the sidecar against the live manifest set — live files it doesn't
-cover yet are scanned unpruned (SOME), dead entries it still carries
-are dropped — so a lagging sidecar only costs pruning coverage of the
-newest files. scripts/bench_snapshots.py measures both layers at 100k
-files.
+Correctness never depends on its freshness: live_stats, the one stats
+loader for reads and copy-on-write rewrites, reads it for the live
+manifest set only — a live file it doesn't cover yet takes its stats
+from its batch dir's sidecar (written with every append), a file no
+sidecar covers is scanned unpruned (SOME), and dead entries are
+dropped — so a lagging sidecar costs one small read per new batch dir,
+never a wrong answer. scripts/bench_snapshots.py measures both layers
+at 100k files.
 """
 
 from __future__ import annotations
 
-import bisect
 import contextlib
 import json
 import logging
@@ -101,7 +102,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
-from indexr_spark.plans.rough_check import PruneResult
+from indexr_spark.plans.rough_check import And, Between, FileStats, In, prune
 
 MANIFEST_DIR = "_manifests"
 
@@ -239,24 +240,50 @@ def files_of(path: str, version: int) -> list[str]:
     raise last_exc
 
 
-def reconcile_prune(path: str, result: PruneResult) -> PruneResult:
-    """Restrict a prune decision made on the table-root sidecar to the
-    latest version's live file set. The sidecar is refreshed on
-    full-manifest commits only, so after a delta commit it can miss
-    new files and list retired ones: live files it does not cover are
-    scanned unpruned (safe SOME — the rough-check contract for missing
-    stats) and entries for files no longer live are dropped. A table
-    without snapshots is returned unchanged."""
-    v = latest_version(path)
-    if not v:
-        return result
-    live = {os.path.join(path, f) for f in files_of(path, v)}
-    covered = set(result.scan) | set(result.skipped)
-    return PruneResult(
-        scan=sorted((set(result.scan) & live) | (live - covered)),
-        skipped=sorted(set(result.skipped) & live),
-        all_match=sorted(set(result.all_match) & live),
-    )
+def live_stats(
+    path: str,
+    files: list[str] | None = None,
+    table: tuple[dict[str, FileStats], frozenset[str]] | None = None,
+) -> dict[str, FileStats]:
+    """{absolute file path: FileStats} for exactly the live files — the
+    one input of every file-skipping decision (rough_check.prune), for
+    reads and copy-on-write rewrites alike. `files` are table-relative
+    live files; default: the latest version's, or every file the
+    sidecar lists on a table without snapshots. `table` is the table
+    sidecar's load_sidecar output, for a caller that caches it.
+
+    A live file's stats come from the table sidecar when it covers the
+    file, else from its batch dir's own sidecar (write_segments writes
+    one per append batch), else they are empty — every predicate is
+    SOME and the file is scanned. The table sidecar refreshes only on
+    full-manifest commits (1 in FULL_REWRITE_EVERY appends), so the
+    batch fallback is what keeps a streaming table's newest batches
+    prunable; entries for files no longer live are never returned. A
+    zero-row file is left out: it holds no row to match."""
+    from indexr_spark.sources.segments import load_sidecar
+
+    if files is None:
+        v = latest_version(path)
+        if not v:
+            stats, empty = table or load_sidecar(path)
+            return {f: s for f, s in stats.items() if f not in empty}
+        files = files_of(path, v)
+    loaded = {} if table is None else {path: table}
+    out: dict[str, FileStats] = {}
+    for rel in files:
+        f = os.path.join(path, rel)
+        for d in (path, os.path.dirname(f)):
+            if d not in loaded:
+                try:
+                    loaded[d] = load_sidecar(d)
+                except (OSError, ValueError, KeyError):
+                    loaded[d] = ({}, frozenset())  # missing or damaged: covers nothing
+            stats, empty = loaded[d]
+            if f in stats:
+                break
+        if f not in empty:
+            out[f] = stats.get(f, {})
+    return out
 
 
 class ConcurrentSnapshotConflict(RuntimeError):
@@ -378,11 +405,11 @@ def _commit(
         # Sidecar refresh is amortized to FULL-manifest commits (the
         # measured remaining O(files) term: 3.3 s/commit at 100k files
         # vs 0.09 s for the delta manifest itself — bench_snapshots).
-        # Safe to lag: reconcile_prune reconciles the sidecar against
-        # the live manifest set, so not-yet-covered files are scanned
-        # unpruned (SOME) and dead entries are dropped — a stale
-        # sidecar costs pruning coverage of the newest files, never
-        # correctness.
+        # Safe to lag: live_stats reads the sidecar for the live
+        # manifest set only, takes a file it does not cover yet from
+        # that file's batch sidecar (else scans it: SOME), and drops
+        # dead entries — a stale sidecar costs one small read per new
+        # batch dir, never correctness.
         if "files" in manifest:
             write_sidecar(path, files_rel=manifest["files"])
         tmp = os.path.join(
@@ -704,96 +731,6 @@ def _update_key_values(
     return out
 
 
-def _overlapping_files(
-    path: str, live: list[str], ranges: dict, values: dict | None = None
-) -> list[str]:
-    """The live files whose sidecar key-column stats MAY contain a key
-    in `ranges` — the copy-on-write rewrite set. Sound, not tight: a
-    file escapes the rewrite only when some key column's [min,max] is
-    provably disjoint from the updates' [min,max]; a file the
-    (possibly delta-lagging) sidecar doesn't cover, a column it has no
-    stats for, an unknown update range, or an uncomparable type pair
-    all mean "may match" and the file is rewritten. Null keys never
-    join-match, so a disjoint-range file holding nulls is still safely
-    skipped — as is a zero-row file (no stats to compare, but nothing
-    to match either).
-
-    `values` (from _update_key_values) refines the check per column:
-    a file is also disjoint when NO update value for that column lies
-    inside the file's [min,max] (binary search over the sorted list) —
-    the refinement that keeps hash-keyed deletes scoped to the files
-    actually holding a deleted key. Equality on ALL key columns is
-    what a match needs, so disjointness on ANY column suffices, same
-    as the range rule.
-
-    Files the TABLE sidecar doesn't cover fall back to their batch
-    dir's own sidecar (write_segments writes one per append batch, so
-    it always exists for managed files): the table sidecar refreshes
-    only on full-manifest commits (1 in FULL_REWRITE_EVERY appends —
-    the round-5 commit-cost design), which would otherwise leave a
-    streaming table's newest ~31 batches permanently "may match" and
-    was measured degrading a 5-key decontamination to a 294-of-300
-    file rewrite. Reading one tiny JSON per uncovered batch dir keeps
-    the scoping tight at any sidecar lag."""
-    from indexr_spark.sources.segments import SIDECAR_NAME, load_sidecar
-
-    try:
-        stats = load_sidecar(path)
-        with open(os.path.join(path, SIDECAR_NAME)) as f:
-            num_rows = {e["path"]: e.get("num_rows") for e in json.load(f)["files"]}
-    except (OSError, ValueError, KeyError):
-        stats, num_rows = {}, {}  # lag-only: batch sidecars still scope
-
-    batch_cache: dict[str, tuple[dict, dict]] = {}
-
-    def _stats_for(rel: str):
-        """(ColStats-by-col or None, num_rows or None) for a live file,
-        preferring the table sidecar, falling back to its batch dir's."""
-        ab = os.path.join(path, rel)
-        st = stats.get(ab)
-        if st is not None or rel in num_rows:
-            return st, num_rows.get(rel)
-        bdir = os.path.dirname(ab)
-        if bdir not in batch_cache:
-            try:
-                bstats = load_sidecar(bdir)
-                with open(os.path.join(bdir, SIDECAR_NAME)) as f:
-                    bnum = {
-                        os.path.join(bdir, e["path"]): e.get("num_rows")
-                        for e in json.load(f)["files"]
-                    }
-                batch_cache[bdir] = (bstats, bnum)
-            except (OSError, ValueError, KeyError):
-                batch_cache[bdir] = ({}, {})
-        bstats, bnum = batch_cache[bdir]
-        return bstats.get(ab), bnum.get(ab)
-
-    touched = []
-    for rel in live:
-        st, nr = _stats_for(rel)
-        if nr == 0:
-            continue  # empty file: provably no matching row
-        disjoint = False
-        if st is not None:
-            for k, (mn, mx) in ranges.items():
-                cs = st.get(k)
-                if cs is None or mn is None:
-                    continue  # unknown stats/range: can't prove disjoint
-                with contextlib.suppress(TypeError):
-                    if cs.max < mn or cs.min > mx:
-                        disjoint = True
-                        break
-                    vals = (values or {}).get(k)
-                    if vals is not None:
-                        i = bisect.bisect_left(vals, cs.min)
-                        if i >= len(vals) or vals[i] > cs.max:
-                            disjoint = True  # no key value in range
-                            break
-        if not disjoint:
-            touched.append(rel)
-    return touched
-
-
 _PROBE_MIN_FILES = 8
 
 
@@ -805,12 +742,14 @@ def _scoped_touched_files(
     key_cols: list[str],
     ranges: dict,
 ) -> list[str]:
-    """The full copy-on-write scoping cascade, cheapest test first:
-    (1) range-only sidecar scoping — pure driver-side metadata, no
-    jobs; (2) per-file membership of the collected distinct key sets
-    (_update_key_values — one distinct+limit job per key column) over
-    the ALREADY-NARROWED candidates, then the exact touched-file probe
-    job (_probe_touched_files).
+    """The full copy-on-write scoping cascade, cheapest test first, each
+    rough step the same rough_check.prune reads use, over live_stats:
+    (1) And(Between(k, min, max)) over the updates' key ranges — pure
+    driver-side metadata, no jobs; (2) And(In(k, values)) over the
+    collected distinct key sets (_update_key_values — one
+    distinct+limit job per key column) on the ALREADY-NARROWED
+    candidates, then the exact touched-file probe job
+    (_probe_touched_files).
 
     Stage 2 is skipped when range scoping was SELECTIVE — candidates
     below _PROBE_MIN_FILES *and* below the live count — the
@@ -825,11 +764,24 @@ def _scoped_touched_files(
     next to a file rewrite. Value scoping over the range-narrowed
     subset equals scoping over `live`: the value test only ever
     removes files the range test kept."""
-    touched = _overlapping_files(path, live, ranges)
+    stats = {os.path.relpath(f, path): s for f, s in live_stats(path, live).items()}
+
+    def may_hold(files: list[str], conjuncts: list) -> list[str]:
+        """The files whose stats cannot rule out a row matching every
+        conjunct; zero-row files are absent from `stats`, so never."""
+        held = {f: stats[f] for f in files if f in stats}
+        return prune(held, And(tuple(conjuncts))).scan
+
+    # a key column whose update range is unknown (all-null keys) adds
+    # no conjunct, and then its value list is empty too
+    touched = may_hold(
+        live, [Between(k, mn, mx) for k, (mn, mx) in ranges.items() if mn is not None]
+    )
     if len(touched) < _PROBE_MIN_FILES and len(touched) < len(live):
         return touched
-    touched = _overlapping_files(
-        path, touched, ranges, _update_key_values(updates, key_cols)
+    values = _update_key_values(updates, key_cols)
+    touched = may_hold(
+        touched, [In(k, tuple(v)) for k, v in values.items() if v]
     )
     return _probe_touched_files(spark, path, touched, updates, key_cols)
 
@@ -986,7 +938,7 @@ def delete_matching(
     live = files_of(path, base)
     ranges = _update_key_ranges(keys, key_cols)
     # an all-null (or empty) delete set can never equality-match a row
-    # — _overlapping_files reads an unknown range as "may match" (right
+    # — write scoping reads an unknown range as "may match" (right
     # for upserts, which still insert), but a delete of nothing is a
     # no-op, not a full-table rewrite
     if any(mn is None for mn, _ in ranges.values()):
@@ -1000,7 +952,7 @@ def delete_matching(
         return base
     untouched = sorted(set(live) - set(touched))
     target = spark.read.parquet(*_scan_paths(path, touched))
-    # plain equality, NOT eqNullSafe: _overlapping_files' file-skip
+    # plain equality, NOT eqNullSafe: the rough check's file-skip
     # proof relies on null keys never join-matching (a skipped
     # disjoint-range file may still hold null-keyed rows)
     cond = [target[k] == keys[k] for k in key_cols]

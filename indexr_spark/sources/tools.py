@@ -79,11 +79,13 @@ def csv_export(
 def describe_segments(spark: SparkSession, table_path: str) -> DataFrame:
     """Segment inspection (the reference ships a segment-inspect tool
     on its embedded engine): one row per (file, column) with rows and
-    min/max/null stats, straight from the sidecar — no data read."""
-    from indexr_spark.sources.segments import load_sidecar
+    min/max/null stats, straight from the sidecars — no data read.
+    Lists the live files (snapshots.live_stats), so files appended
+    since the last table-sidecar refresh appear too."""
+    from indexr_spark.sources.snapshots import live_stats
 
     rows = []
-    for fpath, stats in load_sidecar(table_path).items():
+    for fpath, stats in live_stats(table_path).items():
         for col, s in stats.items():
             rows.append((os.path.basename(fpath), col, str(s.min), str(s.max), s.null_count))
     return spark.createDataFrame(

@@ -368,10 +368,14 @@ def test_catalog_prune_safe_with_lagging_sidecar(spark, tmp_path):
     """Delta appends defer the O(files) sidecar rewrite to the
     periodic full-manifest materialization (round 5), so a pruned read
     can run against a sidecar that does NOT cover the newest files.
-    Those files must be scanned unpruned (safe SOME) — never silently
-    dropped — while pruning still applies to the covered files."""
+    Such a file is checked against its batch dir's sidecar — skipped
+    when that proves it disjoint, kept when it may match — and scanned
+    unpruned (safe SOME) when no sidecar covers it: never silently
+    dropped."""
     import json as _json
     import os
+
+    import pyarrow.parquet as pq
 
     from indexr_spark.sources import snapshots as S
     from indexr_spark.sources.segments import SIDECAR_NAME
@@ -401,17 +405,72 @@ def test_catalog_prune_safe_with_lagging_sidecar(spark, tmp_path):
     out = cat.sql(spark, "SELECT k, v FROM t WHERE k >= 2 ORDER BY k")
     assert [tuple(r) for r in out.collect()] == [(2, 2.0), (3, 3.0), (100, 100.0)]
 
-    # pruning still bites on the covered files AND the uncovered file
-    # stays in the scan list (reconciliation, not a full-scan
-    # fallback). The direct predicate-read path is the one that prunes
-    # snapshot tables (sql()'s plan walker skips multi-path scans).
+    # the appended file's batch sidecar proves it disjoint from k = 1
+    # and overlapping k = 100; the table sidecar still prunes its own
     from indexr_spark.plans.rough_check import Equal
 
+    # the appended file holding the row (Spark may add a zero-row one)
+    (new_file,) = [
+        os.path.join(tdir, f)
+        for f in set(S.files_of(tdir, 2)) - set(S.files_of(tdir, 1))
+        if pq.read_metadata(os.path.join(tdir, f)).num_rows
+    ]
     res = cat.prune("t", Equal("k", 1))
     assert res.skipped, "covered non-matching file should still prune"
-    new_file = (set(S.files_of(tdir, 2)) - set(S.files_of(tdir, 1))).pop()
-    assert os.path.join(tdir, new_file) in res.scan
-    got = {tuple(r) for r in cat.read(spark, "t", predicate=Equal("k", 1)).collect()}
+    assert new_file in res.skipped and new_file not in res.scan
+    res = cat.prune("t", Equal("k", 100))
+    assert res.scan == [new_file]
+    got = {tuple(r) for r in cat.read(spark, "t", predicate=Equal("k", 100)).collect()}
     # the exact filter is the CALLER's job on read(); the pruned scan
-    # must contain k=1 and may not have dropped the appended row's file
+    # must still hold the appended row
+    assert (100, 100.0) in got
+
+    # no sidecar covers the appended file: it is scanned (safe SOME).
+    # A fresh catalog, since the stats cache keys on the table's own
+    # index files and version, not on batch sidecars.
+    os.remove(os.path.join(os.path.dirname(new_file), SIDECAR_NAME))
+    cat = Catalog(str(tmp_path))
+    assert new_file in cat.prune("t", Equal("k", 1)).scan
+    got = {tuple(r) for r in cat.read(spark, "t", predicate=Equal("k", 1)).collect()}
     assert (1, 1.0) in got and (100, 100.0) in got
+    out = cat.sql(spark, "SELECT k, v FROM t WHERE k >= 2 ORDER BY k")
+    assert [tuple(r) for r in out.collect()] == [(2, 2.0), (3, 3.0), (100, 100.0)]
+
+
+def test_catalog_prune_cache_survives_delta_append(spark, tmp_path, monkeypatch):
+    """A delta append leaves the table sidecar as it was, so
+    Catalog.prune keeps its parse cached and reads only the new
+    batch's sidecar; the appended file still enters the decision, and
+    a second prune at the same version reads no sidecar at all."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from indexr_spark.plans.rough_check import Equal
+    from indexr_spark.sources import segments
+    from indexr_spark.sources import snapshots as S
+
+    cat = Catalog(str(tmp_path))
+    spec = TableSpec(name="t", columns=[ColumnSpec("k", "int")], sort_by=["k"])
+    cat.save(spec)
+    tdir = cat.table_dir("t")
+    write_segments(
+        spark.createDataFrame([(1,), (2,), (3,)], spec.schema()),
+        tdir, sort_by=["k"], num_segments=2,
+    )
+    S.ensure_snapshot(tdir)
+    assert not cat.prune("t", Equal("k", 100)).scan  # warms the cache
+    S.append_snapshot(spark.createDataFrame([(100,)], spec.schema()), tdir, sort_by=["k"])
+    (new_file,) = [
+        os.path.join(tdir, f)
+        for f in set(S.files_of(tdir, 2)) - set(S.files_of(tdir, 1))
+        if pq.read_metadata(os.path.join(tdir, f)).num_rows
+    ]
+
+    real, loads = segments.load_sidecar, []
+    monkeypatch.setattr(segments, "load_sidecar", lambda d: loads.append(d) or real(d))
+    assert cat.prune("t", Equal("k", 100)).scan == [new_file]
+    assert loads == [os.path.dirname(new_file)]
+    loads.clear()
+    assert new_file in cat.prune("t", Equal("k", 1)).skipped
+    assert loads == []

@@ -13,7 +13,9 @@
 from __future__ import annotations
 
 import datetime as dt
+import os
 
+import pyarrow.parquet as pq
 import pytest
 
 from pyspark.sql import functions as F
@@ -31,7 +33,7 @@ def test_orc_write_prune_roundtrip(spark, tmp_path):
     write_segments(
         df, out, sort_by=["o_orderdate"], num_segments=4, file_format="orc"
     )
-    stats = load_sidecar(out)
+    stats = load_sidecar(out)[0]
     assert len(stats) == 4
     pred = Between(
         "o_orderdate", dt.datetime(1996, 1, 1), dt.datetime(1996, 12, 31)
@@ -113,7 +115,7 @@ def test_alltypes_boundary_roundtrip(spark, tmp_path):
     )
     assert n_groups > 2, "fixture must span multiple row groups"
 
-    stats = load_sidecar(out)
+    stats = load_sidecar(out)[0]
     assert any(s["c1"].max == 9223372036854775807 for s in stats.values())
     # pruning on extreme values stays sound
     pruned, decision = read_pruned(spark, out, Equal("c1", 9223372036854775807))
@@ -131,6 +133,31 @@ def test_describe_segments(spark, tmp_path):
     rows = {r.column: r for r in d.collect()}
     assert rows["r_regionkey"].null_count == 0
     assert rows["r_name"].min == "AFRICA"
+
+
+def test_describe_segments_lists_delta_appended_files(spark, tmp_path):
+    """After a delta append the table sidecar lags the manifest; the
+    inspection still lists every live file, the appended one with its
+    batch sidecar's stats."""
+    from indexr_spark.sources import snapshots as S
+
+    out = str(tmp_path / "desc")
+    write_segments(
+        spark.createDataFrame([(1,), (2,), (3,)], "k int"), out, sort_by=["k"],
+        num_segments=2,
+    )
+    S.ensure_snapshot(out)
+    S.append_snapshot(spark.createDataFrame([(100,)], "k int"), out)
+    # a zero-row file, which Spark may write for an empty partition,
+    # has no stats to list
+    live = [
+        f for f in S.files_of(out, S.latest_version(out))
+        if pq.read_metadata(os.path.join(out, f)).num_rows
+    ]
+    assert len(live) == 3
+    rows = describe_segments(spark, out).collect()
+    assert {r.file for r in rows} == {os.path.basename(f) for f in live}
+    assert ("100", "100") in {(r.min, r.max) for r in rows}
 
 
 def test_salted_agg_matches_plain_groupby(spark):

@@ -94,11 +94,11 @@ def test_compact_appends_through_manifest_on_adopted_table(spark, tmp_path):
     assert out.collect()[0].n == 3
     # the sidecar may LAG on delta appends (round 5: its O(files)
     # refresh is amortized to full-manifest materializations, and
-    # Catalog.prune reconciles) — it must describe a SUBSET of the
-    # live set (never a superseded file), and the pruned read above
-    # already proved no row is lost to the lag
+    # Catalog.prune reads it through live_stats) — it must describe a
+    # SUBSET of the live set (never a superseded file), and the pruned
+    # read above already proved no row is lost to the lag
     live = {f.removeprefix("file://") for f in cat.read(spark, "t").inputFiles()}
-    covered = set(load_sidecar(cat.table_dir("t")))
+    covered = set(load_sidecar(cat.table_dir("t"))[0])
     assert covered <= live
     # specifically: it still describes v2 (the last full commit)
     from indexr_spark.sources.snapshots import files_of

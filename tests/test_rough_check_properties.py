@@ -58,10 +58,12 @@ def leaf_ops(val_strategy, col: str):
             val_strategy,
             val_strategy,
         ),
+        # 0-64 unsorted values with duplicates: In's binary search
+        # over its sorted copy must agree with row-level truth
         st.builds(
             In,
             st.just(col),
-            st.tuples(val_strategy, val_strategy, val_strategy),
+            st.lists(val_strategy, max_size=64).map(tuple),
         ),
     )
 
@@ -111,11 +113,14 @@ def evaluate(op: RCOperator, row: dict) -> bool:
     raise TypeError(op)
 
 
-def check_soundness(rows: list, op: RCOperator) -> None:
+def check_soundness(rows: list, op: RCOperator, with_terms: bool = False) -> None:
+    """`with_terms` adds the file's exact distinct-value set, as the
+    term index supplies it, so the =/IN term paths are checked too."""
     chars = (
         frozenset("".join(rows)) if all(isinstance(r, str) for r in rows) else None
     )
-    stats = {"a": ColStats(min(rows), max(rows), chars=chars)}
+    terms = frozenset(rows) if with_terms else None
+    stats = {"a": ColStats(min(rows), max(rows), chars=chars, terms=terms)}
     truth = [evaluate(op, {"a": v}) for v in rows]
     for tree in (op, op.optimize()):
         rough = tree.rough(stats)
@@ -126,9 +131,13 @@ def check_soundness(rows: list, op: RCOperator) -> None:
 
 
 @settings(max_examples=2000, deadline=None)
-@given(rows=st.lists(values, min_size=1, max_size=8), op=predicate_trees(values, "a"))
-def test_no_false_skips_numeric(rows, op):
-    check_soundness(rows, op)
+@given(
+    rows=st.lists(values, min_size=1, max_size=8),
+    op=predicate_trees(values, "a"),
+    with_terms=st.booleans(),
+)
+def test_no_false_skips_numeric(rows, op, with_terms):
+    check_soundness(rows, op, with_terms)
 
 
 @settings(max_examples=1000, deadline=None)
@@ -141,9 +150,10 @@ def test_no_false_skips_numeric(rows, op):
         st.builds(NotOp, st.builds(LikePrefix, st.just("a"), strings)),
         st.builds(NotOp, st.builds(LikeContains, st.just("a"), strings)),
     ),
+    with_terms=st.booleans(),
 )
-def test_no_false_skips_strings(rows, op):
-    check_soundness(rows, op)
+def test_no_false_skips_strings(rows, op, with_terms):
+    check_soundness(rows, op, with_terms)
 
 
 @settings(max_examples=1000, deadline=None)
@@ -154,3 +164,25 @@ def test_optimize_preserves_row_semantics(rows, op):
     opt = op.optimize()
     for v in rows:
         assert evaluate(op, {"a": v}) == evaluate(opt, {"a": v}), (op, opt, v)
+
+
+def test_incomparable_conjunct_leaves_siblings_pruning():
+    """A conjunct whose literal and stats types don't compare (a binary
+    key against str stats, an IN list of mixed types) is SOME for the
+    file; a sibling conjunct can still prove the file empty, and
+    alone it is scanned, never dropped."""
+    from indexr_spark.plans.rough_check import prune
+
+    stats = {
+        "f": {
+            "b": ColStats("x0", "x9"),
+            "k": ColStats(0, 9),
+        }
+    }
+    for odd in (Between("b", b"x3", b"x3"), In("b", (1, "x3")), In("k", (3, "3"))):
+        assert prune(stats, odd).scan == ["f"]
+        assert prune(stats, And((odd, Equal("k", 50)))).skipped == ["f"]
+        assert prune(stats, And((odd, Equal("k", 3)))).scan == ["f"]
+    # NaN never lies within [min, max]; the other values still decide
+    assert In("k", (float("nan"), 3)).rough(stats["f"]) is RS.SOME
+    assert In("k", (float("nan"), 50)).rough(stats["f"]) is RS.NONE

@@ -53,7 +53,7 @@ def lineitem_segments(spark, tmp_path_factory):
 
 
 def test_sidecar_written_and_typed(lineitem_segments):
-    stats = load_sidecar(lineitem_segments)
+    stats = load_sidecar(lineitem_segments)[0]
     assert len(stats) == 8
     for fstats in stats.values():
         s = fstats["l_shipdate"]
@@ -66,7 +66,7 @@ def test_sorted_segments_are_disjoint(lineitem_segments):
     """Range partitioning on the sort dim must produce (nearly)
     non-overlapping per-file ranges — that's what makes min/max
     skipping effective (SortedSegmentGenerator's whole point)."""
-    stats = load_sidecar(lineitem_segments)
+    stats = load_sidecar(lineitem_segments)[0]
     ranges = sorted((s["l_shipdate"].min, s["l_shipdate"].max) for s in stats.values())
     for (lo1, hi1), (lo2, _hi2) in zip(ranges, ranges[1:]):
         assert hi1 <= lo2, "segment shipdate ranges overlap"
@@ -101,7 +101,7 @@ def test_prune_all_shortcircuit(lineitem_segments):
     """A predicate satisfied by every row of a file must mark it ALL —
     the reference's skip-the-row-bitmap fast path
     (IndexRRecordReader.java:129-154)."""
-    stats = load_sidecar(lineitem_segments)
+    stats = load_sidecar(lineitem_segments)[0]
     result = prune(stats, Greater("l_quantity", 0.0))
     assert len(result.all_match) == len(result.scan) == len(stats)
 
@@ -284,7 +284,7 @@ def test_cmap_contains_pruning(spark, tmp_path):
     write_segments(df, out, sort_by=["s"], num_segments=2)
     build_string_indexes(spark, out, ["s"])
 
-    stats = load_sidecar(out)
+    stats = load_sidecar(out)[0]
     assert all(fs["s"].chars for fs in stats.values())
 
     # 'z' appears only in the second file
@@ -345,10 +345,10 @@ def test_term_index_prunes_through_default_path(spark, tmp_path):
     path = cat.table_dir("t")
     write_segments(f1, path, num_segments=1)
     write_segments(f2, path, num_segments=1, mode="append")
-    assert len(load_sidecar(path)) == 2
+    assert len(load_sidecar(path)[0]) == 2
     cat.build_indexes(spark, "t")
 
-    stats = load_sidecar(path)
+    stats = load_sidecar(path)[0]
     assert all(fs["s"].terms for fs in stats.values())
 
     _, res = read_pruned(spark, path, Equal("s", "mango"))
@@ -379,7 +379,7 @@ def test_read_pruned_scans_rows_appended_after_sidecar(spark, tmp_path):
     write_segments(base, path, sort_by=["k"], num_segments=2)
     ensure_snapshot(path)
     append_snapshot(spark.createDataFrame([(100, 1.0)], "k int, v double"), path)
-    sidecar = load_sidecar(path)
+    sidecar = load_sidecar(path)[0]
     assert len(sidecar) == 2  # the append did not refresh it
 
     want = read_snapshot(spark, path).filter(F.col("k") == 100)
@@ -388,3 +388,42 @@ def test_read_pruned_scans_rows_appended_after_sidecar(spark, tmp_path):
     # both sidecar files are still skipped; only the appended files are read
     assert sorted(res.skipped) == sorted(sidecar)
     assert res.scan and not set(res.scan) & set(sidecar)
+
+
+def test_read_pruned_checks_delta_appends_against_batch_sidecars(spark, tmp_path):
+    """On a snapshot table whose table sidecar lags a delta append,
+    read_pruned checks the appended file against its batch sidecar:
+    skipped when disjoint, kept when it may match, scanned when no
+    sidecar covers it — and every answer equals the unpruned scan."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from indexr_spark.sources import snapshots as S
+    from indexr_spark.sources.segments import SIDECAR_NAME
+
+    path = str(tmp_path / "t")
+    write_segments(
+        spark.createDataFrame([(1, 1.0), (2, 2.0), (3, 3.0)], "k int, v double"),
+        path, sort_by=["k"], num_segments=2,
+    )
+    S.ensure_snapshot(path)
+    S.append_snapshot(spark.createDataFrame([(100, 100.0)], "k int, v double"), path)
+    # the appended file holding the row (Spark may add a zero-row one)
+    (new_file,) = [
+        os.path.join(path, f)
+        for f in set(S.files_of(path, 2)) - set(S.files_of(path, 1))
+        if pq.read_metadata(os.path.join(path, f)).num_rows
+    ]
+
+    def check(pred):
+        df, res = read_pruned(spark, path, pred)
+        want = S.read_snapshot(spark, path).filter(pred.to_spark_sql())
+        assert sorted(df.collect()) == sorted(want.collect()), pred
+        return res
+
+    assert new_file in check(Equal("k", 1)).skipped
+    assert check(Equal("k", 100)).scan == [new_file]
+    os.remove(os.path.join(os.path.dirname(new_file), SIDECAR_NAME))
+    assert new_file in check(Equal("k", 1)).scan
+    assert new_file in check(Equal("k", 100)).scan

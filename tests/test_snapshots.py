@@ -645,7 +645,7 @@ def test_upsert_scoped_rewrite(spark, tmp_path):
     # only the file(s) covering the 1000-range were rewritten
     from indexr_spark.sources.segments import load_sidecar
 
-    stats = load_sidecar(path)
+    stats = load_sidecar(path)[0]
     for rel in replaced:
         st = stats.get(os.path.join(path, rel))
         if st is not None and "k" in st:
@@ -1138,3 +1138,81 @@ def test_small_range_scoped_delete_skips_value_collect_and_probe(
     assert got2.filter("k = 150").select("v").head()[0] == -1
     assert got2.filter("k = 412").count() == 1
     assert got2.count() == 400  # 398 survivors + re-inserted 150 + new 412
+
+
+def test_scoped_touched_files_sound_with_lagging_sidecar(spark, tmp_path):
+    """Write scoping never drops a file that holds a key: on a
+    hash-keyed table of 13 epochs whose table sidecar covers only the
+    first (12 delta appends since, one batch sidecar deleted), every
+    file that really holds a key of a seeded key set — found by
+    scanning input_file_name() — is in the touched set, on the hash
+    key (value membership + probe) and on the epoch-clustered integer
+    key (range scoping alone)."""
+    import json
+    import random
+    from urllib.parse import unquote, urlparse
+
+    from pyspark.sql import functions as F
+
+    from indexr_spark.sources import snapshots as S
+    from indexr_spark.sources.segments import SIDECAR_NAME
+
+    path = str(tmp_path / "t")
+    # the first append commits a full manifest (and the table
+    # sidecar); the 12 after it commit deltas, which leave it lagging
+    canon = _build_epoch_fragmented(spark, S, path, n_epochs=13)
+    live = S.files_of(path, S.latest_version(path))
+    with open(os.path.join(path, SIDECAR_NAME)) as f:
+        assert set(live) - {e["path"] for e in json.load(f)["files"]}
+    # drop one appended batch's own sidecar: its file has no stats at all
+    os.remove(os.path.join(path, os.path.dirname(live[-1]), SIDECAR_NAME))
+
+    table = spark.read.parquet(*[os.path.join(path, f) for f in live]).select(
+        F.input_file_name().alias("f"), "doc_id", "h"
+    )
+
+    def holding(keys, col):
+        hits = table.join(keys, col, "leftsemi").select("f").distinct().collect()
+        return {os.path.relpath(unquote(urlparse(r.f).path), path) for r in hits}
+
+    for seed in range(4):
+        rng = random.Random(seed)
+        ids = rng.sample(range(13 * 60), 3 + 5 * seed) + [10**6 + seed]
+        for col, rows, ddl in (
+            ("h", [(canon(i),) for i in ids], "h string"),
+            ("doc_id", [(i,) for i in ids[:2]], "doc_id long"),
+        ):
+            keys = spark.createDataFrame(rows, ddl)
+            touched = S._scoped_touched_files(
+                spark, path, live, keys, [col], S._update_key_ranges(keys, [col])
+            )
+            missed = holding(keys, col) - set(touched)
+            assert not missed, (seed, col, missed)
+
+
+def test_delete_scoped_on_composite_key_with_binary_column(spark, tmp_path):
+    """A binary key column's sidecar stats are stored as str, so they
+    never compare with the delete set's bytes keys. That column alone
+    can't scope the rewrite, but the int key column beside it still
+    proves the other epochs' files disjoint: one file rewrites, not
+    every file."""
+    import pyarrow.parquet as pq
+
+    from indexr_spark.sources import snapshots as S
+
+    path = str(tmp_path / "t")
+    for ep in range(4):
+        rows = [(f"x{i}".encode(), ep * 10 + i, 0) for i in range(10)]
+        S.append_snapshot(
+            spark.createDataFrame(rows, "b binary, k int, v int"), path, sort_by=["k"]
+        )
+    live = S.files_of(path, S.latest_version(path))
+    ks = {f: pq.read_table(os.path.join(path, f), columns=["k"])["k"].to_pylist() for f in live}
+    assert sum(1 for f in live if ks[f]) == 4
+    v = S.delete_matching(
+        spark, path, spark.createDataFrame([(b"x3", 13)], "b binary, k int"), ["b", "k"]
+    )
+    after = set(S.files_of(path, v))
+    assert [f for f in live if f not in after] == [f for f in live if 13 in ks[f]]
+    got = S.read_snapshot(spark, path)
+    assert got.count() == 39 and got.filter("k = 13").count() == 0

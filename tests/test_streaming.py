@@ -147,7 +147,7 @@ def test_compaction_merges_and_clears(spark, ingested):
     # sidecar exists for the compacted table (prunable immediately)
     from indexr_spark.sources.segments import load_sidecar
 
-    assert load_sidecar(ingested.table_dir("metrics"))
+    assert load_sidecar(ingested.table_dir("metrics"))[0]
 
     # second compact is a no-op
     assert compact(spark, ingested, "metrics") == 0

@@ -34,7 +34,7 @@ def test_csv_roundtrip(spark, tmp_path):
     assert n == 3
     rows = {tuple(r) for r in spark.read.parquet(seg).collect()}
     assert rows == {(1, "a", 1.5), (2, "b", 0.0), (3, "c", 3.5)}
-    assert load_sidecar(seg)  # immediately prunable
+    assert load_sidecar(seg)[0]  # immediately prunable
 
     out = str(tmp_path / "out_csv")
     csv_export(spark, seg, out, delimiter=";")
@@ -76,7 +76,7 @@ def test_update_column_addcol(spark, orders_table):
         != F.col("adjusted")
     ).count()
     assert bad == 0
-    assert load_sidecar(orders_table)  # sidecar rebuilt after rewrite
+    assert load_sidecar(orders_table)[0]  # sidecar rebuilt after rewrite
 
 
 def test_update_column_delcol_and_errors(spark, orders_table):
@@ -182,7 +182,7 @@ def test_upsert_segments(spark, tmp_path):
     # sidecar refreshed for the new layout
     from indexr_spark.sources.segments import load_sidecar
 
-    assert sum(1 for _ in load_sidecar(path)) > 0
+    assert sum(1 for _ in load_sidecar(path)[0]) > 0
 
 
 def test_optimize_segments_compacts_files(spark, tmp_path):
@@ -252,7 +252,7 @@ def test_rewrite_tools_preserve_pinned_readers(spark, tmp_path):
 
     live = read_table(spark, path)
     assert live.count() == 3
-    assert set(load_sidecar(path)) == {f.removeprefix("file://") for f in live.inputFiles()}
+    assert set(load_sidecar(path)[0]) == {f.removeprefix("file://") for f in live.inputFiles()}
 
 
 def test_cli_update_column(spark, tmp_path, capsys):
