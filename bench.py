@@ -183,7 +183,7 @@ GATED = ("jobs", "stages")
 
 def _spark_calibration(spark) -> float:
     """Min wall seconds over 3 runs of a fixed small Spark job
-    (50M-row shuffled sum): the machine speed during the capture,
+    (5M-row shuffled sum): the machine speed during the capture,
     taken through the whole stack (codegen, a 64-task shuffle,
     scheduling) the way the queries experience it. Min of 3 because
     single samples jitter ~2x."""
@@ -192,7 +192,7 @@ def _spark_calibration(spark) -> float:
     runs = []
     for _ in range(3):
         t0 = time.time()
-        spark.range(50_000_000).repartition(64).agg(F.sum("id")).collect()
+        spark.range(5_000_000).repartition(64).agg(F.sum("id")).collect()
         runs.append(time.time() - t0)
     return round(min(runs), 3)
 

@@ -26,12 +26,12 @@ Spark shapes, in the house style:
   (m·D/m)=D narrow values per row + one driver-sized collect
   (m·ksub·dsub rows). The quantization-error audit is a second,
   separate in-row aggregate so the mean shuffle stays narrow.
-- `pq_adc_topk` evaluates a driver-sized query batch (the
-  vector_store.ivf_probe contract): per query the ADC table is an
-  (m·ksub) literal, distances are m in-row lookups, and ranking is
-  the one window top-k. No join touches the corpus; a streaming
-  query workload would broadcast-join a query table instead (noted
-  where it matters).
+- ADC is one pair of helpers every probe shares: `adc_table` builds
+  a query's (m·ksub) table in-row on its probe row, and
+  `adc_distance` scores a candidate with m lookups off its code.
+  `pq_adc_topk` broadcast-joins its query frame against the coded
+  corpus; the IVF-PQ probe (sources/vector_store.ivfpq_probe) joins
+  per-(query, cell) probe rows on the cell.
 
 L2 argmin over a codebook literal reuses the cosine machinery's
 identity: argmin_c |s-c|^2 = argmax_c (2 s·c - |c|^2), so the shared
@@ -47,7 +47,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from indexr_spark.operators.similarity import _dot, _dots_2d
+from indexr_spark.operators.similarity import _dot, _dots_2d, _lit_array
 
 Codebooks = "list[list[list[float]]]"  # [m][ksub][dsub]
 
@@ -296,8 +296,10 @@ def pq_encode_numpy(
 
 
 def adc_tables(query: list[float], codebooks: list) -> list[float]:
-    """The (m·ksub)-flat ADC table for one query: entry j·ksub+c is
-    |q_j − codebooks[j][c]|². Driver-side — a query is one vector."""
+    """The (m·ksub)-flat ADC table for one query, driver-side: entry
+    j·ksub+c is |q_j − codebooks[j][c]|². `adc_table` is the in-row
+    form every probe uses; this one feeds s14's fixed probe model,
+    which the DuckDB oracle replays as literals."""
     m = len(codebooks)
     dsub = len(codebooks[0][0])
     out: list[float] = []
@@ -306,6 +308,46 @@ def adc_tables(query: list[float], codebooks: list) -> list[float]:
         for c in codebooks[j]:
             out.append(float(sum((a - b) * (a - b) for a, b in zip(qj, c))))
     return out
+
+
+def adc_table(query: Column, codebooks: list, minus: Column | None = None) -> Column:
+    """The flat (m·ksub) ADC table of a query column, in-row: one
+    zip_with over the m·ksub codewords (a 2-D literal) and their
+    subvector offsets, each entry |q_j − c|² folded left to right —
+    the same bits as `adc_tables`. Computed once per probe row, never
+    per candidate. `minus` (a residual store's cell centroid) makes
+    the entries |(q_j − minus_j) − c|²; it is sliced per entry, since
+    a whole residual column would be re-evaluated by every entry's
+    lambda."""
+    dsub = len(codebooks[0][0])
+    words = _lit_array([[float(x) for x in c] for cb in codebooks for c in cb])
+    starts = _lit_array([j * dsub + 1 for j, cb in enumerate(codebooks) for _ in cb])
+
+    def sub(s: Column) -> Column:
+        qj = F.slice(query, s, dsub)
+        if minus is None:
+            return qj
+        return F.zip_with(qj, F.slice(minus, s, dsub), lambda a, b: a - b)
+
+    return F.zip_with(
+        words,
+        starts,
+        lambda c, s: F.aggregate(
+            F.zip_with(sub(s), c, lambda a, b: (a - b) * (a - b)),
+            F.lit(0.0),
+            lambda acc, d: acc + d,
+        ),
+    )
+
+
+def adc_distance(code: Column, table: Column, ksub: int) -> Column:
+    """A candidate's ADC distance: m lookups into its probe row's flat
+    table, indexed by its code, summed left to right from 0.0."""
+    return F.aggregate(
+        F.transform(code, lambda c, j: F.get(table, j * ksub + c)),
+        F.lit(0.0),
+        lambda acc, d: acc + d,
+    )
 
 
 def pq_adc_topk(
@@ -317,13 +359,11 @@ def pq_adc_topk(
     embedding_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k per query over a pq_encoded corpus via ADC:
-    each query ships as ONE (m·ksub) literal table, a candidate's
-    distance is m in-row lookups off its code, ranking is one window.
-    `queries` is a driver-sized batch (the ivf_probe contract); a
-    production query STREAM broadcast-joins a query table against the
-    coded corpus instead — same lookup expression, query table keyed
-    by qid. Output: (q_id, rank, vec_id, adc) ascending distance,
-    ties → lower vec_id.
+    the queries become a small broadcast frame whose rows carry their
+    in-row ADC table (`adc_table`), a candidate's distance is m
+    lookups off its code (`adc_distance`), ranking is one window.
+    Output: (q_id, rank, vec_id, adc) ascending distance, ties → lower
+    vec_id.
 
     `rerank_from=R` is the production IVF-PQ refinement step: shortlist
     R candidates by ADC (codes only — the cheap, cache-resident scan),
@@ -334,33 +374,22 @@ def pq_adc_topk(
     m=16/ksub=16: recall@10 0.52 raw ADC → 0.88 at R=50 → 0.96 at
     R=100 → 1.00 at R=150 (tests/test_pq.py pins the curve's floor).
     Adds the exact distance as `d2`."""
-    ksub = len(codebooks[0])
-    m = len(codebooks)
-
-    def _one_query(qid: int, qvec: list[float]) -> Column:
-        # table hoisted OUT of the lambda: HOF lambdas build their
-        # expression eagerly, but hoisting makes the per-query binding
-        # explicit instead of leaning on comprehension-scope timing
-        table = F.lit(adc_tables(list(qvec), codebooks))
-        return F.struct(
-            F.lit(int(qid)).alias("q_id"),
-            F.aggregate(
-                F.zip_with(
-                    F.col("pq_code"),
-                    F.sequence(F.lit(0), F.lit(m - 1)),
-                    lambda code, j: F.get(table, j * ksub + code),
-                ),
-                F.lit(0.0),
-                lambda acc, d: acc + d,
-            ).alias("adc"),
-        )
-
-    per_q = F.array(*[_one_query(qid, qvec) for qid, qvec in queries])
-    carry = ["vec_id"] + ([embedding_col] if rerank_from else [])
+    if rerank_from and rerank_from < k:
+        raise ValueError(f"rerank_from={rerank_from} < k={k}")
+    q = coded.sparkSession.createDataFrame(
+        [(int(qid), [float(x) for x in qvec]) for qid, qvec in queries],
+        "q_id long, qe array<double>",
+    )
+    q = q.withColumn("t", adc_table(F.col("qe"), codebooks))
+    carry = [embedding_col, "qe"] if rerank_from else []
     pairs = (
-        coded.select(*carry, F.explode(per_q).alias("x"))
-        .select(*carry, "x.q_id", "x.adc")
-        .filter(F.col("vec_id") != F.col("q_id"))
+        coded.join(F.broadcast(q), F.col("vec_id") != F.col("q_id"))
+        .select(
+            "q_id",
+            "vec_id",
+            *carry,
+            adc_distance(F.col("pq_code"), F.col("t"), len(codebooks[0])).alias("adc"),
+        )
     )
     w = W.partitionBy("q_id").orderBy("adc", "vec_id")
     if not rerank_from:
@@ -370,27 +399,15 @@ def pq_adc_topk(
             .select("q_id", "rank", "vec_id", F.round("adc", 6).alias("adc"))
             .orderBy("q_id", "rank")
         )
-    if rerank_from < k:
-        raise ValueError(f"rerank_from={rerank_from} < k={k}")
-    shortlist = pairs.withColumn("arank", F.row_number().over(w)).filter(
-        F.col("arank") <= rerank_from
-    )
-    # exact L2 only on the Q·R shortlist rows: a per-query CASE over
-    # the same driver-side query literals (Q is batch-sized by the
-    # function's contract, so the CASE chain is short)
+    # exact L2 only on the Q·R shortlist rows
     e = F.col(embedding_col).cast("array<double>")
-    d2 = None
-    for qid, qvec in queries:
-        qn2 = float(sum(x * x for x in qvec))
-        expr = _dot(e, e) - 2.0 * _dot(e, F.lit([float(x) for x in qvec])) + qn2
-        d2 = (
-            F.when(F.col("q_id") == int(qid), expr)
-            if d2 is None
-            else d2.when(F.col("q_id") == int(qid), expr)
-        )
+    qe = F.col("qe")
+    d2 = _dot(e, e) - 2.0 * _dot(e, qe) + _dot(qe, qe)
     wx = W.partitionBy("q_id").orderBy("d2", "vec_id")
     return (
-        shortlist.withColumn("d2", d2)
+        pairs.withColumn("arank", F.row_number().over(w))
+        .filter(F.col("arank") <= rerank_from)
+        .withColumn("d2", d2)
         .withColumn("rank", F.row_number().over(wx))
         .filter(F.col("rank") <= k)
         .select(

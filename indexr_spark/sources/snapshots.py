@@ -516,8 +516,13 @@ def _write_data_files(
 ) -> list[str]:
     """Write a new immutable batch of data files; return their paths
     relative to the table root. The in-flight marker lands before the
-    first data byte (see the protocol note above)."""
-    from indexr_spark.sources.segments import write_segments
+    first data byte (see the protocol note above).
+
+    Spark writes a zero-row file for each empty write task; those are
+    deleted (with their .crc) and dropped from the batch sidecar, so
+    no scan ever opens them. If every file is zero-row, the first one
+    stays so the snapshot of an empty frame keeps its schema."""
+    from indexr_spark.sources.segments import load_sidecar, write_segments, write_sidecar
 
     batch_name = uuid.uuid4().hex[:12]
     batch = os.path.join(path, "data", batch_name)
@@ -526,12 +531,22 @@ def _write_data_files(
     with open(marker, "w") as f:
         f.write(str(os.getpid()))
     write_segments(df, batch, sort_by=sort_by, num_segments=num_segments)
-    return [
-        os.path.relpath(os.path.join(root, name), path)
+    files = [
+        os.path.join(root, name)
         for root, _dirs, names in os.walk(batch)
         for name in sorted(names)
         if name.endswith(".parquet")
     ]
+    empty = load_sidecar(batch)[1]
+    kept = [f for f in files if f not in empty] or files[:1]
+    if len(kept) < len(files):
+        for f in set(files) - set(kept):
+            os.remove(f)
+            crc = os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")
+            if os.path.exists(crc):
+                os.remove(crc)
+        write_sidecar(batch, files_rel=[os.path.relpath(f, batch) for f in kept])
+    return [os.path.relpath(f, path) for f in kept]
 
 
 def _write_and_commit(

@@ -13,16 +13,20 @@ vectors land partitioned by their final cell. Assignment is an in-row
 argmax against literal centroid arrays (zero shuffles); the only wide
 operations are the one Lloyd aggregation and the partitioned write.
 
-Probe: centroids load driver-side (k×dim floats), each query picks its
-`nprobe` nearest cells in Python, and the scan statically prunes to
+Probe: one path at any batch size. The query side (q_id, qe, qn) and
+each query's `nprobe` nearest cells are derived in-row against the
+centroids (a k×dim literal); the probe's one eager job collects the
+DISTINCT probed cells (≤ k values) so the scan statically prunes to
 those `cell=` partitions before exact cosine ranks candidates —
-`nprobe` is the recall/cost dial s06 (nprobe=1) doesn't expose.
+`nprobe` is the recall/cost dial s06 (nprobe=1) doesn't expose. The
+streaming LSH store's ann_probe (streaming/ann.py) runs the same
+probe with buckets in place of cells.
 
 build_ivfpq_store / ivfpq_probe add the memory half of the layout
 (IVF-PQ): a `pq_code` column (operators/pq.py) lets the candidate
 scan rank by ADC without ever decoding the embedding column, and the
-exact-cosine rerank touches embeddings for only the per-query
-shortlist — see build_ivfpq_store's docstring for the economics.
+exact-cosine rerank keeps only the per-query shortlist — see
+build_ivfpq_store's docstring for the economics.
 """
 
 from __future__ import annotations
@@ -31,13 +35,14 @@ import json
 import math
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from indexr_spark.operators.similarity import (
     _argmax_cell,
     _dot,
     _dots_2d,
+    _lit_array,
     _unit_scaled,
 )
 
@@ -115,6 +120,89 @@ def build_ivf_store(
     return centroids
 
 
+def _load(store_dir: str, name: str):
+    with open(os.path.join(store_dir, name)) as f:
+        return json.load(f)
+
+
+def _query_side(queries: DataFrame) -> DataFrame:
+    """(q_id, qe, qn) from (q_id, embedding) rows — the query side every
+    ANN store's probe shares, derived in-row. A zero query vector takes
+    norm 1.0 (its cosines are 0.0, never NULL)."""
+    qe = F.col("embedding").cast("array<double>")
+    qn = F.sqrt(_dot(qe, qe))
+    return queries.select(
+        "q_id",
+        qe.alias("qe"),
+        F.coalesce(F.nullif(qn, F.lit(0.0)), F.lit(1.0)).alias("qn"),
+    )
+
+
+def _probe_cells(q: DataFrame, centroids: list[list[float]], nprobe: int) -> DataFrame:
+    """One row per (query, probed cell): each query's `nprobe` nearest
+    cells by cosine, picked in-row. The centroids fold through the
+    shared _dots_2d 2-D literal, 1/|c|-scaled driver-side; dividing by
+    qn is per-row constant, so it is skipped. array_sort on (dot, -cell)
+    structs sorts ascending on both, so reversing yields score desc
+    with ties broken toward the LOWER cell id."""
+    dots = _dots_2d(F.col("qe"), _unit_scaled(centroids))
+    neg = F.lit([-c for c in range(len(centroids))])
+    cands = F.zip_with(dots, neg, lambda d, nc: F.struct(d.alias("c"), nc.alias("nc")))
+    top = F.slice(F.reverse(F.array_sort(cands)), 1, nprobe)
+    return q.withColumn(
+        "cell", F.explode(F.transform(top, lambda s: (-s["nc"]).cast("int")))
+    )
+
+
+def _probed_store(
+    spark: SparkSession, store_dir: str, probes: DataFrame, key: str
+) -> tuple[DataFrame, DataFrame]:
+    """(probes, the store statically pruned to the partitions `probes`
+    names). The probe's one eager job collects the DISTINCT probed
+    `key` values — at most the store's partition count, at any batch
+    size — so the scan plans over only those `key=` directories. The
+    probe rows are checkpointed lazily, so that job also computes them
+    once and the probe's plan reads them back instead of re-running the
+    query side."""
+    probes = probes.localCheckpoint(eager=False)
+    keys = sorted(r[0] for r in probes.select(key).distinct().collect())
+    return probes, spark.read.parquet(store_dir).filter(F.col(key).isin(keys))
+
+
+def _cosine() -> Column:
+    return _dot(F.col("qe"), F.col("e")) / (F.col("qn") * F.col("nrm"))
+
+
+def _rank_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """Ranking tail of every probe: top-k (q_id, vec_id, cos) per
+    query, ties → lower vec_id, cosine rounded to 6 places."""
+    from pyspark.sql import Window as W
+
+    w = W.partitionBy("q_id").orderBy(F.desc("cos"), "vec_id")
+    return (
+        pairs.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("q_id", "rank", "vec_id", F.round("cos", 6).alias("cosine"))
+        .orderBy("q_id", "rank")
+    )
+
+
+def _probe_topk(
+    spark: SparkSession, store_dir: str, probes: DataFrame, key: str, k: int
+) -> DataFrame:
+    """Exact-cosine top-k over the probed partitions: `probes` holds
+    (q_id, qe, qn, key) rows, broadcast and equi-joined on `key`
+    against the pruned store (a query never ranks itself)."""
+    probes, store = _probed_store(spark, store_dir, probes, key)
+    pairs = (
+        _prepared(store)
+        .join(F.broadcast(probes), [key])
+        .filter(F.col("vec_id") != F.col("q_id"))
+        .select("q_id", "vec_id", _cosine().alias("cos"))
+    )
+    return _rank_topk(pairs, k)
+
+
 def ivf_probe(
     spark: SparkSession,
     store_dir: str,
@@ -122,123 +210,13 @@ def ivf_probe(
     k: int = 3,
     nprobe: int = 1,
 ) -> DataFrame:
-    """Top-k cosine neighbours per query over the `nprobe` nearest
-    cells. The probed cell set resolves driver-side (queries are
-    broadcast-sized; centroids are a tiny constant), so the scan
-    carries a static partition filter over exactly those cells."""
-    from pyspark.sql import Window as W
-
-    with open(os.path.join(store_dir, CENTROIDS_NAME)) as f:
-        centroids = json.load(f)
-    cnorms = [math.sqrt(sum(x * x for x in cv)) or 1.0 for cv in centroids]
-    qrows = queries.select("q_id", F.col("embedding").cast("array<double>").alias("qe")).collect()
-    probe_rows = []
-    for r in qrows:
-        qe = list(r["qe"])
-        qn = math.sqrt(sum(x * x for x in qe)) or 1.0
-        scored = sorted(
-            (
-                (sum(a * b for a, b in zip(qe, cv)) / (qn * cn), cell)
-                for cell, (cv, cn) in enumerate(zip(centroids, cnorms))
-            ),
-            key=lambda t: (-t[0], t[1]),
-        )
-        for _, cell in scored[:nprobe]:
-            probe_rows.append((r["q_id"], qe, qn, cell))
-    qdf = F.broadcast(
-        spark.createDataFrame(
-            probe_rows, "q_id long, qe array<double>, qn double, cell int"
-        )
+    """Top-k cosine neighbours per query over its `nprobe` nearest
+    cells. `queries` needs (q_id, embedding); the cells are picked
+    in-row and the scan carries a static filter over the probed ones."""
+    probes = _probe_cells(
+        _query_side(queries), _load(store_dir, CENTROIDS_NAME), nprobe
     )
-    cells = sorted({c for *_, c in probe_rows})
-    store = _prepared(spark.read.parquet(store_dir).filter(F.col("cell").isin(cells)))
-    cos = _dot(F.col("qe"), F.col("e")) / (F.col("qn") * F.col("nrm"))
-    pairs = store.join(qdf, ["cell"]).filter(F.col("vec_id") != F.col("q_id")).select(
-        "q_id", "vec_id", cos.alias("cos")
-    )
-    w = W.partitionBy("q_id").orderBy(F.desc("cos"), "vec_id")
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "vec_id", F.round("cos", 6).alias("cosine"))
-        .orderBy("q_id", "rank")
-    )
-
-
-def ivf_probe_df(
-    spark: SparkSession,
-    store_dir: str,
-    queries: DataFrame,
-    k: int = 3,
-    nprobe: int = 1,
-) -> DataFrame:
-    """Top-k cosine neighbours per query — the LARGE-batch probe path.
-
-    `ivf_probe` collects the query rows driver-side to compute a
-    static partition filter; fine for interactive probe sets, wrong
-    for a 10k+ query batch (the driver becomes the bottleneck and the
-    collect defeats distribution). Here nothing is collected: the
-    centroids (a tiny constant) are inlined as literal arrays, each
-    query row picks its `nprobe` nearest cells IN-ROW (score every
-    centroid, sort, slice), and explodes to (query, cell) rows for the
-    broadcast join against the cell-partitioned store. A large batch
-    probes essentially every cell (the probed set is data-dependent,
-    so no static partition filter is possible without collecting the
-    queries — exactly the trade between the two paths), which makes
-    the full-store scan the correct plan here; for small interactive
-    sets use `ivf_probe`, whose collect buys static `cell=` pruning.
-    Same ranking contract as `ivf_probe` (ties → lower cell id /
-    vec_id; zero-norm queries take the same norm-1 fallback).
-    """
-    from pyspark.sql import Window as W
-
-    with open(os.path.join(store_dir, CENTROIDS_NAME)) as f:
-        centroids = json.load(f)
-    qn_raw = F.sqrt(_dot(F.col("qe"), F.col("qe")))
-    q = queries.select(
-        "q_id", F.col("embedding").cast("array<double>").alias("qe")
-    ).withColumn(
-        # `qn or 1.0` in ivf_probe's driver loop — same zero-vector
-        # fallback, in-row (nullif(0)→null, coalesce→1.0)
-        "qn",
-        F.coalesce(F.nullif(qn_raw, F.lit(0.0)), F.lit(1.0)),
-    )
-    # in-row nprobe-cell selection: array_sort on (dot, -cell) structs
-    # sorts ascending on both, so reversing yields score desc with ties
-    # broken toward the LOWER cell id — the exact driver-side key. The
-    # centroids fold through the shared _dots_2d 2-D-literal lambda
-    # (the constant-size expression shape; the per-centroid struct fan
-    # it replaces was the r3 s06 regression), 1/|c|-scaled driver-side;
-    # dividing by qn is per-row constant, so dropping it cannot reorder
-    # a query's cells.
-    dots = _dots_2d(F.col("qe"), _unit_scaled(centroids))
-    neg = F.lit([-c for c in range(len(centroids))])
-    cands = F.zip_with(
-        dots, neg, lambda d, nc: F.struct(d.alias("c"), nc.alias("nc"))
-    )
-    top = F.slice(F.reverse(F.array_sort(cands)), 1, nprobe)
-    q = q.withColumn(
-        "cell", F.explode(F.transform(top, lambda s: (-s["nc"]).cast("int")))
-    )
-    store = _prepared(spark.read.parquet(store_dir))
-    cos = _dot(F.col("qe"), F.col("e")) / (F.col("qn") * F.col("nrm"))
-    # No broadcast hint: AQE broadcasts the query side while it fits
-    # (a 10k batch is a few MB) and falls back to a shuffle hash join
-    # on cell when a truly huge batch would OOM the driver — a forced
-    # broadcast would reintroduce the driver bottleneck this path
-    # exists to avoid.
-    pairs = (
-        store.join(q, ["cell"])
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id", cos.alias("cos"))
-    )
-    w = W.partitionBy("q_id").orderBy(F.desc("cos"), "vec_id")
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "vec_id", F.round("cos", 6).alias("cosine"))
-        .orderBy("q_id", "rank")
-    )
+    return _probe_topk(spark, store_dir, probes, "cell", k)
 
 
 PQ_META_NAME = "_pq.json"
@@ -275,9 +253,12 @@ def build_ivfpq_store(
 
     Columnar economics, which is the point at 100 TB: the ADC pass
     reads (vec_id, pq_code) — the embedding column stays on disk —
-    and the rerank reads embeddings for only the Q·R shortlist rows
-    through a pushed vec_id filter. Both properties are plan-asserted
-    in tests/test_ivfpq.py.
+    and only the Q·R shortlist rows reach the exact rerank, which
+    reads embeddings from the same pruned cells. A vec_id filter on
+    that read would skip nothing while a cell file is one row group
+    (under the 128 MiB row-group size): a scattered id list cannot
+    exclude it. Both scans' shapes are plan-asserted in
+    tests/test_ivfpq.py.
 
     The two throughput dials for large corpora (both default OFF so
     small builds stay on the oracle-exact Catalyst paths, both
@@ -337,17 +318,16 @@ def ivfpq_probe(
     nprobe: int = 1,
     rerank_from: int = 32,
 ) -> DataFrame:
-    """Top-k cosine neighbours per query over an IVF-PQ store: static
-    `cell=` pruning (ivf_probe's driver-side cell pick, cosine), an
-    ADC scan over codes only, then exact-cosine rerank of the per-query
-    R-shortlist — embeddings are read through a pushed vec_id IN
-    filter over the same pruned cells, i.e. Q·R fat rows instead of
-    every row in every probed cell. Output schema and ranking contract
-    are ivf_probe's (q_id, rank, vec_id, cosine; ties → lower vec_id);
-    with rerank_from ≥ the probed cells' population the result is
-    IDENTICAL to ivf_probe by construction (residual or not — the
-    final ranking is exact). Residual stores (see build_ivfpq_store)
-    get per-(query, cell) ADC tables, read from the store meta.
+    """Top-k cosine neighbours per query over an IVF-PQ store: the
+    ivf_probe cell pick and static `cell=` pruning, an ADC scan over
+    codes only, then an exact-cosine rerank of each query's R-shortlist.
+    Each (query, cell) probe row carries its ADC table, built in-row
+    (from the query's residual against the cell centroid on residual
+    stores, see build_ivfpq_store). The shortlist stays distributed
+    and joins the pruned store on vec_id for the embeddings. Output
+    schema and ranking contract are ivf_probe's (q_id, rank, vec_id,
+    cosine; ties → lower vec_id); with rerank_from ≥ the probed cells'
+    population the result is IDENTICAL to ivf_probe by construction.
 
     Sizing `rerank_from`: it must SPAN the corpus's near-dup family
     size (the measured law — ADC cannot rank within a family of
@@ -355,214 +335,39 @@ def ivfpq_probe(
     with `suggest_rerank_from` below."""
     from pyspark.sql import Window as W
 
-    from indexr_spark.operators.pq import adc_tables
+    from indexr_spark.operators.pq import adc_distance, adc_table
 
     if rerank_from < k:
         raise ValueError(f"rerank_from={rerank_from} < k={k}")
-    with open(os.path.join(store_dir, CENTROIDS_NAME)) as f:
-        centroids = json.load(f)
-    with open(os.path.join(store_dir, PQ_META_NAME)) as f:
-        meta = json.load(f)
-    codebooks, ksub, m = meta["codebooks"], meta["ksub"], meta["m"]
-    cnorms = [math.sqrt(sum(x * x for x in cv)) or 1.0 for cv in centroids]
-    qrows = queries.select(
-        "q_id", F.col("embedding").cast("array<double>").alias("qe")
-    ).collect()
-    # per query: nprobe nearest cells by cosine (ivf_probe's key) and
-    # the flat ADC table against the store's codebooks
-    probe_rows = []
-    qvecs: dict[int, list[float]] = {}
-    for r in qrows:
-        qe = list(r["qe"])
-        qvecs[r["q_id"]] = qe
-        qn = math.sqrt(sum(x * x for x in qe)) or 1.0
-        scored = sorted(
-            (
-                (sum(a * b for a, b in zip(qe, cv)) / (qn * cn), cell)
-                for cell, (cv, cn) in enumerate(zip(centroids, cnorms))
-            ),
-            key=lambda t: (-t[0], t[1]),
-        )
-        for _, cell in scored[:nprobe]:
-            probe_rows.append((r["q_id"], cell))
-    cells = sorted({c for _, c in probe_rows})
-
-    # phase 1 — ADC shortlist: codes only (embedding never read here)
-    qdf = F.broadcast(
-        spark.createDataFrame(probe_rows, "q_id long, cell int")
-    )
-    codes = spark.read.parquet(store_dir).filter(F.col("cell").isin(cells)).select(
-        "vec_id", "cell", "pq_code"
-    )
-    def _table_expr(table_vals: list[float]) -> "F.Column":
-        table = F.lit(table_vals)
-        return F.aggregate(
-            F.zip_with(
-                F.col("pq_code"),
-                F.sequence(F.lit(0), F.lit(m - 1)),
-                lambda code, j: F.get(table, j * ksub + code),
-            ),
-            F.lit(0.0),
-            lambda acc, d: acc + d,
-        )
-
-    adc = None
+    centroids = _load(store_dir, CENTROIDS_NAME)
+    meta = _load(store_dir, PQ_META_NAME)
+    q = _query_side(queries)
+    centre = None
     if meta.get("residual"):
-        # residual store: codes quantize x − centroid[cell], so the
-        # ADC table is per (query, cell) — Q·nprobe literal tables,
-        # still driver-sized by the probe contract
-        for qid, cell in probe_rows:
-            qe = qvecs[qid]
-            q_res = [a - b for a, b in zip(qe, centroids[cell])]
-            expr = _table_expr(adc_tables(q_res, codebooks))
-            cond = (F.col("q_id") == int(qid)) & (F.col("cell") == int(cell))
-            adc = F.when(cond, expr) if adc is None else adc.when(cond, expr)
-    else:
-        for qid, qe in qvecs.items():
-            expr = _table_expr(adc_tables(qe, codebooks))
-            adc = (
-                F.when(F.col("q_id") == int(qid), expr)
-                if adc is None
-                else adc.when(F.col("q_id") == int(qid), expr)
-            )
+        centre = F.get(_lit_array(centroids), F.col("cell"))
+    probes = _probe_cells(q, centroids, nprobe).select(
+        "q_id", "cell", adc_table(F.col("qe"), meta["codebooks"], centre).alias("t")
+    )
+    probes, store = _probed_store(spark, store_dir, probes, "cell")
+    # ADC shortlist: codes only (the embedding column is not read here)
     wa = W.partitionBy("q_id").orderBy("adc", "vec_id")
+    adc = adc_distance(F.col("pq_code"), F.col("t"), meta["ksub"])
     short = (
-        codes.join(qdf, ["cell"])
+        store.select("vec_id", "cell", "pq_code")
+        .join(F.broadcast(probes), ["cell"])
         .filter(F.col("vec_id") != F.col("q_id"))
         .select("q_id", "vec_id", adc.alias("adc"))
         .withColumn("arank", F.row_number().over(wa))
         .filter(F.col("arank") <= rerank_from)
         .select("q_id", "vec_id")
-        .collect()  # Q·rerank_from ids — driver-sized by contract
     )
-
-    # phase 2 — exact cosine on the shortlist only: the vec_id IN
-    # filter pushes to the pruned scan, so the embedding column is
-    # decoded for Q·R rows
-    ids = sorted({r["vec_id"] for r in short})
-    pairs_df = F.broadcast(
-        spark.createDataFrame(
-            [(r["q_id"], r["vec_id"]) for r in short], "q_id long, vec_id long"
-        )
+    fat = _prepared(store.select("vec_id", "embedding"))
+    pairs = (
+        short.join(fat, ["vec_id"])
+        .join(F.broadcast(q), ["q_id"])
+        .select("q_id", "vec_id", _cosine().alias("cos"))
     )
-    fat = _prepared(
-        spark.read.parquet(store_dir)
-        .filter(F.col("cell").isin(cells))
-        .filter(F.col("vec_id").isin(ids))
-        .select("vec_id", "embedding")
-    )
-    cos = None
-    for qid, qe in qvecs.items():
-        qn = math.sqrt(sum(x * x for x in qe)) or 1.0
-        expr = _dot(F.col("e"), F.lit([float(x) for x in qe])) / (
-            F.col("nrm") * qn
-        )
-        cos = (
-            F.when(F.col("q_id") == int(qid), expr)
-            if cos is None
-            else cos.when(F.col("q_id") == int(qid), expr)
-        )
-    wx = W.partitionBy("q_id").orderBy(F.desc("cos"), "vec_id")
-    return (
-        fat.join(pairs_df, ["vec_id"])
-        .select("q_id", "vec_id", cos.alias("cos"))
-        .withColumn("rank", F.row_number().over(wx))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "vec_id", F.round("cos", 6).alias("cosine"))
-        .orderBy("q_id", "rank")
-    )
-
-
-def ivfpq_probe_df(
-    spark: SparkSession,
-    store_dir: str,
-    queries: DataFrame,
-    k: int = 3,
-    nprobe: int = 1,
-    rerank_from: int = 32,
-) -> DataFrame:
-    """ivfpq_probe's LARGE-batch sibling (the ivf_probe_df trade):
-    nothing is collected — each query row picks its nprobe cells
-    IN-ROW, the ADC distance is computed per joined (query, candidate)
-    row from code-indexed centroid lookups (per subspace: one F.get
-    into a 2-D codebook literal + one dot fold, so a candidate costs
-    ~one cosine regardless of ksub), and the exact-cosine rerank joins
-    the R-shortlist back to the store on vec_id. What the driver-side
-    collect bought in ivfpq_probe is gone by construction: no static
-    cell pruning (a large batch probes most cells anyway) and no
-    pushed vec_id filter for the rerank scan (the shortlist is
-    distributed — the rerank is a shuffle join instead). Residual
-    stores work unchanged: the query residualizes in-row against the
-    candidate's cell centroid. Output contract is ivfpq_probe's; a
-    full-population shortlist reproduces ivf_probe_df exactly
-    (pytest-pinned)."""
-    from pyspark.sql import Window as W
-
-    if rerank_from < k:
-        raise ValueError(f"rerank_from={rerank_from} < k={k}")
-    with open(os.path.join(store_dir, CENTROIDS_NAME)) as f:
-        centroids = json.load(f)
-    with open(os.path.join(store_dir, PQ_META_NAME)) as f:
-        meta = json.load(f)
-    codebooks, ksub, m = meta["codebooks"], meta["ksub"], meta["m"]
-    dsub = len(codebooks[0][0])
-
-    qn_raw = F.sqrt(_dot(F.col("qe"), F.col("qe")))
-    q = queries.select(
-        "q_id", F.col("embedding").cast("array<double>").alias("qe")
-    ).withColumn("qn", F.coalesce(F.nullif(qn_raw, F.lit(0.0)), F.lit(1.0)))
-    # in-row nprobe cell selection — identical mechanics to ivf_probe_df
-    dots = _dots_2d(F.col("qe"), _unit_scaled(centroids))
-    neg = F.lit([-c for c in range(len(centroids))])
-    cands = F.zip_with(
-        dots, neg, lambda d, nc: F.struct(d.alias("c"), nc.alias("nc"))
-    )
-    top = F.slice(F.reverse(F.array_sort(cands)), 1, nprobe)
-    q = q.withColumn(
-        "cell", F.explode(F.transform(top, lambda s: (-s["nc"]).cast("int")))
-    )
-
-    codes = spark.read.parquet(store_dir).select("vec_id", "cell", "pq_code")
-    joined = codes.join(q, ["cell"]).filter(F.col("vec_id") != F.col("q_id"))
-    qe_eff = F.col("qe")
-    if meta.get("residual"):
-        cmat = F.lit([[float(x) for x in c] for c in centroids])
-        qe_eff = F.zip_with(
-            F.col("qe"), F.get(cmat, F.col("cell")), lambda x, c: x - c
-        )
-    # materialize the (possibly residualized) query vector as a column
-    # before the per-subspace folds consume it — the d22/d31 no-CSE
-    # lesson: raw, the residual zip_with would re-run once per subspace
-    joined = joined.withColumn("_qe_eff", qe_eff)
-    adc = None
-    for j in range(m):
-        cb_j = F.lit([[float(x) for x in c] for c in codebooks[j]])
-        n2_j = F.lit([float(sum(x * x for x in c)) for c in codebooks[j]])
-        code_j = F.get(F.col("pq_code"), j)
-        qj = F.slice(F.col("_qe_eff"), j * dsub + 1, dsub)
-        cj = F.get(cb_j, code_j)
-        dj = _dot(qj, qj) - 2.0 * _dot(qj, cj) + F.get(n2_j, code_j)
-        adc = dj if adc is None else adc + dj
-    wa = W.partitionBy("q_id").orderBy("adc", "vec_id")
-    shortlist = (
-        joined.select("q_id", "vec_id", "qe", "qn", adc.alias("adc"))
-        .withColumn("arank", F.row_number().over(wa))
-        .filter(F.col("arank") <= rerank_from)
-        .drop("arank")
-    )
-    fat = _prepared(
-        spark.read.parquet(store_dir).select("vec_id", "embedding")
-    ).select("vec_id", "e", "nrm")
-    cos = _dot(F.col("qe"), F.col("e")) / (F.col("qn") * F.col("nrm"))
-    wx = W.partitionBy("q_id").orderBy(F.desc("cos"), "vec_id")
-    return (
-        shortlist.join(fat, ["vec_id"])
-        .select("q_id", "vec_id", cos.alias("cos"))
-        .withColumn("rank", F.row_number().over(wx))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "vec_id", F.round("cos", 6).alias("cosine"))
-        .orderBy("q_id", "rank")
-    )
+    return _rank_topk(pairs, k)
 
 
 def suggest_rerank_from(
@@ -761,16 +566,13 @@ def s14_ivfpq_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     lookups per candidate, and the only wide operations are the two
     per-query ranking windows (ADC shortlist at R, exact rerank at k).
     No when-chains: a thousand queries would run the identical plan."""
-    from indexr_spark.operators.pq import s13_codebooks
-    from indexr_spark.tables import load_table
-
-    cents = s14_centroids()
-    m = len(s13_codebooks())
-    ksub = len(s13_codebooks()[0])
     from pyspark.sql import Window as W
 
+    from indexr_spark.operators.pq import S13_KSUB, adc_distance
+    from indexr_spark.tables import load_table
+
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    coded = _s14_coded_arrow(emb, cents)
+    coded = _s14_coded_arrow(emb, s14_centroids())
 
     probe = F.broadcast(
         spark.createDataFrame(
@@ -778,15 +580,7 @@ def s14_ivfpq_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q_id long, cell int, t array<double>, qe array<double>, qn double",
         )
     )
-    adc = F.aggregate(
-        F.zip_with(
-            F.col("pq_code"),
-            F.sequence(F.lit(0), F.lit(m - 1)),
-            lambda code, j: F.get(F.col("t"), j * ksub + code),
-        ),
-        F.lit(0.0),
-        lambda acc, d: acc + d,
-    )
+    adc = adc_distance(F.col("pq_code"), F.col("t"), S13_KSUB)
     wa = W.partitionBy("q_id").orderBy("adc", "vec_id")
     short = (
         coded.join(probe, ["cell"])

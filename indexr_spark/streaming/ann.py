@@ -5,10 +5,14 @@ random-hyperplane bucket with an in-row fold against literal plane
 arrays. This module runs the SAME assignment inside a Structured
 Streaming pipeline and lands vectors in a `bucket=<id>`-partitioned
 parquet store via Spark's exactly-once streaming file sink. Probes
-then read one partition directory per query bucket — at 100 TB the
+then read one partition directory per probed bucket — at 100 TB the
 store is the ANN index: ingest is narrow (zero shuffles, the bucket
 is computed in the scan stage), and every query prunes to ~n/2^planes
 vectors via ordinary partition pruning, no index server involved.
+`ann_probe` is the IVF store's probe (sources/vector_store) with
+buckets in place of cells: the query side and the bucket set are
+derived in-row, and the one collect is the distinct probed buckets
+(≤ 2^planes values) for the static `bucket=` filter.
 
 Beyond-reference superset: the reference streams rows into sorted
 segments (rt/ subsystem); it has no vector/ANN surface at all.
@@ -20,7 +24,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from indexr_spark.operators.similarity import _dot, _plane_weights
+from indexr_spark.operators.similarity import _dot, _lit_array, _plane_weights
 
 
 def bucket_expr(embedding: Column) -> Column:
@@ -31,7 +35,7 @@ def bucket_expr(embedding: Column) -> Column:
     e = embedding.cast("array<double>")
     bucket = F.lit(0).cast("long")
     for p, w in enumerate(_plane_weights()):
-        dot = _dot(e, F.array(*[F.lit(x) for x in w]))
+        dot = _dot(e, _lit_array(w))
         bucket = bucket + F.when(dot >= 0, F.lit(1 << p).cast("long")).otherwise(
             F.lit(0).cast("long")
         )
@@ -73,7 +77,7 @@ def _probe_buckets_expr(embedding: Column, flips: int) -> Column:
     (1+F)/2^planes of the store instead of 1/2^planes, with NO
     rebuild of the store. All in-row (one _dots_2d fold + an
     array_sort over ANN_PLANES structs), so deriving the probe set
-    never shuffles and never collects."""
+    never shuffles."""
     from indexr_spark.operators.similarity import ANN_PLANES, _dots_2d
 
     e = embedding.cast("array<double>")
@@ -92,36 +96,6 @@ def _probe_buckets_expr(embedding: Column, flips: int) -> Column:
     return F.concat(F.array(exact), alts)
 
 
-def _queries_with_buckets(queries: DataFrame, flips: int = 0) -> DataFrame:
-    """(q_id, qe, qb, qn) — the probe side both paths share; buckets
-    are row-local expressions, so deriving them never shuffles. With
-    `flips` > 0 each query contributes one row PER PROBED BUCKET
-    (exploded), which the bucket equi-join then prunes exactly like
-    the single-bucket case; a store vector lives in exactly one
-    bucket, so a (q_id, vec_id) pair can never appear twice."""
-    return (
-        queries.select(
-            F.col("q_id"),
-            F.col("embedding").cast("array<double>").alias("qe"),
-            F.explode(_probe_buckets_expr(F.col("embedding"), flips)).alias("qb"),
-        )
-        .withColumn("qn", F.sqrt(_dot(F.col("qe"), F.col("qe"))))
-    )
-
-
-def _rank_topk(pairs: DataFrame, k: int) -> DataFrame:
-    """Shared ranking tail: top-k per query, deterministic ties."""
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("q_id").orderBy(F.desc("cos"), "vec_id")
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "vec_id", F.round("cos", 6).alias("cosine"))
-        .orderBy("q_id", "rank")
-    )
-
-
 def ann_probe(
     spark: SparkSession,
     store_dir: str,
@@ -130,65 +104,18 @@ def ann_probe(
     flips: int = 0,
 ) -> DataFrame:
     """Top-k cosine neighbours for each query vector, scanning ONLY
-    the store partitions matching the queries' buckets (partition
-    pruning on the bucket join — `.inputFiles()` shows one directory
-    per probed bucket). `queries` needs (q_id, embedding). `flips`
-    enables multiprobe: each query also probes the Hamming-1 buckets
-    of its `flips` nearest planes (see _probe_buckets_expr) — the
-    recall dial that needs no store rebuild.
+    the store partitions of the probed buckets. `queries` needs
+    (q_id, embedding). Each query's buckets are derived in-row by the
+    same `bucket_expr` the ingest uses; `flips` enables multiprobe:
+    each query also probes the Hamming-1 buckets of its `flips`
+    nearest planes (see _probe_buckets_expr) — the recall dial that
+    needs no store rebuild. One exploded probe row per (query, bucket)
+    joins the store the way the IVF probe joins cells; a store vector
+    lives in exactly one bucket, so a (q_id, vec_id) pair never
+    appears twice."""
+    from indexr_spark.sources.vector_store import _probe_topk, _query_side
 
-    INTERACTIVE-batch path: the probed bucket set resolves via a
-    driver-side collect of the (small) query set, buying a STATIC
-    `bucket=` partition filter. For large query batches use
-    `ann_probe_df`, which never collects."""
-    qdf = _queries_with_buckets(queries, flips)
-    # Resolve the probed buckets driver-side (the query set is
-    # broadcast-sized by definition) and prune STATICALLY: the scan
-    # plans over only the matching bucket=<id> partition directories —
-    # visible in .inputFiles(), no reliance on runtime DPP.
-    probe_buckets = [r["qb"] for r in qdf.select("qb").distinct().collect()]
-    store = spark.read.parquet(store_dir).filter(
-        F.col("bucket").isin(probe_buckets)
+    probes = _query_side(queries).withColumn(
+        "bucket", F.explode(_probe_buckets_expr(F.col("qe"), flips))
     )
-    q = F.broadcast(qdf)
-    e = F.col("embedding").cast("array<double>")
-    nrm = F.sqrt(_dot(e, e))
-    cos = _dot(F.col("qe"), e) / (F.col("qn") * nrm)
-    pairs = store.join(
-        q, (F.col("bucket") == F.col("qb")) & (F.col("vec_id") != F.col("q_id"))
-    ).select("q_id", "vec_id", cos.alias("cos"))
-    return _rank_topk(pairs, k)
-
-
-def ann_probe_df(
-    spark: SparkSession,
-    store_dir: str,
-    queries: DataFrame,
-    k: int = 3,
-    flips: int = 0,
-) -> DataFrame:
-    """Top-k cosine neighbours per query — the LARGE-batch probe path
-    (the `ivf_probe_df` pattern, closing the r4 asymmetry note).
-
-    Nothing is collected: each query's bucket is derived IN-ROW by the
-    same `bucket_expr` the ingest uses, and the bucket equi-join prunes
-    candidates. A large batch probes essentially every bucket (the
-    probed set is data-dependent, so a static partition filter is
-    impossible without collecting the queries — exactly the trade
-    between the two paths), which makes the full-store scan the
-    correct plan here. No broadcast hint: AQE broadcasts the query
-    side while it fits and falls back to a shuffle hash join on the
-    bucket key for a truly huge batch — a forced broadcast would
-    reintroduce the driver bottleneck this path exists to avoid.
-    Ranking contract identical to `ann_probe` (including the
-    multiprobe `flips` dial — exploded probe rows join the same
-    way)."""
-    q = _queries_with_buckets(queries, flips)
-    store = spark.read.parquet(store_dir)
-    e = F.col("embedding").cast("array<double>")
-    nrm = F.sqrt(_dot(e, e))
-    cos = _dot(F.col("qe"), e) / (F.col("qn") * nrm)
-    pairs = store.join(
-        q, (F.col("bucket") == F.col("qb")) & (F.col("vec_id") != F.col("q_id"))
-    ).select("q_id", "vec_id", cos.alias("cos"))
-    return _rank_topk(pairs, k)
+    return _probe_topk(spark, store_dir, probes, "bucket", k)

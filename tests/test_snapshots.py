@@ -522,6 +522,41 @@ def test_append_commits_delta_manifest(spark, tmp_path):
     assert sidecar_files == S.files_of(path, 1)
 
 
+def test_small_writes_commit_no_zero_row_files(spark, tmp_path):
+    """Spark writes a zero-row file for each empty write task. A
+    1-row append must commit exactly one data file, leave no other
+    parquet file in its batch dir, and list only that file in the
+    batch sidecar. A 0-row write keeps one file, so the snapshot
+    still reads back with its schema."""
+    import json
+
+    from indexr_spark.sources import snapshots as S
+    from indexr_spark.sources.segments import SIDECAR_NAME
+
+    path = str(tmp_path / "t")
+    write_snapshot(spark.range(0, 5).toDF("k"), path)
+    append_snapshot(spark.createDataFrame([(100,)], "k long"), path)
+    add = S._load_manifest(path, latest_version(path))["add"]
+    assert len(add) == 1
+    batch = os.path.join(path, os.path.dirname(add[0]))
+    on_disk = sorted(n for n in os.listdir(batch) if n.endswith(".parquet"))
+    assert on_disk == [os.path.basename(add[0])]
+    with open(os.path.join(batch, SIDECAR_NAME)) as f:
+        assert [e["path"] for e in json.load(f)["files"]] == on_disk
+    assert sorted(r.k for r in read_snapshot(spark, path).collect()) == [
+        0, 1, 2, 3, 4, 100
+    ]
+
+    empty = str(tmp_path / "empty")
+    write_snapshot(spark.createDataFrame([], "k long, s string"), empty)
+    assert len(S.files_of(empty, latest_version(empty))) == 1
+    back = read_snapshot(spark, empty)
+    assert back.count() == 0
+    assert [(f.name, f.dataType.simpleString()) for f in back.schema.fields] == [
+        ("k", "bigint"), ("s", "string")
+    ]
+
+
 def test_delta_chain_materializes_at_cap(spark, tmp_path, monkeypatch):
     """Every FULL_REWRITE_EVERY-th append writes a FULL manifest,
     bounding chain length (and amortizing the O(files) write)."""

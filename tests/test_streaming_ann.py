@@ -15,12 +15,7 @@ import shutil
 from pyspark.sql import functions as F
 
 from indexr_spark.operators.similarity import _dot
-from indexr_spark.streaming.ann import (
-    ann_probe,
-    ann_probe_df,
-    bucket_expr,
-    start_ann_ingest,
-)
+from indexr_spark.streaming.ann import ann_probe, bucket_expr, start_ann_ingest
 from tests.conftest import SMOKE_SF
 
 
@@ -111,49 +106,14 @@ def test_stream_ingest_and_probe(spark, tmp_path):
     ]
 
 
-def test_ann_probe_df_matches_collect_path(spark, tmp_path):
-    """The no-collect large-batch probe must return exactly what the
-    static-pruned interactive path returns, for every query — and its
-    plan must carry NO static bucket IN-list (proof the probed set was
-    derived in-row, not collected driver-side)."""
-    import contextlib
-    import io
-
-    store = str(tmp_path / "store")
-    emb = spark.read.parquet(f"{SMOKE_SF}/embeddings.parquet")
-    # batch-built store: same layout the streaming sink produces
-    emb.withColumn("bucket", bucket_expr(F.col("embedding"))).write.partitionBy(
-        "bucket"
-    ).parquet(store)
-
-    queries = emb.filter(F.col("vec_id") < 12).select(
-        F.col("vec_id").alias("q_id"), "embedding"
-    )
-    want = ann_probe(spark, store, queries, k=3).collect()
-    res = ann_probe_df(spark, store, queries, k=3)
-    got = res.collect()
-    assert [tuple(r) for r in got] == [tuple(r) for r in want]
-    assert len(got) > 0
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        res.explain("formatted")
-    plan = buf.getvalue()
-    pf = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
-    assert pf and all(" IN (" not in ln for ln in pf), (
-        "ann_probe_df must not carry a collected static bucket list:\n" + plan
-    )
-    assert "CartesianProduct" not in plan, plan
-
-
 def test_multiprobe_widens_recall_without_rebuild(spark, tmp_path):
     """flips=F probes F extra Hamming-1 buckets per query: results for
     flips=0 must be unchanged vs the default; recall vs the
     brute-force global top-k must be monotone non-decreasing in flips
     (full recall is NOT guaranteed — a neighbor can sit at Hamming
     distance 2 — so monotonicity is the honest claim); the interactive
-    path's static partition filter must list at most (1+F)·|queries|
-    buckets; and both probe paths must agree at every flips level."""
+    probe's static partition filter must list at most (1+F)·|queries|
+    buckets."""
     import contextlib
     import io
 
@@ -212,10 +172,7 @@ def test_multiprobe_widens_recall_without_rebuild(spark, tmp_path):
         with contextlib.redirect_stdout(buf):
             res.explain("formatted")
         pf = [ln for ln in buf.getvalue().splitlines() if "PartitionFilters" in ln]
-        assert pf, "interactive multiprobe lost its static filter"
+        assert pf, "multiprobe lost its static filter"
         if " IN (" in pf[0]:
             n_buckets = len(pf[0].split(" IN (")[1].split(")")[0].split(","))
             assert n_buckets <= (1 + flips) * 8
-        # both paths agree at every flips level
-        df_rows = ann_probe_df(spark, store, queries, k=3, flips=flips).collect()
-        assert [tuple(r) for r in df_rows] == [tuple(r) for r in rows]

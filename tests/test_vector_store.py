@@ -5,7 +5,9 @@ from __future__ import annotations
 import contextlib
 import io
 import os
+import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from indexr_spark.operators.similarity import _dot
@@ -115,69 +117,110 @@ def test_build_with_trained_quantizer(spark, tmp_path):
     assert all(1 <= r.rank <= 3 for r in rows)
 
 
-def test_probe_df_matches_collect_path_and_scales(spark, tmp_path):
-    """ivf_probe_df (no driver collect of queries) must return exactly
-    what ivf_probe returns on the same probe set, and must execute a
-    10k-query batch as a broadcast join plan — queries stay a
-    DataFrame end to end."""
-    import contextlib
-    import io
+def test_zero_norm_query_matches_python_reference(spark, tmp_path):
+    """A zero query vector takes norm 1.0: its cosines are 0.0 (not
+    NULL) and its probed cells are the reference's — every centroid
+    scores 0, so ties go to the lowest cells. Checked against a plain
+    Python probe over the centroid file and the store rows."""
+    import json
+    import math
 
     from pyspark.sql import Row
 
-    from indexr_spark.sources.vector_store import ivf_probe_df
+    from indexr_spark.sources.vector_store import CENTROIDS_NAME
 
     store = str(tmp_path / "ivf")
     emb = spark.read.parquet(f"{SMOKE_SF}/embeddings.parquet")
-    build_ivf_store(spark, emb, store, n_cells=8)
+    build_ivf_store(spark, emb, store, n_cells=4)
+    dim = len(emb.select("embedding").first()["embedding"])
+    qe = [0.0] * dim
+    q = spark.createDataFrame([Row(q_id=999, embedding=qe)])
+    got = [tuple(r) for r in ivf_probe(spark, store, q, k=3, nprobe=2).collect()]
 
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), "embedding"
+    cents = json.load(open(os.path.join(store, CENTROIDS_NAME)))
+    qn = math.sqrt(sum(x * x for x in qe)) or 1.0
+    scored = sorted(
+        (
+            -sum(a * b for a, b in zip(qe, cv))
+            / (qn * (math.sqrt(sum(x * x for x in cv)) or 1.0)),
+            cell,
+        )
+        for cell, cv in enumerate(cents)
     )
-    for nprobe in (1, 2):
-        a = ivf_probe(spark, store, queries, k=3, nprobe=nprobe).collect()
-        b = ivf_probe_df(spark, store, queries, k=3, nprobe=nprobe).collect()
-        assert a == b, (nprobe, a[:5], b[:5])
+    cells = [c for _, c in scored[:2]]
+    cands = []
+    for r in spark.read.parquet(store).filter(F.col("cell").isin(cells)).collect():
+        e = [float(x) for x in r["embedding"]]
+        cos = sum(a * b for a, b in zip(qe, e)) / (qn * math.sqrt(sum(x * x for x in e)))
+        cands.append((-round(cos, 6), r["vec_id"]))
+    want = [(999, i + 1, vid, -c) for i, (c, vid) in enumerate(sorted(cands)[:3])]
+    assert got == want
+    assert all(r[3] == 0.0 for r in got)
 
-    # 10k synthetic queries: tile the corpus embeddings with new ids —
-    # the probe must run without any driver-side iteration of queries
-    dim_vec = emb.select("embedding").first()["embedding"]
-    base = emb.select("vec_id", "embedding").limit(100).collect()
+
+@pytest.mark.parametrize("probe", ["ivf_probe", "ivfpq_probe", "ann_probe"])
+def test_probe_runs_a_10k_query_batch(spark, tmp_path, monkeypatch, probe):
+    """One probe serves every batch size: 10k queries get k rows each,
+    the scan keeps a static partition IN list no longer than the
+    store's partition count, and the only rows the probe collects are
+    the distinct probed partitions (never the query rows)."""
+    from pyspark.sql import Row
+
+    from indexr_spark.operators.similarity import ANN_PLANES
+    from indexr_spark.sources.vector_store import build_ivfpq_store, ivfpq_probe
+    from indexr_spark.streaming.ann import ann_probe, bucket_expr
+
+    store = str(tmp_path / "store")
+    emb = spark.read.parquet(f"{SMOKE_SF}/embeddings.parquet")
+    if probe == "ivf_probe":
+        build_ivf_store(spark, emb, store, n_cells=8)
+        run, n_parts = (lambda q: ivf_probe(spark, store, q, k=3, nprobe=2)), 8
+    elif probe == "ivfpq_probe":
+        build_ivfpq_store(spark, emb, store, n_cells=8, m=16, ksub=16, pq_iters=2)
+        run, n_parts = (
+            lambda q: ivfpq_probe(spark, store, q, k=3, nprobe=2, rerank_from=8)
+        ), 8
+    else:
+        emb.withColumn("bucket", bucket_expr(F.col("embedding"))).write.partitionBy(
+            "bucket"
+        ).parquet(store)
+        run, n_parts = (lambda q: ann_probe(spark, store, q, k=3)), 1 << ANN_PLANES
+
+    # 10k queries tiling 100 corpus embeddings under new ids
+    base = emb.select("embedding").limit(100).collect()
     big = spark.createDataFrame(
         [
             Row(q_id=int(1000 + i), embedding=base[i % len(base)]["embedding"])
             for i in range(10_000)
         ]
     )
-    res = ivf_probe_df(spark, store, big, k=3, nprobe=2)
+    frame = type(big)
+    collected = []
+    real_collect = frame.collect
+
+    def spy(self):
+        rows = real_collect(self)
+        collected.append(len(rows))
+        return rows
+
+    with monkeypatch.context() as mp:
+        mp.setattr(frame, "collect", spy)
+        res = run(big)
+    assert collected and all(n <= n_parts for n in collected), collected
+
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         res.explain("formatted")
-    plan = buf.getvalue()
-    assert "BroadcastHashJoin" in plan
+    pf = [ln for ln in buf.getvalue().splitlines() if "PartitionFilters" in ln]
+    assert pf
+    for ln in pf:
+        # Spark prints a long IN list as INSET
+        static = re.search(r"(?: IN \(| INSET )([-\d, ]+)", ln)
+        assert static, ln
+        assert len([v for v in static.group(1).split(",") if v.strip()]) <= n_parts
     out = res.groupBy("q_id").count()
     assert out.count() == 10_000
     assert out.filter(F.col("count") != 3).count() == 0
-
-
-def test_probe_paths_agree_on_zero_norm_query(spark, tmp_path):
-    """A zero query vector must take the same norm-1 fallback on both
-    probe paths (the driver-side loop uses `or 1.0`; the DataFrame
-    path mirrors it with nullif/coalesce) — same cells probed, same
-    0.0 cosines, same ranking."""
-    from pyspark.sql import Row
-
-    from indexr_spark.sources.vector_store import ivf_probe_df
-
-    store = str(tmp_path / "ivf")
-    emb = spark.read.parquet(f"{SMOKE_SF}/embeddings.parquet")
-    build_ivf_store(spark, emb, store, n_cells=4)
-    dim = len(emb.select("embedding").first()["embedding"])
-    q = spark.createDataFrame([Row(q_id=999, embedding=[0.0] * dim)])
-    a = ivf_probe(spark, store, q, k=3, nprobe=2).collect()
-    b = ivf_probe_df(spark, store, q, k=3, nprobe=2).collect()
-    assert a == b
-    assert all(r.cosine == 0.0 for r in a)
 
 
 def test_neardup_numpy_matches_catalyst_pair_set(spark):
