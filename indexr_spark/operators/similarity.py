@@ -415,56 +415,26 @@ def d10_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket id is the shuffle key; everything downstream of the bucket
     join touches only candidate pairs.
     """
-    # r13 opt: _norm_bucketed replaces the old `emb.join(_bucket_of)`
-    # join-back (scan + norm ran on both join inputs to attach a
-    # column `_bucket_expr` projects in place) AND pins the frame —
-    # the chunked self-join consumes it on both sides, which
-    # previously re-derived the whole scan+norm+plane-dot subtree
-    # twice (4 scans in the before-plan, 1 after).
+    # _norm_bucketed pins the normed, bucketed corpus: the self-join
+    # reads it on both sides.
     embb = _norm_bucketed(spark, sf_dir)
-    # Chunked bucket self-join — the quadratic-bucket skew valve
-    # (chunked_self_join, shared with the LSH candidate join): the
+    # Chunked bucket self-join — the quadratic-bucket skew valve: the
     # plain join on the bucket key has only 2^ANN_PLANES distinct keys,
-    # so each bucket's k²/2 pair generation runs inside ONE task — at
-    # 100k vectors in 16 buckets that serialized ~312M pair evals on 16
-    # of 32 cores (measured 826 s -> 185 s chunked; COVERAGE.md scale
-    # spot-run). Embedding rows are WIDE (dim doubles) and the valve
-    # replicates left-side rows ~C/2 times through the join shuffle —
-    # but the per-pair cost here is a 64-element HOF dot product, so
-    # compute balance beats shuffle bytes: C=8 (4x fewer replicated
-    # bytes) measured 264 s at 100k vectors vs 185 s at C=cores. Keep
-    # the default C; revisit only if the pair compute ever gets
-    # cheaper than the row shipping (joins.py documents the model).
-    # (The other half of the 100 TB story is sizing: planes must grow
-    # with the corpus so bucket size stays bounded — planes ≈
-    # log2(n / target) — this corpus pins ANN_PLANES=4 for oracle
-    # comparability.)
-    # repartition_probe: explicit False — embb comes off _with_norm's
-    # explicit vec_id repartition (pinned by the checkpoint), so the
-    # probe side is well-partitioned by construction and the guard can
-    # never fire usefully here. What
-    # the AUTO default DOES cost on this lineage is its plan probe:
-    # `.rdd.getNumPartitions()` pays a full physical-planning pass on
-    # the join-plus-hyperplane subtree, measured 0.92 s per fresh
-    # call — ~90% of this query's 1.0 s baseline, and single-threaded
-    # JVM planning that does NOT scale with the machine factor, which
-    # is exactly why the r8 bench read d10 at 1.57x normalized while
-    # every compute-bound row normalized clean (calm interleaved
-    # cal/query A/B r9: d10 1.64 s at machine factor ~1.03 with AUTO
-    # vs 1.0 s baseline; the probe was the whole regression).
-    joined = chunked_self_join(
-        embb, key_cols=["bucket"], order_col="vec_id", repartition_probe=False
-    )
+    # so each bucket's k²/2 pair generation would run inside ONE task.
+    # Embedding rows are WIDE (dim doubles) and the valve replicates
+    # left-side rows ~C/2 times through the join shuffle — but the
+    # per-pair cost here is a 64-element HOF dot product, so compute
+    # balance beats shuffle bytes and the default C stays (joins.py
+    # documents the model). The other half of the 100 TB story is
+    # sizing: planes must grow with the corpus so bucket size stays
+    # bounded — planes ≈ log2(n / target) — while this corpus pins
+    # ANN_PLANES=4 for oracle comparability. embb comes off
+    # _with_norm's vec_id repartition, so the probe needs no exchange.
+    joined = chunked_self_join(embb, key_cols=["bucket"], order_col="vec_id")
     cos = _dot(F.col("a.e"), F.col("b.e")) / (F.col("a.nrm") * F.col("b.nrm"))
-    fwd = F.col("a.vec_id") < F.col("b.vec_id")
-    pairs = (
-        joined.select(
-            F.when(fwd, F.col("a.vec_id")).otherwise(F.col("b.vec_id")).alias("a_id"),
-            F.when(fwd, F.col("b.vec_id")).otherwise(F.col("a.vec_id")).alias("b_id"),
-            cos.alias("cos"),
-        )
-        .filter(F.col("cos") >= NEARDUP_THRESHOLD)
-    )
+    pairs = joined.select(
+        F.col("a.vec_id").alias("a_id"), F.col("b.vec_id").alias("b_id"), cos.alias("cos")
+    ).filter(F.col("cos") >= NEARDUP_THRESHOLD)
     return (
         pairs.groupBy(F.col("b_id").alias("dup_id"))
         .agg(

@@ -17,6 +17,7 @@ and the ORDER BY tails here exist only for oracle determinism.
 from __future__ import annotations
 
 import os
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -28,7 +29,11 @@ from indexr_spark.functions.text import (
     shingles,
     tokens,
 )
-from indexr_spark.functions.joins import cap_buckets, chunked_self_join
+from indexr_spark.functions.joins import (
+    cap_buckets,
+    chunked_self_join,
+    first_match_band,
+)
 from indexr_spark.tables import load_table, spread_scan
 
 ORACLE: dict[str, str] = {}
@@ -57,12 +62,11 @@ JACCARD_NGRAM = 2
 JACCARD_THRESHOLD = 0.1
 # d09 bitset-verify valve: the packed-bitmap Jaccard verify needs a
 # driver-collected dictionary of DISTINCT shingle hashes; beyond this
-# cap (16 bitmap longs/doc, a 2,048-literal map) the vocabulary is
+# cap (64 bitmap longs/doc, a 4,096-entry map) the vocabulary is
 # treated as web-scale and the verify keeps the array_intersect form.
-# The map is analyzed once per bitmap word, so analysis grows
-# quadratically with the vocabulary: 1024 is the largest size measured
-# to stay at sf0.1's cost (CHANGES.md, the cap measurement).
-D09_BITSET_VOCAB_CAP = 1024
+# The map appears once in the plan, so analysis is linear in the
+# vocabulary (CHANGES.md, the cap measurement).
+D09_BITSET_VOCAB_CAP = 4096
 SIMHASH_BITS = 32
 
 
@@ -469,15 +473,14 @@ def _group_band_sigs(groups: DataFrame, bands: int) -> DataFrame:
 def _lsh_group_pairs(
     groups: DataFrame, bands: int, max_bucket: int | None = None
 ) -> DataFrame:
-    """Distinct cross-group candidate pairs (ga, gb) via the banded
-    bucket join over unique token sets.
+    """Distinct cross-group candidate pairs (ga, gb), rep(ga) <
+    rep(gb), via the banded bucket join over unique token sets.
 
-    First-match-band dedup: a pair colliding in k bands would appear
-    k times; instead of a 2.8M-row `.distinct()` shuffle (measured
-    +3.5 s at sf0.1), each joined row keeps the pair iff the current
-    band is the FIRST band where the two signature arrays agree — an
-    in-row zip_with/array_position predicate, so every pair survives
-    exactly once and no dedup shuffle exists at all.
+    First-match-band dedup: a pair colliding in k bands is joined k
+    times; each joined row keeps the pair iff its band is the FIRST
+    band where the two signature arrays agree (joins.first_match_band
+    over literal sigs[j] compares), so every pair survives exactly
+    once and no dedup shuffle exists at all.
 
     `max_bucket` is the scale valve for pathological corpora: a
     (band, sig) bucket of k unique sets emits k²/2 pairs, so one
@@ -486,64 +489,38 @@ def _lsh_group_pairs(
     drop is LOGGED with bucket count and forgone-pair estimate —
     never a silent cap. Off by default: the oracle-matched operators
     (d07/d09) need the exact pair set; a 100 TB run sets it to keep
-    the worst bucket bounded. Capped mode materializes the signature
-    frame once (localCheckpoint) — the bucket census is a real job —
-    and dedups pairs with a distinct() instead of the first-match
-    predicate: a pair whose FIRST agreeing band was capped away must
-    still surface through a surviving later band, which first-match
-    (computed over the full signature arrays) would wrongly drop.
+    the worst bucket bounded. Capped mode dedups pairs with a
+    distinct() instead of the first-match predicate: a pair whose
+    FIRST agreeing band was capped away must still surface through a
+    surviving later band, which first-match (computed over the full
+    signature arrays) would wrongly drop.
     """
     # ALWAYS materialize the signature frame: the self-join consumes it
     # on BOTH sides, and ReusedExchange only dedups up to the exchange
     # boundary — the minhash projection (16 interpreted HOF transforms
     # per group, the most CPU-dense expression in the pipeline) sits
-    # ABOVE the groups exchange and would run once per side (measured:
-    # the d09-banded join dropped 8.2 s → 4.2 s at sf0.1 when sigs
-    # stopped being double-built). In capped mode the checkpoint also
-    # lets the bucket census and the join read one run.
+    # ABOVE the groups exchange and would run once per side. In capped
+    # mode the checkpoint also lets the bucket census and the join
+    # read one run.
     sigs = _group_band_sigs(groups, bands).localCheckpoint()
     if max_bucket is not None:
         sigs = cap_buckets(sigs, ["band", "sig"], max_bucket)
-    # Chunked self-join — the quadratic-bucket SKEW fix. A (band, sig)
-    # bucket of k sets emits k(k-1)/2 pairs inside ONE join task; on
-    # this corpus the top 4 buckets (k≈1300-1800) produce 90% of 5.4M
-    # pairs, serializing the join on 4 of 32 cores (measured 4.2 s).
-    # chunked_self_join spreads each bucket's pair generation over ~C
-    # tasks (pairing invariant documented in functions/joins.py);
-    # orientation is then restored by rep so downstream semantics are
-    # bit-identical to the unchunked join. This is the same valve a
-    # 1000-executor run needs: without it the largest bucket IS the
-    # straggler. Sig rows are thin, so the default C (= cores) costs
-    # negligible replicated bytes.
-    # repartition_probe: explicit False in CAPPED mode — the capped
-    # sigs frame descends from the anti-join (planned 1-partition at
-    # small scale, which trips the auto guard) but the pair stream is
-    # dedup-shuffled by the distinct() below and jaccard_pairs-style
-    # consumers respread it again, so the guard's exchange is pure
-    # double-pay here (measured, controlled docs10x A/B: guard-auto
-    # [13.2, 9.3] s vs False [8.7, 8.5] s for the identical 202,872
-    # capped pairs — ~8% steady tax once cold-JIT is excluded).
-    # Uncapped mode keeps the auto default: its probe comes straight
-    # off the distributed checkpoint and the guard stays silent; its
-    # job is catching SILENT serial probes, worth 0.1 s of plan check.
+    # The chunk valve: the top few (band, sig) buckets hold most of the
+    # pairs, and a plain join generates each inside one task. Sig rows
+    # are thin, so the default C (= cores) costs negligible replicated
+    # bytes, and the checkpointed frame is already spread (see
+    # _group_band_sigs), so the probe needs no exchange.
     joined = chunked_self_join(
-        sigs,
-        key_cols=["band", "sig"],
-        order_col="rep",
-        chunk_col="gid",
-        repartition_probe=False if max_bucket is not None else None,
+        sigs, key_cols=["band", "sig"], order_col="rep", chunk_col="gid"
     )
-    fwd = F.col("a.rep") < F.col("b.rep")  # restore rep-orientation
-    ga = F.when(fwd, F.col("a.gid")).otherwise(F.col("b.gid")).alias("ga")
-    gb = F.when(fwd, F.col("b.gid")).otherwise(F.col("a.gid")).alias("gb")
+    pairs = [F.col("a.gid").alias("ga"), F.col("b.gid").alias("gb")]
     if max_bucket is not None:
         # surviving-band collisions must all count; dedup by value
-        return joined.select(ga, gb).distinct()
-    first_match = F.array_position(
-        F.zip_with(F.col("a.sigs"), F.col("b.sigs"), lambda x, y: x == y),
-        F.lit(True),
+        return joined.select(*pairs).distinct()
+    first = first_match_band(
+        "a.band", bands, lambda j: F.col("a.sigs")[j] == F.col("b.sigs")[j]
     )
-    return joined.filter(first_match == F.col("a.band") + 1).select(ga, gb)
+    return joined.filter(first).select(*pairs)
 
 
 def _lsh_doc_pairs(
@@ -616,24 +593,38 @@ def d07_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("a_id", "b_id")
 
 
-ORACLE["d07_minhash_lsh"] = f"""
-WITH tok AS (
+def _duck_minhash_sigs(bands: int, mh_comment: str = "") -> str:
+    """The DuckDB replay of _minhash_band_sigs at `bands`: the CTE chain
+    tok → h → seeded → mh → sigs(doc_id, band, sig), without the leading
+    WITH so an oracle can make it RECURSIVE and append its own CTEs.
+    `mh_comment` is SQL comment text opening the mh CTE."""
+    return f"""tok AS (
   SELECT doc_id, unnest(list_distinct({_DUCK_TOKS})) AS tok FROM documents
 ), h AS (
   SELECT doc_id, ('0x' || substr(md5(tok), 1, 8))::BIGINT AS h FROM tok
 ), seeded AS (
   SELECT doc_id, h, unnest(range(0, {MINHASH_SEEDS})) AS seed FROM h
 ), mh AS (
-  -- universal hash family over the base hash: (A_j*h + B_j) mod P,
-  -- A_j = 999961 + 2*seed, B_j = 997*(seed+1) — matches MINHASH_A/B
-  SELECT doc_id, seed,
+{mh_comment}  SELECT doc_id, seed,
          min((h * (999961 + 2 * seed) + 997 * (seed + 1)) % {MINHASH_P}) AS minh
   FROM seeded GROUP BY doc_id, seed
 ), sigs AS (
-  SELECT doc_id, seed // {MINHASH_SEEDS // MINHASH_BANDS} AS band,
+  SELECT doc_id, seed // {MINHASH_SEEDS // bands} AS band,
          string_agg(CAST(minh AS VARCHAR), ',' ORDER BY seed) AS sig
   FROM mh GROUP BY doc_id, band
-)
+)"""
+
+
+# The candidate pairs over `sigs`: docs sharing any band signature.
+_DUCK_SIG_PAIRS = """SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
+  FROM sigs a JOIN sigs b ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id"""
+
+
+_D07_MH_COMMENT = """  -- universal hash family over the base hash: (A_j*h + B_j) mod P,
+  -- A_j = 999961 + 2*seed, B_j = 997*(seed+1) — matches MINHASH_A/B
+"""
+ORACLE["d07_minhash_lsh"] = f"""
+WITH {_duck_minhash_sigs(MINHASH_BANDS, _D07_MH_COMMENT)}
 SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
 FROM sigs a JOIN sigs b
   ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
@@ -857,31 +848,38 @@ def jaccard_pairs(
     )
     if len(vocab) <= D09_BITSET_VOCAB_CAP:
         n_words = max(1, (len(vocab) + 63) // 64)
-        idx_map = F.create_map(
-            *[c for h, i in ((h, i) for i, h in enumerate(vocab)) for c in (F.lit(h), F.lit(i))]
+        # one JVM call for the whole dictionary (F.lit per entry is a
+        # Py4J round trip each)
+        idx_map = F.expr(
+            "map(" + ", ".join(f"{h}L, {i}" for i, h in enumerate(vocab)) + ")"
         )
         # bit 63 is long MIN_VALUE in two's complement — 1<<63 would
         # overflow the signed-long literal the JVM side parses
         bit_lit = F.lit([(1 << k) if k < 63 else -(1 << 63) for k in range(64)])
-        idxs = F.transform("shs", lambda h: F.element_at(idx_map, h))
 
         def word(w: int) -> Column:
             # OR of 1<<(idx%64) over this word's indices; the 64-entry
             # bit-value literal avoids a dynamic shiftleft (Python-API
             # shiftleft takes only a literal shift count).
             return F.aggregate(
-                F.filter(idxs, lambda x: F.shiftright(x, 6) == F.lit(w)),
+                F.filter("idx", lambda x: F.shiftright(x, 6) == F.lit(w)),
                 F.lit(0).cast("long"),
                 lambda acc, x: acc.bitwiseOR(F.element_at(bit_lit, (x % 64) + 1)),
             )
 
-        # doc-count-sized (5,000 × ~(4 + v/8) bytes); pinned so the two
-        # broadcast legs don't re-run the 931-entry map lookups per side
-        bits = shs.select(
-            "doc_id",
-            F.size("shs").alias("n"),
-            F.array(*[word(w) for w in range(n_words)]).alias("bm"),
-        ).localCheckpoint()
+        # The index array is projected ONCE, so the dictionary literal
+        # appears once in the plan, not once per word: analysis stays
+        # linear in the vocabulary. Doc-count-sized; pinned so the two
+        # broadcast legs don't re-run the map lookups per side.
+        bits = (
+            shs.select(
+                "doc_id",
+                F.size("shs").alias("n"),
+                F.transform("shs", lambda h: F.element_at(idx_map, h)).alias("idx"),
+            )
+            .select("doc_id", "n", F.array(*[word(w) for w in range(n_words)]).alias("bm"))
+            .localCheckpoint()
+        )
         a = F.broadcast(
             bits.select(
                 F.col("doc_id").alias("a_id"),
@@ -965,30 +963,29 @@ def neardup_against_store(
     hashes to MinHash: candidate (batch, store) pairs form where any
     band signature collides, then the MinHash-estimated Jaccard (the
     share of agreeing seeds — unbiased estimator of J) gates them.
-    Returns (doc_id, store_id, est_jaccard). Both inputs are
-    doc_band_sigs frames — 0-based band numbering with every doc
-    carrying a band-0 row, which the mhs re-attach relies on (a
-    row-filtered subset of a doc_band_sigs frame is fine as long as
-    docs keep all their band rows) — (the store side persisted; at
-    100 TB it is a
+    Returns (doc_id, store_id, est_jaccard), one row per pair. Both
+    inputs are doc_band_sigs frames, which stamp their banding in
+    `n_bands`; a row-filtered subset is fine as long as docs keep all
+    their band rows, because a pair is emitted only from its first
+    agreeing band. The store side is persisted; at 100 TB it is a
     snapshot table bucketed on (band, sig), making the store side of
     the candidate join shuffle-free, and the batch side is
     micro-batch-sized — the topology of streaming/dedup.dedup_store_sink
-    with a band-bucket join in place of the hash anti-join).
+    with a band-bucket join in place of the hash anti-join.
 
     `max_bucket` is the d07 valve: store-side (band, sig) buckets
     larger than the cap are EXCLUDED from candidate generation with a
     warning (never silently) — one boilerplate signature colliding
     with everything is the classic skew bomb in production near-dup.
+    Capped mode dedups the thin verified pairs instead of applying the
+    first-match predicate: a pair whose first agreeing band was capped
+    away must still surface through a surviving later band.
     """
     # structural banding guard: frames built at different bandings
     # produce (band, sig) keys that essentially never collide, and the
     # result would be a silent empty candidate set — refuse instead.
-    # head() reads a single row per side (one row-group at any scale);
-    # legacy frames without the column skip the check.
+    # head() reads a single row per side (one row-group at any scale).
     def _bands_of(df: DataFrame) -> int | None:
-        if "n_bands" not in df.columns:
-            return None
         r = df.select("n_bands").head()
         return None if r is None else int(r["n_bands"])
 
@@ -1002,48 +999,24 @@ def neardup_against_store(
     store = store_sigs
     if max_bucket is not None:
         store = cap_buckets(store, ["band", "sig"], max_bucket)
-    # THIN-pair candidate dedup: the band join emits one row per
-    # colliding band, so pairs must dedup — but deduping rows that
-    # carry both 16-long minhash arrays shuffles candidate_count x
-    # 2x16 longs (measured 9.6 s at sf0.1's 14M candidates). Emitting
-    # (doc_id, store_id) ONLY, deduping thin, and re-attaching the two
-    # arrays afterwards from doc-count-sized side maps runs the same
-    # semantics at 3.0 s. (The in-row first-match-band trick that
-    # kills this shuffle entirely in simhash_pairs measured SLOWER
-    # here — 15 s — because deriving "did band j collide" from the
-    # arrays costs interpreted slice/forall HOFs per candidate,
-    # whereas simhash band slices are two integer ops.) The batch map
-    # broadcasts by contract (a micro-batch); the store map is left
-    # to AQE — corpus-sized at 100 TB, where it joins the deduped
-    # pairs hash-on-store_id (bucketable, like the store itself).
-    # (r13 measured, not adopted: packing the pair into one radix-2^31
-    # long before the dedup — halving the agg key width — A/B'd
-    # new_min 4.03 s vs old_min 3.56 s over 6 interleaved passes at
-    # sf0.1's 3.56M unique pairs; no clear win, and the radix adds a
-    # 2.1B-docs-per-side ceiling the two-column form doesn't have.)
-    cand = (
-        batch_sigs.select("band", "sig", "doc_id")
-        .join(
-            store.select("band", "sig", F.col("doc_id").alias("store_id")),
-            ["band", "sig"],
-        )
-        .select("doc_id", "store_id")
-        .dropDuplicates(["doc_id", "store_id"])
+    cand = batch_sigs.select("band", "sig", "doc_id", "mhs").join(
+        store.select(
+            "band", "sig", F.col("doc_id").alias("store_id"), F.col("mhs").alias("store_mhs")
+        ),
+        ["band", "sig"],
     )
-    # Re-attach maps via the band-0 slice, NOT dropDuplicates: a
-    # doc_band_sigs frame carries the full mhs array on EVERY band row
-    # and every doc has exactly one band-0 row (posexplode over a
-    # never-empty sigs array), so `band = 0` is already one row per
-    # doc — a pure pushed-down filter. dropDuplicates here compiles to
-    # first(mhs) whose ARRAY buffer falls off hash aggregation: the
-    # r8 10x run showed 4 SortAggregates + their Sorts feeding full
-    # sorts of a 344M-row-adjacent stream (the r8 verdict's named perf
-    # lead). The thin cand dedup above stays a HashAggregate.
-    batch_map = batch_sigs.filter(F.col("band") == 0).select("doc_id", "mhs")
-    store_map = store_sigs.filter(F.col("band") == 0).select(
-        F.col("doc_id").alias("store_id"), F.col("mhs").alias("store_mhs")
-    )
-    cand = cand.join(F.broadcast(batch_map), "doc_id").join(store_map, "store_id")
+    if max_bucket is None:
+        # an empty side (bands unknown) joins to nothing
+        bands = ba or bs or 1
+        rows = MINHASH_SEEDS // bands
+
+        def band_agrees(j: int) -> Column:
+            return reduce(
+                Column.__and__,
+                [F.col("mhs")[k] == F.col("store_mhs")[k] for k in range(j * rows, (j + 1) * rows)],
+            )
+
+        cand = cand.filter(first_match_band("band", bands, band_agrees))
     agree = F.size(
         F.filter(
             F.zip_with(F.col("mhs"), F.col("store_mhs"), lambda a, b: a == b),
@@ -1051,33 +1024,18 @@ def neardup_against_store(
         )
     )
     est = agree.cast("double") / F.lit(MINHASH_SEEDS)
-    return (
-        cand.withColumn("est_jaccard", F.round(est, 6))
-        .filter(est >= est_threshold)
-        .select("doc_id", "store_id", "est_jaccard")
+    pairs = cand.filter(est >= est_threshold).select(
+        "doc_id", "store_id", F.round(est, 6).alias("est_jaccard")
     )
+    # capped: surviving-band collisions must all count; dedup by value
+    return pairs if max_bucket is None else pairs.distinct()
 
 
 # The shared candidate CTE chain (at d09's 4x4 banding) + exact
 # verify over list_intersect.
 ORACLE["d09_ngram_jaccard"] = f"""
-WITH tok AS (
-  SELECT doc_id, unnest(list_distinct({_DUCK_TOKS})) AS tok FROM documents
-), h AS (
-  SELECT doc_id, ('0x' || substr(md5(tok), 1, 8))::BIGINT AS h FROM tok
-), seeded AS (
-  SELECT doc_id, h, unnest(range(0, {MINHASH_SEEDS})) AS seed FROM h
-), mh AS (
-  SELECT doc_id, seed,
-         min((h * (999961 + 2 * seed) + 997 * (seed + 1)) % {MINHASH_P}) AS minh
-  FROM seeded GROUP BY doc_id, seed
-), sigs AS (
-  SELECT doc_id, seed // {MINHASH_SEEDS // JACCARD_BANDS} AS band,
-         string_agg(CAST(minh AS VARCHAR), ',' ORDER BY seed) AS sig
-  FROM mh GROUP BY doc_id, band
-), cand AS (
-  SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-  FROM sigs a JOIN sigs b ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
+WITH {_duck_minhash_sigs(JACCARD_BANDS)}, cand AS (
+  {_DUCK_SIG_PAIRS}
 ), shs AS (
   SELECT doc_id, list_distinct(list_transform(
     list_transform(range(1, len({_DUCK_TOKS})),
@@ -1354,23 +1312,8 @@ def d12_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE["d12_dup_clusters"] = f"""
-WITH RECURSIVE tok AS (
-  SELECT doc_id, unnest(list_distinct({_DUCK_TOKS})) AS tok FROM documents
-), h AS (
-  SELECT doc_id, ('0x' || substr(md5(tok), 1, 8))::BIGINT AS h FROM tok
-), seeded AS (
-  SELECT doc_id, h, unnest(range(0, {MINHASH_SEEDS})) AS seed FROM h
-), mh AS (
-  SELECT doc_id, seed,
-         min((h * (999961 + 2 * seed) + 997 * (seed + 1)) % {MINHASH_P}) AS minh
-  FROM seeded GROUP BY doc_id, seed
-), sigs AS (
-  SELECT doc_id, seed // {MINHASH_SEEDS // MINHASH_BANDS} AS band,
-         string_agg(CAST(minh AS VARCHAR), ',' ORDER BY seed) AS sig
-  FROM mh GROUP BY doc_id, band
-), e AS (
-  SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-  FROM sigs a JOIN sigs b ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
+WITH RECURSIVE {_duck_minhash_sigs(MINHASH_BANDS)}, e AS (
+  {_DUCK_SIG_PAIRS}
 ), und AS (
   SELECT a_id AS u, b_id AS v FROM e UNION SELECT b_id, a_id FROM e
 ), reach(s, t) AS (
@@ -1713,23 +1656,8 @@ def d20_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # d12's recursive-CTE components + d03's quality expression + top-1.
 ORACLE["d20_cluster_keep_best"] = f"""
-WITH RECURSIVE tok AS (
-  SELECT doc_id, unnest(list_distinct({_DUCK_TOKS})) AS tok FROM documents
-), h AS (
-  SELECT doc_id, ('0x' || substr(md5(tok), 1, 8))::BIGINT AS h FROM tok
-), seeded AS (
-  SELECT doc_id, h, unnest(range(0, {MINHASH_SEEDS})) AS seed FROM h
-), mh AS (
-  SELECT doc_id, seed,
-         min((h * (999961 + 2 * seed) + 997 * (seed + 1)) % {MINHASH_P}) AS minh
-  FROM seeded GROUP BY doc_id, seed
-), sigs AS (
-  SELECT doc_id, seed // {MINHASH_SEEDS // MINHASH_BANDS} AS band,
-         string_agg(CAST(minh AS VARCHAR), ',' ORDER BY seed) AS sig
-  FROM mh GROUP BY doc_id, band
-), e AS (
-  SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-  FROM sigs a JOIN sigs b ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
+WITH RECURSIVE {_duck_minhash_sigs(MINHASH_BANDS)}, e AS (
+  {_DUCK_SIG_PAIRS}
 ), und AS (
   SELECT a_id AS u, b_id AS v FROM e UNION SELECT b_id, a_id FROM e
 ), reach(s, t) AS (
@@ -2731,13 +2659,12 @@ def simhash_pairs(
     # per-token md5 + per-bit majority HOFs), Catalyst substitutes that
     # whole chain into every downstream reference — the join condition
     # and the verify filter then re-derive the simhash FROM THE TOKENS
-    # per candidate row (measured: 8.7M candidates at sf0.1 took
-    # 8.65 s un-checkpointed vs 0.44 s checkpointed — a 20x tax). Two
-    # longs per doc, so the pin is corpus-row-sized, not corpus-sized
-    # — the production shape persists the simhash column anyway.
+    # per candidate row. Two longs per doc, so the pin is
+    # corpus-row-sized, not corpus-sized — the production shape
+    # persists the simhash column anyway.
     # Lazy: the guard's max() below is the job that materializes it.
     sim_df = sim_df.select("doc_id", "simhash").localCheckpoint(eager=False)
-    # Width-compatibility guard (r10 ADVICE): feeding a narrower
+    # Width-compatibility guard: feeding a narrower
     # frame than `bits` (e.g. a 32-bit simhash_frame at bits=60)
     # makes every band above the frame's real width all-zero, so all
     # docs collide in those bands and the candidate stream silently
@@ -2773,60 +2700,31 @@ def simhash_pairs(
         # available (and exact — longs, not doubles)
         return F.shiftright(col, j * width).bitwiseAND(F.lit(mask))
 
-    slices = F.array(
-        *[
-            F.struct(F.lit(b).alias("band"), _band_slice(F.col("simhash"), b).alias("v"))
-            for b in range(bands)
-        ]
-    )
-    ex = sim_df.select("doc_id", "simhash", F.explode(slices).alias("s")).select(
-        "doc_id", "simhash", F.col("s.band").alias("band"), F.col("s.v").alias("v")
-    )
+    slices = F.array(*[_band_slice(F.col("simhash"), b) for b in range(bands)])
+    ex = sim_df.select("doc_id", "simhash", F.posexplode(slices).alias("band", "v"))
     # chunked_self_join, NOT a plain (band, v) self-join: band values
     # are only `width` bits, so buckets are corpus_size/2^width on
     # AVERAGE and far worse on dup-heavy corpora (identical hashes
     # share every band) — a plain join serializes each bucket's
-    # quadratic pair generation into one task (measured: >400 s at
-    # 50k docs; the valve brings the same output to ~80 s).
+    # quadratic pair generation into one task.
     # repartition_probe: the exploded frame descends from the narrow
     # checkpoint (often 1 partition at small scale) and the join
     # broadcasts, so without it the whole candidate probe serializes
-    # into one task (joins.py documents the measured 4x)
+    # into one task.
     j = chunked_self_join(
         ex, ["band", "v"], order_col="doc_id", repartition_probe=True
     )
-    # orientation: chunked emission order is not normalized; hamming
-    # is symmetric, so normalize ids with least/greatest
-    pairs = j.select(
-        F.least(F.col("a.doc_id"), F.col("b.doc_id")).alias("a_id"),
-        F.greatest(F.col("a.doc_id"), F.col("b.doc_id")).alias("b_id"),
-        F.col("a.band").alias("band"),  # == b.band (the join key)
-        F.col("a.simhash").alias("a_sh"),
-        F.col("b.simhash").alias("b_sh"),
+    a_sh, b_sh = F.col("a.simhash"), F.col("b.simhash")
+    # first-match-band dedup, fully in-row: both hashes ride the
+    # joined row, and band slices are literal shifts
+    first = first_match_band(
+        "a.band", bands, lambda jj: _band_slice(a_sh, jj) == _band_slice(b_sh, jj)
     )
-    # FIRST-MATCH-BAND dedup (d07's trick, but fully in-row because
-    # both hashes ride the joined row): a pair emits only from the
-    # LOWEST band where the two hashes agree — every lower band must
-    # differ — so each pair appears exactly once and no dropDuplicates
-    # shuffle exists. Spelled as a literal CASE over the band domain
-    # (`bands` is a small Python int), so every lower-band comparison
-    # uses literal shifts and stays inside whole-stage codegen; a HOF
-    # lambda over the band index would be interpreted per candidate
-    # row (COVERAGE.md "simhash100x": ~20x per candidate).
-    cases = F.when(F.col("band") == 0, F.lit(True))
-    for b in range(1, bands):
-        differs = F.lit(True)
-        for jj in range(b):
-            differs = differs & (
-                _band_slice(F.col("a_sh"), jj) != _band_slice(F.col("b_sh"), jj)
-            )
-        cases = cases.when(F.col("band") == b, differs)
-    lower_all_differ = cases.otherwise(F.lit(False))  # band ∈ [0, bands)
-    ham = F.bit_count(F.col("a_sh").bitwiseXOR(F.col("b_sh")))
-    return (
-        pairs.withColumn("hamming", ham.cast("int"))
-        .filter((F.col("hamming") <= max_hamming) & lower_all_differ)
-        .select("a_id", "b_id", "hamming")
+    ham = F.bit_count(a_sh.bitwiseXOR(b_sh))
+    return j.filter((ham <= max_hamming) & first).select(
+        F.col("a.doc_id").alias("a_id"),
+        F.col("b.doc_id").alias("b_id"),
+        ham.cast("int").alias("hamming"),
     )
 
 
@@ -3108,13 +3006,10 @@ def d33_neardup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly that key, making ingestion near-dup shuffle-free on the
     100 TB side (neardup_against_store's docstring argues the
     topology; this row pins the semantics)."""
-    # r14 opt (guide §2.5 input parallelism): documents.parquet at
-    # sf0.1 is 0.6 MB — ONE scan task — and without a respread the
-    # checkpointed sig frames stay 1-partition, so the band join's
-    # 14M collision rows and the pair-dedup's partial aggregation all
-    # ran on a single core (measured: the dedup stage alone at 6.5-7 s
-    # cold; d09's pipeline avoids this with the same spread_scan).
-    # Repartition cost is bounded by the scan itself (see spread_scan);
+    # documents.parquet at sf0.1 is 0.6 MB — ONE scan task — and
+    # without a respread the checkpointed sig frames stay 1-partition,
+    # so the band join's 14M collision rows ran on a single core (d09's
+    # pipeline avoids this with the same spread_scan). Repartition cost is bounded by the scan itself (see spread_scan);
     # at 100 TB the store scans thousands of partitions wide and this
     # is a no-op.
     d = spread_scan(load_table(spark, sf_dir, "documents"))
@@ -4008,28 +3903,20 @@ def dup_spans(
     # removes BEFORE the join: with a cap, per-key output is bounded
     # by C(cap,2); without one, exact mode is the oracle-parity
     # contract for corpora small enough to enumerate every pair
-    # anyway. pk ordering keeps chunked_self_join's emission
-    # contract: each unordered pair of distinct rows exactly once.
+    # anyway. pk ordering emits each unordered pair of distinct rows
+    # exactly once.
     j = pos.alias("a").join(
         pos.alias("b"),
         (F.col("a.gh") == F.col("b.gh")) & (F.col("a.pk") < F.col("b.pk")),
     )
-    # Orient pairs and drop same-doc anchors — within-doc repetition
-    # is d16's contract, not this one's. With the plain a.pk < b.pk
-    # join and doc_id packed in pk's high bits, cross-doc pairs
-    # already arrive with a.doc_id < b.doc_id (fwd is always true);
-    # the explicit when() is kept as a join-form-independent guard so
-    # orientation stays correct if the join ever reverts to an
-    # unordered emitter (chunked_self_join's contract).
-    fwd = F.col("a.doc_id") < F.col("b.doc_id")
-    anchors = (
-        j.filter(F.col("a.doc_id") != F.col("b.doc_id"))
-        .select(
-            F.when(fwd, F.col("a.doc_id")).otherwise(F.col("b.doc_id")).alias("doc_a"),
-            F.when(fwd, F.col("b.doc_id")).otherwise(F.col("a.doc_id")).alias("doc_b"),
-            F.when(fwd, F.col("a.pos")).otherwise(F.col("b.pos")).alias("ai"),
-            F.when(fwd, F.col("b.pos")).otherwise(F.col("a.pos")).alias("bi"),
-        )
+    # Drop same-doc anchors — within-doc repetition is d16's contract,
+    # not this one's. doc_id fills pk's high bits, so a.pk < b.pk
+    # across docs already means a.doc_id < b.doc_id.
+    anchors = j.filter(F.col("a.doc_id") != F.col("b.doc_id")).select(
+        F.col("a.doc_id").alias("doc_a"),
+        F.col("b.doc_id").alias("doc_b"),
+        F.col("a.pos").alias("ai"),
+        F.col("b.pos").alias("bi"),
     )
     from pyspark.sql import Window as W
 

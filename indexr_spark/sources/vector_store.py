@@ -417,295 +417,3 @@ def suggest_rerank_from(
     if row["q"] is None:
         return k
     return max(k, math.ceil(float(row["q"]) * headroom))
-
-
-# ---------------------------------------------------------------------------
-# s14 draft (register when the window allows — REGISTRY.md): the FULL
-# IVF-PQ probe path — coarse cosine assign, residual PQ encode, ADC
-# shortlist, exact-cosine rerank — with every model artifact (coarse
-# centroids, PQ codebooks, query vectors, probed-cell choices, ADC
-# tables) FIXED by deterministic formulas and inlined identically into
-# both engines, the s13/d35 protocol one level up. What the row
-# certifies is the probe's MATH end-to-end: the same vector must land
-# in the same cell, quantize to the same code, score the same ADC
-# distance, survive the same R-boundary, and rank the same under exact
-# rerank in Spark and DuckDB. Training quality and the two-phase
-# columnar economics of the persisted store stay pinned where they
-# already are (tests/test_pq.py, tests/test_ivfpq.py) — a fixed model
-# decouples this row from both, exactly as d35 decoupled encode from
-# d34's training.
-#
-# Cross-engine arithmetic surface, kept deliberately tiny: the ADC
-# tables are computed ONCE driver-side in Python (adc_tables over
-# exact quarter-valued query residuals) and enter both plans as
-# literals, so a candidate's ADC distance is m=4 table lookups summed
-# left-to-right in both engines — bit-identical by construction. The
-# only engine-side floating point is the three dot products s13/s01
-# already certify (assignment dot, residual-subspace dot, rerank dot);
-# the first two are BLAS sums on the Spark side, the rerank dot is a
-# left-to-right fold in both engines.
-
-S14_NLIST, S14_NPROBE, S14_R, S14_K, S14_NQ = 4, 2, 40, 5, 3
-
-
-def s14_centroids() -> list[list[float]]:
-    """Raw coarse centroids[S14_NLIST][S13_DIM] from a deterministic
-    integer formula — quarter-valued, exactly representable, so the
-    residual subtraction v − c is EXACT floating point."""
-    from indexr_spark.operators.pq import S13_DIM
-
-    return [
-        [((((c + 2) * (d + 7)) % 13) - 6) / 4.0 for d in range(S13_DIM)]
-        for c in range(S14_NLIST)
-    ]
-
-
-def s14_queries() -> list[list[float]]:
-    """Query vectors[S14_NQ][S13_DIM], quarter-valued by formula —
-    corpus-independent, so the probe choice and ADC tables derived
-    from them are pure literals on both sides."""
-    from indexr_spark.operators.pq import S13_DIM
-
-    return [
-        [((((q + 5) * (d + 11)) % 17) - 8) / 4.0 for d in range(S13_DIM)]
-        for q in range(S14_NQ)
-    ]
-
-
-def _s14_probe_rows() -> list[tuple]:
-    """Driver-side probe model, the single source of truth both engines
-    inline: one row per (q_id, probed cell) carrying the flat ADC
-    table over the query's EXACT residual against that cell, the query
-    vector, and its norm. Cell choice is cosine, ties → lower cell —
-    the _argmax_cell contract."""
-    from indexr_spark.operators.pq import adc_tables, s13_codebooks
-
-    cents = s14_centroids()
-    cbs = s13_codebooks()
-    cnorms = [math.sqrt(sum(x * x for x in c)) for c in cents]
-    rows = []
-    for qid, qv in enumerate(s14_queries()):
-        qn = math.sqrt(sum(x * x for x in qv))
-        scored = sorted(
-            (
-                (-sum(a * b for a, b in zip(qv, cv)) / (qn * cn), cell)
-                for cell, (cv, cn) in enumerate(zip(cents, cnorms))
-            )
-        )
-        for _, cell in scored[:S14_NPROBE]:
-            qres = [a - b for a, b in zip(qv, cents[cell])]
-            rows.append((qid, cell, adc_tables(qres, cbs), qv, qn))
-    return rows
-
-
-def _s14_coded_arrow(emb: DataFrame, cents: list[list[float]]) -> DataFrame:
-    """The s14 corpus side — norm, coarse cosine assign, residual
-    subtraction, PQ encode — in ONE Arrow mapInPandas pass (E·Cᵀ for
-    the assign, per-subspace matmul argmax for the codes). Centroids
-    are unit-scaled driver-side (_unit_scaled), np.argmax's first-max
-    breaks ties toward the smaller cell, residuals are taken against
-    the RAW quarter-valued centroids (exact float subtract), and codes
-    are argmax(2·dot − |c|²) with ties → lower code (pq_encode's
-    contract). BLAS sums dots in a different order than a
-    left-to-right fold, so only a value within an ulp of a rank
-    boundary could differ from the DuckDB oracle's."""
-    from indexr_spark.operators.pq import s13_codebooks
-    from indexr_spark.operators.similarity import _unit_scaled
-
-    books = [[list(map(float, c)) for c in cb] for cb in s13_codebooks()]
-    craw = [[float(x) for x in c] for c in cents]
-    cu = _unit_scaled(cents)
-
-    def batches(it):
-        # self-contained: executors don't import this package
-        import numpy as np
-        import pandas as pd
-
-        Cu = np.asarray(cu, dtype=np.float64)
-        Craw = np.asarray(craw, dtype=np.float64)
-        cbs = [np.asarray(cb, dtype=np.float64) for cb in books]
-        n2s = [(cb * cb).sum(axis=1) for cb in cbs]
-        m, dsub = len(cbs), cbs[0].shape[1]
-        for pdf in it:
-            if not len(pdf):
-                continue
-            E = np.vstack(
-                [np.asarray(x, dtype=np.float64) for x in pdf["embedding"]]
-            )
-            nrm = np.sqrt(np.einsum("ij,ij->i", E, E))
-            cell = (E @ Cu.T).argmax(axis=1)
-            R = E - Craw[cell]
-            codes = np.empty((len(E), m), dtype=np.int64)
-            for j in range(m):
-                sub = R[:, j * dsub : (j + 1) * dsub]
-                codes[:, j] = np.argmax(2.0 * (sub @ cbs[j].T) - n2s[j], axis=1)
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"], "e": list(E), "nrm": nrm,
-                 "cell": cell.astype("int32"),
-                 "pq_code": [list(map(int, c)) for c in codes]}
-            )
-
-    prep = emb.repartition(
-        emb.sparkSession.sparkContext.defaultParallelism, "vec_id"
-    ).select("vec_id", "embedding")
-    return prep.mapInPandas(
-        batches,
-        "vec_id long, e array<double>, nrm double, cell int, pq_code array<int>",
-    )
-
-
-def s14_ivfpq_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The s14 registry form: fixed-model IVF-PQ probe over the
-    embeddings table — (q_id, rank, vec_id, cell, adc, cosine).
-
-    Plan shape is the production posture for a query BATCH: the probe
-    model is a broadcast table (q_id, cell, adc table, query vector),
-    so the candidate stream stays fully data-driven — cell assign +
-    residual PQ encode on the corpus side in one Arrow pass
-    (_s14_coded_arrow), one broadcast join on cell, m in-row table
-    lookups per candidate, and the only wide operations are the two
-    per-query ranking windows (ADC shortlist at R, exact rerank at k).
-    No when-chains: a thousand queries would run the identical plan."""
-    from pyspark.sql import Window as W
-
-    from indexr_spark.operators.pq import S13_KSUB, adc_distance
-    from indexr_spark.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    coded = _s14_coded_arrow(emb, s14_centroids())
-
-    probe = F.broadcast(
-        spark.createDataFrame(
-            _s14_probe_rows(),
-            "q_id long, cell int, t array<double>, qe array<double>, qn double",
-        )
-    )
-    adc = adc_distance(F.col("pq_code"), F.col("t"), S13_KSUB)
-    wa = W.partitionBy("q_id").orderBy("adc", "vec_id")
-    short = (
-        coded.join(probe, ["cell"])
-        .select("q_id", "vec_id", "cell", "e", "nrm", "qe", "qn", adc.alias("adc"))
-        .withColumn("arank", F.row_number().over(wa))
-        .filter(F.col("arank") <= S14_R)
-    )
-    cos = _dot(F.col("qe"), F.col("e")) / (F.col("qn") * F.col("nrm"))
-    wx = W.partitionBy("q_id").orderBy(F.desc("cos"), "vec_id")
-    return (
-        short.select("q_id", "vec_id", "cell", "adc", cos.alias("cos"))
-        .withColumn("rank", F.row_number().over(wx))
-        .filter(F.col("rank") <= S14_K)
-        .select(
-            "q_id",
-            "rank",
-            "vec_id",
-            "cell",
-            F.round("adc", 6).alias("adc"),
-            F.round("cos", 6).alias("cosine"),
-        )
-        .orderBy("q_id", "rank")
-    )
-
-
-def _s14_oracle_sql() -> str:
-    """DuckDB replay generated from the SAME Python model values —
-    centroid/codebook/table literals repr-round-trip, so the two
-    engines hold identical doubles. The ADC sum is written
-    t0+t1+t2+t3 (left-to-right) to match the Spark fold exactly."""
-    from indexr_spark.operators.pq import S13_DIM, S13_M, s13_codebooks
-
-    cents = s14_centroids()
-    units = _unit_scaled(cents)
-    dsub = S13_DIM // S13_M
-    cent_vals = ", ".join(
-        f"({c}, [{', '.join(repr(x) for x in cv)}]::DOUBLE[], "
-        f"[{', '.join(repr(x) for x in uv)}]::DOUBLE[])"
-        for c, (cv, uv) in enumerate(zip(cents, units))
-    )
-    cb_vals = ", ".join(
-        f"({j}, {code}, [{', '.join(repr(x) for x in cb)}]::DOUBLE[], "
-        f"{sum(x * x for x in cb)!r})"
-        for j, book in enumerate(s13_codebooks())
-        for code, cb in enumerate(book)
-    )
-    probe_rows = _s14_probe_rows()
-    qv_vals = ", ".join(
-        f"({qid}, [{', '.join(repr(x) for x in qv)}]::DOUBLE[], {qn!r})"
-        for qid, qv, qn in sorted(
-            {(q, tuple(qe), qn) for q, _, _, qe, qn in probe_rows}
-        )
-    )
-    adct_vals = ", ".join(
-        f"({qid}, {cell}, {j}, {code}, {t[j * len(s13_codebooks()[0]) + code]!r})"
-        for qid, cell, t, _, _ in probe_rows
-        for j in range(S13_M)
-        for code in range(len(s13_codebooks()[0]))
-    )
-    tjoins = " ".join(
-        f"JOIN adct t{j} ON t{j}.q_id = p.q_id AND t{j}.cell = c.cell "
-        f"AND t{j}.j = {j} AND t{j}.code = c.pq[{j + 1}]"
-        for j in range(S13_M)
-    )
-    adc_sum = " + ".join(f"t{j}.v" for j in range(S13_M))
-    return f"""
-WITH cent(cell, c, un) AS (VALUES {cent_vals}),
-cb(j, code, c, n2) AS (VALUES {cb_vals}),
-qv(q_id, qe, qn) AS (VALUES {qv_vals}),
-probes(q_id, cell) AS (
-  VALUES {", ".join(f"({q}, {cell})" for q, cell, *_ in probe_rows)}
-),
-adct(q_id, cell, j, code, v) AS (VALUES {adct_vals}),
-e AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-asg AS (
-  SELECT vec_id, e, cell FROM (
-    SELECT vec_id, e, cent.cell,
-           row_number() OVER (PARTITION BY vec_id
-                              ORDER BY list_dot_product(e, cent.un) DESC,
-                                       cent.cell) AS rn
-    FROM e CROSS JOIN cent) WHERE rn = 1
-),
-res AS (
-  SELECT vec_id, cell,
-         list_transform(generate_series(1, {S13_DIM}), i -> e[i] - cent.c[i]) AS r
-  FROM asg JOIN cent USING (cell)
-),
-sub AS (
-  SELECT vec_id, cell, j, r[j*{dsub}+1 : (j+1)*{dsub}] AS s
-  FROM res CROSS JOIN (SELECT unnest(range({S13_M})) AS j)
-),
-best AS (
-  SELECT vec_id, cell, sub.j, cb.code,
-         row_number() OVER (PARTITION BY vec_id, sub.j
-                            ORDER BY 2*list_dot_product(s, cb.c) - cb.n2 DESC,
-                                     cb.code) AS rn
-  FROM sub JOIN cb ON cb.j = sub.j
-),
-coded AS (
-  SELECT vec_id, cell, list(code ORDER BY j) AS pq
-  FROM best WHERE rn = 1 GROUP BY vec_id, cell
-),
-short AS (
-  SELECT q_id, vec_id, cell, adc FROM (
-    SELECT p.q_id, c.vec_id, c.cell, {adc_sum} AS adc,
-           row_number() OVER (PARTITION BY p.q_id
-                              ORDER BY {adc_sum}, c.vec_id) AS arank
-    FROM coded c JOIN probes p ON p.cell = c.cell {tjoins})
-  WHERE arank <= {S14_R}
-),
-rer AS (
-  SELECT s.q_id, s.vec_id, s.cell, s.adc,
-         list_dot_product(e.e, q.qe)
-           / (sqrt(list_dot_product(e.e, e.e)) * q.qn) AS cos
-  FROM short s JOIN e ON e.vec_id = s.vec_id JOIN qv q ON q.q_id = s.q_id
-)
-SELECT q_id,
-       CAST(row_number() OVER (PARTITION BY q_id
-                               ORDER BY cos DESC, vec_id) AS INTEGER) AS rank,
-       vec_id, CAST(cell AS INTEGER) AS cell,
-       round(adc, 6) AS adc, round(cos, 6) AS cosine
-FROM rer
-QUALIFY rank <= {S14_K}
-ORDER BY q_id, rank
-"""
-
-
-S14_ORACLE_DRAFT = _s14_oracle_sql()

@@ -1122,7 +1122,7 @@ def s14_50x(spark) -> None:
     exchange — the property this spot-run exists to time. Two runs:
     the first carries residual JIT (harness warm-up warms s06's IVF
     kernel, not the PQ encode expressions)."""
-    from indexr_spark.sources.vector_store import s14_ivfpq_probe
+    from indexr_spark.operators.pq import s14_ivfpq_probe
 
     sf = "/tmp/sfvec50"
     for i in range(2):

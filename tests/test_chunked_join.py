@@ -1,28 +1,26 @@
-"""Property pin for functions/joins.chunked_self_join — the pairing
-invariant (each unordered pair of same-key rows generated EXACTLY once,
-no self-pairs) that both the LSH candidate join and the embedding
-near-dup join rely on. A first-attempt variant of the same construction
-silently dropped pairs under version races in snapshots (different
-module, same class of subtle-join bug) — hence an exhaustive check here
-rather than an example test."""
+"""Property pins for functions/joins.chunked_self_join and
+first_match_band — the pairing contract (each unordered pair of
+same-key rows EXACTLY once, oriented by the order column, no
+self-pairs) that every banded near-dup producer relies on. A
+first-attempt variant of the same construction silently dropped pairs
+under version races in snapshots (different module, same class of
+subtle-join bug) — hence exhaustive checks against plain-Python
+references rather than example tests."""
 
 from __future__ import annotations
 
+import random
 from collections import Counter
 
 from pyspark.sql import functions as F
 
-from indexr_spark.functions.joins import chunked_self_join
+from indexr_spark.functions.joins import chunked_self_join, first_match_band
 
 
 def _pairs_via_chunked(spark, rows, C):
     df = spark.createDataFrame(rows, "k int, oid long")
     j = chunked_self_join(df, key_cols=["k"], order_col="oid", n_chunks=C)
-    fwd = F.col("a.oid") < F.col("b.oid")
-    out = j.select(
-        F.when(fwd, F.col("a.oid")).otherwise(F.col("b.oid")).alias("lo"),
-        F.when(fwd, F.col("b.oid")).otherwise(F.col("a.oid")).alias("hi"),
-    ).collect()
+    out = j.select(F.col("a.oid").alias("lo"), F.col("b.oid").alias("hi")).collect()
     return Counter((r.lo, r.hi) for r in out)
 
 
@@ -42,8 +40,8 @@ def _expected_pairs(rows):
 def test_every_unordered_pair_exactly_once_across_chunk_counts(spark):
     """Sweep chunk counts (1, 2, 3, 7, 32) over a dataset with skewed
     keys (one bucket of 12, one of 3, singletons, an empty-key gap):
-    the chunked join must emit exactly the same pair multiset as the
-    plain O(k^2) construction, for every C."""
+    the chunked join must emit exactly the same ORIENTED pair multiset
+    as the plain O(k^2) construction, for every C."""
     rows = (
         [(1, i) for i in range(12)]
         + [(2, 100 + i) for i in range(3)]
@@ -64,68 +62,50 @@ def test_duplicate_order_values_do_not_pair_with_self(spark):
     assert got == Counter({(7, 8): 1})
 
 
-def test_single_partition_probe_auto_repartitions_with_warning(spark):
-    """The silent failure mode the auto guard exists for: a
-    1-partition probe under a broadcast join serializes every pair
-    onto one core. With the default (auto), the valve must warn and
-    put the (keys, chunk) exchange into the plan; with an explicit
-    False it must do neither (the caller measured the exchange
-    harmful and owns the decision)."""
-    import warnings as w
-
-    rows = [(1, i) for i in range(12)]
-    one_part = spark.createDataFrame(rows, "k int, oid long").coalesce(1)
-    assert one_part.rdd.getNumPartitions() == 1
-
-    with w.catch_warnings(record=True) as caught:
-        w.simplefilter("always")
-        j = chunked_self_join(one_part, key_cols=["k"], order_col="oid")
-        auto_warns = [c for c in caught if "repartition_probe" in str(c.message)]
-    assert auto_warns, "auto guard did not warn on a 1-partition probe"
-    # the valve's OWN exchange is tagged REPARTITION_BY_COL — Catalyst's
-    # ENSURE_REQUIREMENTS exchanges (e.g. under a sort-merge join on this
-    # stats-free test frame) also say hashpartitioning, so the tag is the
-    # assertion that distinguishes "the guard repartitioned" from "the
-    # join planner did"
-    plan = j._jdf.queryExecution().executedPlan().toString()
-    assert "REPARTITION_BY_COL" in plan, plan
-    # and the pairing invariant is intact through the auto exchange
-    got = Counter(
-        (min(r["lo"], r["hi"]), max(r["lo"], r["hi"]))
-        for r in j.select(
-            F.col("a.oid").alias("lo"), F.col("b.oid").alias("hi")
-        ).collect()
-    )
-    assert got == _expected_pairs(rows)
-
-    with w.catch_warnings(record=True) as caught:
-        w.simplefilter("always")
-        j_off = chunked_self_join(
-            one_part, key_cols=["k"], order_col="oid", repartition_probe=False
+def test_banded_first_match_matches_python_reference(spark):
+    """The banded-join contract both kernels serve together: docs carry
+    a per-band signature array, the chunked join keys on (band, sig),
+    and first_match_band keeps the row of the lowest agreeing band.
+    Against a plain-Python reference over random keys, for bands 1-4
+    and C in {1, 3, 8}: every pair that agrees in some band appears
+    exactly once, oriented by `oid`, from its lowest agreeing band.
+    The other columns ride the swap with their row (`tag` = oid * 10)."""
+    rng = random.Random(7)
+    for bands in (1, 2, 3, 4):
+        docs = [
+            (oid, [rng.randrange(3) for _ in range(bands)])
+            for oid in rng.sample(range(1000), 40)
+        ]
+        rows = [
+            (oid, oid * 10, b, sigs[b], sigs)
+            for oid, sigs in docs
+            for b in range(bands)
+        ]
+        exp = {}
+        for x_oid, x in docs:
+            for y_oid, y in docs:
+                agree = [b for b in range(bands) if x[b] == y[b]]
+                if x_oid < y_oid and agree:
+                    exp[(x_oid, y_oid)] = agree[0]
+        df = spark.createDataFrame(
+            rows, "oid long, tag long, band int, sig int, sigs array<int>"
         )
-        off_warns = [c for c in caught if "repartition_probe" in str(c.message)]
-    assert not off_warns, "explicit False must stay silent"
-    plan_off = j_off._jdf.queryExecution().executedPlan().toString()
-    assert "REPARTITION_BY_COL" not in plan_off, plan_off
-
-
-def test_well_partitioned_probe_stays_exchange_free_under_auto(spark):
-    """The d12 regression guard: auto must NOT add the exchange (nor
-    warn) when the probe is already distributed — forcing it on d12's
-    checkpointed signatures measured 32 s -> 83 s at 10x."""
-    import warnings as w
-
-    rows = [(i % 4, i) for i in range(64)]
-    multi = spark.createDataFrame(rows, "k int, oid long").repartition(8)
-    assert multi.rdd.getNumPartitions() > 1
-
-    with w.catch_warnings(record=True) as caught:
-        w.simplefilter("always")
-        j = chunked_self_join(multi, key_cols=["k"], order_col="oid")
-        auto_warns = [c for c in caught if "repartition_probe" in str(c.message)]
-    assert not auto_warns
-    # the valve must add no exchange of its own: the only repartition
-    # tag in the plan is the caller's round-robin, never the guard's
-    # REPARTITION_BY_COL on (k, chunk)
-    plan = j._jdf.queryExecution().executedPlan().toString()
-    assert "REPARTITION_BY_COL" not in plan, plan
+        for C in (1, 3, 8):
+            j = chunked_self_join(df, ["band", "sig"], order_col="oid", n_chunks=C)
+            first = first_match_band(
+                "a.band", bands, lambda b: F.col("a.sigs")[b] == F.col("b.sigs")[b]
+            )
+            out = j.filter(first).select(
+                F.col("a.oid").alias("lo"),
+                F.col("b.oid").alias("hi"),
+                F.col("a.tag").alias("lo_tag"),
+                F.col("b.tag").alias("hi_tag"),
+                F.col("a.band").alias("band"),
+                F.col("b.band").alias("b_band"),
+            ).collect()
+            got = Counter((r.lo, r.hi) for r in out)
+            assert all(n == 1 for n in got.values()), (bands, C, got)
+            assert set(got) == set(exp), (bands, C, set(got) ^ set(exp))
+            for r in out:
+                assert r.lo < r.hi and r.lo_tag == r.lo * 10 and r.hi_tag == r.hi * 10
+                assert r.band == r.b_band == exp[(r.lo, r.hi)], (bands, C, r)

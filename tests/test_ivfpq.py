@@ -293,11 +293,11 @@ def _s14_numpy_reference(sf_dir):
     import numpy as np
     import pyarrow.parquet as pq
 
-    from indexr_spark.operators.pq import s13_codebooks
-    from indexr_spark.sources.vector_store import (
+    from indexr_spark.operators.pq import (
         S14_K,
         S14_NPROBE,
         S14_R,
+        s13_codebooks,
         s14_centroids,
         s14_queries,
     )
@@ -354,7 +354,7 @@ def test_s14_spark_matches_numpy_reference(spark):
     """Ranking columns (q_id, rank, vec_id, cell) must agree with the
     independent numpy replay of the whole probe; adc/cosine values are
     checked loosely (the numpy sums associate differently)."""
-    from indexr_spark.sources.vector_store import s14_ivfpq_probe
+    from indexr_spark.operators.pq import s14_ivfpq_probe
 
     got = [tuple(r) for r in s14_ivfpq_probe(spark, SMOKE_SF).collect()]
     want = _s14_numpy_reference(SMOKE_SF)
@@ -366,7 +366,7 @@ def test_s14_duckdb_parity_and_structure(spark, duck_smoke):
     """The draft-protocol pin: registry form vs generated oracle,
     frame-exact, plus structural invariants (K rows per query, probed
     cells only, rerank ordering)."""
-    from indexr_spark.sources.vector_store import (
+    from indexr_spark.operators.pq import (
         S14_K,
         S14_ORACLE_DRAFT,
         _s14_probe_rows,
@@ -390,7 +390,7 @@ def test_s14_duckdb_parity_and_structure(spark, duck_smoke):
 def test_s14_duckdb_parity_oracle_sf(spark):
     """s14 against its generated DuckDB oracle on the oracle corpus
     (sf0.01), frame-exact — the smoke corpus is pinned above."""
-    from indexr_spark.sources.vector_store import S14_ORACLE_DRAFT, s14_ivfpq_probe
+    from indexr_spark.operators.pq import S14_ORACLE_DRAFT, s14_ivfpq_probe
     from tests.conftest import ORACLE_SF, make_duck
 
     got = [tuple(r) for r in s14_ivfpq_probe(spark, ORACLE_SF).collect()]

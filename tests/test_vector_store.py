@@ -246,14 +246,13 @@ def test_neardup_numpy_matches_catalyst_pair_set(spark):
     embb = embb.join(S._bucket_of(spark, embb), "vec_id")
     j = chunked_self_join(embb, key_cols=["bucket"], order_col="vec_id")
     cos = S._dot(F.col("a.e"), F.col("b.e")) / (F.col("a.nrm") * F.col("b.nrm"))
-    fwd = F.col("a.vec_id") < F.col("b.vec_id")
     # filter on the RAW cosine then round — d10's exact order (a
     # round-then-filter reference would diverge at a rounding boundary)
     cat = {
         (r.a_id, r.b_id, r.cosine)
         for r in j.select(
-            F.when(fwd, F.col("a.vec_id")).otherwise(F.col("b.vec_id")).alias("a_id"),
-            F.when(fwd, F.col("b.vec_id")).otherwise(F.col("a.vec_id")).alias("b_id"),
+            F.col("a.vec_id").alias("a_id"),
+            F.col("b.vec_id").alias("b_id"),
             cos.alias("raw"),
         )
         .filter(F.col("raw") >= S.NEARDUP_THRESHOLD)
