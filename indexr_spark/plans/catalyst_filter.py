@@ -20,6 +20,7 @@ driver and costs one plan traversal; no cluster work.
 from __future__ import annotations
 
 import datetime as dt
+import re
 
 from indexr_spark.plans.rough_check import (
     And,
@@ -40,6 +41,7 @@ from indexr_spark.plans.rough_check import (
 
 _EPOCH_DATE = dt.date(1970, 1, 1)
 _EPOCH_TS = dt.datetime(1970, 1, 1)
+_SCHEME = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*:(//[^/]*)?")
 
 
 def _scala_seq(jseq) -> list:
@@ -158,9 +160,15 @@ def _convert(jexpr) -> RCOperator:
     raise ValueError(f"unsupported expression {cls}")
 
 
-def relation_filters(jplan) -> dict[str, list[RCOperator]]:
-    """Walk an optimized LogicalPlan; return {relation root path:
+def relation_filters(jplan) -> dict[tuple[str, ...], list[RCOperator]]:
+    """Walk an optimized LogicalPlan; return {relation root paths:
     [one converted predicate per occurrence]}.
+
+    A relation's key is the sorted tuple of its root paths (scheme
+    stripped): one directory for a plain table scan, every live
+    file or batch directory for a snapshot read. The walker does not
+    know the catalog, so it reports the roots and the caller decides
+    which table, if any, owns them.
 
     Only Filter/Project nodes may sit between a recorded filter and
     its relation (the optimizer has already pushed single-table
@@ -168,7 +176,7 @@ def relation_filters(jplan) -> dict[str, list[RCOperator]]:
     so a predicate is never attributed below a join/aggregate that
     could change its meaning. A relation occurrence with NO filter
     contributes Unknown — the caller must then scan every file."""
-    out: dict[str, list[RCOperator]] = {}
+    out: dict[tuple[str, ...], list[RCOperator]] = {}
 
     def walk(node, conds: tuple) -> None:
         cls = _cls(node)
@@ -190,11 +198,11 @@ def relation_filters(jplan) -> dict[str, list[RCOperator]]:
             walk(node.child(), conds if passthrough else ())
             return
         if "LogicalRelation" in cls:
-            path = _relation_root(node)
-            if path is not None:
+            roots = _relation_roots(node)
+            if roots:
                 ops = [from_catalyst(c) for c in conds]
                 op = And(tuple(ops)) if len(ops) > 1 else (ops[0] if ops else Unknown())
-                out.setdefault(path, []).append(op)
+                out.setdefault(roots, []).append(op)
             return
         for child in _scala_seq(node.children()):
             walk(child, ())
@@ -203,15 +211,19 @@ def relation_filters(jplan) -> dict[str, list[RCOperator]]:
     return out
 
 
-def _relation_root(jnode) -> str | None:
-    """Root path of a HadoopFsRelation leaf (file: scheme stripped),
-    or None for non-file relations."""
+def _relation_roots(jnode) -> tuple[str, ...] | None:
+    """Sorted root paths of a HadoopFsRelation leaf (scheme and
+    authority stripped), or None for non-file relations.
+
+    One JVM call for all roots: a snapshot read has one root per live
+    file or batch dir, and a py4j round trip per element would cost
+    more than the rest of the walk. Hadoop's Path.toString is
+    `scheme:[//authority]path`, its path part decoded exactly as
+    toUri().getPath() returns it; NUL cannot occur in a path."""
     try:
-        rel = jnode.relation()
-        paths = _scala_seq(rel.location().rootPaths())
-        if len(paths) != 1:
-            return None  # multi-path scans are pruned upstream already
-        p = paths[0].toUri().getPath()
-        return p
+        joined = jnode.relation().location().rootPaths().mkString("\0")
     except Exception:
         return None
+    if not joined:
+        return None
+    return tuple(sorted(_SCHEME.sub("", p, count=1) for p in joined.split("\0")))

@@ -157,6 +157,10 @@ class Catalog:
         self.last_prune: dict[str, object] = {}  # table → PruneResult of last sql()
         # name → (index_stamp, table sidecar, snapshot version, live stats)
         self._stats_cache: dict[str, tuple] = {}
+        # name → ((session, spec, snapshot version or file stamp), unpruned read)
+        self._hist_frames: dict[str, tuple] = {}
+        # name → realtime frame of the view register_sql_views last made
+        self._rt_frames: dict[str, DataFrame | None] = {}
         os.makedirs(os.path.join(root, "_schemas"), exist_ok=True)
 
     def _spec_path(self, name: str) -> str:
@@ -169,6 +173,17 @@ class Catalog:
         return os.path.join(self.root, name + "_rt")
 
     def save(self, spec: TableSpec) -> None:
+        """Write the table's spec. Refuses a name whose data dir is
+        another table's realtime dir, or the reverse (`x` beside
+        `x_rt`): the hybrid read of `x` would take `x_rt`'s segments
+        for its realtime rows."""
+        new = self.table_dir(spec.name)
+        for other in self.list_tables():
+            if new == self.rt_dir(other) or self.rt_dir(spec.name) == self.table_dir(other):
+                raise ValueError(
+                    f"table {spec.name!r} collides with table {other!r}: one's "
+                    "data dir is the other's realtime dir"
+                )
         with open(self._spec_path(spec.name), "w") as f:
             f.write(spec.to_json())
 
@@ -183,45 +198,77 @@ class Catalog:
     def read(
         self, spark: SparkSession, name: str, predicate=None, files=None
     ) -> DataFrame:
-        """Historical segments as a DataFrame (defaults applied).
-        An empty pool (pre-first-compaction) reads as zero rows.
+        """Historical segments as a DataFrame of exactly the spec's
+        columns, typed by the spec, with defaults applied. Plain and
+        snapshot-managed tables follow the same column contract: the
+        read never infers a schema from the files (so it launches no
+        footer job), and a spec column missing from older files reads
+        as its default. An empty pool (pre-first-compaction) reads as
+        zero rows.
 
         `predicate` (a plans.rough_check.RCOperator) engages sidecar
         file pruning when the table has a sidecar — the caller still
         re-applies the exact filter above the scan. `files` short-cuts
-        with an already-pruned scan list (sql() computes it once)."""
+        with an already-pruned scan list (sql() computes it once).
+
+        A snapshot-managed table is read at its manifest's file set (a
+        plain directory scan would also pick up not-yet-vacuumed files
+        of older versions). The unpruned frame is memoized, one entry
+        per table, keyed on the session, the spec and what the frame's
+        file listing depends on: the snapshot version (it pins its
+        files), or for a plain directory the path, mtime and size of
+        every file under it. Queries between two writes reuse one frame
+        instead of re-reading the manifest and re-listing the files
+        (Spark lists more than 32 paths with a job of its own)."""
         from indexr_spark.sources.snapshots import latest_version, read_snapshot
 
         spec = self.load(name)
         path = self.table_dir(name)
-        if not _has_parquet(path):
-            return spark.createDataFrame([], spec.schema())
-        if files is not None and not files:
-            return spark.createDataFrame([], spec.schema())
         if files is None and predicate is not None:
             # prune() checks exactly the live manifest set (delta
             # appends may leave the sidecar lagging), so the result is
             # version-consistent for snapshot-managed tables too
             result = self.prune(name, predicate)
             if result is not None:
-                if not result.scan:
-                    return spark.createDataFrame([], spec.schema())
                 files = result.scan
-        if files is None and latest_version(path):
-            # snapshot-managed (a rewrite tool adopted it): read the
-            # manifest's file set — a plain directory scan would also
-            # pick up not-yet-vacuumed files of older versions
-            df = read_snapshot(spark, path)
-            return apply_defaults(
-                df.select(*[c.name for c in spec.columns if c.name in df.columns]), spec
-            )
-        reader = spark.read.schema(spec.schema())
-        if files:
+        if files is not None:
+            if not files:
+                return spark.createDataFrame([], spec.schema())
             # basePath keeps hive-partition column values when the
             # scan is handed leaf files instead of the table root
-            reader = reader.option("basePath", path)
-        df = reader.parquet(*(files if files else [path]))
-        return apply_defaults(df, spec)
+            df = spark.read.schema(spec.schema()).option("basePath", path).parquet(*files)
+            return apply_defaults(df, spec)
+        version = latest_version(path)
+        if version:
+            key = (spark, spec, version)
+        else:
+            listing = _file_stamp(path)
+            if not any(f.endswith(".parquet") for f, _, _ in listing):
+                return spark.createDataFrame([], spec.schema())
+            key = (spark, spec, listing)
+        memo = self._hist_frames.get(name)
+        if memo is None or memo[0] != key:
+            df = (
+                read_snapshot(spark, path, version, schema=spec.schema())
+                if version
+                else spark.read.schema(spec.schema()).parquet(path)
+            )
+            memo = self._hist_frames[name] = (key, apply_defaults(df, spec))
+        return memo[1]
+
+    def _read_rt(self, spark: SparkSession, spec: TableSpec) -> DataFrame | None:
+        """The realtime pool in the spec's columns, or None when empty."""
+        rt_path = self.rt_dir(spec.name)
+        if not _has_parquet(rt_path):
+            return None
+        # explicit select: partition discovery (batch=<epoch> dirs)
+        # appends a partition column beyond the declared schema
+        rt = (
+            spark.read.schema(spec.schema())
+            .parquet(rt_path)
+            .select(*[c.name for c in spec.columns])
+        )
+        return apply_defaults(rt, spec)
 
     def read_hybrid(
         self, spark: SparkSession, name: str, predicate=None, files=None
@@ -231,19 +278,9 @@ class Catalog:
         Readable mid-ingest; the compactor later folds rt → historical.
         `predicate`/`files` prune the historical pool (rt batches are
         small, short-lived, and sidecar-less — always scanned)."""
-        spec = self.load(name)
         hist = self.read(spark, name, predicate=predicate, files=files)
-        rt_path = self.rt_dir(name)
-        if not _has_parquet(rt_path):
-            return hist
-        # explicit select: partition discovery (batch=<epoch> dirs)
-        # appends a partition column beyond the declared schema
-        rt = (
-            spark.read.schema(spec.schema())
-            .parquet(rt_path)
-            .select(*[c.name for c in spec.columns])
-        )
-        return hist.unionByName(apply_defaults(rt, spec))
+        rt = self._read_rt(spark, self.load(name))
+        return hist if rt is None else hist.unionByName(rt)
 
     def prune(self, name: str, predicate):
         """Rough-check the table's sidecar against `predicate`;
@@ -332,25 +369,33 @@ class Catalog:
         SURVEY.md §2.4). With hybrid=True queries see realtime rows
         too, exactly like HybridTable."""
         names = self.list_tables()
+        self._rt_frames = {}
         for name in names:
-            df = self.read_hybrid(spark, name) if hybrid else self.read(spark, name)
-            df.createOrReplaceTempView(name)
+            hist = self.read(spark, name)
+            rt = self._rt_frames[name] = self._read_rt(spark, self.load(name)) if hybrid else None
+            (hist if rt is None else hist.unionByName(rt)).createOrReplaceTempView(name)
         return names
 
     def sql(self, spark: SparkSession, query: str, hybrid: bool = True) -> DataFrame:
         """Run SQL over the catalog with rough-check pruning on every
-        scan — the reference's default read path (the skipping cascade
-        runs unconditionally in IndexRRecordReader.init2:119-154).
+        historical scan, plain or snapshot-managed — the reference's
+        default read path (the skipping cascade runs unconditionally in
+        IndexRRecordReader.init2:119-154).
 
-        Two-phase: (1) analyze the query over plain views and walk the
-        optimized plan for the filter conjuncts Catalyst pushed onto
-        each parquet relation (plans.catalyst_filter — the SparkFilter
-        adapter, one driver-side traversal); (2) re-register each
-        filtered table as a pruned view, re-plan, and put the phase-1
-        view back. Files are skipped
-        only on a provable NONE; the query's own filters still apply,
-        so results are identical to the unpruned plan. Per-table
-        decisions land in `self.last_prune` for observability."""
+        Two-phase: (1) analyze the query over the registered views and
+        walk the optimized plan for the filter conjuncts Catalyst
+        pushed onto each parquet relation (plans.catalyst_filter — the
+        SparkFilter adapter, one driver-side traversal). A relation
+        belongs to the table whose data dir holds every one of its root
+        paths, compared by path component, so a snapshot read (one
+        root per live file or batch dir) maps to its table and the
+        realtime pool (`<name>_rt`) maps to none. (2) Re-register each
+        table with skipped files as its pruned historical read, unioned
+        with phase 1's realtime frame, re-plan, and put the phase-1
+        view back. Files are skipped only on a provable NONE; the
+        query's own filters still apply, so results are identical to
+        the unpruned plan. Per-table decisions land in
+        `self.last_prune` for observability."""
         from indexr_spark.plans.catalyst_filter import relation_filters
         from indexr_spark.plans.rough_check import Or, Unknown
 
@@ -358,18 +403,22 @@ class Catalog:
         df = spark.sql(query)
         self.last_prune = {}
         try:
-            by_path = relation_filters(df._jdf.queryExecution().optimizedPlan())
+            by_roots = relation_filters(df._jdf.queryExecution().optimizedPlan())
         except Exception:
             return df  # plan walk failed (e.g. connect mode): unpruned
-        by_real = {os.path.realpath(p): ops for p, ops in by_path.items()}
+        dirs = {name: os.path.realpath(self.table_dir(name)) for name in names}
+        occs: dict[str, list] = {}
+        for roots, ops in by_roots.items():
+            real = [os.path.realpath(r) for r in roots]
+            for name, d in dirs.items():
+                if all(os.path.commonpath((r, d)) == d for r in real):
+                    occs.setdefault(name, []).extend(ops)
+                    break
         restore: dict[str, DataFrame] = {}  # phase-1 view of each swapped table
-        for name in names:
-            occs = by_real.get(os.path.realpath(self.table_dir(name)))
-            if not occs:
-                continue
+        for name, ops in occs.items():
             # several occurrences (self-join): a file survives if ANY
             # occurrence might match it
-            pred = occs[0] if len(occs) == 1 else Or(tuple(occs))
+            pred = ops[0] if len(ops) == 1 else Or(tuple(ops))
             if isinstance(pred, Unknown):
                 continue
             result = self.prune(name, pred)
@@ -378,12 +427,9 @@ class Catalog:
             self.last_prune[name] = result
             if result.skipped:
                 restore[name] = spark.table(name)
-                view = (
-                    self.read_hybrid(spark, name, files=result.scan)
-                    if hybrid
-                    else self.read(spark, name, files=result.scan)
-                )
-                view.createOrReplaceTempView(name)
+                view = self.read(spark, name, files=result.scan)
+                rt = self._rt_frames.get(name)
+                (view if rt is None else view.unionByName(rt)).createOrReplaceTempView(name)
         if restore:
             df = spark.sql(query)  # resolved now — safe to restore views
             for name, view in restore.items():  # restore only what was swapped
@@ -501,6 +547,20 @@ def spec_from_table(spark: SparkSession, table: str) -> TableSpec:
         realtime=rt,
         sort_by=list(filter(None, props.get("indexr.sort.columns", "").split(","))),
     )
+
+
+def _file_stamp(path: str) -> tuple:
+    """(relative path, mtime_ns, size) of every file under `path`."""
+    out = []
+    for root, _, files in os.walk(path):
+        for f in files:
+            full = os.path.join(root, f)
+            try:
+                st = os.stat(full)
+            except FileNotFoundError:
+                continue
+            out.append((os.path.relpath(full, path), st.st_mtime_ns, st.st_size))
+    return tuple(sorted(out))
 
 
 def _has_parquet(path: str) -> bool:

@@ -101,6 +101,7 @@ import uuid
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from indexr_spark.plans.rough_check import And, Between, FileStats, In, prune
 
@@ -1025,16 +1026,26 @@ def scoped_merge_plan(
 
 
 def read_snapshot(
-    spark: SparkSession, path: str, version: int | None = None
+    spark: SparkSession,
+    path: str,
+    version: int | None = None,
+    schema: T.StructType | None = None,
 ) -> DataFrame:
     """Read a pinned version (default: latest). The returned
     DataFrame's file list is fixed at call time — concurrent commits
-    cannot change what this scan reads."""
+    cannot change what this scan reads.
+
+    Without `schema` Spark infers it from the files' footers, which
+    costs one Spark job per call. A caller that knows the columns it
+    needs (a catalog spec, a sink's key columns) passes them and the
+    read launches no job; a declared column missing from the files
+    reads as NULL, exactly as in a plain directory read."""
     v = version if version is not None else latest_version(path)
     if v == 0:
         raise FileNotFoundError(f"no committed snapshot under {path}")
     files = files_of(path, v)
-    return spark.read.parquet(*_scan_paths(path, files))
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(*_scan_paths(path, files))
 
 
 def _scan_paths(path: str, files: list[str]) -> list[str]:

@@ -40,6 +40,7 @@ streaming dedup (dedup there is an offline tool concern).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import types as T
 
 
 def dedup_stream(
@@ -91,8 +92,10 @@ def dedup_store_sink(
             return
         novel = batch.dropDuplicates(key_cols)
         if latest_version(snapshot_dir) > 0:
-            store = read_snapshot(batch.sparkSession, snapshot_dir)
-            novel = novel.join(store.select(*key_cols), key_cols, "left_anti")
+            # typed by the batch's key columns: no footer-inference job
+            keys = T.StructType([batch.schema[k] for k in key_cols])
+            store = read_snapshot(batch.sparkSession, snapshot_dir, schema=keys)
+            novel = novel.join(store, key_cols, "left_anti")
         append_snapshot(novel, snapshot_dir, meta=meta)
 
     return sink

@@ -474,3 +474,57 @@ def test_catalog_prune_cache_survives_delta_append(spark, tmp_path, monkeypatch)
     loads.clear()
     assert new_file in cat.prune("t", Equal("k", 1)).skipped
     assert loads == []
+
+
+@pytest.mark.parametrize("first", ["x", "x_rt"])
+def test_save_refuses_rt_dir_collision(tmp_path, first):
+    """`x`'s realtime dir is `x_rt`'s data dir: with both tables,
+    read_hybrid("x") would scan `x_rt`'s segments as `x`'s realtime
+    rows. Whichever is saved second is refused."""
+    cat = Catalog(str(tmp_path))
+    cols = [ColumnSpec("k", "int")]
+    cat.save(TableSpec(name=first, columns=cols))
+    second = "x_rt" if first == "x" else "x"
+    with pytest.raises(ValueError, match="realtime dir"):
+        cat.save(TableSpec(name=second, columns=cols))
+    assert cat.list_tables() == [first]
+    cat.save(TableSpec(name=first, columns=cols + [ColumnSpec("v", "double")]))
+
+
+def test_read_column_contract_survives_ensure_snapshot(spark, tmp_path):
+    """Catalog.read returns the same columns, types and rows for a
+    table before and after ensure_snapshot adopts it: a defaulted
+    column's stored NULLs read as the default, and a spec column the
+    older files lack reads as NULL, either way."""
+    from indexr_spark.sources.snapshots import ensure_snapshot, latest_version
+
+    cat = Catalog(str(tmp_path))
+    spec = TableSpec(
+        name="t",
+        columns=[
+            ColumnSpec("k", "int"),
+            ColumnSpec("v", "bigint", default=5),
+            ColumnSpec("w", "varchar"),
+        ],
+        sort_by=["k"],
+    )
+    cat.save(spec)
+    tdir = cat.table_dir("t")
+    old = spark.createDataFrame([(1, None), (2, 20)], "k int, v bigint")
+    write_segments(old, tdir, sort_by=["k"], num_segments=1)
+    new = spark.createDataFrame([(3, None, "c"), (4, 40, None)], spec.schema())
+    write_segments(new, tdir, sort_by=["k"], num_segments=1, mode="append")
+
+    def contract():
+        df = cat.read(spark, "t")
+        cols = [(f.name, f.dataType) for f in df.schema]
+        return cols, sorted(map(tuple, df.collect()))
+
+    before = contract()
+    assert before == (
+        [(f.name, f.dataType) for f in spec.schema()],
+        [(1, 5, None), (2, 20, None), (3, 5, "c"), (4, 40, None)],
+    )
+    ensure_snapshot(tdir)
+    assert latest_version(tdir) == 1
+    assert contract() == before

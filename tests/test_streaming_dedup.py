@@ -228,3 +228,39 @@ def test_neardup_store_sink_refuses_banding_mismatch(spark, tmp_path):
     neardup_store_sink(store_dir, bands=4, app_id="m1")(
         spark.createDataFrame([(2, "delta epsilon zeta")], SCHEMA), 1
     )
+
+
+def test_dedup_store_sink_reads_store_by_key_schema(spark, tmp_path, monkeypatch):
+    """The sink reads the store typed by the batch's key columns, so a
+    micro-batch pays no footer-inference job: the same batch through a
+    sink whose store read infers its schema runs one job more."""
+    from indexr_spark.sources import snapshots
+
+    store_dir = str(tmp_path / "store")
+    seed = spark.createDataFrame([(1, "alpha")], SCHEMA).withColumn("h", F.md5("text"))
+    dedup_store_sink(store_dir, ["h"], app_id="t1")(seed, 0)
+    batch = spark.createDataFrame([(2, "alpha"), (3, "beta")], SCHEMA).withColumn(
+        "h", F.md5("text")
+    )
+    sc = spark.sparkContext
+
+    def jobs(sink, epoch: int, group: str) -> int:
+        sc.setJobGroup(group, group)
+        try:
+            sink(batch, epoch)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    typed = jobs(dedup_store_sink(store_dir, ["h"], app_id="t1"), 1, "dedup_sink_typed")
+    real = snapshots.read_snapshot
+    monkeypatch.setattr(
+        snapshots, "read_snapshot", lambda s, p, schema=None: real(s, p)
+    )
+    inferred = jobs(dedup_store_sink(store_dir, ["h"], app_id="t2"), 0, "dedup_sink_inferred")
+    assert inferred == typed + 1, (typed, inferred)
+    assert sorted(r.text for r in read_snapshot(spark, store_dir).collect()) == [
+        "alpha",
+        "beta",
+    ]
