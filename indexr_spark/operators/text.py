@@ -473,8 +473,9 @@ def _group_band_sigs(groups: DataFrame, bands: int) -> DataFrame:
 def _lsh_group_pairs(
     groups: DataFrame, bands: int, max_bucket: int | None = None
 ) -> DataFrame:
-    """Distinct cross-group candidate pairs (ga, gb), rep(ga) <
-    rep(gb), via the banded bucket join over unique token sets.
+    """Distinct cross-group candidate pairs (ga, gb), with their reps
+    (ra, rb), ra < rb, via the banded bucket join over unique token
+    sets.
 
     First-match-band dedup: a pair colliding in k bands is joined k
     times; each joined row keeps the pair iff its band is the FIRST
@@ -513,7 +514,12 @@ def _lsh_group_pairs(
     joined = chunked_self_join(
         sigs, key_cols=["band", "sig"], order_col="rep", chunk_col="gid"
     )
-    pairs = [F.col("a.gid").alias("ga"), F.col("b.gid").alias("gb")]
+    pairs = [
+        F.col("a.gid").alias("ga"),
+        F.col("b.gid").alias("gb"),
+        F.col("a.rep").alias("ra"),
+        F.col("b.rep").alias("rb"),
+    ]
     if max_bucket is not None:
         # surviving-band collisions must all count; dedup by value
         return joined.select(*pairs).distinct()
@@ -1235,16 +1241,9 @@ def d12_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _canon_base(spark, sf_dir).localCheckpoint()
     groups = _canon_groups(spark, sf_dir, base=base).localCheckpoint()
     g = groups.select("gid", "rep")
-    # group-level candidate edges, with gid strings swapped for the
-    # integer rep ids CC iterates on (the gid->rep map is group-count
-    # sized — broadcastable far beyond this corpus; at sizes where it
-    # is not, drop the hints and AQE picks the shuffle join).
-    gedges = _lsh_group_pairs(groups, MINHASH_BANDS, _lsh_max_bucket())
-    ra = F.broadcast(g.select(F.col("gid").alias("ga"), F.col("rep").alias("ra")))
-    rb = F.broadcast(g.select(F.col("gid").alias("gb"), F.col("rep").alias("rb")))
+    # group-level candidate edges as the integer rep ids CC iterates on
     edges = (
-        gedges.join(ra, "ga")
-        .join(rb, "gb")
+        _lsh_group_pairs(groups, MINHASH_BANDS, _lsh_max_bucket())
         .select(F.col("ra").alias("a_id"), F.col("rb").alias("b_id"))
         .localCheckpoint()
     )

@@ -195,49 +195,31 @@ class Catalog:
         d = os.path.join(self.root, "_schemas")
         return sorted(f[:-5] for f in os.listdir(d) if f.endswith(".json"))
 
-    def read(
-        self, spark: SparkSession, name: str, predicate=None, files=None
-    ) -> DataFrame:
+    def read(self, spark: SparkSession, name: str, files=None) -> DataFrame:
         """Historical segments as a DataFrame of exactly the spec's
-        columns, typed by the spec, with defaults applied. Plain and
-        snapshot-managed tables follow the same column contract: the
-        read never infers a schema from the files (so it launches no
-        footer job), and a spec column missing from older files reads
-        as its default. An empty pool (pre-first-compaction) reads as
-        zero rows.
+        columns, typed by the spec, with defaults applied — through
+        snapshots.read_table, so a snapshot-managed table is read at
+        its manifest's live files. The read never infers a schema (so
+        it launches no footer job), and a spec column missing from
+        older files reads as its default. An empty pool
+        (pre-first-compaction) reads as zero rows.
 
-        `predicate` (a plans.rough_check.RCOperator) engages sidecar
-        file pruning when the table has a sidecar — the caller still
-        re-applies the exact filter above the scan. `files` short-cuts
-        with an already-pruned scan list (sql() computes it once).
+        `files` is an already-pruned scan list (sql() passes its
+        PruneResult.scan; the caller re-applies the exact filter).
 
-        A snapshot-managed table is read at its manifest's file set (a
-        plain directory scan would also pick up not-yet-vacuumed files
-        of older versions). The unpruned frame is memoized, one entry
-        per table, keyed on the session, the spec and what the frame's
-        file listing depends on: the snapshot version (it pins its
-        files), or for a plain directory the path, mtime and size of
-        every file under it. Queries between two writes reuse one frame
-        instead of re-reading the manifest and re-listing the files
-        (Spark lists more than 32 paths with a job of its own)."""
-        from indexr_spark.sources.snapshots import latest_version, read_snapshot
+        The unpruned frame is memoized, one entry per table, keyed on
+        the session, the spec and what the frame's file listing
+        depends on: the snapshot version (it pins its files), or for a
+        plain directory the path, mtime and size of every file under
+        it. Queries between two writes reuse one frame instead of
+        re-reading the manifest and re-listing the files (Spark lists
+        more than 32 paths with a job of its own)."""
+        from indexr_spark.sources.snapshots import latest_version, read_table
 
         spec = self.load(name)
         path = self.table_dir(name)
-        if files is None and predicate is not None:
-            # prune() checks exactly the live manifest set (delta
-            # appends may leave the sidecar lagging), so the result is
-            # version-consistent for snapshot-managed tables too
-            result = self.prune(name, predicate)
-            if result is not None:
-                files = result.scan
         if files is not None:
-            if not files:
-                return spark.createDataFrame([], spec.schema())
-            # basePath keeps hive-partition column values when the
-            # scan is handed leaf files instead of the table root
-            df = spark.read.schema(spec.schema()).option("basePath", path).parquet(*files)
-            return apply_defaults(df, spec)
+            return apply_defaults(read_table(spark, path, files, spec.schema()), spec)
         version = latest_version(path)
         if version:
             key = (spark, spec, version)
@@ -248,12 +230,8 @@ class Catalog:
             key = (spark, spec, listing)
         memo = self._hist_frames.get(name)
         if memo is None or memo[0] != key:
-            df = (
-                read_snapshot(spark, path, version, schema=spec.schema())
-                if version
-                else spark.read.schema(spec.schema()).parquet(path)
-            )
-            memo = self._hist_frames[name] = (key, apply_defaults(df, spec))
+            df = apply_defaults(read_table(spark, path, schema=spec.schema()), spec)
+            memo = self._hist_frames[name] = (key, df)
         return memo[1]
 
     def _read_rt(self, spark: SparkSession, spec: TableSpec) -> DataFrame | None:
@@ -270,15 +248,13 @@ class Catalog:
         )
         return apply_defaults(rt, spec)
 
-    def read_hybrid(
-        self, spark: SparkSession, name: str, predicate=None, files=None
-    ) -> DataFrame:
+    def read_hybrid(self, spark: SparkSession, name: str) -> DataFrame:
         """HybridTable parity (HybridTable.java:22-66): one logical
         table = historical pool ∪ realtime pool, as a UNION ALL view.
         Readable mid-ingest; the compactor later folds rt → historical.
-        `predicate`/`files` prune the historical pool (rt batches are
-        small, short-lived, and sidecar-less — always scanned)."""
-        hist = self.read(spark, name, predicate=predicate, files=files)
+        sql() prunes the historical pool; rt batches are small,
+        short-lived and sidecar-less, so they are always scanned."""
+        hist = self.read(spark, name)
         rt = self._read_rt(spark, self.load(name))
         return hist if rt is None else hist.unionByName(rt)
 

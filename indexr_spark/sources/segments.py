@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 
 from indexr_spark.plans.rough_check import ColStats, FileStats, PruneResult, RCOperator, prune
 from indexr_spark.sources.catalog import AggSchema, Metric
+from indexr_spark.sources.snapshots import live_stats, read_table
 
 SIDECAR_NAME = "_indexr_stats.json"
 
@@ -184,7 +185,7 @@ def write_segments(
     else:
         # ORC stripe stats aren't readable via pyarrow; fold per-file
         # min/max with one distributed pass instead.
-        write_sidecar_spark(df.sparkSession, path, file_format)
+        write_sidecar_spark(df.sparkSession, path)
 
 
 TERM_INDEX_DIR = "_indexr_term_index"
@@ -206,14 +207,16 @@ def build_string_indexes(
     triples and collects them — |distinct terms × files touched|,
     metadata-sized by design — then writes each column's postings
     (NULL terms kept) with pyarrow and folds the cmap from the same
-    triples. Rebuild after rewrites: new files without postings or a
-    summary degrade to scan, never to wrong answers. Returns the
-    posting count per column."""
+    triples. The pass reads the table's live files
+    (snapshots.read_table), so a rebuild after a rewrite indexes
+    exactly the files a query can scan; until then, new files without
+    postings or a summary degrade to scan, never to wrong answers.
+    Returns the posting count per column."""
     cells = F.array(
         *[F.struct(F.lit(c).alias("col"), F.col(c).alias("term")) for c in columns]
     )
     triples = (
-        spark.read.parquet(path)
+        read_table(spark, path)
         .select(
             F.inline(cells),
             F.regexp_replace(F.input_file_name(), "^file:", "").alias("file"),
@@ -398,13 +401,14 @@ def _file_stats_entry(path: str, fpath: str) -> dict:
     }
 
 
-def write_sidecar_spark(spark: SparkSession, path: str, file_format: str) -> dict:
+def write_sidecar_spark(spark: SparkSession, path: str) -> dict:
     """Format-agnostic sidecar: per-file min/max/null-count folded by
-    one distributed aggregation over input_file_name(). One data pass
-    (vs. the parquet footer path's zero) — still a metadata-sized
-    output, and the only option for formats whose footers pyarrow
-    can't read (ORC)."""
-    df = getattr(spark.read, file_format)(path)
+    one distributed aggregation over input_file_name() of the table's
+    scan (snapshots.read_table, which takes the format from the files'
+    suffix). One data pass (vs. the parquet footer path's zero) — still
+    a metadata-sized output, and the only option for formats whose
+    footers pyarrow can't read (ORC)."""
+    df = read_table(spark, path)
     aggs = []
     for f in df.schema.fields:
         aggs.append(F.min(f.name).alias(f"min_{f.name}"))
@@ -537,10 +541,7 @@ def _load_term_sets(path: str) -> dict[str, dict[str, frozenset]]:
 
 
 def read_pruned(
-    spark: SparkSession,
-    path: str,
-    predicate: RCOperator,
-    file_format: str = "parquet",
+    spark: SparkSession, path: str, predicate: RCOperator
 ) -> tuple[DataFrame, PruneResult]:
     """Rough-check file pruning + exact scan.
 
@@ -551,18 +552,11 @@ def read_pruned(
     stats are snapshots.live_stats: on a snapshot-managed table,
     exactly the live manifest's files, with a file appended since the
     last table-sidecar refresh checked against its batch sidecar (or
-    scanned when none covers it). Returns the DataFrame plus the prune
-    decision for observability.
+    scanned when none covers it). The kept files go through
+    snapshots.read_table, so the frame has the live set's columns
+    whether or not a file survives, in the files' own format. Returns
+    the DataFrame plus the prune decision for observability.
     """
-    from indexr_spark.sources.snapshots import live_stats
-
     result = prune(live_stats(path), predicate.optimize())
-    reader = getattr(spark.read, file_format)
-    if not result.scan:
-        return spark.createDataFrame([], reader(path).schema), result
-    # parquet() takes *paths; orc() takes a single path-or-list arg.
-    # basePath preserves hive-partition columns under leaf-file reads.
-    based = getattr(spark.read.option("basePath", path), file_format)
-    src = based(*result.scan) if file_format == "parquet" else based(result.scan)
-    df = src.filter(F.expr(predicate.to_spark_sql()))
+    df = read_table(spark, path, result.scan).filter(F.expr(predicate.to_spark_sql()))
     return df, result

@@ -450,27 +450,79 @@ def _is_metadata_path(path: str, root: str) -> bool:
 def ensure_snapshot(path: str) -> int:
     """Adopt a plain segment directory as snapshot v1 — the manifest
     simply lists the parquet files already in place; no data moves.
-    Returns the current version (existing or newly bootstrapped)."""
+    Returns the current version (existing or newly bootstrapped).
+
+    Refuses a hive-partitioned layout (`k=v` directories): a manifest
+    lists files, not partition values, so the adopted table would lose
+    its partition columns. Adopt, or rewrite, each partition directory
+    on its own, as optimize_segments documents."""
     v = latest_version(path)
     if v:
         return v
-    files = [
-        os.path.relpath(os.path.join(root, name), path)
-        for root, dirs, names in os.walk(path)
-        if not _is_metadata_path(root, path)
-        for name in sorted(names)
-        if name.endswith(".parquet") and not name.startswith(("_", "."))
-    ]
+    files = []
+    for root, _dirs, names in os.walk(path):
+        if _is_metadata_path(root, path):
+            continue
+        if root != path and "=" in os.path.basename(root):
+            raise ValueError(
+                f"{root} is a hive partition directory: a snapshot would drop its "
+                "partition column; adopt or rewrite each partition directory on its own"
+            )
+        files += [
+            os.path.relpath(os.path.join(root, name), path)
+            for name in sorted(names)
+            if name.endswith(".parquet") and not name.startswith(("_", "."))
+        ]
     return _commit(path, files)
 
 
-def read_table(spark: SparkSession, path: str) -> DataFrame:
-    """Read `path` at its latest snapshot version, or as a plain
-    parquet directory if it was never snapshotted — the one entry
-    point the rewrite tools and their readers share."""
-    if latest_version(path):
-        return read_snapshot(spark, path)
-    return spark.read.parquet(path)
+def read_table(
+    spark: SparkSession,
+    path: str,
+    files: Sequence[str] | None = None,
+    schema: T.StructType | None = None,
+) -> DataFrame:
+    """The one scan of a table's data files: the catalog, the pruned
+    read, the index build, the rewrite tools and CSV export all build
+    their DataFrame here, so which files are the table is decided once.
+
+    Default: the live set — the latest manifest's files on a
+    snapshot-managed table (never a retired file awaiting vacuum), the
+    directory itself on a plain one (one LIST; Spark lists more than 32
+    explicit paths with a job of its own). `files` (table-relative or
+    absolute) scans that subset. A file list, a subset or a manifest's
+    live set, reaches Spark as its _scan_paths roots with `basePath`
+    at the table, so hive-partition columns survive a leaf-file read.
+    An empty subset reads as zero rows.
+
+    With `schema` the scan is typed by it and launches no
+    footer-inference job; a declared column missing from a file reads
+    as NULL. Without it Spark infers the columns from the scanned
+    files, or, for an empty subset, from the live set. The format
+    (parquet or orc) follows the data files' suffix."""
+    if files is None:
+        version = latest_version(path)
+        files = files_of(path, version) if version else None
+    elif not files:
+        return spark.createDataFrame(
+            [], read_table(spark, path).schema if schema is None else schema
+        )
+    reader = spark.read.format(_data_format(path, files))
+    if schema is not None:
+        reader = reader.schema(schema)
+    if files is None:
+        return reader.load(path)
+    rel = [os.path.relpath(os.path.join(path, f), path) for f in files]
+    return reader.option("basePath", path).load(_scan_paths(path, rel))
+
+
+def _data_format(path: str, files: Sequence[str] | None) -> str:
+    """'orc' or 'parquet': the suffix of the first data file in
+    `files`, or in a walk of the table directory."""
+    if files is None:
+        files = (n for r, _, ns in os.walk(path) if not _is_metadata_path(r, path) for n in ns)
+    first = next((f for f in files if f.endswith((".orc", ".parquet"))), "")
+    return "orc" if first.endswith(".orc") else "parquet"
 
 
 # In-flight write protocol: _write_data_files drops a dot-named
@@ -840,7 +892,7 @@ def _probe_touched_files(
 
     from pyspark.sql import functions as F
 
-    cand = spark.read.parquet(*_scan_paths(path, candidates)).select(
+    cand = read_table(spark, path, candidates).select(
         F.input_file_name().alias("__probe_file"), *key_cols
     )
     hits = (
@@ -967,7 +1019,7 @@ def delete_matching(
     if not touched:
         return base
     untouched = sorted(set(live) - set(touched))
-    target = spark.read.parquet(*_scan_paths(path, touched))
+    target = read_table(spark, path, touched)
     # plain equality, NOT eqNullSafe: the rough check's file-skip
     # proof relies on null keys never join-matching (a skipped
     # disjoint-range file may still hold null-keyed rows)
@@ -1008,7 +1060,7 @@ def scoped_merge_plan(
     )
     untouched = sorted(set(live) - set(touched))
     if touched:
-        target = spark.read.parquet(*_scan_paths(path, touched))
+        target = read_table(spark, path, touched)
         cond = [target[k] == updates[k] for k in key_cols]
         survivors = target.join(updates, cond, "left_anti")
         return target, survivors.unionByName(updates.select(*target.columns)), untouched
@@ -1017,11 +1069,7 @@ def scoped_merge_plan(
     # list — planning over all live paths just to read .columns would
     # pay the full 100k-leaf listing cost this scoped path exists to
     # avoid (every live file shares the table schema by construction).
-    cols = (
-        spark.read.parquet(os.path.join(path, live[0])).columns
-        if live
-        else updates.columns
-    )
+    cols = read_table(spark, path, live[:1]).columns if live else updates.columns
     return None, updates.select(*cols), untouched
 
 
@@ -1031,21 +1079,14 @@ def read_snapshot(
     version: int | None = None,
     schema: T.StructType | None = None,
 ) -> DataFrame:
-    """Read a pinned version (default: latest). The returned
-    DataFrame's file list is fixed at call time — concurrent commits
-    cannot change what this scan reads.
-
-    Without `schema` Spark infers it from the files' footers, which
-    costs one Spark job per call. A caller that knows the columns it
-    needs (a catalog spec, a sink's key columns) passes them and the
-    read launches no job; a declared column missing from the files
-    reads as NULL, exactly as in a plain directory read."""
+    """Read a pinned version (default: latest) through read_table's
+    scan. The returned DataFrame's file list is fixed at call time —
+    concurrent commits cannot change what this scan reads. `schema`
+    types the scan as in read_table."""
     v = version if version is not None else latest_version(path)
     if v == 0:
         raise FileNotFoundError(f"no committed snapshot under {path}")
-    files = files_of(path, v)
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    return reader.parquet(*_scan_paths(path, files))
+    return read_table(spark, path, files_of(path, v), schema)
 
 
 def _scan_paths(path: str, files: list[str]) -> list[str]:
@@ -1097,21 +1138,13 @@ def _scan_paths(path: str, files: list[str]) -> list[str]:
     for d, members in by_dir.items():
         absdir = os.path.join(path, d)
         names = {os.path.basename(f) for f in members}
-        try:
+        visible = None
+        if _managed(d):
             # underscore/dot entries (_SUCCESS, .crc) are invisible to
             # Spark's file listing, so they don't disqualify the dir
-            visible = [
-                n for n in os.listdir(absdir) if not n.startswith(("_", "."))
-            ]
-        except OSError:
-            visible = None
-        safe = (
-            _managed(d)
-            and visible is not None
-            and set(visible) == names
-            and all("=" not in n for n in names)
-        )
-        if safe:
+            with contextlib.suppress(OSError):
+                visible = {n for n in os.listdir(absdir) if not n.startswith(("_", "."))}
+        if visible == names and all("=" not in n for n in names):
             out.append(absdir)
         else:
             out.extend(os.path.join(path, f) for f in members)

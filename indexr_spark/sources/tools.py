@@ -56,7 +56,7 @@ def csv_load(
     )
     df = apply_defaults(df, spec)
     write_segments(df, out_path, sort_by=spec.sort_by or None)
-    return spark.read.parquet(out_path).count()
+    return read_table(spark, out_path).count()
 
 
 def csv_export(
@@ -66,9 +66,11 @@ def csv_export(
     delimiter: str = ",",
     header: bool = False,
 ) -> None:
-    """CSVSegmentExporter parity: segments → CSV."""
+    """CSVSegmentExporter parity: segments → CSV. Exports the table's
+    live rows (snapshots.read_table): after a snapshot rewrite, the
+    current version, never the retired files still on disk."""
     (
-        spark.read.parquet(table_path)
+        read_table(spark, table_path)
         .write.mode("overwrite")
         .option("delimiter", delimiter)
         .option("header", str(header).lower())

@@ -420,7 +420,7 @@ def test_catalog_prune_safe_with_lagging_sidecar(spark, tmp_path):
     assert new_file in res.skipped and new_file not in res.scan
     res = cat.prune("t", Equal("k", 100))
     assert res.scan == [new_file]
-    got = {tuple(r) for r in cat.read(spark, "t", predicate=Equal("k", 100)).collect()}
+    got = {tuple(r) for r in cat.read(spark, "t", files=res.scan).collect()}
     # the exact filter is the CALLER's job on read(); the pruned scan
     # must still hold the appended row
     assert (100, 100.0) in got
@@ -430,8 +430,9 @@ def test_catalog_prune_safe_with_lagging_sidecar(spark, tmp_path):
     # index files and version, not on batch sidecars.
     os.remove(os.path.join(os.path.dirname(new_file), SIDECAR_NAME))
     cat = Catalog(str(tmp_path))
-    assert new_file in cat.prune("t", Equal("k", 1)).scan
-    got = {tuple(r) for r in cat.read(spark, "t", predicate=Equal("k", 1)).collect()}
+    res = cat.prune("t", Equal("k", 1))
+    assert new_file in res.scan
+    got = {tuple(r) for r in cat.read(spark, "t", files=res.scan).collect()}
     assert (1, 1.0) in got and (100, 100.0) in got
     out = cat.sql(spark, "SELECT k, v FROM t WHERE k >= 2 ORDER BY k")
     assert [tuple(r) for r in out.collect()] == [(2, 2.0), (3, 3.0), (100, 100.0)]

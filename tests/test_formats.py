@@ -38,7 +38,7 @@ def test_orc_write_prune_roundtrip(spark, tmp_path):
     pred = Between(
         "o_orderdate", dt.datetime(1996, 1, 1), dt.datetime(1996, 12, 31)
     )
-    pruned, decision = read_pruned(spark, out, pred, file_format="orc")
+    pruned, decision = read_pruned(spark, out, pred)
     assert decision.skipped
     full = df.filter(F.col("o_orderdate").between("1996-01-01", "1996-12-31"))
     assert pruned.count() == full.count()

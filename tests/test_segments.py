@@ -427,3 +427,18 @@ def test_read_pruned_checks_delta_appends_against_batch_sidecars(spark, tmp_path
     os.remove(os.path.join(os.path.dirname(new_file), SIDECAR_NAME))
     assert new_file in check(Equal("k", 1)).scan
     assert new_file in check(Equal("k", 100)).scan
+
+
+def test_read_pruned_columns_follow_live_set(spark, tmp_path):
+    """After DELCOL the retired files still hold the dropped column; a
+    pruned read has the live columns whether or not a file survives."""
+    from indexr_spark.sources.tools import update_column
+
+    path = str(tmp_path / "t")
+    df = spark.range(100).selectExpr("CAST(id AS INT) k", "id v", "id w")
+    write_segments(df, path, sort_by=["k"], num_segments=4)
+    update_column(spark, path, "DELCOL", "w", sort_by=["k"])
+    hit, res = read_pruned(spark, path, Equal("k", 5))
+    assert res.scan and hit.columns == ["k", "v"] and hit.count() == 1
+    miss, res = read_pruned(spark, path, Equal("k", 500))
+    assert not res.scan and miss.columns == ["k", "v"] and miss.count() == 0

@@ -1251,3 +1251,21 @@ def test_delete_scoped_on_composite_key_with_binary_column(spark, tmp_path):
     assert [f for f in live if f not in after] == [f for f in live if 13 in ks[f]]
     got = S.read_snapshot(spark, path)
     assert got.count() == 39 and got.filter("k = 13").count() == 0
+
+
+def test_ensure_snapshot_refuses_hive_partitions(spark, tmp_path):
+    """A manifest lists files, not partition values: adopting a `k=v`
+    layout would drop the partition column, so ensure_snapshot refuses
+    it and names the directory; one partition directory adopts."""
+    from indexr_spark.sources.segments import write_segments
+    from indexr_spark.sources.snapshots import ensure_snapshot
+
+    path = str(tmp_path / "t")
+    df = spark.range(100).selectExpr("CAST(id AS INT) k", "CAST(id % 2 AS INT) p")
+    write_segments(df, path, partition_by=["p"])
+    with pytest.raises(ValueError, match=r"p=\d.*partition"):
+        ensure_snapshot(path)
+    assert latest_version(path) == 0
+    part = os.path.join(path, "p=1")
+    assert ensure_snapshot(part) == 1
+    assert read_snapshot(spark, part).count() == 50

@@ -185,3 +185,26 @@ def test_cli_index_prints_posting_counts(spark, tmp_path, capsys):
     assert capsys.readouterr().out.strip().endswith(
         f"indexed columns: s ({counts['s']} postings), t ({counts['t']} postings)"
     )
+
+
+def test_build_indexes_after_rewrite_covers_live_files(spark, tmp_path):
+    """A rewrite retires every file it replaces; the rebuilt postings
+    name exactly the live files, so term pruning comes back."""
+    from indexr_spark.plans.rough_check import Equal
+    from indexr_spark.sources.snapshots import files_of, latest_version
+    from indexr_spark.sources.tools import update_column
+
+    cat = Catalog(str(tmp_path))
+    cols = [ColumnSpec("k", "int"), ColumnSpec("s", "varchar", index=True)]
+    cat.save(TableSpec(name="t", columns=cols))
+    tdir = cat.table_dir("t")
+    rows = [(k, "a" if k % 2 else f"m{k // 25}") for k in range(100)]
+    df = spark.createDataFrame(rows, "k int, s string")
+    write_segments(df, tdir, sort_by=["k"], num_segments=4)
+    update_column(spark, tdir, "ALTCOL", "k", "k + 0", sort_by=["k"])
+    cat.build_indexes(spark, "t")
+    live = {os.path.join(tdir, f) for f in files_of(tdir, latest_version(tdir))}
+    indexed = {os.path.normpath(f) for f in _load_term_sets(tdir)}
+    assert indexed == live
+    # "b" lies inside the file's s range; only its postings rule it out
+    assert cat.prune("t", Equal("s", "b")).skipped

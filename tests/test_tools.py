@@ -274,3 +274,17 @@ def test_cli_update_column(spark, tmp_path, capsys):
     assert rc == 0 and "committed" in capsys.readouterr().out
     got = {(r.k, r.v2) for r in read_table(spark, cat.table_dir("t")).collect()}
     assert got == {(1, 20.0), (2, 40.0)}
+
+
+def test_csv_export_reads_live_snapshot(spark, tmp_path):
+    """After a snapshot rewrite the retired files stay on disk until
+    vacuum; the export holds the live rows only."""
+    path = str(tmp_path / "t")
+    df = spark.range(100).selectExpr("CAST(id AS INT) k", "id v")
+    write_segments(df, path, num_segments=4)
+    update_column(spark, path, "ALTCOL", "v", "v + 1")
+    out = str(tmp_path / "out_csv")
+    csv_export(spark, path, out)
+    got = spark.read.schema("k int, v long").csv(out)
+    assert got.count() == 100
+    assert got.agg(F.sum("v")).collect()[0][0] == sum(range(100)) + 100
